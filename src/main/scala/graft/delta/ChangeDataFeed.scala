@@ -315,8 +315,9 @@ object ChangeDataFeed {
     // actions of THAT version's single commit JSON — file-level pruning, so
     // executing any part costs one small JSON read, not a filter over the
     // whole range. [[DeltaFileIndex]] then collects small sets for driver
-    // planning and keeps large ones distributed (its own threshold), so the
-    // feed's scale ceiling equals the scan path's.
+    // planning and keeps large ones distributed (driverFileListThreshold,
+    // `listMax`), so the feed's scale ceiling equals the scan path's.
+    val listMax = DeltaFileSet.driverListThreshold(spark)
     val commitPath: Map[Long, String] = commitFiles.map(c => c._1 -> c._3).toMap
     def verActs(v: Long): DataFrame =
       spark.read.schema(cdfActionSchema).json(commitPath(v))
@@ -337,7 +338,7 @@ object ChangeDataFeed {
           lit(0L).as("modificationTime"),
           lit(null).cast(StringType).as("stats"),
           nullDv, nullLong("baseRowId"), nullLong("defaultRowCommitVersion"),
-          nullLong("addedVersion")))
+          nullLong("addedVersion")), listMax)
     }
     def addSet(v: Long): DeltaFileSet = localActs match {
       case Some(m) => DeltaFileSet.of(m(v).adds.map { a =>
@@ -352,7 +353,7 @@ object ChangeDataFeed {
           coalesce(col("add.modificationTime"), lit(0L)).as("modificationTime"),
           col("add.stats").as("stats"),
           nullDv, nullLong("baseRowId"), nullLong("defaultRowCommitVersion"),
-          nullLong("addedVersion")))
+          nullLong("addedVersion")), listMax)
     }
 
     val parts = Seq.newBuilder[DataFrame]
@@ -395,7 +396,7 @@ object ChangeDataFeed {
                   .otherwise(col("path")))
                 .select(DeltaFileSet.schema.fieldNames.map(col): _*)
             }
-            DeltaFileSet.fromDf(removedDf)
+            DeltaFileSet.fromDf(removedDf, listMax)
         }
         parts += stamp(
           DeltaFileIndex.relation(spark, prior.copy(fileSet = removedSet))

@@ -54,6 +54,8 @@ import java.nio.charset.StandardCharsets
   */
 object Checksum {
 
+  private val logger = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   final class ChecksumMismatchException(msg: String)
     extends IllegalStateException(msg)
 
@@ -132,10 +134,10 @@ object Checksum {
         s""""allFiles":${om.writeValueAsString(arr)},"""
       }
     // file-size histogram (delta-spark VersionChecksum histogramOpt
-    // parity): per-bucket file counts + bytes over the add-set, one
-    // distributed job — the replay path already pays a full log replay,
-    // and the NORMAL (incremental) path maintains the buckets via pure
-    // arithmetic instead of calling render
+    // parity): per-bucket file counts + bytes over the add-set, from the
+    // same pass as countBytesDigest above — the replay path already pays a
+    // full log replay, and the NORMAL (incremental) path maintains the
+    // buckets via pure arithmetic instead of calling render
     val (hc, hb) = snap.fileSet.sizeHistogram(DefaultHistogramBoundaries)
     val histPart = s""""histogramOpt":{"sortedBinBoundaries":[${DefaultHistogramBoundaries.mkString(",")}],""" +
       s""""fileCounts":[${hc.mkString(",")}],"totalBytes":[${hb.mkString(",")}]},"""
@@ -307,7 +309,7 @@ object Checksum {
       finally out.close()
     } catch {
       case e: Exception =>
-        System.err.println(s"graft: crc write skipped for $logDir v$version: " +
+        logger.warn(s"crc write skipped for $logDir v$version: " +
           s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
 
@@ -520,9 +522,32 @@ object Checksum {
     Some(om.writeValueAsString(out))
   } catch { case _: Exception => None }
 
-  /** Validate a freshly-replayed snapshot against its version's crc (if
-    * any). Armed by [[DeltaSnapshotReader.snapshotAt]] as the file set's
-    * lazy validator ([[DeltaFileSet.armValidator]]): it fires at the FIRST
+  /** The crc text of `version`; None when it is absent or unreadable
+    * (a crc is advisory: its absence never blocks a read). */
+  def read(fs: FileSystem, logDir: Path, version: Long): Option[String] = {
+    val p = crcPath(logDir, version)
+    try {
+      if (!fs.exists(p)) None
+      else {
+        val in = fs.open(p)
+        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+        finally in.close()
+      }
+    } catch { case _: Exception => None }
+  }
+
+  /** The `numFiles` a crc's text records, if it parses and records one.
+    * Only ever a placement hint ([[DeltaFileSet]]): [[validate]] checks
+    * the replayed count against it before any row is served. */
+  def recordedNumFiles(crc: String): Option[Long] =
+    try Option(om.readTree(crc)).flatMap(r => Option(r.get("numFiles")))
+      .map(_.asLong(-1L)).filter(_ >= 0)
+    catch { case _: Exception => None }
+
+  /** Validate a freshly-replayed snapshot against its version's crc text
+    * (`crc`, from [[read]]; None skips validation). Armed by
+    * [[DeltaSnapshotReader.snapshotAt]] as the file set's lazy validator
+    * ([[DeltaFileSet.armValidator]]): it fires at the FIRST
     * access to the distributed add rows, so a refusal precedes any data
     * being served and — via the poison flag — re-raises on every later
     * access, never cached away. Compares the three state aggregates a crc
@@ -530,20 +555,16 @@ object Checksum {
     * protocol/metadata echo is for foreign consumers, already
     * cross-checked by replay itself.
     *
-    * Cost: one small aggregate over the persisted add-set
-    * ([[DeltaFileSet.countBytesDigest]] — all three values in ONE job),
-    * paid only by snapshots whose file set is actually touched; pure
-    * metadata-plane callers pay nothing (ADVICE r13), and warm cache hits
-    * pay nothing. */
-  def validate(fs: FileSystem, logDir: Path, snap: DeltaSnapshot): Unit = {
+    * Cost: zero jobs when the file set is collected (every set whose crc
+    * records at most `spark.graft.delta.driverFileListThreshold` files is,
+    * from its first touch); otherwise one aggregate over the persisted
+    * add-set ([[DeltaFileSet.sizeHistogram]] — count, bytes, digest and
+    * histogram in ONE pass). Paid only by snapshots whose file set is actually
+    * touched; pure metadata-plane callers pay nothing (ADVICE r13), and
+    * warm cache hits pay nothing. */
+  def validate(logDir: Path, snap: DeltaSnapshot, crc: Option[String]): Unit = {
     val p = crcPath(logDir, snap.version)
-    val txt =
-      try {
-        if (!fs.exists(p)) return
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      } catch { case _: Exception => return }
+    val txt = crc.getOrElse(return)
     val parsed =
       try {
         val root = om.readTree(txt)
@@ -561,12 +582,15 @@ object Checksum {
           (root.has("histogramOpt"), parseHistogram(root))))
       } catch {
         case e: Exception =>
-          System.err.println(s"graft: unparseable crc $p ignored " +
+          logger.warn(s"unparseable crc $p ignored " +
             s"(${e.getClass.getSimpleName}) — torn writes must not brick the table")
           None
       }
     parsed.foreach { case (nf, sz, dg, allFiles, (hasHist, hist)) =>
-      // all three replay-side values come from the ONE countBytesDigest job
+      // every replay-side value comes from ONE pass over the add-set: the
+      // histogram over the crc's own bounds also yields count, bytes and
+      // digest (a driver fold when the set is collected)
+      val (gc, gb) = snap.fileSet.sizeHistogram(hist.map(_._1).getOrElse(DefaultHistogramBoundaries))
       nf.filter(_ >= 0).foreach { expect =>
         val got = snap.fileSet.count
         if (got != expect) throw new ChecksumMismatchException(
@@ -599,8 +623,7 @@ object Checksum {
           s"the crc declares a histogramOpt whose shape is malformed " +
           s"(boundary/count/byte arrays missing, unequal lengths, or " +
           s"unsorted boundaries); refusing to serve the snapshot")
-      hist.foreach { case (bounds, counts, byts) =>
-        val (gc, gb) = snap.fileSet.sizeHistogram(bounds)
+      hist.foreach { case (_, counts, byts) =>
         if (!java.util.Arrays.equals(gc, counts) ||
             !java.util.Arrays.equals(gb, byts)) {
           val badC = counts.indices.find(i => gc(i) != counts(i))
@@ -641,8 +664,8 @@ object Checksum {
           val staleLogicalKeyed = crcSet != replaySet &&
             crcSet == collected.map(echoCanonOfAdd(_, identity)).toSet
           if (staleLogicalKeyed)
-            System.err.println(
-              s"graft: stale-format crc ${crcPath(logDir, snap.version)} " +
+            logger.warn(
+              s"stale-format crc ${crcPath(logDir, snap.version)} " +
                 "tolerated — its allFiles echo keys partitionValues " +
                 "logically (pre-physical-keying writer); all state values " +
                 "match, next commit rewrites the current shape")

@@ -81,6 +81,8 @@ object LogStoreOwner extends CommitOwner {
   * schemes loudly beats a silently-racy fallback. */
 object CatalogCommitOwner extends CommitOwner {
 
+  private val logger = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   val CommitsDirName = "_commits"
 
   /** A `<v>.json` exists whose content differs from the body the catalog's
@@ -231,7 +233,7 @@ object CatalogCommitOwner extends CommitOwner {
         } catch {
           case e: OwnerBypassException => throw e // a lost update stays loud
           case e: Exception => // a torn registry entry must not brick the owner
-            System.err.println(s"graft: owner recovery skipped v$v at $log: " +
+            logger.warn(s"owner recovery skipped v$v at $log: " +
               s"${e.getClass.getSimpleName}: ${e.getMessage}")
         }
       case _ => ()

@@ -27,8 +27,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * stats-based data skipping — run DISTRIBUTED over the snapshot's
   * [[DeltaFileSet]] DataFrame, and only the surviving files (stripped of
   * their stats payload) come back. Small snapshots (≤
-  * `spark.graft.delta.driverFileListThreshold`, default 10k files) take
-  * the driver path: one bounded collect, zero extra Spark jobs per query. */
+  * `spark.graft.delta.driverFileListThreshold` files, default 10k, read
+  * when the snapshot's file set is made) take the driver path: zero Spark
+  * jobs per listing. A replayed set whose crc records that it is small is
+  * collected by the pass that builds it, so a cold read of a checkpointed
+  * table costs 5 jobs in all: 1 for protocol + metaData, 2 to build and
+  * collect the file set, 2 for the query itself. */
 final class DeltaFileIndex(
     spark: SparkSession,
     @volatile private var snap: DeltaSnapshot) extends FileIndex {
@@ -40,15 +44,10 @@ final class DeltaFileIndex(
 
   def dataSchema: StructType = snap.dataSchema
 
-  private def driverListThreshold: Long =
-    spark.conf.getOption("spark.graft.delta.driverFileListThreshold")
-      .map(_.toLong).getOrElse(10000L)
-
-  /** Driver path for small (or already-materialized) snapshots; the
-    * distributed path pays ~2 extra Spark jobs per plan, which only
+  /** Driver path for small (or already collected) file sets; the
+    * distributed path pays an extra Spark job per plan, which only
     * amortizes once the file list itself is the scaling problem. */
-  private def useDriverPath: Boolean =
-    snap.fileSet.isCollected || snap.fileSet.count <= driverListThreshold
+  private def useDriverPath: Boolean = snap.fileSet.servedFromDriver
 
   /** Group files by partition-value tuple, values cast to the declared
     * partition types as Catalyst internal rows. */

@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,6 +21,20 @@ import scala.collection.concurrent.TrieMap
   * snapshot is cached per (table, version) per session — the reference
   * re-reads the log three times per query (DeltaMetadataHandler.scala:99,
   * 117,150), which SURVEY.md §3.2 flags as a design flaw to avoid.
+  *
+  * Job budget of a cold snapshot. A small checkpoint-less log replays on
+  * the driver: zero jobs. Every table with a checkpoint replays
+  * distributed: the checkpoint's schema comes from its footer, read on
+  * the driver (no inference job), and protocol + metaData come from ONE
+  * collect ([[replay]]) — 1 job to resolve the snapshot (V2 checkpoints
+  * add 1 for their sidecar paths). The file set costs 2 more at its first
+  * touch, where `spark.graft.delta.driverFileListThreshold` applies
+  * ([[DeltaFileSet]]): when the version's crc records at most that many
+  * files the set is collected in that same pass, and crc validation, the
+  * DV probe and listing run on the driver, so a cold snapshot + load +
+  * filtered count costs 5 jobs in all (SnapshotJobBudgetSpec). A set the
+  * crc records as larger, or a version without a crc, is persisted on
+  * executors instead, after one pass over the log.
   */
 object DeltaSnapshotReader {
   import DeltaActions._
@@ -130,12 +144,18 @@ object DeltaSnapshotReader {
       // run ~10 MiB logs and stay distributed).
       val localMax = spark.conf.getOption("spark.graft.delta.localReplayMaxBytes")
         .map(_.toLong).getOrElse(4L * 1024 * 1024)
-      val lenByPath: Map[Path, Long] = entries.map(st => st.getPath -> st.getLen).toMap
+      val statusByPath: Map[Path, FileStatus] = entries.map(st => st.getPath -> st).toMap
       val localSources: Seq[(Long, Path)] =
         (chosenC.map { case (_, end, p) => (end, p) } ++ tailCommitPairs).sortBy(_._1)
-      val localBytes = localSources.map { case (_, p) => lenByPath.getOrElse(p, Long.MaxValue / 4096) }.sum
+      // a source missing from the listing disqualifies the local path
+      // outright (no sentinel length whose sum could overflow)
+      val localLens = localSources.map { case (_, p) => statusByPath.get(p).map(_.getLen) }
+      // the target's crc, read once at the file set's first touch: its
+      // numFiles places the set (DeltaFileSet), then validation checks it
+      lazy val crc = Checksum.read(fs, logPath, target)
       val snap =
-        if (cpVersion.isEmpty && localSources.nonEmpty && localBytes <= localMax)
+        if (cpVersion.isEmpty && localSources.nonEmpty && localLens.forall(_.isDefined) &&
+            localLens.flatten.sum <= localMax)
           localReplay(spark, tablePath, target, localSources)
         else {
           val compactedDfs = chosenC.map { case (_, end, p) =>
@@ -145,13 +165,13 @@ object DeltaSnapshotReader {
           val cpDf = cpVersion.map { v =>
             val (v2Files, classicFiles) = checkpoints(v).partition(_._3)
             val actions =
-              if (classicFiles.nonEmpty)
-                normalizeActions(
-                  spark.read.parquet(classicFiles.map(_._2.toString).toSeq: _*))
-              else
+              if (classicFiles.nonEmpty) {
+                val parts = classicFiles.map(_._2).toSeq.sortBy(_.getName)
+                normalizeActions(readCheckpointParquet(spark, parts, statusByPath(parts.head)))
+              } else
                 // several writers may leave several uuid checkpoints for the
                 // same version; each is complete — pick one deterministically
-                readV2Checkpoint(spark, logPath, v2Files.map(_._2.toString).max)
+                readV2Checkpoint(spark, logPath, statusByPath(v2Files.map(_._2).maxBy(_.toString)))
             actions.withColumn("version", lit(v))
           }
           val jsonDf = if (tailCommits.isEmpty) None else Some {
@@ -160,7 +180,7 @@ object DeltaSnapshotReader {
                 regexp_extract(input_file_name(), """(\d{20})\.json""", 1).cast(LongType))
           }
           val actions = (cpDf.toSeq ++ compactedDfs ++ jsonDf.toSeq).reduce(_ unionByName _)
-          replay(spark, tablePath, target, actions)
+          replay(spark, tablePath, target, actions, () => crc.flatMap(Checksum.recordedNumFiles))
         }
       // Per-version state-checksum validation ([[Checksum]]): armed LAZY —
       // it runs at the first access to the file set's distributed rows
@@ -169,10 +189,11 @@ object DeltaSnapshotReader {
       // never touch the file set). Data is still never served unvalidated:
       // every data-plane path goes through fileSet.df, and a mismatch
       // POISONS the set — the refusal rethrows on every later access
-      // instead of being cached away. (On a locally-replayed snapshot the
-      // validation aggregates are driver-local folds — same contract,
-      // zero jobs.)
-      snap.fileSet.armValidator(() => Checksum.validate(fs, logPath, snap))
+      // instead of being cached away. (On a collected file set — every
+      // locally-replayed one, and every replayed one at or under
+      // driverFileListThreshold from its first touch — the validation
+      // aggregates are driver-local folds: same contract, zero jobs.)
+      snap.fileSet.armValidator(() => Checksum.validate(logPath, snap, crc))
       snap
     })
   }
@@ -318,26 +339,55 @@ object DeltaSnapshotReader {
     * sidecar-less single-file form) or `sidecar` pointers to parquet files
     * under `_delta_log/_sidecars/` that hold the file actions. The driver
     * collects only the sidecar PATHS (bounded by the sidecar count, not the
-    * file count); the sidecar contents replay distributed like any
+    * file count; one job); the sidecar contents replay distributed like any
     * checkpoint. */
-  private def readV2Checkpoint(spark: SparkSession, logPath: Path, mainFile: String): DataFrame = {
+  private def readV2Checkpoint(spark: SparkSession, logPath: Path, main: FileStatus): DataFrame = {
+    val mainFile = main.getPath.toString
     val raw =
       if (mainFile.endsWith(".json"))
         spark.read.schema(v2CheckpointFileSchema).json(mainFile)
-      else spark.read.parquet(mainFile)
-    val sidecarPaths: Seq[String] =
+      else readCheckpointParquet(spark, Seq(main.getPath), main)
+    val sidecarPaths: Seq[Path] =
       if (!raw.schema.fieldNames.contains("sidecar")) Nil
       else raw.where(col("sidecar.path").isNotNull)
         .select(col("sidecar.path")).collect().map(_.getString(0)).toSeq.sorted
         .map { p =>
           // spec: sidecar paths are relative to _delta_log/_sidecars/
           // (URL-encoded) or absolute URIs
-          if (p.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*") || p.startsWith("/")) p
-          else new Path(new Path(logPath, "_sidecars"), DeltaActions.decodePath(p)).toString
+          if (p.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*") || p.startsWith("/")) new Path(p)
+          else new Path(new Path(logPath, "_sidecars"), DeltaActions.decodePath(p))
         }
-    val main = normalizeActions(raw) // sidecar/checkpointMetadata rows → all-null action rows (inert in replay)
-    if (sidecarPaths.isEmpty) main
-    else main.unionByName(normalizeActions(spark.read.parquet(sidecarPaths: _*)))
+    val mainActions = normalizeActions(raw) // sidecar/checkpointMetadata rows → all-null action rows (inert in replay)
+    if (sidecarPaths.isEmpty) mainActions
+    else {
+      val first = sidecarPaths.head
+      val firstStatus = first.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(first)
+      mainActions.unionByName(normalizeActions(readCheckpointParquet(spark, sidecarPaths, firstStatus)))
+    }
+  }
+
+  /** Read checkpoint parquet `files` with the schema of one of them
+    * (`schemaFrom`), taken from its footer on the driver. Without an
+    * explicit schema Spark infers one by reading that same footer in a
+    * Spark job — one job per cold snapshot. Like Spark's inference
+    * (`mergeSchema` off), one footer is consulted: every part of one
+    * checkpoint shares a schema. */
+  private def readCheckpointParquet(spark: SparkSession, files: Seq[Path],
+                                    schemaFrom: FileStatus): DataFrame = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(schemaFrom, spark.sessionState.newHadoopConf()))
+    val schema = try {
+      val meta = reader.getFooter.getFileMetaData
+      // Spark-written files carry their exact Spark schema in the footer;
+      // inference prefers it over the parquet types, and so do we
+      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+    } finally reader.close()
+    spark.read.schema(schema).parquet(files.map(_.toString): _*)
   }
 
   /** Project a foreign-writer checkpoint (which may carry extra fields like
@@ -580,145 +630,172 @@ object DeltaSnapshotReader {
   }
 
   /** Distributed replay: per path, the action with the highest version wins;
-    * survivors whose last action is an `add` form the active set. */
-  private def replay(spark: SparkSession, tablePath: String, version: Long, actions: DataFrame): DeltaSnapshot = {
-    actions.cache()
-    try {
-      val protocol = actions.where(col("protocol.minReaderVersion").isNotNull)
-        .orderBy(col("version").desc)
-        .select(col("protocol.minReaderVersion"), col("protocol.minWriterVersion"),
-          col("protocol.readerFeatures"), col("protocol.writerFeatures"))
-        .limit(1).collect().headOption
-        .map { r =>
-          DeltaProtocol(
-            r.getInt(0),
-            if (r.isNullAt(1)) 2 else r.getInt(1),
-            if (r.isNullAt(2)) None else Some(r.getSeq[String](2).toSeq),
-            if (r.isNullAt(3)) None else Some(r.getSeq[String](3).toSeq))
-        }
-      gateProtocol(protocol, tablePath)
-
-      val metaRow = actions.where(col("metaData.id").isNotNull)
-        .orderBy(col("version").desc)
-        .select(col("metaData.schemaString"), col("metaData.partitionColumns"),
-          col("metaData.configuration"), col("metaData.id"), col("metaData.createdTime"))
-        .limit(1).collect().headOption
-        .getOrElse(throw new IllegalStateException(s"no metaData action found in $tablePath"))
-      val schema = DataType.fromJson(metaRow.getString(0)).asInstanceOf[StructType]
-      val partCols: Seq[String] =
-        Option(metaRow.getSeq[String](1)).map(_.toSeq).getOrElse(Seq.empty)
-      val configuration: Map[String, String] =
-        Option(metaRow.getMap[String, String](2)).map(m => Map(m.toSeq: _*)).getOrElse(Map.empty)
-      // Column mapping: `name` mode is a metadata-only indirection — parquet
-      // stores every field under its delta.columnMapping.physicalName and
-      // add.partitionValues is keyed by physical name. `id` mode files also
-      // carry parquet field IDs; the physical schema then embeds
-      // parquet.field.id metadata and the scan enables Spark's field-ID
-      // matching, so columns resolve even when parquet names diverge.
-      val physicalSchema: Option[StructType] =
-        resolvePhysicalSchema(schema, configuration, tablePath)
-      // physical partition key -> logical column name, for translating
-      // add.partitionValues into the logical names everything downstream uses
-      val physToLogicalPart: Map[String, String] = physicalSchema match {
-        case Some(ps) => partCols.map(c => ps.fields(schema.fieldIndex(c)).name -> c).toMap
-        case None => Map.empty
+    * survivors whose last action is an `add` form the active set.
+    *
+    * Job budget of a cold snapshot on this path: ONE job here (protocol
+    * and metaData together); the file set (2 jobs at its first touch),
+    * tombstones (2) and txns + domains (2, together) are lazy. A checkpoint's schema comes from its footer
+    * ([[readCheckpointParquet]]), so reading it costs no job. */
+  private def replay(spark: SparkSession, tablePath: String, version: Long, actions: DataFrame,
+                     recordedFiles: () => Option[Long]): DeltaSnapshot = {
+    // newest protocol and newest metaData in ONE scan: each partition
+    // keeps its newest of each, the driver picks the newest overall —
+    // the driver holds at most 2 rows per partition
+    val isProto = col("protocol.minReaderVersion").isNotNull
+    val isMeta = col("metaData.id").isNotNull
+    val heads = actions.where(isProto || isMeta)
+      .select(col("version"),
+        when(isProto, struct(col("protocol.minReaderVersion"), col("protocol.minWriterVersion"),
+          col("protocol.readerFeatures"), col("protocol.writerFeatures"))).as("p"),
+        when(isMeta, struct(col("metaData.schemaString"), col("metaData.partitionColumns"),
+          col("metaData.configuration"), col("metaData.id"), col("metaData.createdTime"))).as("m"))
+      .rdd.mapPartitions(newestHeads).collect()
+    val survivors = newestHeads(heads.iterator).toSeq
+    def newest(i: Int): Option[Row] = survivors.find(!_.isNullAt(i)).map(_.getStruct(i))
+    val protocol = newest(1)
+      .map { r =>
+        DeltaProtocol(
+          r.getInt(0),
+          if (r.isNullAt(1)) 2 else r.getInt(1),
+          if (r.isNullAt(2)) None else Some(r.getSeq[String](2).toSeq),
+          if (r.isNullAt(3)) None else Some(r.getSeq[String](3).toSeq))
       }
+    gateProtocol(protocol, tablePath)
 
-      // Active-file set: stays a DATAFRAME. The per-path last-action dedup
-      // (the expensive part of replay) runs distributed and its result is
-      // persisted on executors by DeltaFileSet on first use; the driver
-      // never holds the full list unless a maintenance consumer asks.
-      // The thunk closes over the (lazy) `actions` plan, so it re-reads the
-      // log if first forced after this method unpersists the build cache.
-      val fileSet = DeltaFileSet.fromDf { () =>
-        val base = actions
-          .where(col("add.path").isNotNull || col("remove.path").isNotNull)
-          .select(coalesce(col("add.path"), col("remove.path")).as("__p"),
-            col("add"), col("version"))
-          .groupBy("__p")
-          // same-version tie-break: a DV writer commits remove+add of the
-          // SAME path in ONE commit (the add carries the new deletion
-          // vector) — the add must win, so order by (version, add-present)
-          .agg(max_by(struct(col("add"), col("version")),
-            struct(col("version"), col("add").isNotNull)).as("w"))
-          .select(col("w.add").as("add"), col("w.version").as("__v"))
-          .where(col("add").isNotNull)
-        // column-mapped tables key add.partitionValues by PHYSICAL name;
-        // translate to logical in the DataFrame so every consumer
-        // (distributed pruning included) sees logical keys
-        val pv =
-          if (physToLogicalPart.isEmpty) col("add.partitionValues")
-          else transform_keys(col("add.partitionValues"),
-            (k, _) => coalesce(element_at(typedLit(physToLogicalPart), k), k))
-        base.select(
-          col("add.path").as("path"),
-          pv.as("partitionValues"),
-          coalesce(col("add.size"), lit(0L)).as("size"),
-          coalesce(col("add.modificationTime"), lit(0L)).as("modificationTime"),
-          col("add.stats").as("stats"),
-          // rows with a descriptor but null storageType are malformed
-          when(col("add.deletionVector.storageType").isNotNull, col("add.deletionVector"))
-            .otherwise(lit(null).cast(deletionVectorType)).as("deletionVector"),
-          col("add.baseRowId").as("baseRowId"),
-          col("add.defaultRowCommitVersion").as("defaultRowCommitVersion"),
-          // engine-side: the version whose add won replay (post-checkpoint,
-          // the checkpoint version — see AddFile.addedVersion)
-          col("__v").as("addedVersion"))
-      }
+    val metaRow = newest(2)
+      .getOrElse(throw new IllegalStateException(s"no metaData action found in $tablePath"))
+    val schema = DataType.fromJson(metaRow.getString(0)).asInstanceOf[StructType]
+    val partCols: Seq[String] =
+      Option(metaRow.getSeq[String](1)).map(_.toSeq).getOrElse(Seq.empty)
+    val configuration: Map[String, String] =
+      Option(metaRow.getMap[String, String](2)).map(m => Map(m.toSeq: _*)).getOrElse(Map.empty)
+    // Column mapping: `name` mode is a metadata-only indirection — parquet
+    // stores every field under its delta.columnMapping.physicalName and
+    // add.partitionValues is keyed by physical name. `id` mode files also
+    // carry parquet field IDs; the physical schema then embeds
+    // parquet.field.id metadata and the scan enables Spark's field-ID
+    // matching, so columns resolve even when parquet names diverge.
+    val physicalSchema: Option[StructType] =
+      resolvePhysicalSchema(schema, configuration, tablePath)
+    // physical partition key -> logical column name, for translating
+    // add.partitionValues into the logical names everything downstream uses
+    val physToLogicalPart: Map[String, String] = physicalSchema match {
+      case Some(ps) => partCols.map(c => ps.fields(schema.fieldIndex(c)).name -> c).toMap
+      case None => Map.empty
+    }
 
-      // Current tombstones: last action for the path is a remove (no later
-      // re-add). Checkpoints must retain these until retention expiry, and
-      // VACUUM uses them to find deletable files. LAZY (∝ removed files).
-      val tombstonesF: () => Seq[RemoveTombstone] = () => {
-        val lastRemove = actions.where(col("remove.path").isNotNull)
-          .groupBy(col("remove.path").as("path"))
-          .agg(max(col("version")).as("rv"), max_by(col("remove"), col("version")).as("rm"))
-        val lastAdd = actions.where(col("add.path").isNotNull)
-          .groupBy(col("add.path").as("path"))
-          .agg(max(col("version")).as("av"))
-        lastRemove.join(lastAdd, Seq("path"), "left_outer")
-          .where(col("av").isNull || col("av") < col("rv"))
-          .select(col("path"), col("rm.deletionTimestamp"), col("rm.dataChange"))
-          .collect()
-          .map(r => RemoveTombstone(
-            r.getString(0),
-            if (r.isNullAt(1)) 0L else r.getLong(1),
-            if (r.isNullAt(2)) true else r.getBoolean(2)))
-          .sortBy(_.path).toSeq
-      }
+    // Active-file set: the per-path last-action dedup (the expensive part
+    // of replay) runs distributed at the set's first touch, over the
+    // (lazy) `actions` plan. That same pass collects the set when the crc
+    // records at most driverFileListThreshold files; any other set stays
+    // persisted on executors and the driver never holds the full list
+    // unless a maintenance consumer asks (DeltaFileSet.ensureBuilt).
+    val fileSet = DeltaFileSet.fromDf(() => {
+      val base = actions
+        .where(col("add.path").isNotNull || col("remove.path").isNotNull)
+        .select(coalesce(col("add.path"), col("remove.path")).as("__p"),
+          col("add"), col("version"))
+        .groupBy("__p")
+        // same-version tie-break: a DV writer commits remove+add of the
+        // SAME path in ONE commit (the add carries the new deletion
+        // vector) — the add must win, so order by (version, add-present)
+        .agg(max_by(struct(col("add"), col("version")),
+          struct(col("version"), col("add").isNotNull)).as("w"))
+        .select(col("w.add").as("add"), col("w.version").as("__v"))
+        .where(col("add").isNotNull)
+      // column-mapped tables key add.partitionValues by PHYSICAL name;
+      // translate to logical in the DataFrame so every consumer
+      // (distributed pruning included) sees logical keys
+      val pv =
+        if (physToLogicalPart.isEmpty) col("add.partitionValues")
+        else transform_keys(col("add.partitionValues"),
+          (k, _) => coalesce(element_at(typedLit(physToLogicalPart), k), k))
+      base.select(
+        col("add.path").as("path"),
+        pv.as("partitionValues"),
+        coalesce(col("add.size"), lit(0L)).as("size"),
+        coalesce(col("add.modificationTime"), lit(0L)).as("modificationTime"),
+        col("add.stats").as("stats"),
+        // rows with a descriptor but null storageType are malformed
+        when(col("add.deletionVector.storageType").isNotNull, col("add.deletionVector"))
+          .otherwise(lit(null).cast(deletionVectorType)).as("deletionVector"),
+        col("add.baseRowId").as("baseRowId"),
+        col("add.defaultRowCommitVersion").as("defaultRowCommitVersion"),
+        // engine-side: the version whose add won replay (post-checkpoint,
+        // the checkpoint version — see AddFile.addedVersion)
+        col("__v").as("addedVersion"))
+    }, DeltaFileSet.driverListThreshold(spark), recordedFiles)
 
-      // Latest txn watermark per appId (streaming-writer idempotency; must
-      // survive checkpointing or foreign streaming writers replay commits).
-      val txnsF: () => Seq[SetTransaction] = () =>
-        actions.where(col("txn.appId").isNotNull)
-          .groupBy(col("txn.appId").as("appId"))
-          .agg(max_by(col("txn"), col("version")).as("t"))
-          .select(col("appId"), col("t.version"), col("t.lastUpdated"))
-          .collect()
-          .map(r => SetTransaction(
-            r.getString(0),
-            if (r.isNullAt(1)) 0L else r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getLong(2))))
-          .sortBy(_.appId).toSeq
+    // Current tombstones: last action for the path is a remove (no later
+    // re-add). Checkpoints must retain these until retention expiry, and
+    // VACUUM uses them to find deletable files. LAZY (∝ removed files).
+    // One aggregate: the newest action per path, an add winning a
+    // same-version tie exactly as in the file set; a remove winner is a
+    // tombstone.
+    val tombstonesF: () => Seq[RemoveTombstone] = () => {
+      val isAdd = col("add.path").isNotNull
+      actions.where(isAdd || col("remove.path").isNotNull)
+        .groupBy(coalesce(col("add.path"), col("remove.path")).as("path"))
+        .agg(max_by(struct(isAdd.as("isAdd"), col("remove").as("rm")),
+          struct(col("version"), isAdd)).as("w"))
+        .where(!col("w.isAdd"))
+        .select(col("path"), col("w.rm.deletionTimestamp"), col("w.rm.dataChange"))
+        .collect()
+        .map(r => RemoveTombstone(
+          r.getString(0),
+          if (r.isNullAt(1)) 0L else r.getLong(1),
+          if (r.isNullAt(2)) true else r.getBoolean(2)))
+        .sortBy(_.path).toSeq
+    }
 
-      // Live metadata domains (domainMetadata writer feature): latest
-      // action per domain wins; a removed=true tombstone deletes it.
-      // LAZY — bounded by the number of domains, not table size.
-      val domainMetadataF: () => Map[String, String] = () =>
-        actions.where(col("domainMetadata.domain").isNotNull)
-          .groupBy(col("domainMetadata.domain").as("domain"))
-          .agg(max_by(col("domainMetadata"), col("version")).as("dm"))
-          .where(!coalesce(col("dm.removed"), lit(false)))
-          .select(col("domain"), col("dm.configuration"))
-          .collect()
-          .map(r => r.getString(0) -> (if (r.isNullAt(1)) "" else r.getString(1)))
-          .toMap
+    // Latest txn watermark per appId (streaming-writer idempotency; must
+    // survive checkpointing or foreign streaming writers replay commits)
+    // and live metadata domains (domainMetadata writer feature; a
+    // removed=true tombstone deletes one), resolved in ONE lazy aggregate:
+    // both are bounded by the number of writers and domains, not table
+    // size, and a checkpoint needs both. The newest action per key wins.
+    lazy val txnsAndDomains: (Seq[SetTransaction], Map[String, String]) = {
+      val isTxn = col("txn.appId").isNotNull
+      val (txnRows, domainRows) = actions.where(isTxn || col("domainMetadata.domain").isNotNull)
+        .groupBy(isTxn.as("isTxn"),
+          coalesce(col("txn.appId"), col("domainMetadata.domain")).as("key"))
+        .agg(max_by(struct(col("txn"), col("domainMetadata")), col("version")).as("w"))
+        .select(col("isTxn"), col("key"), col("w.txn.version"), col("w.txn.lastUpdated"),
+          col("w.domainMetadata.configuration"), coalesce(col("w.domainMetadata.removed"), lit(false)))
+        .collect()
+        .partition(_.getBoolean(0))
+      val txns = txnRows
+        .map(r => SetTransaction(
+          r.getString(1),
+          if (r.isNullAt(2)) 0L else r.getLong(2),
+          if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        .sortBy(_.appId).toSeq
+      val domains = domainRows.filterNot(_.getBoolean(5))
+        .map(r => r.getString(1) -> (if (r.isNullAt(4)) "" else r.getString(4)))
+        .toMap
+      (txns, domains)
+    }
+    val txnsF: () => Seq[SetTransaction] = () => txnsAndDomains._1
+    val domainMetadataF: () => Map[String, String] = () => txnsAndDomains._2
 
-      DeltaSnapshot(tablePath, version, schema, partCols, fileSet, tombstonesF, txnsF,
-        configuration, physicalSchema, protocol, domainMetadataF,
-        metadataId = Option(metaRow.getString(3)),
-        metadataCreatedTime = if (metaRow.isNullAt(4)) None else Some(metaRow.getLong(4)))
-    } finally actions.unpersist()
+    DeltaSnapshot(tablePath, version, schema, partCols, fileSet, tombstonesF, txnsF,
+      configuration, physicalSchema, protocol, domainMetadataF,
+      metadataId = Option(metaRow.getString(3)),
+      metadataCreatedTime = if (metaRow.isNullAt(4)) None else Some(metaRow.getLong(4)))
+  }
+
+  /** Of (version, protocol, metaData) rows, the newest row carrying a
+    * protocol and the newest carrying a metaData (later rows win version
+    * ties). Executor-safe: runs per partition, then again on the driver
+    * over the partitions' survivors. */
+  private def newestHeads(rows: Iterator[Row]): Iterator[Row] = {
+    var p: Row = null
+    var m: Row = null
+    rows.foreach { r =>
+      if (!r.isNullAt(1) && (p == null || r.getLong(0) >= p.getLong(0))) p = r
+      if (!r.isNullAt(2) && (m == null || r.getLong(0) >= m.getLong(0))) m = r
+    }
+    Iterator(p, m).filter(_ != null).distinct
   }
 
   // ---------------------------------------------------------------------

@@ -23,6 +23,8 @@ import java.util.UUID
   */
 object DeltaWriter {
 
+  private val logger = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   import DeltaActions._
 
   /** Default tombstone retention (the protocol's
@@ -2481,8 +2483,8 @@ object DeltaWriter {
       }
       catch {
         case scala.util.control.NonFatal(e) =>
-          Console.err.println(
-            s"graft: auto-checkpoint at $tablePath v$version failed (commit is " +
+          logger.warn(
+            s"auto-checkpoint at $tablePath v$version failed (commit is " +
               s"durable; next interval retries): ${e.getMessage}")
       }
   }
@@ -3612,10 +3614,11 @@ object DeltaWriter {
       val protocol = org.apache.spark.sql.Row(null, null, null,
         org.apache.spark.sql.Row(proto.minReaderVersion, proto.minWriterVersion,
           proto.readerFeatures.orNull, proto.writerFeatures.orNull), null, null)
+      // a checkpoint restates state: the table keeps its identity
       val meta = org.apache.spark.sql.Row(null, null,
-        org.apache.spark.sql.Row(UUID.randomUUID().toString, null,
+        org.apache.spark.sql.Row(snap.metadataId.getOrElse(UUID.randomUUID().toString), null,
           org.apache.spark.sql.Row("parquet"), snap.schema.json,
-          snap.partitionColumns, snap.configuration, System.currentTimeMillis()),
+          snap.partitionColumns, snap.configuration, snap.metadataCreatedTime.map(Long.box).orNull),
         null, null, null)
       // Spec: checkpoints retain remove tombstones until retention expiry
       // (VACUUM safety for other readers) and all txn watermarks (streaming
@@ -3661,9 +3664,9 @@ object DeltaWriter {
       lit(null).cast(txnType).as("txn"),
       lit(null).cast(domainMetadataType).as("domainMetadata"))
     val nActions = headRows.size + snap.fileSet.count
-    val df = spark.createDataFrame(headRows.asJava, actionSchema)
-      .unionByName(addDf)
-      .repartition(parts) // one output file per checkpoint part
+    val unioned = spark.createDataFrame(headRows.asJava, actionSchema).unionByName(addDf)
+    // one output file per checkpoint part; a single part needs no shuffle
+    val df = if (parts == 1) unioned.coalesce(1) else unioned.repartition(parts)
     val tmp = new Path(logDir, s".cp-tmp-${UUID.randomUUID()}")
     df.write.parquet(tmp.toString)
     val partFiles = fs.listStatus(tmp).map(_.getPath)
@@ -3765,10 +3768,11 @@ object DeltaWriter {
       mainRow(null, null, null,
         org.apache.spark.sql.Row(proto.minReaderVersion, proto.minWriterVersion,
           proto.readerFeatures.orNull, proto.writerFeatures.orNull), null, null, null, null),
+      // a checkpoint restates state: the table keeps its identity
       mainRow(null, null,
-        org.apache.spark.sql.Row(UUID.randomUUID().toString, null,
+        org.apache.spark.sql.Row(snap.metadataId.getOrElse(UUID.randomUUID().toString), null,
           org.apache.spark.sql.Row("parquet"), snap.schema.json,
-          snap.partitionColumns, snap.configuration, System.currentTimeMillis()),
+          snap.partitionColumns, snap.configuration, snap.metadataCreatedTime.map(Long.box).orNull),
         null, null, null, null, null)) ++
       snap.txns.map(t => mainRow(null, null, null, null,
         org.apache.spark.sql.Row(t.appId, t.version, t.lastUpdated.map(Long.box).orNull),

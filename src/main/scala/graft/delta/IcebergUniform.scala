@@ -69,6 +69,8 @@ import java.nio.charset.StandardCharsets
   */
 object IcebergUniform {
 
+  private val logger = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   // ------------------------------------------------------------------
   // Delta → Iceberg schema conversion (primitive types; spec v2 names)
   // ------------------------------------------------------------------
@@ -249,7 +251,7 @@ object IcebergUniform {
         try export(spark, table)
         catch {
           case e: Exception =>
-            System.err.println(s"graft: UniForm auto-export skipped for " +
+            logger.warn(s"UniForm auto-export skipped for " +
               s"$table: ${e.getClass.getSimpleName}: ${e.getMessage}")
         }
       }

@@ -436,6 +436,28 @@ class ChecksumSpec extends SparkSpec {
     DeltaSnapshotReader.invalidate(t)
     assert(DeltaSnapshotReader.snapshot(spark, t).metadataId == id0,
       "schema evolution re-minted the table id")
+    // a checkpoint restates state: every form keeps the identity, read
+    // back from the checkpoint itself (no JSON tail above it)
+    def evolved(lo: Long, hi: Long) =
+      df(lo, hi).withColumn("extra", org.apache.spark.sql.functions.lit(1))
+    def assertCheckpointKeepsIdentity(what: String): Unit = {
+      DeltaSnapshotReader.invalidate(t)
+      val s = DeltaSnapshotReader.snapshot(spark, t)
+      assert(Files.list(Paths.get(t, "_delta_log")).anyMatch(
+        _.getFileName.toString.startsWith(f"${s.version}%020d.checkpoint")), s"$what: no checkpoint")
+      assert(s.metadataId == id0, s"$what re-minted the table id")
+      assert(s.metadataCreatedTime == created0, s"$what changed createdTime")
+    }
+    DeltaWriter.checkpoint(spark, t)
+    assertCheckpointKeepsIdentity("checkpoint()")
+    DeltaWriter.write(evolved(15, 16), t)
+    DeltaWriter.checkpoint(spark, t, parts = 2)
+    assertCheckpointKeepsIdentity("checkpoint(parts = 2)")
+    while (DeltaSnapshotReader.latestVersion(spark, t) < 10L)
+      DeltaWriter.write(evolved(16, 17), t) // v10 checkpoints automatically
+    assertCheckpointKeepsIdentity("the automatic checkpoint")
+    DeltaWriter.checkpointV2(spark, t)
+    assertCheckpointKeepsIdentity("checkpointV2")
     // and the crc's metadata echo is a COMPLETE Metadata action: id +
     // createdTime present at every version, on both the replay-rendered
     // v0 crc and the incrementally-maintained later crcs
