@@ -376,15 +376,14 @@ object ChangeDataFeed {
         // the join via raise_error — no planning-time count() job per
         // remove-version. When the range parsed locally AND the prior
         // snapshot is already collected (small table), the lookup is a
-        // driver-side map probe instead.
+        // driver-side map probe instead — for a consistent log only: a
+        // remove of a file not active at v-1 takes the join, so both
+        // placements fail the same way (raise_error, at execution).
         val prior = DeltaSnapshotReader.snapshotAt(spark, tablePath, Some(v - 1))
+        lazy val byPath = prior.files.map(f => f.path -> f).toMap
         val removedSet: DeltaFileSet = localActs match {
-          case Some(m) if prior.fileSet.isCollected =>
-            val byPath = prior.files.map(f => f.path -> f).toMap
-            DeltaFileSet.of(m(v).removePaths.sorted.map { p =>
-              byPath.getOrElse(p, throw new IllegalArgumentException(
-                s"version $v of $tablePath removes file $p that was not active at ${v - 1}"))
-            })
+          case Some(m) if prior.fileSet.isCollected && m(v).removePaths.forall(byPath.contains) =>
+            DeltaFileSet.of(m(v).removePaths.sorted.map(byPath))
           case _ =>
             val removedDf = () => {
               val rmPaths = verActs(v).where(col("remove.dataChange"))

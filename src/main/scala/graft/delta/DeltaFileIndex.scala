@@ -221,19 +221,10 @@ object DeltaFileIndex {
     DeletionVectors.applyToScan(spark, df, snap, cols)
   }
 
-  /** PHYSICAL scan for the DV writer's row-index probe: NO deletion-vector
-    * filtering, and the scan metadata exposed as `__fp` (file path) /
-    * `__ri` (row index within the file). */
-  def relationWithRowIndex(spark: SparkSession, snap: DeltaSnapshot): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (df, cols) = baseScan(spark, snap)
-    df.select(cols :+ col("_metadata.file_path").as("__fp")
-      :+ col("_metadata.row_index").as("__ri"): _*)
-  }
-
   /** LIVE-row scan (deletion vectors applied) that still exposes
     * `__fp`/`__ri` — the row-tracking read path (`_row_id` = the file's
-    * `baseRowId` + `__ri`; DV'd rows drop out, their ids never reused).
+    * `baseRowId` + `__ri`; DV'd rows drop out, their ids never reused) and
+    * the address of each row the DML core's DV leg masks.
     * `extraPhysicalCols` are physical-only parquet columns to surface
     * (e.g. materialized row ids) — files lacking them read as null. */
   def relationWithRowIndexLive(spark: SparkSession, snap: DeltaSnapshot,

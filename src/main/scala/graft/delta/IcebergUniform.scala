@@ -614,7 +614,7 @@ object IcebergUniform {
          |"snapshot-log":[{"timestamp-ms":$ts,"snapshot-id":$snapshotId}],
          |"metadata-log":[]}""".stripMargin.replace("\n", "")
     val metaVersion = snap.version + 1
-    writeText(fs, new Path(metaDir, s"v$metaVersion.metadata.json"), metadataJson)
+    LogStore.replace(fs, new Path(metaDir, s"v$metaVersion.metadata.json"), metadataJson + "\n")
     // hint only moves FORWARD: two racing auto-exports (commit vN and
     // vN+1 finishing out of order) must never point discovery at the
     // older metadata — each vN.metadata.json is immutable, so the max
@@ -626,23 +626,8 @@ object IcebergUniform {
       finally in.close()
     } catch { case _: Exception => -1L }
     if (metaVersion >= curHint)
-      writeText(fs, hintPath, metaVersion.toString)
+      LogStore.replace(fs, hintPath, metaVersion.toString + "\n")
     snapshotId
-  }
-
-  private def writeText(fs: org.apache.hadoop.fs.FileSystem, p: Path, s: String): Unit = {
-    // temp + rename, never truncate-in-place (version-hint.text is the one
-    // path here that overwrites an existing file): racing readers see
-    // old-or-new, and a hardlink-cloned fixture's shared inode is never
-    // truncated — rename only swaps the directory entry
-    val tmp = new Path(p.getParent,
-      s".${p.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((s + "\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!fs.rename(tmp, p)) {
-      fs.delete(p, false)
-      require(fs.rename(tmp, p), s"could not replace $p")
-    }
   }
 
   // ------------------------------------------------------------------

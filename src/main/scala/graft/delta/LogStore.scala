@@ -48,6 +48,38 @@ object LogStore {
   /** The JVM's configured default store ([[forName]] of `graft.logStore`). */
   def fromConfig(): LogStore =
     forName(sys.props.getOrElse("graft.logStore", "rename"))
+
+  /** Replace the pointer file `p` (`_last_checkpoint`, Iceberg
+    * `version-hint.text`) with `content`: write a hidden temp file, then
+    * rename it into place — never truncate in place, so a racing reader
+    * sees the old or the new bytes, and a hardlink-cloned fixture's shared
+    * inode is never truncated. A filesystem that refuses rename onto an
+    * existing file gets the old file moved aside first and moved back if
+    * the second rename fails: `p` is never left deleted, and the temp file
+    * is removed on every failure path. */
+  def replace(fs: FileSystem, p: Path, content: String): Unit = {
+    val tag = UUID.randomUUID().toString.take(8)
+    val tmp = new Path(p.getParent, s".${p.getName}.$tag.tmp")
+    var placed = false
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
+      placed = fs.rename(tmp, p) || {
+        val aside = new Path(p.getParent, s".${p.getName}.$tag.old")
+        fs.exists(p) && fs.rename(p, aside) && {
+          val ok =
+            try fs.rename(tmp, p)
+            catch { case scala.util.control.NonFatal(e) => fs.rename(aside, p); throw e }
+          if (ok) quietly(fs.delete(aside, false)) else fs.rename(aside, p)
+          ok
+        }
+      }
+      if (!placed) throw new java.io.IOException(s"could not replace $p")
+    } finally if (!placed) quietly(fs.delete(tmp, false))
+  }
+
+  private def quietly(body: => Any): Unit =
+    try body catch { case scala.util.control.NonFatal(_) => () }
 }
 
 /** HDFS-semantics store: stream to a hidden temp file in the log dir, then

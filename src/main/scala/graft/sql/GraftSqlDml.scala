@@ -221,8 +221,8 @@ object GraftSql {
     }
 
   /** The ON clause as equi-join key names: a conjunction of `t.k = s.k`
-    * with the SAME terminal name both sides (the fixed-shape
-    * [[DeltaWriter.merge]] contract). Terminal names compare
+    * with the SAME terminal name both sides (the key-column contract of
+    * [[DeltaWriter.mergeClauses]]). Terminal names compare
     * case-insensitively (matching Spark's default resolution), and a term
     * whose two qualifiers resolve to the SAME relation (`t.k = t.k`) is
     * refused — it is not a join key, and silently treating it as one would
@@ -278,7 +278,7 @@ object GraftSql {
         }
         val tgtSchema = graft.delta.DeltaSnapshotReader.snapshot(spark, path).schema
         // canonicalize each key to the target schema's spelling —
-        // [[DeltaWriter.merge]] resolves key names case-SENSITIVELY there
+        // [[DeltaWriter.mergeClauses]] resolves key names case-SENSITIVELY there
         val tgtFields = tgtSchema.fieldNames
         val keys = equiKeys(cond, tA, sA)
           .map(k => tgtFields.find(_.equalsIgnoreCase(k)).getOrElse(k))
@@ -300,53 +300,43 @@ object GraftSql {
               canon -> org.apache.spark.sql.functions.col(s"s.`$n`")
             }.toMap)
           else None
-        (matched, notMatched, notMatchedBySource) match {
-          // canonical CDC-upsert shape → the fixed fast path (the only
-          // merge form supporting identity columns); with a padded source
-          // SET * must not null out target-kept columns, so that case
-          // falls through to the clause path
-          case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq())
-            if starSet.isEmpty =>
-            DeltaWriter.merge(spark, path, srcDf, keys)
-          case _ =>
-            def colOf(e: Expression): Column = column(onTS(e, tA, sA))
-            def condOf(c: Option[Expression]): Option[Column] = c.map(colOf)
-            def setOf(as: Seq[Assignment]): Map[String, Column] =
-              as.map { a =>
-                val k = a.key match {
-                  case ua: UnresolvedAttribute if ua.nameParts.length == 2 &&
-                    tA(ua.nameParts.head.toLowerCase) => ua.nameParts.last
-                  case other => attrName(other)
-                }
-                k -> colOf(a.value)
-              }.toMap
-            import DeltaWriter._
-            val matchedCs: Seq[MergeClause] = matched.map {
-              case UpdateStarAction(c) => starSet match {
-                case Some(set) => MatchedUpdate(set, condOf(c))
-                case None => MatchedUpdateAll(condOf(c))
-              }
-              case UpdateAction(c, as, _) => MatchedUpdate(setOf(as), condOf(c))
-              case DeleteAction(c) => MatchedDelete(condOf(c))
-              case other => throw new IllegalArgumentException(
-                s"unsupported WHEN MATCHED action in SQL MERGE: $other")
+        def colOf(e: Expression): Column = column(onTS(e, tA, sA))
+        def condOf(c: Option[Expression]): Option[Column] = c.map(colOf)
+        def setOf(as: Seq[Assignment]): Map[String, Column] =
+          as.map { a =>
+            val k = a.key match {
+              case ua: UnresolvedAttribute if ua.nameParts.length == 2 &&
+                tA(ua.nameParts.head.toLowerCase) => ua.nameParts.last
+              case other => attrName(other)
             }
-            val insertCs: Seq[MergeClause] = notMatched.map {
-              case InsertStarAction(c) => NotMatchedInsertAll(condOf(c))
-              case other => throw new IllegalArgumentException(
-                "WHEN NOT MATCHED supports only INSERT * in SQL MERGE " +
-                  s"(explicit column lists are not supported); got: $other")
-            }
-            val bySourceCs: Seq[MergeClause] = notMatchedBySource.map {
-              case DeleteAction(c) => NotMatchedBySourceDelete(condOf(c))
-              case UpdateAction(c, as, _) => NotMatchedBySourceUpdate(setOf(as), condOf(c))
-              case other => throw new IllegalArgumentException(
-                s"unsupported WHEN NOT MATCHED BY SOURCE action in SQL MERGE: $other")
-            }
-            // families apply to disjoint row classes, so only the relative
-            // order WITHIN each family matters — preserved here
-            DeltaWriter.mergeClauses(spark, path, srcDf, keys, matchedCs ++ insertCs ++ bySourceCs)
+            k -> colOf(a.value)
+          }.toMap
+        import DeltaWriter._
+        val matchedCs: Seq[MergeClause] = matched.map {
+          case UpdateStarAction(c) => starSet match {
+            case Some(set) => MatchedUpdate(set, condOf(c))
+            case None => MatchedUpdateAll(condOf(c))
+          }
+          case UpdateAction(c, as, _) => MatchedUpdate(setOf(as), condOf(c))
+          case DeleteAction(c) => MatchedDelete(condOf(c))
+          case other => throw new IllegalArgumentException(
+            s"unsupported WHEN MATCHED action in SQL MERGE: $other")
         }
+        val insertCs: Seq[MergeClause] = notMatched.map {
+          case InsertStarAction(c) => NotMatchedInsertAll(condOf(c))
+          case other => throw new IllegalArgumentException(
+            "WHEN NOT MATCHED supports only INSERT * in SQL MERGE " +
+              s"(explicit column lists are not supported); got: $other")
+        }
+        val bySourceCs: Seq[MergeClause] = notMatchedBySource.map {
+          case DeleteAction(c) => NotMatchedBySourceDelete(condOf(c))
+          case UpdateAction(c, as, _) => NotMatchedBySourceUpdate(setOf(as), condOf(c))
+          case other => throw new IllegalArgumentException(
+            s"unsupported WHEN NOT MATCHED BY SOURCE action in SQL MERGE: $other")
+        }
+        // families apply to disjoint row classes, so only the relative
+        // order WITHIN each family matters — preserved here
+        DeltaWriter.mergeClauses(spark, path, srcDf, keys, matchedCs ++ insertCs ++ bySourceCs)
       case other => throw new IllegalArgumentException(s"not a Graft DML plan: $other")
     }
 }

@@ -127,6 +127,28 @@ class ChangeDataFeedSpec extends SparkSpec {
     intercept[IllegalArgumentException](ChangeDataFeed.read(spark, t2, 7L))
   }
 
+  test("a remove of a file not active at v-1 fails the same way on both placements") {
+    val t = mkTable()
+    // v2: a foreign commit removing a file the table never had
+    java.nio.file.Files.write(java.nio.file.Paths.get(t, "_delta_log", f"${2L}%020d.json"),
+      ("""{"remove":{"path":"p=0/ghost.parquet","deletionTimestamp":1,"dataChange":true}}""" + "\n")
+        .getBytes("UTF-8"))
+    DeltaSnapshotReader.invalidate(t)
+    def failure(localMax: Option[String]): Throwable = {
+      localMax.foreach(spark.conf.set("spark.graft.delta.localReplayMaxBytes", _))
+      try intercept[Throwable](ChangeDataFeed.read(spark, t, 2L).collect())
+      finally spark.conf.unset("spark.graft.delta.localReplayMaxBytes")
+    }
+    val local = failure(None)
+    val distributed = failure(Some("0"))
+    assert(local.getClass == distributed.getClass,
+      s"local placement threw ${local.getClass}, distributed ${distributed.getClass}")
+    Seq(local, distributed).foreach { e =>
+      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("that was not active at 1")), e)
+    }
+  }
+
   test("streaming CDF: AvailableNow drains resume from the checkpoint and feed DML") {
     val t = mkTable() // v0 data, v1 enable CDF
     val ck = Files.createTempDirectory("graft_cdf_ck").toString

@@ -130,6 +130,15 @@ class DeltaDmlSpec extends SparkSpec {
     assert(got.count() == 101)
     // the phantom survived untouched in the log (it was never affected)
     assert(DeltaSnapshotReader.snapshot(spark, t).files.exists(_.path == "phantom-far.parquet"))
+    // a clause-list merge probes under the same source key bounds
+    DeltaWriter.mergeClauses(spark, t,
+      Seq((4L, 0, "m4", -4.0), (998L, 1, "new2", 8.0)).toDF("id", "grp", "s", "amt"), Seq("id"),
+      Seq(DeltaWriter.MatchedUpdate(Map("s" -> col("s.s"))), DeltaWriter.NotMatchedInsertAll()))
+    val clauseMerged = DeltaSnapshotReader.load(spark, t).filter(col("id") < 100000L)
+    assert(clauseMerged.filter(col("id") === 4L).select("s").as[String].head() == "m4")
+    assert(clauseMerged.filter(col("id") === 998L).select("amt").as[Double].head() == 8.0)
+    assert(clauseMerged.count() == 102)
+    assert(DeltaSnapshotReader.snapshot(spark, t).files.exists(_.path == "phantom-far.parquet"))
     // DELETE and UPDATE probes push their condition below the
     // file-attribution projection too: stats disprove id=5 / id=7 for the
     // phantom, so neither probe may open it

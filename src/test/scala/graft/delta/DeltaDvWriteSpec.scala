@@ -382,9 +382,9 @@ class DeltaDvWriteSpec extends SparkSpec {
     DeltaWriter.setProperties(spark, t, Map("delta.enableDeletionVectors" -> "true"))
     val ridA = DeltaSnapshotReader.load(spark, t).filter(col("s") === "a")
       .select("rid").as[Long].head()
-    // no refusal (VERDICT r15 #5): the DV entry point routes identity
-    // tables through merge()'s CoW leg — matched keeps its id, insert
-    // mints above the water mark
+    // no refusal: identity tables take the DV leg like any other table,
+    // with the same identity rules as copy-on-write — matched keeps its
+    // id, insert mints above the water mark
     DeltaWriter.mergeWithDV(spark, t, Seq("a", "zz").toDF("s"), Seq("s"))
     val got = DeltaSnapshotReader.load(spark, t)
       .select("s", "rid").as[(String, Long)].collect().toMap

@@ -310,4 +310,37 @@ class LogStoreSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(live), "a fresh (possibly live) temp must survive")
     java.nio.file.Files.delete(live)
   }
+
+  /** Local filesystem whose rename refuses an existing destination
+    * (`refuseAll = false`) or every rename (`refuseAll = true`). */
+  private final class RefusingRenameFs(refuseAll: Boolean)
+      extends org.apache.hadoop.fs.RawLocalFileSystem {
+    initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    override def rename(src: Path, dst: Path): Boolean =
+      !refuseAll && !exists(dst) && super.rename(src, dst)
+  }
+
+  private def pointerDir(): (java.nio.file.Path, Path) = {
+    val dir = Files.createTempDirectory("graft_pointer")
+    val p = dir.resolve("_last_checkpoint")
+    Files.write(p, "old".getBytes(StandardCharsets.UTF_8))
+    (dir, new Path(p.toUri))
+  }
+
+  private def listing(dir: java.nio.file.Path): Set[String] =
+    dir.toFile.list().toSet
+
+  test("pointer replace succeeds where rename onto an existing file is refused") {
+    val (dir, p) = pointerDir()
+    LogStore.replace(new RefusingRenameFs(refuseAll = false), p, "new")
+    assert(new String(Files.readAllBytes(dir.resolve("_last_checkpoint")), StandardCharsets.UTF_8) == "new")
+    assert(listing(dir) == Set("_last_checkpoint"), s"leftovers: ${listing(dir)}")
+  }
+
+  test("pointer replace that cannot rename keeps the old file and leaves no temp file") {
+    val (dir, p) = pointerDir()
+    intercept[java.io.IOException](LogStore.replace(new RefusingRenameFs(refuseAll = true), p, "new"))
+    assert(new String(Files.readAllBytes(dir.resolve("_last_checkpoint")), StandardCharsets.UTF_8) == "old")
+    assert(listing(dir) == Set("_last_checkpoint"), s"leftovers: ${listing(dir)}")
+  }
 }
