@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -114,92 +114,6 @@ object ChangeDataFeed {
 
   private val commitRe = """(\d{20})\.json""".r
 
-  /** One commit's CDF-relevant actions, parsed driver-side (small-range
-    * fast path of [[read]] — same action semantics as the distributed
-    * summary + per-version selects). */
-  private final case class LocalCdcFile(path: String,
-      partitionValues: Map[String, String], size: Long)
-  private final case class LocalAddFile(path: String,
-      partitionValues: Map[String, String], size: Long,
-      modificationTime: Long, stats: Option[String])
-  private final case class LocalVerActs(nCdc: Long, cdc: Seq[LocalCdcFile],
-      adds: Seq[LocalAddFile], removePaths: Seq[String], nDvMove: Long,
-      ict: Option[Long])
-
-  private val localOm = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def parseCommitLocal(fs: org.apache.hadoop.fs.FileSystem,
-                               file: Path): LocalVerActs = {
-    import com.fasterxml.jackson.databind.JsonNode
-    def optText(n: JsonNode, f: String): Option[String] =
-      Option(n.get(f)).filterNot(_.isNull).map(_.asText())
-    def optLong(n: JsonNode, f: String, d: Long): Long =
-      Option(n.get(f)).filterNot(_.isNull).map(_.asLong()).getOrElse(d)
-    def boolOf(n: JsonNode, f: String): Boolean =
-      Option(n.get(f)).filterNot(_.isNull).exists(_.asBoolean())
-    def strMap(n: JsonNode, f: String): Map[String, String] =
-      Option(n.get(f)).filterNot(_.isNull).map { m =>
-        val b = Map.newBuilder[String, String]
-        val it = m.fields()
-        while (it.hasNext) {
-          val e = it.next()
-          b += e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())
-        }
-        b.result()
-      }.getOrElse(Map.empty)
-    val in = fs.open(file)
-    val txt = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8")
-    } finally in.close()
-    var nCdc = 0L; var nDvMove = 0L; var ict: Option[Long] = None
-    val cdc = Seq.newBuilder[LocalCdcFile]
-    val adds = Seq.newBuilder[LocalAddFile]
-    val removePaths = scala.collection.mutable.LinkedHashSet.empty[String]
-    txt.split('\n').foreach { line0 =>
-      val line = line0.trim
-      if (line.nonEmpty) {
-        val root = try localOm.readTree(line) catch { case _: Exception => null }
-        if (root != null) {
-          val addN = Option(root.get("add")).filterNot(_.isNull)
-          val remN = Option(root.get("remove")).filterNot(_.isNull)
-          val cdcN = Option(root.get("cdc")).filterNot(_.isNull)
-          cdcN.foreach { c =>
-            nCdc += 1
-            optText(c, "path").foreach { p =>
-              cdc += LocalCdcFile(p, strMap(c, "partitionValues"), optLong(c, "size", 0L))
-            }
-          }
-          addN.filter(boolOf(_, "dataChange")).foreach { a =>
-            optText(a, "path").foreach { p =>
-              adds += LocalAddFile(p, strMap(a, "partitionValues"),
-                optLong(a, "size", 0L), optLong(a, "modificationTime", 0L),
-                optText(a, "stats"))
-            }
-          }
-          remN.filter(boolOf(_, "dataChange")).foreach { r =>
-            optText(r, "path").foreach(removePaths += _)
-          }
-          val dvMove =
-            addN.exists(a => boolOf(a, "dataChange") &&
-              Option(a.get("deletionVector")).exists(!_.isNull)) ||
-            remN.exists(r => boolOf(r, "dataChange") &&
-              Option(r.get("deletionVector")).exists(!_.isNull))
-          if (dvMove) nDvMove += 1
-          Option(root.get("commitInfo")).filterNot(_.isNull).foreach { ci =>
-            Option(ci.get("inCommitTimestamp")).filterNot(_.isNull).foreach { t =>
-              ict = Some(ict.fold(t.asLong())(math.max(_, t.asLong())))
-            }
-          }
-        }
-      }
-    }
-    LocalVerActs(nCdc, cdc.result(), adds.result(), removePaths.toSeq, nDvMove, ict)
-  }
-
   /** The change feed of `[fromVersion, toVersion]` (inclusive, latest when
     * None — delta-spark's `table_changes` bounds): table columns +
     * `_change_type`, `_commit_version`, `_commit_timestamp`. Commits with
@@ -228,50 +142,89 @@ object ChangeDataFeed {
     require(commitFiles.length == (end - fromVersion + 1),
       s"missing commit JSONs in [$fromVersion, $end] — log truncated by checkpoint cleanup?")
 
-    // DRIVER-SIDE fast path (optimization r17, same gate as the snapshot
-    // reader's localReplay): a small commit range is parsed with Jackson on
-    // the driver — no summary job, and the per-version file sets are born
-    // collected so planning each part costs zero jobs. Above the byte gate
-    // (a range spanning a 10M-file rewrite) everything below stays on the
-    // distributed pass exactly as before.
-    val localMax = spark.conf.getOption("spark.graft.delta.localReplayMaxBytes")
-      .map(_.toLong).getOrElse(4L * 1024 * 1024)
-    val localActs: Option[Map[Long, LocalVerActs]] =
-      if (commitFiles.map(_._4).sum <= localMax)
-        Some(commitFiles.map(c => c._1 -> parseCommitLocal(fs, new Path(c._3))).toMap)
-      else None
+    // The range's action rows. Under the replay byte gate they are decoded
+    // on the driver ([[LogReplay.decodeRows]]) and the summary and the
+    // per-version file sets below come from them through the Row forms of
+    // the predicates — no Spark job, no query to plan, every set born
+    // collected. Above it (a range spanning a 10M-file rewrite) the
+    // ACTIONS stay on executors: the driver gets a per-version SUMMARY
+    // (bounded by the range length, never by file count — the same 50k
+    // lock the snapshot read path holds, DeltaScaleSpec), and each
+    // per-version set reads its OWN commit JSON at execution, so a part
+    // never re-scans the range.
+    val sources = commitFiles.map(c => c._1 -> new Path(c._3)).toSeq
+    val onDriver = commitFiles.map(_._4).sum <= LogReplay.localMaxBytes(spark)
+    val isCdc = col("cdc").isNotNull
+    val isAdd = col("add.dataChange") <=> true
+    val removedPath = when(col("remove.dataChange"), col("remove.path"))
+    val isDvMove = (isAdd && col("add.deletionVector").isNotNull) ||
+      ((col("remove.dataChange") <=> true) && col("remove.deletionVector").isNotNull)
+    val ict = col("commitInfo.inCommitTimestamp")
+    // the same predicates over a decoded row (add, remove, cdc, commitInfo, version)
+    def flag(r: Row, i: Int) = !r.isNullAt(i) && r.getBoolean(i)
+    def present(r: Row, i: Int, field: Int) = !r.isNullAt(i) && !r.getStruct(i).isNullAt(field)
+    def rowIsCdc(r: Row) = !r.isNullAt(2)
+    def rowIsAdd(r: Row) = !r.isNullAt(0) && flag(r.getStruct(0), 4)
+    def rowRemovedPath(r: Row) = if (!r.isNullAt(1) && flag(r.getStruct(1), 1)) Option(r.getStruct(1).getString(0)) else None
+    def rowIsDvMove(r: Row) = (rowIsAdd(r) && present(r, 0, 6)) ||
+      (!r.isNullAt(1) && flag(r.getStruct(1), 1) && present(r, 1, 2))
+    def rowIct(r: Row) = if (present(r, 3, 1)) Some(r.getStruct(3).getLong(1)) else None
 
-    // ONE distributed pass over the range's commit JSONs (when the range is
-    // too big for the driver). The ACTIONS stay on executors; the driver
-    // gets a per-version SUMMARY (V rows — bounded by the range length,
-    // never by file count). A range spanning a 10M-file rewrite must not
-    // materialize 10M action rows on the driver — the same 50k lock the
-    // snapshot read path holds (DeltaScaleSpec). No persist: this
-    // whole-range frame feeds exactly one job (the summary); the
-    // per-version frames below each read their OWN single commit JSON, so
-    // executing a part never re-scans the range.
-    val summary: Array[(Long, Long, Long, Long, Long, Option[Long])] = localActs match {
-      case Some(m) =>
-        commitFiles.map { c =>
-          val a = m(c._1)
-          (c._1, a.nCdc, a.adds.size.toLong, a.removePaths.size.toLong, a.nDvMove, a.ict)
+    // physical → logical partition-key rename (foreign column-mapped
+    // tables key cdc partitionValues by physical name, like add)
+    val partKeyFix: Map[String, String] = endSnap.physicalSchema match {
+      case Some(_) => endSnap.partitionColumns
+        .map(c => endSnap.physicalFieldName(c) -> c).toMap
+      case None => Map.empty
+    }
+    def fixKeys(c: Column): Column =
+      if (partKeyFix.isEmpty) c
+      else transform_keys(c, (k, _) => coalesce(element_at(typedLit(partKeyFix), k), k))
+    def rowFixKeys(m: scala.collection.Map[String, String]): Map[String, String] =
+      Option(m).map(_.map { case (k, v) => partKeyFix.getOrElse(k, k) -> v }.toMap).getOrElse(Map.empty)
+    // one version's cdc files and data-changing adds, in [[DeltaFileSet.schema]]
+    val nullDv = lit(null).cast(DeltaActions.deletionVectorType).as("deletionVector")
+    val nullLong = (n: String) => lit(null).cast(LongType).as(n)
+    val cdcFile = Seq(col("cdc.path").as("path"),
+      fixKeys(col("cdc.partitionValues")).as("partitionValues"),
+      coalesce(col("cdc.size"), lit(0L)).as("size"), lit(0L).as("modificationTime"),
+      lit(null).cast(StringType).as("stats"),
+      nullDv, nullLong("baseRowId"), nullLong("defaultRowCommitVersion"), nullLong("addedVersion"))
+    val addFile = Seq(col("add.path").as("path"),
+      fixKeys(col("add.partitionValues")).as("partitionValues"),
+      coalesce(col("add.size"), lit(0L)).as("size"),
+      coalesce(col("add.modificationTime"), lit(0L)).as("modificationTime"),
+      col("add.stats").as("stats"),
+      nullDv, nullLong("baseRowId"), nullLong("defaultRowCommitVersion"), nullLong("addedVersion"))
+    def orZero(r: Row, i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+    def rowCdcFile(r: Row) = { val c = r.getStruct(2)
+      AddFile(c.getString(0), rowFixKeys(c.getMap[String, String](1)), orZero(c, 2), 0L) }
+    def rowAddFile(r: Row) = { val a = r.getStruct(0)
+      AddFile(a.getString(0), rowFixKeys(a.getMap[String, String](1)), orZero(a, 2), orZero(a, 3),
+        Option(a.getString(5))) }
+
+    // driver placement: the decoded rows by version
+    val localRows: Map[Long, Seq[Row]] =
+      if (onDriver) LogReplay.decodeRows(spark, cdfActionSchema, sources).groupBy(_.getLong(4))
+      else Map.empty
+    val summary: Array[(Long, Long, Long, Long, Long, Option[Long])] =
+      if (onDriver)
+        localRows.toArray.map { case (v, rs) =>
+          (v, rs.count(rowIsCdc).toLong, rs.count(rowIsAdd).toLong,
+            rs.flatMap(rowRemovedPath).distinct.length.toLong, rs.count(rowIsDvMove).toLong,
+            rs.flatMap(rowIct).maxOption)
         }.sortBy(_._1)
-      case None =>
-        val actsDf = spark.read.schema(cdfActionSchema).json(commitFiles.map(_._3).toSeq: _*)
-          .withColumn("version",
-            regexp_extract(input_file_name(), """(\d{20})\.json""", 1).cast(LongType))
-        actsDf.groupBy("version").agg(
-          count(when(col("cdc").isNotNull, 1)).as("nCdc"),
-          count(when(col("add.dataChange"), 1)).as("nAdd"),
-          count_distinct(when(col("remove.dataChange"), col("remove.path"))).as("nRemove"),
-          count(when((col("add.dataChange") && col("add.deletionVector").isNotNull) ||
-            (col("remove.dataChange") && col("remove.deletionVector").isNotNull), 1)).as("nDvMove"),
-          max(col("commitInfo.inCommitTimestamp")).as("ict"))
+      else
+        LogReplay.actions(spark, cdfActionSchema, sources).groupBy("version").agg(
+          count(when(isCdc, 1)).as("nCdc"),
+          count(when(isAdd, 1)).as("nAdd"),
+          count_distinct(removedPath).as("nRemove"),
+          count(when(isDvMove, 1)).as("nDvMove"),
+          max(ict).as("ict"))
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
             if (r.isNullAt(5)) None else Some(r.getLong(5))))
           .sortBy(_._1)
-    }
 
     // DV'd file actions are remove+re-add of the same path — only cdc files
     // can describe such a commit's row changes (foreign DV writers that
@@ -282,18 +235,6 @@ object ChangeDataFeed {
         s"cannot reconstruct changes of version ${s._1} of $tablePath: the commit moves " +
           "deletion vectors but wrote no cdc files")
     }
-
-    // physical → logical partition-key rename (foreign column-mapped
-    // tables key cdc partitionValues by physical name, like add)
-    val partKeyFix: Map[String, String] = endSnap.physicalSchema match {
-      case Some(_) => endSnap.partitionColumns
-        .map(c => endSnap.physicalFieldName(c) -> c).toMap
-      case None => Map.empty
-    }
-    def fixKeysCol(c: Column): Column =
-      if (partKeyFix.isEmpty) c
-      else transform_keys(c, (k, _) => coalesce(element_at(
-        map(partKeyFix.flatMap { case (p, l) => Seq(lit(p), lit(l)) }.toSeq: _*), k), k))
 
     // in-commit timestamp (authoritative when present) else file mtime
     val mtimes = commitFiles.map(c => c._1 -> c._2).toMap
@@ -321,40 +262,12 @@ object ChangeDataFeed {
     val commitPath: Map[Long, String] = commitFiles.map(c => c._1 -> c._3).toMap
     def verActs(v: Long): DataFrame =
       spark.read.schema(cdfActionSchema).json(commitPath(v))
-    val nullDv = lit(null).cast(DeltaActions.deletionVectorType).as("deletionVector")
-    val nullLong = (n: String) => lit(null).cast(LongType).as(n)
-    def fixKeysLocal(pv: Map[String, String]): Map[String, String] =
-      if (partKeyFix.isEmpty) pv
-      else pv.map { case (k, v) => partKeyFix.getOrElse(k, k) -> v }
-    def cdcSet(v: Long): DeltaFileSet = localActs match {
-      case Some(m) => DeltaFileSet.of(m(v).cdc.map { a =>
-        AddFile(a.path, fixKeysLocal(a.partitionValues), a.size, 0L, None)
-      })
-      case None => DeltaFileSet.fromDf(() =>
-        verActs(v).where(col("cdc").isNotNull).select(
-          col("cdc.path").as("path"),
-          fixKeysCol(col("cdc.partitionValues")).as("partitionValues"),
-          coalesce(col("cdc.size"), lit(0L)).as("size"),
-          lit(0L).as("modificationTime"),
-          lit(null).cast(StringType).as("stats"),
-          nullDv, nullLong("baseRowId"), nullLong("defaultRowCommitVersion"),
-          nullLong("addedVersion")), listMax)
-    }
-    def addSet(v: Long): DeltaFileSet = localActs match {
-      case Some(m) => DeltaFileSet.of(m(v).adds.map { a =>
-        AddFile(a.path, fixKeysLocal(a.partitionValues), a.size,
-          a.modificationTime, a.stats)
-      })
-      case None => DeltaFileSet.fromDf(() =>
-        verActs(v).where(col("add.dataChange")).select(
-          col("add.path").as("path"),
-          fixKeysCol(col("add.partitionValues")).as("partitionValues"),
-          coalesce(col("add.size"), lit(0L)).as("size"),
-          coalesce(col("add.modificationTime"), lit(0L)).as("modificationTime"),
-          col("add.stats").as("stats"),
-          nullDv, nullLong("baseRowId"), nullLong("defaultRowCommitVersion"),
-          nullLong("addedVersion")), listMax)
-    }
+    def fileSet(v: Long, rowPred: Row => Boolean, rowFile: Row => AddFile,
+                pred: Column, file: Seq[Column]): DeltaFileSet =
+      if (onDriver) DeltaFileSet.of(localRows(v).filter(rowPred).map(rowFile))
+      else DeltaFileSet.fromDf(() => verActs(v).where(pred).select(file: _*), listMax)
+    def cdcSet(v: Long): DeltaFileSet = fileSet(v, rowIsCdc, rowCdcFile, isCdc, cdcFile)
+    def addSet(v: Long): DeltaFileSet = fileSet(v, rowIsAdd, rowAddFile, isAdd, addFile)
 
     val parts = Seq.newBuilder[DataFrame]
     summary.foreach { case (v, nCdc, nAdd, nRemove, _, _) =>
@@ -381,13 +294,14 @@ object ChangeDataFeed {
         // placements fail the same way (raise_error, at execution).
         val prior = DeltaSnapshotReader.snapshotAt(spark, tablePath, Some(v - 1))
         lazy val byPath = prior.files.map(f => f.path -> f).toMap
-        val removedSet: DeltaFileSet = localActs match {
-          case Some(m) if prior.fileSet.isCollected && m(v).removePaths.forall(byPath.contains) =>
-            DeltaFileSet.of(m(v).removePaths.sorted.map(byPath))
-          case _ =>
+        lazy val removedPaths = localRows(v).flatMap(rowRemovedPath).distinct.sorted
+        val removedSet: DeltaFileSet =
+          if (onDriver && prior.fileSet.isCollected && removedPaths.forall(byPath.contains))
+            DeltaFileSet.of(removedPaths.map(byPath).toSeq)
+          else {
             val removedDf = () => {
-              val rmPaths = verActs(v).where(col("remove.dataChange"))
-                .select(col("remove.path").as("path")).distinct()
+              val rmPaths = verActs(v).select(removedPath.as("path"))
+                .where(col("path").isNotNull).distinct()
               rmPaths.join(prior.fileSet.df, Seq("path"), "left")
                 .withColumn("path", when(col("size").isNull,
                   raise_error(concat(lit(s"version $v of $tablePath removes file "),

@@ -15,26 +15,35 @@ import scala.collection.concurrent.TrieMap
   * from `snapshot.getMetadata.getSchema`, DeltaMetadataHandler.scala:99-107)
   * plus the active file set (`snapshot.getAllFiles`, :119,151).
   *
-  * Scale design: the log itself is read with Spark (`spark.read.json` /
-  * `parquet` with explicit schemas — a multi-million-action log replays as
-  * a distributed `max_by(version)` per path, not a driver loop), and the
-  * snapshot is cached per (table, version) per session — the reference
-  * re-reads the log three times per query (DeltaMetadataHandler.scala:99,
-  * 117,150), which SURVEY.md §3.2 flags as a design flaw to avoid.
+  * One replay, two placements ([[LogReplay]]): one decoder (Spark's JSON
+  * parser), one per-key reducer and one snapshot assembly, run either on
+  * the driver or distributed. `spark.graft.delta.localReplayMaxBytes`
+  * (default 4 MiB) is the only fork: a checkpoint-less segment of at most
+  * that many bytes is decoded and reduced on the driver; every other
+  * segment — every table with a checkpoint, and a multi-million-action log
+  * — is read with `spark.read` and reduced per key group on executors.
+  * The placement decides where rows are decoded and reduced, never what
+  * they mean. Snapshots are cached per (table, version) per session — the
+  * reference re-reads the log three times per query
+  * (DeltaMetadataHandler.scala:99,117,150), which SURVEY.md §3.2 flags as
+  * a design flaw to avoid.
   *
-  * Job budget of a cold snapshot. A small checkpoint-less log replays on
-  * the driver: zero jobs. Every table with a checkpoint replays
-  * distributed: the checkpoint's schema comes from its footer, read on
-  * the driver (no inference job), and protocol + metaData come from ONE
-  * collect ([[replay]]) — 1 job to resolve the snapshot (V2 checkpoints
-  * add 1 for their sidecar paths). The file set costs 2 more at its first
-  * touch, where `spark.graft.delta.driverFileListThreshold` applies
-  * ([[DeltaFileSet]]): when the version's crc records at most that many
-  * files the set is collected in that same pass, and crc validation, the
-  * DV probe and listing run on the driver, so a cold snapshot + load +
-  * filtered count costs 5 jobs in all (SnapshotJobBudgetSpec). A set the
-  * crc records as larger, or a version without a crc, is persisted on
-  * executors instead, after one pass over the log.
+  * Job budget of a cold snapshot. On the driver placement: zero jobs, and
+  * the file set is born collected, so its files, validation and listing
+  * cost none either (SnapshotJobBudgetSpec). On the distributed placement
+  * the checkpoint's schema comes from its footer, read on the driver (no
+  * inference job), and protocol + metaData come from ONE collect — 1 job
+  * to resolve the snapshot (V2 checkpoints add 1 for their sidecar
+  * paths). The file set costs 2 more at its first touch (its key shuffle
+  * and the pass that builds it), where
+  * `spark.graft.delta.driverFileListThreshold` applies ([[DeltaFileSet]]):
+  * when the version's crc records at most that many files the set is
+  * collected in that same pass, and crc validation, the DV probe and
+  * listing run on the driver, so a cold snapshot + load + filtered count
+  * costs 5 jobs in all. A set the crc records as larger, or a version
+  * without a crc, is persisted on executors instead, after one pass over
+  * the log. Tombstones (2 jobs) and txns + domains (2) are lazy. Each
+  * pass reads only the action columns it needs.
   */
 object DeltaSnapshotReader {
   import DeltaActions._
@@ -128,40 +137,28 @@ object DeltaSnapshotReader {
       }
       val tailCommitPairs = commits
         .filter { case (v, _) => v >= lo && v <= target && !covered(v) }
-      val tailCommits = tailCommitPairs.map(_._2.toString)
       val chosenC = chosenCompactions.result()
 
-      // DRIVER-SIDE replay fast path (optimization r17, guide §1.2/§5): a
-      // checkpoint-less log whose replayed segment is small is parsed with
-      // Jackson on the driver — zero Spark jobs for snapshot construction,
-      // and the born-collected file set makes listing, validation and
-      // pruning driver-local too (DeltaFileIndex's existing small-table
-      // path). The byte gate (`spark.graft.delta.localReplayMaxBytes`,
-      // default 4 MiB ≈ thousands of adds) bounds driver work; above it —
-      // i.e. at 100 TB scale, where a snapshot holds millions of adds —
-      // the distributed `max_by(version)`-per-path replay below remains
-      // the only path, exactly as before (DeltaScaleSpec's 50k-file locks
-      // run ~10 MiB logs and stay distributed).
-      val localMax = spark.conf.getOption("spark.graft.delta.localReplayMaxBytes")
-        .map(_.toLong).getOrElse(4L * 1024 * 1024)
+      // The byte gate (`spark.graft.delta.localReplayMaxBytes`) is the one
+      // fork of the replay ([[LogReplay]]): a checkpoint-less segment of at
+      // most that many bytes is decoded and reduced on the driver — zero
+      // Spark jobs, and a born-collected file set, so listing, validation
+      // and pruning stay on the driver too. Any other segment (every table
+      // with a checkpoint; DeltaScaleSpec's 50k-file logs) replays
+      // distributed. A source missing from the listing disqualifies the
+      // driver placement (no sentinel length whose sum could overflow).
       val statusByPath: Map[Path, FileStatus] = entries.map(st => st.getPath -> st).toMap
-      val localSources: Seq[(Long, Path)] =
+      val sources: Seq[(Long, Path)] =
         (chosenC.map { case (_, end, p) => (end, p) } ++ tailCommitPairs).sortBy(_._1)
-      // a source missing from the listing disqualifies the local path
-      // outright (no sentinel length whose sum could overflow)
-      val localLens = localSources.map { case (_, p) => statusByPath.get(p).map(_.getLen) }
+      val lens = sources.map { case (_, p) => statusByPath.get(p).map(_.getLen) }
       // the target's crc, read once at the file set's first touch: its
       // numFiles places the set (DeltaFileSet), then validation checks it
       lazy val crc = Checksum.read(fs, logPath, target)
       val snap =
-        if (cpVersion.isEmpty && localSources.nonEmpty && localLens.forall(_.isDefined) &&
-            localLens.flatten.sum <= localMax)
-          localReplay(spark, tablePath, target, localSources)
+        if (cpVersion.isEmpty && sources.nonEmpty && lens.forall(_.isDefined) &&
+            lens.flatten.sum <= LogReplay.localMaxBytes(spark))
+          LogReplay.replayOnDriver(tablePath, target, LogReplay.decode(spark, actionSchema, sources))
         else {
-          val compactedDfs = chosenC.map { case (_, end, p) =>
-            spark.read.schema(actionSchema).json(p.toString)
-              .withColumn("version", lit(end))
-          }
           val cpDf = cpVersion.map { v =>
             val (v2Files, classicFiles) = checkpoints(v).partition(_._3)
             val actions =
@@ -174,13 +171,10 @@ object DeltaSnapshotReader {
                 readV2Checkpoint(spark, logPath, statusByPath(v2Files.map(_._2).maxBy(_.toString)))
             actions.withColumn("version", lit(v))
           }
-          val jsonDf = if (tailCommits.isEmpty) None else Some {
-            spark.read.schema(actionSchema).json(tailCommits: _*)
-              .withColumn("version",
-                regexp_extract(input_file_name(), """(\d{20})\.json""", 1).cast(LongType))
-          }
-          val actions = (cpDf.toSeq ++ compactedDfs ++ jsonDf.toSeq).reduce(_ unionByName _)
-          replay(spark, tablePath, target, actions, () => crc.flatMap(Checksum.recordedNumFiles))
+          val tail = if (sources.isEmpty) None
+            else Some(LogReplay.actions(spark, actionSchema, sources))
+          LogReplay.replayDistributed(spark, tablePath, target, (cpDf.toSeq ++ tail).reduce(_ unionByName _),
+            DeltaFileSet.driverListThreshold(spark), () => crc.flatMap(Checksum.recordedNumFiles))
         }
       // Per-version state-checksum validation ([[Checksum]]): armed LAZY —
       // it runs at the first access to the file set's distributed rows
@@ -236,8 +230,7 @@ object DeltaSnapshotReader {
           StructType(Seq(StructField("inCommitTimestamp", LongType))))))
         val icts: Map[Long, Long] =
           spark.read.schema(ictSchema).json(listed.map(_._3).toSeq: _*)
-            .withColumn("version",
-              regexp_extract(input_file_name(), """(\d{20})\.json""", 1).cast(LongType))
+            .withColumn("version", LogReplay.commitVersion)
             .where(col("commitInfo.inCommitTimestamp").isNotNull)
             .groupBy(col("version"))
             .agg(max(col("commitInfo.inCommitTimestamp")).as("ict"))
@@ -299,8 +292,7 @@ object DeltaSnapshotReader {
       StructField("operationParameters", MapType(StringType, StringType)),
       StructField("engineInfo", StringType))))))
     spark.read.schema(ciSchema).json(commitFiles: _*)
-      .withColumn("version",
-        regexp_extract(input_file_name(), """(\d{20})\.json""", 1).cast(LongType))
+      .withColumn("version", LogReplay.commitVersion)
       // one row per VERSION even when a (foreign) commit wrote no
       // commitInfo: keep the single non-null struct per commit, else null
       .groupBy(col("version"))
@@ -418,386 +410,6 @@ object DeltaSnapshotReader {
       guarded("domainMetadata", domainMetadataType))
   }
 
-  /** Protocol gate shared by both replay paths. v1/v2 are fully supported;
-    * v3 (table features) is accepted iff every readerFeature is one this
-    * engine understands: columnMapping is implemented in replay;
-    * deletionVectors are decoded and APPLIED at scan time
-    * ([[DeletionVectors.applyToScan]]). */
-  private val supportedReaderFeatures =
-    Set("columnMapping", "deletionVectors", "timestampNtz", "v2Checkpoint",
-      "vacuumProtocolCheck", "variantType", "typeWidening")
-
-  private def gateProtocol(protocol: Option[DeltaProtocol], tablePath: String): Unit =
-    protocol.foreach { p =>
-      val v = p.minReaderVersion
-      if (v == 3) {
-        val feats = p.readerFeatures.map(_.toSet).getOrElse(Set.empty)
-        val unknown = feats -- supportedReaderFeatures
-        if (unknown.nonEmpty)
-          throw DeltaUnsupportedFeatureException(unknown.toSeq.sorted.mkString(","),
-            s"table at $tablePath requires reader features ${unknown.toSeq.sorted.mkString(", ")} " +
-              s"(minReaderVersion=3); this reader supports ${supportedReaderFeatures.toSeq.sorted.mkString(", ")}")
-      } else if (v > 3)
-        throw DeltaUnsupportedFeatureException(s"minReaderVersion=$v",
-          s"table at $tablePath requires Delta reader protocol $v; max supported is 3")
-    }
-
-  /** Physical (column-mapping) schema for a resolved metaData, shared by
-    * both replay paths. */
-  private def resolvePhysicalSchema(schema: StructType,
-      configuration: Map[String, String], tablePath: String): Option[StructType] =
-    configuration.getOrElse("delta.columnMapping.mode", "none") match {
-      case "none" => None
-      case "name" => Some(ColumnMapping.toPhysical(schema).asInstanceOf[StructType])
-      case "id" =>
-        Some(ColumnMapping.toPhysical(schema, withFieldIds = true).asInstanceOf[StructType])
-      case other => throw DeltaUnsupportedFeatureException(s"columnMapping=$other",
-        s"table at $tablePath uses delta.columnMapping.mode=$other; supported modes: none, name, id")
-    }
-
-  private val localOm = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** DRIVER-SIDE replay of a small, checkpoint-less log segment: the exact
-    * semantics of [[replay]] (per-path winner by (version, add-present),
-    * latest metaData/protocol, latest txn per appId, latest domain,
-    * remove-after-add tombstones) computed with Jackson over the commit
-    * JSONs — zero Spark jobs. Only entered under the byte gate in
-    * [[snapshotAt]]; the resulting file set is born collected, which routes
-    * every downstream consumer (listing, validation, pruning, stats) onto
-    * its existing driver-local branches. `sources` are (replayVersion,
-    * file) pairs in ascending version order — a compacted range file
-    * carries its END version, exactly as the distributed path stamps it. */
-  private def localReplay(spark: SparkSession, tablePath: String, target: Long,
-                          sources: Seq[(Long, Path)]): DeltaSnapshot = {
-    import com.fasterxml.jackson.databind.JsonNode
-    val conf = spark.sessionState.newHadoopConf()
-    def optText(n: JsonNode, f: String): Option[String] =
-      Option(n.get(f)).filterNot(_.isNull).map(_.asText())
-    def optLong(n: JsonNode, f: String): Option[Long] =
-      Option(n.get(f)).filterNot(_.isNull).map(_.asLong())
-    def optInt(n: JsonNode, f: String): Option[Int] =
-      Option(n.get(f)).filterNot(_.isNull).map(_.asInt())
-    def optBool(n: JsonNode, f: String): Option[Boolean] =
-      Option(n.get(f)).filterNot(_.isNull).map(_.asBoolean())
-    def strMap(n: JsonNode): Map[String, String] = {
-      val b = Map.newBuilder[String, String]
-      val it = n.fields()
-      while (it.hasNext) {
-        val e = it.next()
-        b += e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())
-      }
-      b.result()
-    }
-    def strSeq(n: JsonNode): Seq[String] = {
-      import scala.jdk.CollectionConverters._
-      n.elements().asScala.map(_.asText()).toSeq
-    }
-    // per-path replay state: winner by lexicographic (version, hasAdd) —
-    // a DV rewrite commits remove+add of the SAME path in one commit and
-    // the add must win; tombstones additionally need the last add/remove
-    // versions per path (remove is a tombstone iff no add at-or-after it)
-    final class PState {
-      var winVer: Long = -1L; var winAdd: JsonNode = _
-      var lastAddVer: Long = -1L
-      var lastRemVer: Long = -1L; var lastRem: JsonNode = _
-    }
-    val paths = scala.collection.mutable.HashMap.empty[String, PState]
-    var protoVer = -1L; var protoNode: JsonNode = null
-    var metaVer = -1L; var metaNode: JsonNode = null
-    val txns0 = scala.collection.mutable.HashMap.empty[String, (Long, JsonNode)]
-    val domains0 = scala.collection.mutable.HashMap.empty[String, (Long, JsonNode)]
-    for ((ver, file) <- sources) {
-      val in = file.getFileSystem(conf).open(file)
-      val txt = try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toString("UTF-8")
-      } finally in.close()
-      txt.split('\n').foreach { line0 =>
-        val line = line0.trim
-        if (line.nonEmpty) {
-          // a malformed line is inert — same tolerance as the distributed
-          // PERMISSIVE json read (all-null action row)
-          val root = try localOm.readTree(line) catch { case _: Exception => null }
-          if (root != null) {
-            Option(root.get("add")).filterNot(_.isNull).foreach { a =>
-              optText(a, "path").foreach { p =>
-                val st = paths.getOrElseUpdate(p, new PState)
-                if (ver >= st.lastAddVer) st.lastAddVer = ver
-                if (ver > st.winVer || (ver == st.winVer)) {
-                  st.winVer = ver; st.winAdd = a
-                }
-              }
-            }
-            Option(root.get("remove")).filterNot(_.isNull).foreach { r =>
-              optText(r, "path").foreach { p =>
-                val st = paths.getOrElseUpdate(p, new PState)
-                if (ver >= st.lastRemVer) { st.lastRemVer = ver; st.lastRem = r }
-                if (ver > st.winVer) { st.winVer = ver; st.winAdd = null }
-              }
-            }
-            Option(root.get("protocol")).filterNot(_.isNull)
-              .filter(p => optInt(p, "minReaderVersion").isDefined).foreach { p =>
-                if (ver >= protoVer) { protoVer = ver; protoNode = p }
-              }
-            Option(root.get("metaData")).filterNot(_.isNull)
-              .filter(m => optText(m, "id").isDefined).foreach { m =>
-                if (ver >= metaVer) { metaVer = ver; metaNode = m }
-              }
-            Option(root.get("txn")).filterNot(_.isNull).foreach { t =>
-              optText(t, "appId").foreach { app =>
-                if (!txns0.get(app).exists(_._1 > ver)) txns0(app) = (ver, t)
-              }
-            }
-            Option(root.get("domainMetadata")).filterNot(_.isNull).foreach { d =>
-              optText(d, "domain").foreach { dom =>
-                if (!domains0.get(dom).exists(_._1 > ver)) domains0(dom) = (ver, d)
-              }
-            }
-          }
-        }
-      }
-    }
-    val protocol = Option(protoNode).map { p =>
-      DeltaProtocol(
-        optInt(p, "minReaderVersion").get,
-        optInt(p, "minWriterVersion").getOrElse(2),
-        Option(p.get("readerFeatures")).filterNot(_.isNull).map(strSeq),
-        Option(p.get("writerFeatures")).filterNot(_.isNull).map(strSeq))
-    }
-    gateProtocol(protocol, tablePath)
-    val meta = Option(metaNode)
-      .getOrElse(throw new IllegalStateException(s"no metaData action found in $tablePath"))
-    val schema = DataType.fromJson(meta.get("schemaString").asText()).asInstanceOf[StructType]
-    val partCols: Seq[String] =
-      Option(meta.get("partitionColumns")).filterNot(_.isNull).map(strSeq).getOrElse(Seq.empty)
-    val configuration: Map[String, String] =
-      Option(meta.get("configuration")).filterNot(_.isNull).map(strMap).getOrElse(Map.empty)
-    val physicalSchema = resolvePhysicalSchema(schema, configuration, tablePath)
-    val physToLogicalPart: Map[String, String] = physicalSchema match {
-      case Some(ps) => partCols.map(c => ps.fields(schema.fieldIndex(c)).name -> c).toMap
-      case None => Map.empty
-    }
-    val adds: Seq[AddFile] = paths.iterator.collect {
-      case (p, st) if st.winAdd != null =>
-        val a = st.winAdd
-        val dv = Option(a.get("deletionVector")).filterNot(_.isNull)
-          .flatMap { d =>
-            // rows with a descriptor but null storageType are malformed
-            optText(d, "storageType").map { sto =>
-              DeletionVectors.Descriptor(sto,
-                optText(d, "pathOrInlineDv").orNull,
-                optInt(d, "offset").getOrElse(0),
-                optInt(d, "sizeInBytes").getOrElse(0),
-                optLong(d, "cardinality").getOrElse(0L))
-            }
-          }
-        val pv0 = Option(a.get("partitionValues")).filterNot(_.isNull)
-          .map(strMap).getOrElse(Map.empty)
-        val pv = if (physToLogicalPart.isEmpty) pv0
-          else pv0.map { case (k, v) => physToLogicalPart.getOrElse(k, k) -> v }
-        AddFile(p, pv,
-          optLong(a, "size").getOrElse(0L),
-          optLong(a, "modificationTime").getOrElse(0L),
-          optText(a, "stats"),
-          dv,
-          optLong(a, "baseRowId"),
-          optLong(a, "defaultRowCommitVersion"),
-          Some(st.winVer))
-    }.toSeq.sortBy(_.path)
-    // tombstones/txns/domains are already parsed — eager locals behind the
-    // same lazy-closure surface the distributed snapshot exposes
-    val tombstones: Seq[RemoveTombstone] = paths.iterator.collect {
-      case (p, st) if st.lastRem != null && st.lastAddVer < st.lastRemVer =>
-        RemoveTombstone(p,
-          optLong(st.lastRem, "deletionTimestamp").getOrElse(0L),
-          optBool(st.lastRem, "dataChange").getOrElse(true))
-    }.toSeq.sortBy(_.path)
-    val txns: Seq[SetTransaction] = txns0.iterator.map { case (app, (_, t)) =>
-      SetTransaction(app, optLong(t, "version").getOrElse(0L), optLong(t, "lastUpdated"))
-    }.toSeq.sortBy(_.appId)
-    val domainMetadata: Map[String, String] = domains0.iterator.collect {
-      case (dom, (_, d)) if !optBool(d, "removed").getOrElse(false) =>
-        dom -> optText(d, "configuration").getOrElse("")
-    }.toMap
-    DeltaSnapshot(tablePath, target, schema, partCols, DeltaFileSet.of(adds),
-      () => tombstones, () => txns, configuration, physicalSchema, protocol,
-      () => domainMetadata,
-      metadataId = optText(meta, "id"),
-      metadataCreatedTime = optLong(meta, "createdTime"))
-  }
-
-  /** Distributed replay: per path, the action with the highest version wins;
-    * survivors whose last action is an `add` form the active set.
-    *
-    * Job budget of a cold snapshot on this path: ONE job here (protocol
-    * and metaData together); the file set (2 jobs at its first touch),
-    * tombstones (2) and txns + domains (2, together) are lazy. A checkpoint's schema comes from its footer
-    * ([[readCheckpointParquet]]), so reading it costs no job. */
-  private def replay(spark: SparkSession, tablePath: String, version: Long, actions: DataFrame,
-                     recordedFiles: () => Option[Long]): DeltaSnapshot = {
-    // newest protocol and newest metaData in ONE scan: each partition
-    // keeps its newest of each, the driver picks the newest overall —
-    // the driver holds at most 2 rows per partition
-    val isProto = col("protocol.minReaderVersion").isNotNull
-    val isMeta = col("metaData.id").isNotNull
-    val heads = actions.where(isProto || isMeta)
-      .select(col("version"),
-        when(isProto, struct(col("protocol.minReaderVersion"), col("protocol.minWriterVersion"),
-          col("protocol.readerFeatures"), col("protocol.writerFeatures"))).as("p"),
-        when(isMeta, struct(col("metaData.schemaString"), col("metaData.partitionColumns"),
-          col("metaData.configuration"), col("metaData.id"), col("metaData.createdTime"))).as("m"))
-      .rdd.mapPartitions(newestHeads).collect()
-    val survivors = newestHeads(heads.iterator).toSeq
-    def newest(i: Int): Option[Row] = survivors.find(!_.isNullAt(i)).map(_.getStruct(i))
-    val protocol = newest(1)
-      .map { r =>
-        DeltaProtocol(
-          r.getInt(0),
-          if (r.isNullAt(1)) 2 else r.getInt(1),
-          if (r.isNullAt(2)) None else Some(r.getSeq[String](2).toSeq),
-          if (r.isNullAt(3)) None else Some(r.getSeq[String](3).toSeq))
-      }
-    gateProtocol(protocol, tablePath)
-
-    val metaRow = newest(2)
-      .getOrElse(throw new IllegalStateException(s"no metaData action found in $tablePath"))
-    val schema = DataType.fromJson(metaRow.getString(0)).asInstanceOf[StructType]
-    val partCols: Seq[String] =
-      Option(metaRow.getSeq[String](1)).map(_.toSeq).getOrElse(Seq.empty)
-    val configuration: Map[String, String] =
-      Option(metaRow.getMap[String, String](2)).map(m => Map(m.toSeq: _*)).getOrElse(Map.empty)
-    // Column mapping: `name` mode is a metadata-only indirection — parquet
-    // stores every field under its delta.columnMapping.physicalName and
-    // add.partitionValues is keyed by physical name. `id` mode files also
-    // carry parquet field IDs; the physical schema then embeds
-    // parquet.field.id metadata and the scan enables Spark's field-ID
-    // matching, so columns resolve even when parquet names diverge.
-    val physicalSchema: Option[StructType] =
-      resolvePhysicalSchema(schema, configuration, tablePath)
-    // physical partition key -> logical column name, for translating
-    // add.partitionValues into the logical names everything downstream uses
-    val physToLogicalPart: Map[String, String] = physicalSchema match {
-      case Some(ps) => partCols.map(c => ps.fields(schema.fieldIndex(c)).name -> c).toMap
-      case None => Map.empty
-    }
-
-    // Active-file set: the per-path last-action dedup (the expensive part
-    // of replay) runs distributed at the set's first touch, over the
-    // (lazy) `actions` plan. That same pass collects the set when the crc
-    // records at most driverFileListThreshold files; any other set stays
-    // persisted on executors and the driver never holds the full list
-    // unless a maintenance consumer asks (DeltaFileSet.ensureBuilt).
-    val fileSet = DeltaFileSet.fromDf(() => {
-      val base = actions
-        .where(col("add.path").isNotNull || col("remove.path").isNotNull)
-        .select(coalesce(col("add.path"), col("remove.path")).as("__p"),
-          col("add"), col("version"))
-        .groupBy("__p")
-        // same-version tie-break: a DV writer commits remove+add of the
-        // SAME path in ONE commit (the add carries the new deletion
-        // vector) — the add must win, so order by (version, add-present)
-        .agg(max_by(struct(col("add"), col("version")),
-          struct(col("version"), col("add").isNotNull)).as("w"))
-        .select(col("w.add").as("add"), col("w.version").as("__v"))
-        .where(col("add").isNotNull)
-      // column-mapped tables key add.partitionValues by PHYSICAL name;
-      // translate to logical in the DataFrame so every consumer
-      // (distributed pruning included) sees logical keys
-      val pv =
-        if (physToLogicalPart.isEmpty) col("add.partitionValues")
-        else transform_keys(col("add.partitionValues"),
-          (k, _) => coalesce(element_at(typedLit(physToLogicalPart), k), k))
-      base.select(
-        col("add.path").as("path"),
-        pv.as("partitionValues"),
-        coalesce(col("add.size"), lit(0L)).as("size"),
-        coalesce(col("add.modificationTime"), lit(0L)).as("modificationTime"),
-        col("add.stats").as("stats"),
-        // rows with a descriptor but null storageType are malformed
-        when(col("add.deletionVector.storageType").isNotNull, col("add.deletionVector"))
-          .otherwise(lit(null).cast(deletionVectorType)).as("deletionVector"),
-        col("add.baseRowId").as("baseRowId"),
-        col("add.defaultRowCommitVersion").as("defaultRowCommitVersion"),
-        // engine-side: the version whose add won replay (post-checkpoint,
-        // the checkpoint version — see AddFile.addedVersion)
-        col("__v").as("addedVersion"))
-    }, DeltaFileSet.driverListThreshold(spark), recordedFiles)
-
-    // Current tombstones: last action for the path is a remove (no later
-    // re-add). Checkpoints must retain these until retention expiry, and
-    // VACUUM uses them to find deletable files. LAZY (∝ removed files).
-    // One aggregate: the newest action per path, an add winning a
-    // same-version tie exactly as in the file set; a remove winner is a
-    // tombstone.
-    val tombstonesF: () => Seq[RemoveTombstone] = () => {
-      val isAdd = col("add.path").isNotNull
-      actions.where(isAdd || col("remove.path").isNotNull)
-        .groupBy(coalesce(col("add.path"), col("remove.path")).as("path"))
-        .agg(max_by(struct(isAdd.as("isAdd"), col("remove").as("rm")),
-          struct(col("version"), isAdd)).as("w"))
-        .where(!col("w.isAdd"))
-        .select(col("path"), col("w.rm.deletionTimestamp"), col("w.rm.dataChange"))
-        .collect()
-        .map(r => RemoveTombstone(
-          r.getString(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1),
-          if (r.isNullAt(2)) true else r.getBoolean(2)))
-        .sortBy(_.path).toSeq
-    }
-
-    // Latest txn watermark per appId (streaming-writer idempotency; must
-    // survive checkpointing or foreign streaming writers replay commits)
-    // and live metadata domains (domainMetadata writer feature; a
-    // removed=true tombstone deletes one), resolved in ONE lazy aggregate:
-    // both are bounded by the number of writers and domains, not table
-    // size, and a checkpoint needs both. The newest action per key wins.
-    lazy val txnsAndDomains: (Seq[SetTransaction], Map[String, String]) = {
-      val isTxn = col("txn.appId").isNotNull
-      val (txnRows, domainRows) = actions.where(isTxn || col("domainMetadata.domain").isNotNull)
-        .groupBy(isTxn.as("isTxn"),
-          coalesce(col("txn.appId"), col("domainMetadata.domain")).as("key"))
-        .agg(max_by(struct(col("txn"), col("domainMetadata")), col("version")).as("w"))
-        .select(col("isTxn"), col("key"), col("w.txn.version"), col("w.txn.lastUpdated"),
-          col("w.domainMetadata.configuration"), coalesce(col("w.domainMetadata.removed"), lit(false)))
-        .collect()
-        .partition(_.getBoolean(0))
-      val txns = txnRows
-        .map(r => SetTransaction(
-          r.getString(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .sortBy(_.appId).toSeq
-      val domains = domainRows.filterNot(_.getBoolean(5))
-        .map(r => r.getString(1) -> (if (r.isNullAt(4)) "" else r.getString(4)))
-        .toMap
-      (txns, domains)
-    }
-    val txnsF: () => Seq[SetTransaction] = () => txnsAndDomains._1
-    val domainMetadataF: () => Map[String, String] = () => txnsAndDomains._2
-
-    DeltaSnapshot(tablePath, version, schema, partCols, fileSet, tombstonesF, txnsF,
-      configuration, physicalSchema, protocol, domainMetadataF,
-      metadataId = Option(metaRow.getString(3)),
-      metadataCreatedTime = if (metaRow.isNullAt(4)) None else Some(metaRow.getLong(4)))
-  }
-
-  /** Of (version, protocol, metaData) rows, the newest row carrying a
-    * protocol and the newest carrying a metaData (later rows win version
-    * ties). Executor-safe: runs per partition, then again on the driver
-    * over the partitions' survivors. */
-  private def newestHeads(rows: Iterator[Row]): Iterator[Row] = {
-    var p: Row = null
-    var m: Row = null
-    rows.foreach { r =>
-      if (!r.isNullAt(1) && (p == null || r.getLong(0) >= p.getLong(0))) p = r
-      if (!r.isNullAt(2) && (m == null || r.getLong(0) >= m.getLong(0))) m = r
-    }
-    Iterator(p, m).filter(_ != null).distinct
-  }
-
   // ---------------------------------------------------------------------
   // DataFrame materialization
   // ---------------------------------------------------------------------
@@ -833,22 +445,17 @@ object DeltaSnapshotReader {
     val endSnap = snapshotAt(spark, tablePath, toVersion)
     val end = endSnap.version
     require(fromVersion <= end, s"fromVersion $fromVersion > end version $end")
-    val commitPaths = fs.listStatus(logPath).flatMap { st =>
+    val commits = fs.listStatus(logPath).flatMap { st =>
       st.getPath.getName match {
-        case commitRe(v) if v.toLong > fromVersion && v.toLong <= end =>
-          Some(st.getPath.toString)
+        case commitRe(v) if v.toLong > fromVersion && v.toLong <= end => Some(v.toLong -> st)
         case _ => None
       }
-    }
-    require(commitPaths.length == (end - fromVersion),
+    }.sortBy(_._1)
+    require(commits.length == (end - fromVersion),
       s"missing commit JSONs in ($fromVersion, $end] — log truncated by checkpoint cleanup?")
-    if (commitPaths.isEmpty)
+    if (commits.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], endSnap.schema)
-    val actions = spark.read.schema(actionSchema).json(commitPaths.toSeq: _*)
-      .withColumn("__v",
-        regexp_extract(input_file_name(), """(\d+)\.json""", 1).cast("long"))
-      .cache()
     // append-only guard (same default as Delta's streaming source): a
     // dataChange remove in the range means rows were deleted/rewritten and
     // "rows added" would double-count — by default the consumer must
@@ -862,16 +469,38 @@ object DeltaSnapshotReader {
     //     a DV-carrying add is skipped WHOLESALE (its adds are not
     //     delivered either) — appends-only flow, changed data silently
     //     dropped, exactly the option's contract.
-    val isRm = col("remove.path").isNotNull && col("remove.dataChange") === true
-    val isAdd = col("add.path").isNotNull && col("add.dataChange") === true
+    // Per commit: does it remove data, add a deletion vector, add data —
+    // bounded by the commit count — then the adds of the commits kept.
+    // Under the replay byte gate the range is decoded on the driver and
+    // these predicates run as Row functions (no job, no query to plan);
+    // above it the classification is one aggregate on executors and only
+    // the delivered adds reach the driver. Nothing is cached.
+    def flag(r: Row, i: Int) = !r.isNullAt(i) && r.getBoolean(i)
+    def rowIsRm(r: Row) = !r.isNullAt(1) && !r.getStruct(1).isNullAt(0) && flag(r.getStruct(1), 2)
+    def rowIsAdd(r: Row) = !r.isNullAt(0) && !r.getStruct(0).isNullAt(0) && flag(r.getStruct(0), 4)
+    def rowIsDvAdd(r: Row) = rowIsAdd(r) &&
+      !r.getStruct(0).isNullAt(6) && !r.getStruct(0).getStruct(6).isNullAt(0)
+    val isRm = col("remove.path").isNotNull && (col("remove.dataChange") <=> true)
+    val isAdd = col("add.path").isNotNull && (col("add.dataChange") <=> true)
     val isDvAdd = isAdd && col("add.deletionVector.storageType").isNotNull
-    // per-commit classification: bounded by the commit count, driver-safe
-    val cls = actions.groupBy(col("__v")).agg(
-        max(isRm.cast("int")).as("rm"),
-        max(isDvAdd.cast("int")).as("dva"),
-        max(isAdd.cast("int")).as("adds"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1) == 1, r.getInt(2) == 1, r.getInt(3) == 1))
+    val sources = commits.map(c => c._1 -> c._2.getPath).toSeq
+    val (cls, addsOf): (Seq[(Long, Boolean, Boolean, Boolean)], Set[Long] => Seq[Row]) =
+      if (commits.map(_._2.getLen).sum <= LogReplay.localMaxBytes(spark)) {
+        val rows = LogReplay.decodeRows(spark, actionSchema, sources)
+        (rows.groupBy(_.getLong(6)).toSeq.sortBy(_._1).map { case (v, rs) =>
+          (v, rs.exists(rowIsRm), rs.exists(rowIsDvAdd), rs.exists(rowIsAdd))
+        }, dropped => rows.filter(r => rowIsAdd(r) && !dropped(r.getLong(6))).map(_.getStruct(0)))
+      } else {
+        val acts = LogReplay.actions(spark, actionSchema, sources)
+        (acts.groupBy(col("version")).agg(
+            max(isRm.cast("int")).as("rm"),
+            max(isDvAdd.cast("int")).as("dva"),
+            max(isAdd.cast("int")).as("adds"))
+          .collect().toSeq.sortBy(_.getLong(0))
+          .map(r => (r.getLong(0), r.getInt(1) == 1, r.getInt(2) == 1, r.getInt(3) == 1)),
+          dropped => acts.where(if (dropped.isEmpty) isAdd else isAdd && !col("version").isInCollection(dropped))
+            .select(col("add")).collect().toSeq.map(_.getStruct(0)))
+      }
     val violating = cls.filter { case (_, rm, dva, _) => rm || dva }
     val dropped: Set[Long] = nonAppendMode match {
       case _ if violating.isEmpty => Set.empty
@@ -891,18 +520,14 @@ object DeltaSnapshotReader {
             "read a full snapshot instead, or opt out with ignoreDeletes " +
             "(delete-only commits) / skipChangeCommits (skip changed data)")
     }
-    val added = actions
-      .where(if (dropped.isEmpty) isAdd
-             else isAdd && !col("__v").isInCollection(dropped))
-      .select("add.path", "add.partitionValues", "add.size", "add.modificationTime", "add.stats")
-      .collect()
-      .map(r => AddFile(
-        r.getString(0),
-        Option(r.getMap[String, String](1)).map(m => Map(m.toSeq: _*)).getOrElse(Map.empty),
-        if (r.isNullAt(2)) 0L else r.getLong(2),
-        if (r.isNullAt(3)) 0L else r.getLong(3),
-        if (r.isNullAt(4)) None else Some(r.getString(4))))
-      .sortBy(_.path).toSeq
+    val added = addsOf(dropped)
+      .map(a => AddFile(
+        a.getString(0),
+        Option(a.getMap[String, String](1)).map(m => Map(m.toSeq: _*)).getOrElse(Map.empty),
+        if (a.isNullAt(2)) 0L else a.getLong(2),
+        if (a.isNullAt(3)) 0L else a.getLong(3),
+        if (a.isNullAt(5)) None else Some(a.getString(5))))
+      .sortBy(_.path)
     if (added.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], endSnap.schema)

@@ -3046,11 +3046,11 @@ object DeltaWriter {
     * (history, CDF and time travel inside the range still read them);
     * compaction is purely additive and idempotent.
     *
-    * Reconciliation mirrors replay exactly: per-path last file action with
-    * the add winning a same-version tie (the DV remove+add-same-path
-    * commit shape), latest metaData/protocol, latest txn per appId, latest
-    * domainMetadata per domain (tombstones kept — a removed=true marker
-    * must keep shadowing older re-creations). `cdc` actions are not
+    * Reconciliation is the replay's own reducer ([[LogReplay]]): per-path
+    * last file action with the add winning a same-version tie (the DV
+    * remove+add-same-path commit shape), latest metaData/protocol, latest
+    * txn per appId, latest domainMetadata per domain (tombstones kept — a
+    * removed=true marker must keep shadowing older re-creations). `cdc` actions are not
     * carried: snapshot replay ignores them and CDF readers read the
     * original commits. Runs distributed; the driver streams the result
     * one partition at a time (commitAtomicStream), never holding the
@@ -3066,39 +3066,16 @@ object DeltaWriter {
       if (!fs.exists(p))
         throw new IllegalArgumentException(
           s"cannot compact [$startVersion,$endVersion]: missing commit $p")
-      p.toString
+      v -> p
     }
-    val actions = spark.read.schema(actionSchema).json(commitFiles: _*)
-      .withColumn("version",
-        regexp_extract(input_file_name(), """(\d{20})\.json""", 1)
-          .cast(org.apache.spark.sql.types.LongType))
-
-    // one JSON line per surviving action; to_json drops null fields, so
-    // each line carries exactly its one populated top-level action
-    val fileLines = actions
-      .where(col("add.path").isNotNull || col("remove.path").isNotNull)
-      .groupBy(coalesce(col("add.path"), col("remove.path")).as("__p"))
-      .agg(max_by(struct(col("add"), col("remove")),
-        struct(col("version"), col("add").isNotNull)).as("w"))
-      .select(when(col("w.add.path").isNotNull,
-          to_json(struct(col("w.add").as("add"))))
-        .otherwise(to_json(struct(col("w.remove").as("remove")))).as("line"))
-    val protoLine = actions.where(col("protocol.minReaderVersion").isNotNull)
-      .orderBy(col("version").desc).limit(1)
-      .select(to_json(struct(col("protocol"))).as("line"))
-    val metaLine = actions.where(col("metaData.id").isNotNull)
-      .orderBy(col("version").desc).limit(1)
-      .select(to_json(struct(col("metaData"))).as("line"))
-    val txnLines = actions.where(col("txn.appId").isNotNull)
-      .groupBy(col("txn.appId")).agg(max_by(col("txn"), col("version")).as("txn"))
-      .select(to_json(struct(col("txn"))).as("line"))
-    val domainLines = actions.where(col("domainMetadata.domain").isNotNull)
-      .groupBy(col("domainMetadata.domain"))
-      .agg(max_by(col("domainMetadata"), col("version")).as("domainMetadata"))
-      .select(to_json(struct(col("domainMetadata"))).as("line"))
-
-    val all = protoLine.unionAll(metaLine).unionAll(txnLines)
-      .unionAll(domainLines).unionAll(fileLines)
+    val actions = LogReplay.actions(spark, actionSchema, commitFiles)
+    // the replay's own reducer: one surviving action per key (a remove
+    // winner is a tombstone line, a removed=true domain stays a marker);
+    // to_json drops null fields, so each line carries exactly its one
+    // populated top-level action
+    val all = LogReplay.winners(spark, actions, Seq(LogReplay.FileKey,
+        LogReplay.MetaKey, LogReplay.ProtocolKey, LogReplay.TxnKey, LogReplay.DomainKey))
+      .select(to_json(struct(actionSchema.fieldNames.toSeq.map(col): _*)).as("line"))
     val name = f"$startVersion%020d.$endVersion%020d.compacted.json"
     val target = new Path(logDir, name)
     val tmp = new Path(logDir, s".$name.${UUID.randomUUID()}.tmp")

@@ -79,3 +79,14 @@ object ArrowInterop {
     cspark.internalCreateDataFrame(rows, schema)
   }
 }
+
+/** Visibility bridge for `SparkSession.internalCreateDataFrame`: a
+  * DataFrame over rows already in Catalyst's internal form, so a
+  * distributed Delta log replay that reduces `InternalRow`s never converts
+  * them to external [[Row]]s and back. */
+object InternalRows {
+
+  def toDataFrame(spark: SparkSession,
+                  rows: RDD[org.apache.spark.sql.catalyst.InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+}

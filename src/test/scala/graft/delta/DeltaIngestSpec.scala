@@ -32,6 +32,23 @@ class DeltaIngestSpec extends SparkSpec {
     assert(txns.map(x => x.appId -> x.version).toMap == Map("app-1" -> 1L, "app-2" -> 0L))
   }
 
+  test("incremental reads (changes) leave no cached data behind, on either replay placement") {
+    val t = freshDir("changes_cache")
+    (0L until 4L).foreach(b => DeltaWriter.write((b * 5 until b * 5 + 5).map(i => (i, s"v$i")).toDF("id", "v"), t))
+    Seq(None, Some("0")).foreach { localMax =>
+      localMax.foreach(spark.conf.set("spark.graft.delta.localReplayMaxBytes", _))
+      try {
+        val before = spark.sparkContext.getPersistentRDDs.size
+        (0L until 3L).foreach { v =>
+          assert(DeltaSnapshotReader.changes(spark, t, v, Some(v + 1)).count() == 5L)
+        }
+        assert(spark.sparkContext.getPersistentRDDs.size == before,
+          s"changes() left ${spark.sparkContext.getPersistentRDDs.size - before} persisted RDDs " +
+            s"(localReplayMaxBytes ${localMax.getOrElse("default")})")
+      } finally spark.conf.unset("spark.graft.delta.localReplayMaxBytes")
+    }
+  }
+
   test("txn watermarks survive checkpointing") {
     val t = freshDir("txncp")
     DeltaWriter.writeIdempotent(Seq((1L, "a")).toDF("id", "v"), t, Nil, "app-cp", 7L)

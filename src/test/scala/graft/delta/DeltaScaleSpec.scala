@@ -1,9 +1,13 @@
 package graft.delta
 
 import graft.SparkSpec
+import org.apache.spark.graft.BusDrain
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, GreaterThanOrEqual, Literal}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -252,6 +256,35 @@ class DeltaScaleSpec extends SparkSpec {
       "CDF planning collected the end snapshot's add list")
     assert(!DeltaSnapshotReader.snapshotAt(spark, cdfTable, Some(1L)).fileSet.isCollected,
       "CDF remove reconstruction collected the prior snapshot's add list")
+  }
+
+  test("incremental reads over a 25k-file delete bring per-commit flags and delivered adds to the driver, never the removes") {
+    // rows each Dataset collect of `changes` returns: the count of the
+    // topmost operator that counts its output
+    val returned = new java.util.concurrent.atomic.AtomicLong()
+    val plans = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.find(qe.executedPlan)(_.metrics.contains("numOutputRows"))
+          .foreach(p => returned.addAndGet(p.metrics("numOutputRows").value))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    distributedOnly {
+      DeltaSnapshotReader.snapshot(spark, cdfTable)
+      BusDrain.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      val (feed, refused) = try {
+        (DeltaSnapshotReader.changes(spark, cdfTable, 1L, Some(2L), "ignoreDeletes"),
+          intercept[IllegalArgumentException](DeltaSnapshotReader.changes(spark, cdfTable, 1L, Some(2L))))
+      } finally {
+        BusDrain.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+      assert(refused.getMessage.contains("non-append changes"))
+      assert(feed.isEmpty, "a delete-only commit delivered rows under ignoreDeletes")
+      assert(returned.get > 0 && returned.get < 100,
+        s"changes() brought ${returned.get} rows to the driver for a 25k-remove commit")
+    }
   }
 
   test("FileIndex listing takes the distributed path: partition + stats pruning") {

@@ -20,7 +20,9 @@ import java.nio.file.Files
   * validation, the DV probe and listing run on the driver), 2 for the
   * query. With both gates at 0 the file set stays distributed; its count
   * is locked too, and so is the cost of an append that auto-checkpoints,
-  * so no change can raise any of them silently. Both placements must give
+  * so no change can raise any of them silently. On the driver placement
+  * (a small checkpoint-less log) a cold snapshot, its files and the plan
+  * of a small change feed launch no job at all. Both placements must give
   * the same snapshot and refuse a tampered crc before serving a row; the
   * crc's count only places the set, it never sizes a collect past the
   * threshold. */
@@ -108,6 +110,30 @@ class SnapshotJobBudgetSpec extends SparkSpec {
     // version's snapshot; 2 for its tombstones, 2 for txns + domains
     // together; 1 to write the single-part checkpoint
     assert(checkpointed <= 9, s"an auto-checkpointing append launched $checkpointed jobs")
+  }
+
+  test("driver placement: a cold snapshot + files of a small checkpoint-less table launch no job") {
+    val t = newTable()
+    for (i <- 0 until 3)
+      DeltaWriter.write((0 until 20).map(j => (i * 20L + j, j % 7, i)).toDF("id", "grp", "batch"), t)
+    DeltaSnapshotReader.invalidate(t)
+    val (files, jobs) = jobsOf(DeltaSnapshotReader.snapshot(spark, t).files)
+    assert(files.nonEmpty && DeltaSnapshotReader.snapshot(spark, t).fileSet.isCollected)
+    assert(jobs == 0, s"a cold driver-placement snapshot + files launched $jobs jobs")
+  }
+
+  test("driver placement: planning ChangeDataFeed.read over a small range launches no job") {
+    val t = newTable()
+    def rows(from: Long) = (from until from + 20L).map(i => (i, (i % 7).toInt, 0)).toDF("id", "grp", "batch")
+    DeltaWriter.write(rows(0L), t)
+    DeltaWriter.setProperties(spark, t, Map("delta.enableChangeDataFeed" -> "true"))
+    DeltaWriter.write(rows(20L), t)                       // inserts from add actions
+    DeltaWriter.delete(spark, t, col("id") === 3L)         // cdc files
+    DeltaWriter.write(rows(40L), t, mode = "overwrite")   // deletes from remove actions
+    DeltaSnapshotReader.invalidate(t)
+    val (feed, jobs) = jobsOf(ChangeDataFeed.read(spark, t, 2L))
+    assert(jobs == 0, s"planning a small-range change feed launched $jobs jobs")
+    assert(feed.count() == 20 + 1 + 39 + 20)
   }
 
   /** A checkpointed table carrying every piece of state a replay resolves:
