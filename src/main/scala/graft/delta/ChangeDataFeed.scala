@@ -78,9 +78,7 @@ object ChangeDataFeed {
     writer.mode("errorifexists").parquet(dir.toString)
     val lines = DeltaWriter.listDataFiles(fs, dir).map { st =>
       val rel = DeltaWriter.relativize(table, st.getPath)
-      val pv = DeltaWriter.hivePartitionValues(rel, diskPartitionBy)
-        .map { case (k, v) => s"${DeltaWriter.q(k)}:${DeltaWriter.q(v)}" }
-        .mkString("{", ",", "}")
+      val pv = DeltaWriter.jsonMap(DeltaWriter.hivePartitionValues(rel, diskPartitionBy))
       s"""{"cdc":{"path":${DeltaWriter.q(DeltaActions.encodePath(rel))},"partitionValues":$pv,"size":${st.getLen},"dataChange":false}}"""
     }
     (lines, dir)

@@ -112,7 +112,7 @@ object Clustering {
     // stamp would make the next incremental pass re-cluster this commit's
     // own output)
     def marker(version: Long) =
-      s"""{"domainMetadata":{"domain":${DeltaWriter.q(StateDomain)},"configuration":${DeltaWriter.q(s"""{"clusteredAtVersion":$version}""")},"removed":false}}"""
+      DeltaWriter.domainLine(StateDomain, s"""{"clusteredAtVersion":$version}""")
     // STRICT conflict footprint, unlike plain compaction: the watermark
     // asserts "everything at or below this version is clustered", so a
     // concurrent dataChange APPEND must abort the retry (commuting past it

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import scala.jdk.CollectionConverters._
+
 /** Delta's per-operation commit-conflict rules (the public protocol's
   * optimistic-concurrency semantics, as delta-spark's ConflictChecker
   * implements them): when a transaction loses the commit race, the WINNING
@@ -28,7 +30,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    data and the add's partition values satisfy the loser's read scope
   *    (no scope = whole-table read → always). Layout-only winners
   *    (OPTIMIZE's dataChange=false adds) never append-conflict: they
-  *    contain no new rows.
+  *    contain no new rows. An add counts as a data change unless its
+  *    `dataChange` decodes to false: a missing or mistyped flag reads as a
+  *    change, the side on which a misread can only abort a retry, never
+  *    let an overlapping one through.
   *  - remove of a file the loser read    → ConcurrentDeleteReadException
   *  - remove of a file the loser removes → ConcurrentDeleteDeleteException
   *  - txn with an appId the loser uses   → ConcurrentTransactionException
@@ -85,7 +90,7 @@ object ConflictChecker {
   def check(spark: SparkSession, base: DeltaSnapshot, fresh: DeltaSnapshot,
             rs: TxnReadSet): Unit = {
     val winners = (base.version + 1 to fresh.version)
-      .map(v => parseCommit(spark, base.tablePath, v))
+      .map(v => summarize(spark, base.tablePath, v))
     def at(w: WinnerSummary) = s"concurrent commit v${w.version} on ${base.tablePath}"
     winners.foreach { w =>
       if (w.hasProtocol)
@@ -126,7 +131,9 @@ object ConflictChecker {
     * scope? Whole-table reads conflict with any add; a partition-scoped
     * read evaluates its predicate over each add's (logical) partition
     * values — exactly the file-level admission test the scan itself uses,
-    * so "disjoint partitions" commutes and everything else aborts. */
+    * so "disjoint partitions" commutes and everything else aborts. The
+    * values form a local relation, so the predicate is evaluated during
+    * planning and no Spark job is launched. */
   private def addsIntersectReadScope(spark: SparkSession, snap: DeltaSnapshot,
                                      dataAdds: Seq[Map[String, String]],
                                      rs: TxnReadSet): Boolean =
@@ -138,54 +145,29 @@ object ConflictChecker {
         val physOf = parts.map(c => c -> snap.physicalFieldName(c)).toMap
         val rows = dataAdds.map(pv =>
           Row.fromSeq(parts.map(c => pv.getOrElse(physOf(c), null))))
-        val raw = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1),
-          StructType(parts.map(c => StructField(c, StringType)).toSeq))
+        val raw = spark.createDataFrame(rows.asJava,
+          StructType(parts.map(c => StructField(c, StringType))))
         val typed = raw.select(parts.map(c =>
           col(c).cast(snap.schema(c).dataType).as(c)): _*)
         typed.filter(pred).limit(1).collect().nonEmpty
     }
 
-  /** Driver-side parse of one commit JSON: actions are log metadata (KBs),
-    * never data — json4s (ships with Spark), no Spark job. */
-  private def parseCommit(spark: SparkSession, tablePath: String,
-                          version: Long): WinnerSummary = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val p = new Path(new Path(tablePath, "_delta_log"), f"$version%020d.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    var hasProtocol = false
-    var hasMetadata = false
-    val dataAdds = Seq.newBuilder[Map[String, String]]
-    val removePaths = Set.newBuilder[String]
-    val txnAppIds = Set.newBuilder[String]
-    val domains = Set.newBuilder[String]
-    text.split('\n').filter(_.nonEmpty).foreach { line =>
-      val j = JsonMethods.parse(line)
-      (j \ "protocol") match { case JObject(_) => hasProtocol = true; case _ => }
-      (j \ "metaData") match { case JObject(_) => hasMetadata = true; case _ => }
-      (j \ "add") match {
-        case add: JObject =>
-          val dc = (add \ "dataChange") match { case JBool(b) => b; case _ => true }
-          if (dc) {
-            val pv = (add \ "partitionValues") match {
-              case JObject(fields) => fields.collect {
-                case (k, JString(v)) => k -> v
-              }.toMap
-              case _ => Map.empty[String, String]
-            }
-            dataAdds += pv
-          }
-        case _ =>
-      }
-      (j \ "remove" \ "path") match { case JString(rp) => removePaths += rp; case _ => }
-      (j \ "txn" \ "appId") match { case JString(a) => txnAppIds += a; case _ => }
-      (j \ "domainMetadata" \ "domain") match { case JString(d) => domains += d; case _ => }
-    }
-    WinnerSummary(version, hasProtocol, hasMetadata, dataAdds.result(),
-      removePaths.result(), txnAppIds.result(), domains.result())
+  /** One winning commit, read through the log replay's decoder
+    * ([[LogReplay.decodeRows]]): log metadata (KBs), decoded in place
+    * with no Spark job. */
+  private def summarize(spark: SparkSession, tablePath: String,
+                        version: Long): WinnerSummary = {
+    val file = new Path(new Path(tablePath, "_delta_log"), f"$version%020d.json")
+    val rows = LogReplay.decodeRows(spark, DeltaActions.actionSchema, Seq(version -> file))
+    def actions(name: String): Seq[Row] = rows.flatMap(r => Option(r.getAs[Row](name)))
+    def names(name: String, field: String): Set[String] =
+      actions(name).flatMap(a => Option(a.getAs[String](field))).toSet
+    val dataAdds = actions("add")
+      .filter(a => a.isNullAt(a.fieldIndex("dataChange")) || a.getAs[Boolean]("dataChange"))
+      .map(a => Option(a.getMap[String, String](a.fieldIndex("partitionValues")))
+        .map(_.toMap).getOrElse(Map.empty[String, String]))
+    WinnerSummary(version, actions("protocol").nonEmpty, actions("metaData").nonEmpty,
+      dataAdds, names("remove", "path"), names("txn", "appId"), names("domainMetadata", "domain"))
   }
 
   /** `Some(pred)` iff `pred` references only partition columns of `snap` —

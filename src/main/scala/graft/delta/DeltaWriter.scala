@@ -12,14 +12,23 @@ import java.util.UUID
   *
   * The reference is read-only; this writer exists (a) as the engine's Delta
   * sink, (b) to author the log fixtures the reader is tested against
-  * (FIXTURES.md "Delta-log fixtures"). Each commit writes its data files
-  * under a commit-unique subdirectory, then claims the next
-  * `_delta_log/<version>.json` via check-then-rename; appends/overwrites
-  * that lose the version race retry against the fresh snapshot (optimistic
-  * concurrency — append∥append never logically conflicts). Atomicity of
-  * the claim relies on the store's no-overwrite rename (HDFS semantics;
-  * production object stores need a conditional-put LogStore, exactly as
-  * Delta itself requires).
+  * (FIXTURES.md "Delta-log fixtures"). Data files land under a
+  * commit-unique subdirectory first, so losing a version race never
+  * collides on paths and a retry only rewrites the log entry.
+  *
+  * Every commit runs through one transaction path ([[transact]], the shape
+  * of delta-spark's OptimisticTransaction): per attempt it renders
+  * `commitInfo` and the op's actions against the snapshot it commits on,
+  * and claims `_delta_log/<version>.json` with one put-if-absent call to
+  * the table's [[CommitOwner]]. A lost claim applies one of three conflict
+  * rules: re-resolve and re-render (appends and overwrites), check the
+  * winners against a declared read set with [[ConflictChecker]] (DML,
+  * OPTIMIZE and the other rewrites, metadata and domain commits), or
+  * surface the conflict (single-shot ops, v0 creation among them). A won
+  * claim runs the post-commit hooks in one order: crc, UniForm export,
+  * snapshot-cache invalidation, auto-checkpoint. Atomicity of the claim
+  * relies on the store's no-overwrite rename or conditional put
+  * ([[LogStore]]), exactly as Delta itself requires.
   */
 object DeltaWriter {
 
@@ -103,10 +112,7 @@ object DeltaWriter {
     val logDir = new Path(table, "_delta_log")
     fs.mkdirs(logDir)
 
-    val priorForPrep: Option[DeltaSnapshot] =
-      if (fs.exists(logDir) && fs.listStatus(logDir).exists(_.getPath.getName.endsWith(".json")))
-        Some(DeltaSnapshotReader.snapshot(spark, tablePath))
-      else None
+    val priorForPrep = latestSnapshot(spark, fs, tablePath)
     // Column defaults: a batch omitting a defaulted column gets the
     // declared value (whole-column granularity — see [[ColumnDefaults]]).
     val dataDef = priorForPrep match {
@@ -180,18 +186,13 @@ object DeltaWriter {
         st.getModificationTime, statsByPath.get(st.getPath.toUri.getPath))
     }
 
-    // Optimistic concurrency: resolve the snapshot, validate, attempt the
-    // commit; if a foreign writer won the version (rename race), re-resolve
-    // and retry. Appends never logically conflict with other appends or
-    // overwrites; overwrite recomputes its removes against the fresh
-    // snapshot each attempt (last-writer-wins, Delta's own semantics).
-    var attempts = 0
-    while (true) {
-      val prior: Option[DeltaSnapshot] =
-        if (fs.listStatus(logDir).exists(_.getPath.getName.endsWith(".json")))
-          Some(DeltaSnapshotReader.snapshot(spark, tablePath))
-        else None
-      val version = prior.map(_.version + 1).getOrElse(0L)
+    // Optimistic concurrency, re-render rule: a losing attempt re-resolves
+    // the latest snapshot and renders again, re-running every validation
+    // below against it. Appends never logically conflict with other
+    // appends or overwrites; overwrite recomputes its removes against the
+    // fresh snapshot each attempt (last-writer-wins, Delta's own semantics).
+    transact(spark, tablePath, priorForPrep, "WRITE", Map("mode" -> mode), Rerender) { a =>
+      val prior = a.cur
       prior.foreach(assertWritable(_, "WRITE"))
       // the data files were written under the mapping seen BEFORE the
       // commit race — a concurrent mapping change invalidates them
@@ -260,8 +261,7 @@ object DeltaWriter {
       require(idMarks.isEmpty || prior.map(_.version) == priorForPrep.map(_.version),
         s"concurrent commit while assigning identity values on $tablePath — retry the write")
       val lines = Seq.newBuilder[String]
-      lines += commitInfoJson("WRITE", Map("mode" -> mode), prior.flatMap(nextIct(spark, _)))
-      if (version == 0L) {
+      if (a.version == 0L) {
         // legacy protocol ladder: identity columns ⇒ 6, generated ⇒ 4.
         // READER-visible types (TIMESTAMP WITHOUT TIME ZONE, which naive
         // readers would shift, and VARIANT, whose binary encoding naive
@@ -304,52 +304,34 @@ object DeltaWriter {
           IdentityColumns.withWatermarks(st, idMarks).json, partitionBy,
           prior.map(_.configuration).getOrElse(Map.empty))
       }
-      if (version > 0L && idMarks.nonEmpty && evolvedSchema.isEmpty) {
+      if (a.version > 0L && idMarks.nonEmpty && evolvedSchema.isEmpty) {
         // value-assigning commit: republish the schema with the advanced
         // identity water mark (spec: the mark lives in metaData)
         lines += metaDataJson(prior,
           IdentityColumns.withWatermarks(prior.get.schema, idMarks).json, partitionBy,
           prior.map(_.configuration).getOrElse(Map.empty))
       }
-      removes.foreach { f =>
-        // removes only exist when overwriting an existing table: prior is Some
-        lines += s"""{"remove":{"path":${q(f.path)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${removeExt(prior.get, f)}}}"""
-      }
+      // removes only exist when overwriting an existing table: prior is Some
+      val now = System.currentTimeMillis()
+      removes.foreach(f => lines += removeLine(physical(prior.get, f), now, dataChange = true))
       // Row tracking: mint a fresh id range per add above the table's
       // high-water mark and advance the mark in the SAME commit (inside the
       // retry loop — a racing commit moves the mark, so assignment must
       // re-resolve against the fresh snapshot).
       val trackedAdds = prior match {
         case Some(p) if RowTracking.isEnabled(p.configuration) =>
-          val (assigned, hwm) = RowTracking.assign(adds, RowTracking.highWaterMark(p), version)
-          lines += s"""{"domainMetadata":{"domain":${q(RowTracking.Domain)},"configuration":${q(RowTracking.hwmConfigJson(hwm))},"removed":false}}"""
+          val (assigned, hwm) = RowTracking.assign(adds, RowTracking.highWaterMark(p), a.version)
+          lines += domainLine(RowTracking.Domain, RowTracking.hwmConfigJson(hwm))
           assigned
         case _ => adds
       }
-      trackedAdds.foreach { f =>
-        val pv = f.partitionValues.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
-        val statsPart = f.stats.map(s => s""","stats":${q(s)}""").getOrElse("")
-        lines += s"""{"add":{"path":${q(f.path)},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":true$statsPart${rowIdPart(f)}}}"""
-      }
+      trackedAdds.foreach(f => lines += addLine(f, dataChange = true))
       txn.foreach { t =>
         val lu = t.lastUpdated.map(v => s""","lastUpdated":$v""").getOrElse("")
         lines += s"""{"txn":{"appId":${q(t.appId)},"version":${t.version}$lu}}"""
       }
-      try {
-        commitAtomic(fs, logDir, version, lines.result(),
-          prior.map(_.configuration).getOrElse(Map.empty))
-        DeltaSnapshotReader.invalidate(tablePath)
-        maybeAutoCheckpoint(spark, tablePath, version,
-          prior.map(_.configuration).getOrElse(Map.empty))
-        return version
-      } catch {
-        case _: CommitConflictException =>
-          attempts += 1
-          require(attempts < 50, s"giving up after $attempts commit conflicts at $tablePath")
-          DeltaSnapshotReader.invalidate(tablePath)
-      }
+      lines.result()
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Exactly-once append for a streaming writer: if the table has already
@@ -549,8 +531,8 @@ object DeltaWriter {
       val stats =
         if (dvDescs.isEmpty) mergeStats(files)
         else computeStats(spark, out, dataSchema, snap.configuration).get(st.getPath.toUri.getPath)
-      AddFile(encodePath(relativize(table, st.getPath)), physPartitionValues(snap, pv),
-        st.getLen, st.getModificationTime, stats)
+      physical(snap, AddFile(encodePath(relativize(table, st.getPath)), pv,
+        st.getLen, st.getModificationTime, stats))
     }
     if (tracked) graft.functions.PathNorm.register(spark) // once, pre-pool
     val maxThreads = math.max(1, spark.conf
@@ -575,55 +557,27 @@ object DeltaWriter {
       }
     val removes = rewrites.flatMap(_._2)
 
-    def buildLines(cur: DeltaSnapshot, version: Long): Seq[String] = {
+    // conflict-checked optimistic retry: compaction reads no logical rows,
+    // so concurrent appends (and disjoint rewrites) commute with it; only
+    // a concurrent remove of one of its input files aborts
+    Some(transact(spark, tablePath, Some(snap), "OPTIMIZE", Map.empty,
+        Check(layoutReadSet(removes))) { a =>
       val lines = Seq.newBuilder[String]
-      lines += commitInfoJson("OPTIMIZE", ict = nextIct(spark, cur))
-      removes.foreach { f =>
-        lines += s"""{"remove":{"path":${q(f.path)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":false${removeExt(cur, f)}}}"""
-      }
+      val now = System.currentTimeMillis()
+      removes.foreach(f => lines += removeLine(physical(a.snap, f), now, dataChange = false))
       // spec: every new add of a tracked table still gets a FRESH default
       // range (unused while the materialized ids take precedence)
       val trackedAdds =
         if (!tracked) adds
         else {
           val (assigned, hwm) =
-            RowTracking.assign(adds, RowTracking.highWaterMark(cur), version)
-          lines += s"""{"domainMetadata":{"domain":${q(RowTracking.Domain)},"configuration":${q(RowTracking.hwmConfigJson(hwm))},"removed":false}}"""
+            RowTracking.assign(adds, RowTracking.highWaterMark(a.snap), a.version)
+          lines += domainLine(RowTracking.Domain, RowTracking.hwmConfigJson(hwm))
           assigned
         }
-      trackedAdds.foreach { f =>
-        val pv = f.partitionValues.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
-        val statsPart = f.stats.map(s => s""","stats":${q(s)}""").getOrElse("")
-        lines += s"""{"add":{"path":${q(f.path)},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":false$statsPart${rowIdPart(f)}}}"""
-      }
+      trackedAdds.foreach(f => lines += addLine(f, dataChange = false))
       lines.result()
-    }
-    // conflict-checked optimistic retry: compaction reads no logical rows,
-    // so concurrent appends (and disjoint rewrites) commute with it; only
-    // a concurrent remove of one of its input files aborts
-    val rs = layoutReadSet(removes)
-    var cur = snap
-    var attempts = 0
-    while (true) {
-      val version = cur.version + 1
-      try {
-        commitAtomic(fs, new Path(table, "_delta_log"), version, buildLines(cur, version),
-          cur.configuration)
-        DeltaSnapshotReader.invalidate(tablePath)
-        maybeAutoCheckpoint(spark, tablePath, version, cur.configuration)
-        return Some(version)
-      } catch {
-        case _: CommitConflictException =>
-          DeltaSnapshotReader.invalidate(tablePath)
-          val fresh = DeltaSnapshotReader.snapshot(spark, tablePath)
-          ConflictChecker.check(spark, cur, fresh, rs)
-          attempts += 1
-          require(attempts < 20,
-            s"giving up after $attempts conflict-checked retries at $tablePath")
-          cur = fresh
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    })
   }
 
   /** OPTIMIZE … ZORDER BY: rewrite the table's files with rows clustered
@@ -732,9 +686,9 @@ object DeltaWriter {
       preservesRowIds = matCols.isDefined,
       extraActions = extraActions,
       removeAllFromSnap = files.isEmpty,
-      readSet = Some(readSetOverride.getOrElse(files.map(layoutReadSet).getOrElse(
+      readSet = readSetOverride.getOrElse(files.map(layoutReadSet).getOrElse(
         ConflictChecker.TxnReadSet(readsData = false, partitionPredicate = None,
-          readFiles = Set.empty, removedPaths = Set.empty, wholeTableFiles = true)))))
+          readFiles = Set.empty, removedPaths = Set.empty, wholeTableFiles = true))))
   }
 
   /** INSERT OVERWRITE … REPLACE WHERE: atomically replace exactly the rows
@@ -782,7 +736,7 @@ object DeltaWriter {
       changeData = changes,
       extraDataCols = matTrack.toSeq.flatMap(c => Seq(c._1, c._2)),
       preservesRowIds = matTrack.isDefined,
-      readSet = Some(dmlReadSet(spark, snap, affected, Some(condition))))
+      readSet = dmlReadSet(spark, snap, affected, Some(condition)))
   }
 
   /** DYNAMIC PARTITION OVERWRITE (delta-spark's
@@ -826,38 +780,25 @@ object DeltaWriter {
     require(!fs.exists(new Path(target, "_delta_log")),
       s"clone target already a Delta table: $targetPath")
     val srcFs = new Path(sourcePath).getFileSystem(spark.sessionState.newHadoopConf())
-    val lines = Seq.newBuilder[String]
-    lines += commitInfoJson("CLONE", Map("source" -> sourcePath),
-      if (ictEnabled(src.configuration)) Some(System.currentTimeMillis()) else None)
-    lines += protocolJson(src.protocol.getOrElse(DeltaProtocol(1, 2)))
-    lines += metaDataJson(None, src.schema.json,
-      src.partitionColumns, src.configuration)
-    src.files.foreach { f =>
-      val absUri = srcFs.makeQualified(new Path(src.absolutePath(f))).toUri.toString
-      val pv = physPartitionValues(src, f.partitionValues)
-        .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
-      val statsPart = f.stats.map(s => s""","stats":${q(s)}""").getOrElse("")
-      val dvPart = f.deletionVector.map { d =>
+    transact(spark, targetPath, None, "CLONE", Map("source" -> sourcePath), Surface,
+        config = Some(src.configuration)) { _ =>
+      val adds = src.files.map { f =>
         // re-anchor table-relative (u) DVs as absolute paths; inline stays
-        val re = d.storageType match {
-          case "u" => d.copy(storageType = "p",
-            pathOrInlineDv = srcFs.makeQualified(d.filePath(sourcePath).get).toUri.toString,
-            offset = d.offset)
-          case _ => d
+        val dv = f.deletionVector.map { d =>
+          if (d.storageType != "u") d
+          else d.copy(storageType = "p",
+            pathOrInlineDv = srcFs.makeQualified(d.filePath(sourcePath).get).toUri.toString)
         }
-        s""","deletionVector":{"storageType":${q(re.storageType)},"pathOrInlineDv":${q(re.pathOrInlineDv)},"offset":${re.offset},"sizeInBytes":${re.sizeInBytes},"cardinality":${re.cardinality}}"""
-      }.getOrElse("")
-      lines += s"""{"add":{"path":${q(absUri)},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":true$statsPart$dvPart${rowIdPart(f)}}}"""
+        addLine(physical(src, f).copy(
+          path = srcFs.makeQualified(new Path(src.absolutePath(f))).toUri.toString,
+          deletionVector = dv), dataChange = true)
+      }
+      // live metadata domains carry into the clone (row-tracking high-water
+      // mark, …) — a tracked clone must keep minting ids above the source's
+      Seq(protocolJson(src.protocol.getOrElse(DeltaProtocol(1, 2))),
+        metaDataJson(None, src.schema.json, src.partitionColumns, src.configuration)) ++
+        adds ++ src.domainMetadata.toSeq.sortBy(_._1).map { case (d, cfg) => domainLine(d, cfg) }
     }
-    // live metadata domains carry into the clone (row-tracking high-water
-    // mark, …) — a tracked clone must keep minting ids above the source's
-    src.domainMetadata.toSeq.sortBy(_._1).foreach { case (d, cfg) =>
-      lines += s"""{"domainMetadata":{"domain":${q(d)},"configuration":${q(cfg)},"removed":false}}"""
-    }
-    commitAtomic(fs, new Path(target, "_delta_log"), 0L, lines.result(),
-      src.configuration)
-    DeltaSnapshotReader.invalidate(targetPath)
-    0L
   }
 
   /** CONVERT TO DELTA: turn an existing parquet directory (optionally
@@ -888,11 +829,6 @@ object DeltaWriter {
       df.schema.fields.filterNot(f => partitionColumns.contains(f.name)))
     val stats: Map[String, String] =
       if (collectStats) computeStats(spark, table, dataSchema) else Map.empty
-    val header = Seq(
-      commitInfoJson("CONVERT", Map("source" -> "parquet",
-        "partitionedBy" -> partitionColumns.mkString(",")), None),
-      protocolJson(DeltaProtocol(1, 2)),
-      metaDataJson(None, df.schema.json, partitionColumns))
     val raw = fs.listFiles(table, true)
     val addLines = Iterator.continually(()).takeWhile(_ => raw.hasNext)
       .map(_ => raw.next())
@@ -912,16 +848,15 @@ object DeltaWriter {
           s"$dir has hive partition dir(s) for undeclared column(s) " +
             s"${undeclared.toSeq.sorted.mkString(", ")} (in $rel) — pass them " +
             "as partitionColumns")
-        val pv = hivePartitionValues(rel, partitionColumns)
-          .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
-        val statsPart = stats.get(st.getPath.toUri.getPath)
-          .map(s => s""","stats":${q(s)}""").getOrElse("")
-        s"""{"add":{"path":${q(encodePath(rel))},"partitionValues":$pv,"size":${st.getLen},"modificationTime":${st.getModificationTime},"dataChange":true$statsPart}}"""
+        addLine(AddFile(encodePath(rel), hivePartitionValues(rel, partitionColumns),
+          st.getLen, st.getModificationTime, stats.get(st.getPath.toUri.getPath)),
+          dataChange = true)
       }
-    commitAtomicStream(fs, new Path(table, "_delta_log"), 0L,
-      header.iterator ++ addLines)
-    DeltaSnapshotReader.invalidate(dir)
-    0L
+    transact(spark, dir, None, "CONVERT",
+        Map("source" -> "parquet", "partitionedBy" -> partitionColumns.mkString(",")),
+        Surface, tail = Some(() => addLines)) { _ =>
+      Seq(protocolJson(DeltaProtocol(1, 2)), metaDataJson(None, df.schema.json, partitionColumns))
+    }
   }
 
   /** FSCK REPAIR TABLE: drop add entries whose DATA FILE IS MISSING from
@@ -950,16 +885,11 @@ object DeltaWriter {
       }.collect().toSeq.sortBy(_.path)
     if (dryRun || missing.isEmpty)
       return missing.map(f => DeltaActions.decodePath(f.path))
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val now = System.currentTimeMillis()
-    val lines = commitInfoJson("FSCK",
-      Map("numRemovedFiles" -> missing.size.toString), nextIct(spark, snap)) +:
-      missing.map(f =>
-        s"""{"remove":{"path":${q(f.path)},"deletionTimestamp":$now,"dataChange":true${removeExt(snap, f)}}}""")
-    commitAtomic(fs, new Path(table, "_delta_log"), snap.version + 1, lines,
-      snap.configuration)
-    DeltaSnapshotReader.invalidate(tablePath)
+    transact(spark, tablePath, Some(snap), "FSCK",
+        Map("numRemovedFiles" -> missing.size.toString), Surface) { a =>
+      val now = System.currentTimeMillis()
+      missing.map(f => removeLine(physical(a.snap, f), now, dataChange = true))
+    }
     missing.map(f => DeltaActions.decodePath(f.path))
   }
 
@@ -1052,33 +982,18 @@ object DeltaWriter {
             from.getFileSystem(conf), from, tfs, to, false, true, conf)
         }
       }
-      val pvRename: Map[String, String] =
-        src.partitionColumns.map(c => c -> src.physicalFieldName(c)).toMap
+      val keys = physicalKeys(src)
       val addLines = entries.map { case (f, rel) =>
-        val pv = f.partitionValues
-          .map { case (k, v) => s"${q(pvRename.getOrElse(k, k))}:${q(v)}" }
-          .mkString("{", ",", "}")
-        val statsPart = f.stats.map(s => s""","stats":${q(s)}""").getOrElse("")
-        val dvPart = f.deletionVector.map(d =>
-          s""","deletionVector":{"storageType":${q(d.storageType)},"pathOrInlineDv":${q(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}""")
-          .getOrElse("")
-        s"""{"add":{"path":${q(encodePath(rel))},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":true$statsPart$dvPart${rowIdPart(f)}}}"""
+        addLine(withKeys(f, keys).copy(path = encodePath(rel)), dataChange = true)
       }
-      val header = Seq(
-        commitInfoJson("CLONE", Map("source" -> sourcePath, "isDeep" -> "true"),
-          if (ictEnabled(src.configuration)) Some(System.currentTimeMillis()) else None),
-        protocolJson(src.protocol.getOrElse(DeltaProtocol(1, 2))),
-        metaDataJson(None, src.schema.json,
-          src.partitionColumns, src.configuration))
-      val domains = src.domainMetadata.toSeq.sortBy(_._1).map { case (d, cfg) =>
-        s"""{"domainMetadata":{"domain":${q(d)},"configuration":${q(cfg)},"removed":false}}"""
+      val domains = src.domainMetadata.toSeq.sortBy(_._1).map { case (d, cfg) => domainLine(d, cfg) }
+      transact(spark, targetPath, None, "CLONE", Map("source" -> sourcePath, "isDeep" -> "true"),
+          Surface, config = Some(src.configuration),
+          tail = Some(() => addLines.toLocalIterator ++ domains.iterator)) { _ =>
+        Seq(protocolJson(src.protocol.getOrElse(DeltaProtocol(1, 2))),
+          metaDataJson(None, src.schema.json, src.partitionColumns, src.configuration))
       }
-      commitAtomicStream(fs, new Path(target, "_delta_log"), 0L,
-        header.iterator ++ addLines.toLocalIterator ++ domains.iterator,
-        src.configuration)
     } finally entries.unpersist(blocking = false)
-    DeltaSnapshotReader.invalidate(targetPath)
-    0L
   }
 
   /** Executor-side deletion-vector marking for the DV leg of
@@ -1702,22 +1617,27 @@ object DeltaWriter {
         identityMarks = idMarks,
         dvReAdds = reAdds,
         removeAllFromSnap = !dv && affectedOpt.isEmpty,
-        readSet = Some(affectedOpt.map(dmlReadSet(spark, snap, _, condition))
-          .getOrElse(wholeTableDmlReadSet)))
+        readSet = affectedOpt.map(dmlReadSet(spark, snap, _, condition))
+          .getOrElse(wholeTableDmlReadSet))
     } finally {
       insertRaw.foreach(_.unpersist(blocking = false))
       if (dv && source.isDefined) rows.unpersist(blocking = false)
     }
   }
 
-  /** Logical → physical partition-key rename for RE-ADDED files' action
-    * lines (identity on unmapped tables): snapshot build translated the
-    * log's physical keys to logical; anything going back OUT must be
-    * physical again. */
-  private def physPartitionValues(snap: DeltaSnapshot,
-                                  pv: Map[String, String]): Map[String, String] =
-    if (snap.physicalSchema.isEmpty) pv
-    else pv.map { case (k, v) => snap.physicalFieldName(k) -> v }
+  /** Logical → physical partition-column names (identity on unmapped
+    * tables): snapshot build translated the log's physical keys to
+    * logical; anything going back OUT must be physical again. A plain map,
+    * so executor-side renderers use it too ([[withKeys]]). */
+  private def physicalKeys(snap: DeltaSnapshot): Map[String, String] =
+    snap.partitionColumns.map(c => c -> snap.physicalFieldName(c)).toMap
+
+  /** `f` with its partition keys renamed through `keys`. */
+  private def withKeys(f: AddFile, keys: Map[String, String]): AddFile =
+    f.copy(partitionValues = f.partitionValues.map { case (k, v) => keys.getOrElse(k, k) -> v })
+
+  /** `f` with the physical partition keys of `snap`. */
+  private def physical(snap: DeltaSnapshot, f: AddFile): AddFile = withKeys(f, physicalKeys(snap))
 
   /** Which active files contain rows selected by `probe`? One distributed
     * job over the native relation for the hit paths (bounded by the
@@ -1813,8 +1733,8 @@ object DeltaWriter {
       case None => DeltaFileIndex.relation(spark, snap)
     }
 
-  /** Commit a row-level rewrite — the one conflict-checked commit loop
-    * for DML, REPLACE WHERE and the layout rewrites: write `newData` (if
+  /** Commit a row-level rewrite — DML, REPLACE WHERE and the layout
+    * rewrites, conflict-checked against `readSet`: write `newData` (if
     * any) under `v<N>/` (hive-partitioned by the table's partition
     * columns), remove `removed`, add the new files with fresh stats.
     *
@@ -1840,7 +1760,7 @@ object DeltaWriter {
                             dvReAdds: Seq[AddFile] = Nil,
                             extraActions: Long => Seq[String] = _ => Nil,
                             removeAllFromSnap: Boolean = false,
-                            readSet: Option[ConflictChecker.TxnReadSet] = None): Long = {
+                            readSet: ConflictChecker.TxnReadSet): Long = {
     assertWritable(snap, operation)
     if (!preservesRowIds) assertNoRewriteUnderRowTracking(snap, operation)
     require(!(dataChange && snap.isAppendOnly &&
@@ -1887,19 +1807,30 @@ object DeltaWriter {
           st.getModificationTime, statsByPath.get(st.getPath.toUri.getPath))
       }
     }
-    val dc = dataChange.toString
+    // whole-table rewrites (full ZORDER, BY SOURCE clause MERGE): the
+    // remove set IS the active file set — its lines are rendered on
+    // executors and stream into the commit one partition at a time, never
+    // as the collected list. The physical partition-key map is built once,
+    // outside the closure; `cur` could only change it via a metadata
+    // winner, which the conflict checker aborts on.
+    val removeAll = Option.when(removeAllFromSnap) { () =>
+      val now = System.currentTimeMillis()
+      val keys = physicalKeys(snap)
+      snap.fileSet.df.rdd.map(DeltaFileSet.decode)
+        .map(f => removeLine(withKeys(f, keys), now, dataChange)).toLocalIterator
+    }
     // per-attempt action rendering: the version, in-commit timestamp, CDF
     // change-file paths and row-id water mark all depend on the snapshot
     // the attempt commits ON TOP OF, so a conflict-checked retry rebuilds
     // them against the fresh snapshot (the adds/removes themselves do not
     // change — the checker proved the winners disjoint)
-    var lastCdcDir: Option[Path] = None // losing attempts' change files, reclaimed on retry
-    def buildLines(cur: DeltaSnapshot, version: Long): Seq[String] = {
+    transact(spark, snap.tablePath, Some(snap), operation, opParams, Check(readSet),
+        tail = removeAll) { a =>
+      val cur = a.snap
       val lines = Seq.newBuilder[String]
-      lines += commitInfoJson(operation, opParams, nextIct(spark, cur))
       // version-dependent caller actions (e.g. the clustering watermark) are
       // re-rendered per attempt so a retried commit stamps ITS version
-      lines ++= extraActions(version)
+      lines ++= extraActions(a.version)
       if (dvReAdds.nonEmpty) dvProtocolUpgrade(cur).foreach(lines += _)
       if (identityMarks.nonEmpty)
         // value-assigning rewrite (MERGE insert / UPDATE SET on a BY DEFAULT
@@ -1908,88 +1839,26 @@ object DeltaWriter {
         lines += metaDataJson(Some(cur),
           IdentityColumns.withWatermarks(cur.schema, identityMarks).json,
           cur.partitionColumns, cur.configuration)
-      if (dataChange && ChangeDataFeed.isEnabled(cur.configuration)) {
-        val changes = changeData.getOrElse(throw DeltaUnsupportedFeatureException(
+      if (dataChange && ChangeDataFeed.isEnabled(cur.configuration))
+        lines ++= a.changeFiles(spark, changeData.getOrElse(throw DeltaUnsupportedFeatureException(
           "changeDataFeed",
-          s"$operation on ${snap.tablePath}: CDF table, but the rewrite derived no change rows"))
-        val (cdcLines, cdcDir) = ChangeDataFeed.writeChangeFiles(spark, cur, version, changes)
-        lastCdcDir = Some(cdcDir)
-        lines ++= cdcLines
-      }
+          s"$operation on ${snap.tablePath}: CDF table, but the rewrite derived no change rows")))
       val now = System.currentTimeMillis()
-      removed.foreach { f =>
-        lines += s"""{"remove":{"path":${q(f.path)},"deletionTimestamp":$now,"dataChange":$dc${removeExt(cur, f)}}}"""
-      }
-      dvReAdds.foreach(f => lines += addLine(
-        f.copy(partitionValues = physPartitionValues(snap, f.partitionValues)), dataChange))
+      removed.foreach(f => lines += removeLine(physical(cur, f), now, dataChange))
+      dvReAdds.foreach(f => lines += addLine(physical(snap, f), dataChange))
       // id-preserving rewrites (materialized columns in extraDataCols) still
       // stamp fresh default ranges on the new adds and advance the mark
       val outAdds =
         if (adds.isEmpty || !preservesRowIds || !RowTracking.isEnabled(cur.configuration)) adds
         else {
           val (assigned, hwm) =
-            RowTracking.assign(adds, RowTracking.highWaterMark(cur), version)
-          lines += s"""{"domainMetadata":{"domain":${q(RowTracking.Domain)},"configuration":${q(RowTracking.hwmConfigJson(hwm))},"removed":false}}"""
+            RowTracking.assign(adds, RowTracking.highWaterMark(cur), a.version)
+          lines += domainLine(RowTracking.Domain, RowTracking.hwmConfigJson(hwm))
           assigned
         }
       outAdds.foreach(f => lines += addLine(f, dataChange))
       lines.result()
     }
-    // whole-table rewrites (full ZORDER, BY SOURCE clause MERGE): the
-    // remove set IS the active file set — its lines stream from the
-    // distributed add frame (recomputeStats' commitAtomicStream pattern),
-    // one partition on the driver at a time, never the collected list.
-    // The physical partition-key rename is precomputed driver-side (pure
-    // string work in the closure); `cur` could only change it via a
-    // metadata winner, which the conflict checker aborts on.
-    def removeLinesStream(): Iterator[String] = {
-      val now = System.currentTimeMillis()
-      val physKey: Map[String, String] =
-        snap.partitionColumns.map(c => c -> snap.physicalFieldName(c)).toMap
-      val dcStr = dc
-      snap.fileSet.df.rdd.map(DeltaFileSet.decode).map { f =>
-        val pv = f.partitionValues.map { case (k, v) =>
-          s"${q(physKey.getOrElse(k, k))}:${q(v)}" }.mkString("{", ",", "}")
-        s"""{"remove":{"path":${q(f.path)},"deletionTimestamp":$now,"dataChange":$dcStr,"extendedFileMetadata":true,"partitionValues":$pv,"size":${f.size}}}"""
-      }.toLocalIterator
-    }
-    var cur = snap
-    var attempts = 0
-    while (true) {
-      val version = cur.version + 1
-      try {
-        if (removeAllFromSnap)
-          commitAtomicStream(fs, new Path(table, "_delta_log"), version,
-            buildLines(cur, version).iterator ++ removeLinesStream(),
-            cur.configuration)
-        else
-          commitAtomic(fs, new Path(table, "_delta_log"), version, buildLines(cur, version),
-            cur.configuration)
-        DeltaSnapshotReader.invalidate(snap.tablePath)
-        maybeAutoCheckpoint(spark, snap.tablePath, version, cur.configuration)
-        return version
-      } catch {
-        case e: CommitConflictException =>
-          DeltaSnapshotReader.invalidate(snap.tablePath)
-          // reclaim the lost attempt's unreferenced change files before
-          // any path that exits the loop (typed conflict / no-readSet)
-          lastCdcDir.foreach(d => try fs.delete(d, true) catch { case _: Exception => () })
-          lastCdcDir = None
-          readSet match {
-            case None => throw e // no footprint declared: surface, never blind-retry
-            case Some(rs) =>
-              val fresh = DeltaSnapshotReader.snapshot(spark, snap.tablePath)
-              // throws the TYPED conflict when the winners overlap this
-              // rewrite's read/write footprint; returning means disjoint
-              ConflictChecker.check(spark, cur, fresh, rs)
-              attempts += 1
-              require(attempts < 20,
-                s"giving up after $attempts conflict-checked retries at ${snap.tablePath}")
-              cur = fresh
-          }
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Automatic checkpointing (`delta.checkpointInterval`, default 10 —
@@ -2255,7 +2124,7 @@ object DeltaWriter {
       operation = "REORG", opParams = Map("applyPurge" -> "true"),
       extraDataCols = trackedMatCols(snap).toSeq.flatMap(c => Seq(c._1, c._2)),
       preservesRowIds = trackedMatCols(snap).isDefined,
-      readSet = Some(layoutReadSet(withDv))))
+      readSet = layoutReadSet(withDv)))
   }
 
   /** ALTER TABLE SET/UNSET TBLPROPERTIES: commit a metaData action with
@@ -2296,22 +2165,20 @@ object DeltaWriter {
       if (newConstraints.isEmpty) metadataPlaneReadSet
       else ConflictChecker.TxnReadSet(readsData = true, partitionPredicate = None,
         readFiles = Set.empty, removedPaths = Set.empty, wholeTableFiles = true)
-    commitMetadataPlane(spark, tablePath, snap, rs) { (cur, version) =>
-      // In-commit timestamps: the ENABLING commit itself already carries one
-      // and records the enablement version/timestamp provenance properties
-      // (the spec's rule that lets timestamp travel mix mtimes below the
-      // enablement point with ICTs above it).
-      val ict =
-        if (!ictEnabled(merged)) None
-        else nextIct(spark, cur).orElse(Some(System.currentTimeMillis()))
-      val enablingIct = ictEnabled(merged) && !ictEnabled(snap.configuration)
+    // In-commit timestamps: the ENABLING commit itself already carries one
+    // ([[transact]] stamps it from the merged configuration) and records
+    // the enablement version/timestamp provenance properties (the spec's
+    // rule that lets timestamp travel mix mtimes below the enablement point
+    // with ICTs above it).
+    val enablingIct = ictEnabled(merged) && !ictEnabled(snap.configuration)
+    transact(spark, tablePath, Some(snap), "SET TBLPROPERTIES", Map.empty, Check(rs),
+        config = Some(merged)) { a =>
       val mergedOut =
         if (!enablingIct) merged
         else merged ++ Map(
-          "delta.inCommitTimestampEnablementVersion" -> version.toString,
-          "delta.inCommitTimestampEnablementTimestamp" -> ict.get.toString)
+          "delta.inCommitTimestampEnablementVersion" -> a.version.toString,
+          "delta.inCommitTimestampEnablementTimestamp" -> a.ict.get.toString)
       val lines = Seq.newBuilder[String]
-      lines += commitInfoJson("SET TBLPROPERTIES", ict = ict)
       // CHECK constraints need writer protocol ≥ 3, change data feed ≥ 4,
       // in-commit timestamps the protocol-7 feature — merge with the
       // existing protocol (never downgrade a reader version or drop features)
@@ -2428,20 +2295,13 @@ object DeltaWriter {
       AddFile(encodePath(rel), hivePartitionValues(rel, diskPartitionBy), st.getLen,
         st.getModificationTime, statsByPath.get(st.getPath.toUri.getPath))
     }
-    val lines = Seq.newBuilder[String]
-    lines += commitInfoJson("CREATE TABLE", Map("columnMapping.mode" -> mode))
-    lines += """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
-    lines += metaDataJson(None, mapped.json, partitionBy,
-      Map("delta.columnMapping.mode" -> mode,
-        "delta.columnMapping.maxColumnId" -> maxId.toString))
-    adds.foreach { f =>
-      val pv = f.partitionValues.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
-      val statsPart = f.stats.map(s => s""","stats":${q(s)}""").getOrElse("")
-      lines += s"""{"add":{"path":${q(f.path)},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":true$statsPart}}"""
+    transact(spark, tablePath, None, "CREATE TABLE", Map("columnMapping.mode" -> mode), Surface) { _ =>
+      Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
+        metaDataJson(None, mapped.json, partitionBy,
+          Map("delta.columnMapping.mode" -> mode,
+            "delta.columnMapping.maxColumnId" -> maxId.toString))) ++
+        adds.map(addLine(_, dataChange = true))
     }
-    commitAtomic(fs, logDir, 0L, lines.result())
-    DeltaSnapshotReader.invalidate(tablePath)
-    0L
   }
 
   /** ALTER TABLE … SET ('delta.enableRowTracking' = 'true') — upgrade onto
@@ -2490,37 +2350,21 @@ object DeltaWriter {
       Some((base.writerFeatures.getOrElse(Seq.empty) ++
         legacyWriterFeatures(base.minWriterVersion) ++
         Seq("domainMetadata", "rowTracking")).distinct))
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val lines = Seq.newBuilder[String]
-    lines += commitInfoJson("ALTER TABLE",
-      Map("rowTracking" -> "enabled"), nextIct(spark, snap))
-    lines += protocolJson(bumped)
-    lines += metaDataJson(Some(snap), snap.schema.json,
-      snap.partitionColumns, merged)
     // per-partition id assignment against the prefix offsets; partition
     // values render under their logical names (column mapping is refused
     // above, so logical == physical here)
     val addLines = sortedAdds.mapPartitionsWithIndex { (i, it) =>
-      val (assigned, _) = RowTracking.assign(it.toVector, offsets(i) - 1, version)
-      assigned.iterator.map { f =>
-        val pv = f.partitionValues
-          .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
-        val statsPart = f.stats.map(s => s""","stats":${q(s)}""").getOrElse("")
-        val dvPart = f.deletionVector.map(d =>
-          s""","deletionVector":{"storageType":${q(d.storageType)},"pathOrInlineDv":${q(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}""")
-          .getOrElse("")
-        s"""{"add":{"path":${q(f.path)},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":false$statsPart$dvPart${rowIdPart(f)}}}"""
-      }
+      RowTracking.assign(it.toVector, offsets(i) - 1, version)._1.iterator
+        .map(addLine(_, dataChange = false))
     }
     try
-      commitAtomicStream(fs, new Path(table, "_delta_log"), version,
-        lines.result().iterator ++ addLines.toLocalIterator ++ Iterator.single(
-          s"""{"domainMetadata":{"domain":${q(RowTracking.Domain)},"configuration":${q(RowTracking.hwmConfigJson(hwm))},"removed":false}}"""),
-        snap.configuration)
+      transact(spark, tablePath, Some(snap), "ALTER TABLE", Map("rowTracking" -> "enabled"),
+          Surface, tail = Some(() => addLines.toLocalIterator ++
+            Iterator.single(domainLine(RowTracking.Domain, RowTracking.hwmConfigJson(hwm))))) { _ =>
+        Seq(protocolJson(bumped), metaDataJson(Some(snap), snap.schema.json,
+          snap.partitionColumns, merged))
+      }
     finally sortedAdds.unpersist(blocking = false)
-    DeltaSnapshotReader.invalidate(tablePath)
-    version
   }
 
   /** Recompute per-file footer stats for every active data file and
@@ -2542,9 +2386,6 @@ object DeltaWriter {
   def recomputeStats(spark: SparkSession, tablePath: String): Long = synchronized {
     val snap = DeltaSnapshotReader.snapshot(spark, tablePath)
     assertWritable(snap, "COMPUTE STATISTICS")
-    val version = snap.version + 1
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     val root = snap.qualifiedTableRoot
     import org.apache.spark.sql.types._
     val statCols: Seq[(String, DataType)] =
@@ -2554,29 +2395,17 @@ object DeltaWriter {
             (f.dataType.isInstanceOf[NumericType] &&
               !f.dataType.isInstanceOf[DecimalType]) => f.name -> f.dataType
         }
-    val physKey: Map[String, String] =
-      snap.partitionColumns.map(c => c -> snap.physicalFieldName(c)).toMap
+    val keys = physicalKeys(snap)
     val bcConf = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val addLines = snap.fileSet.df.rdd.map(DeltaFileSet.decode).mapPartitions { it =>
-      it.map { f =>
-        val abs = DeltaActions.normAbsolute(root, f.path)
-        val stats = footerStatsJson(abs, bcConf.value.value, statCols).orElse(f.stats)
-        val pv = f.partitionValues
-          .map { case (k, v) => s"${q(physKey.getOrElse(k, k))}:${q(v)}" }
-          .mkString("{", ",", "}")
-        val statsPart = stats.map(s => s""","stats":${q(s)}""").getOrElse("")
-        val dvPart = f.deletionVector.map(d =>
-          s""","deletionVector":{"storageType":${q(d.storageType)},"pathOrInlineDv":${q(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}""")
-          .getOrElse("")
-        s"""{"add":{"path":${q(f.path)},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":false$statsPart$dvPart${rowIdPart(f)}}}"""
-      }
+    val addLines = snap.fileSet.df.rdd.map(DeltaFileSet.decode).map { f =>
+      val abs = DeltaActions.normAbsolute(root, f.path)
+      addLine(withKeys(f, keys).copy(
+        stats = footerStatsJson(abs, bcConf.value.value, statCols).orElse(f.stats)),
+        dataChange = false)
     }
-    val header = Seq(commitInfoJson("COMPUTE STATS", Map.empty, nextIct(spark, snap)))
-    commitAtomicStream(fs, new Path(table, "_delta_log"), version,
-      header.iterator ++ addLines.toLocalIterator, snap.configuration)
-    DeltaSnapshotReader.invalidate(tablePath)
-    version
+    transact(spark, tablePath, Some(snap), "COMPUTE STATS", Map.empty, Surface,
+      tail = Some(() => addLines.toLocalIterator))(_ => Nil)
   }
 
   /** ALTER TABLE … ALTER COLUMN … SET DEFAULT expr: declare a foldable,
@@ -2841,26 +2670,19 @@ object DeltaWriter {
   }
 
   /** Commit a single domainMetadata declaration (plus optional protocol
-    * upgrade) — the shape CLUSTER BY-style metadata features commit. */
+    * upgrade) — the shape CLUSTER BY-style metadata features commit. It
+    * declares its DOMAIN: a winner that updated the same domain aborts the
+    * retry (re-publishing state derived from the stale snapshot would
+    * silently lose the winner's update — delta-spark's domain rule). */
   private[delta] def commitDomain(spark: SparkSession, snap: DeltaSnapshot,
                                   domain: String, configuration: String,
                                   newProtocol: Option[DeltaProtocol],
                                   operation: String, params: Map[String, String]): Long = {
     assertWritable(snap, operation)
-    // declares its DOMAIN: a winner that updated the same domain aborts
-    // the retry (re-publishing state derived from the stale snapshot would
-    // silently lose the winner's update — delta-spark's domain rule)
-    val version = commitMetadataPlane(spark, snap.tablePath, snap,
-      metadataPlaneReadSet.copy(domains = Set(domain))) {
-      (cur, _) =>
-        val lines = Seq.newBuilder[String]
-        lines += commitInfoJson(operation, params, nextIct(spark, cur))
-        newProtocol.foreach(p => lines += protocolJson(p))
-        lines += s"""{"domainMetadata":{"domain":${q(domain)},"configuration":${q(configuration)},"removed":false}}"""
-        lines.result()
+    transact(spark, snap.tablePath, Some(snap), operation, params,
+        Check(metadataPlaneReadSet.copy(domains = Set(domain)))) { _ =>
+      newProtocol.map(protocolJson).toSeq :+ domainLine(domain, configuration)
     }
-    maybeAutoCheckpoint(spark, snap.tablePath, version, snap.configuration)
-    version
   }
 
   /** Metadata-plane footprint: reads/writes no data files, so data-only
@@ -2869,39 +2691,6 @@ object DeltaWriter {
   private val metadataPlaneReadSet = ConflictChecker.TxnReadSet(
     readsData = false, partitionPredicate = None,
     readFiles = Set.empty, removedPaths = Set.empty)
-
-  /** Optimistic commit loop for metadata-plane commits. `buildLines`
-    * re-renders the actions per attempt against the fresh snapshot and its
-    * successor version (in-commit timestamps and version-stamped provenance
-    * properties depend on both). */
-  private def commitMetadataPlane(spark: SparkSession, tablePath: String,
-                                  start: DeltaSnapshot,
-                                  rs: ConflictChecker.TxnReadSet)
-                                 (buildLines: (DeltaSnapshot, Long) => Seq[String]): Long = {
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    var cur = start
-    var attempts = 0
-    while (true) {
-      val version = cur.version + 1
-      try {
-        commitAtomic(fs, new Path(table, "_delta_log"), version, buildLines(cur, version),
-          cur.configuration)
-        DeltaSnapshotReader.invalidate(tablePath)
-        return version
-      } catch {
-        case _: CommitConflictException =>
-          DeltaSnapshotReader.invalidate(tablePath)
-          val fresh = DeltaSnapshotReader.snapshot(spark, tablePath)
-          ConflictChecker.check(spark, cur, fresh, rs)
-          attempts += 1
-          require(attempts < 20,
-            s"giving up after $attempts conflict-checked retries at $tablePath")
-          cur = fresh
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Commit a metadata-only change (schema / partition names / config),
     * optionally with a protocol upgrade. Conflict-checked retry with the
@@ -2912,19 +2701,12 @@ object DeltaWriter {
                              schema: StructType, partitionColumns: Seq[String],
                              configuration: Map[String, String],
                              newProtocol: Option[DeltaProtocol],
-                             operation: String, params: Map[String, String]): Long = {
-    val version = commitMetadataPlane(spark, snap.tablePath, snap, metadataPlaneReadSet) {
-      (cur, _) =>
-        val lines = Seq.newBuilder[String]
-        lines += commitInfoJson(operation, params, nextIct(spark, cur))
-        newProtocol.foreach(p => lines += protocolJson(p))
-        lines += metaDataJson(Some(cur), schema.json, partitionColumns,
-          configuration)
-        lines.result()
+                             operation: String, params: Map[String, String]): Long =
+    transact(spark, snap.tablePath, Some(snap), operation, params, Check(metadataPlaneReadSet),
+        config = Some(configuration)) { a =>
+      newProtocol.map(protocolJson).toSeq :+
+        metaDataJson(a.cur, schema.json, partitionColumns, configuration)
     }
-    maybeAutoCheckpoint(spark, snap.tablePath, version, configuration)
-    version
-  }
 
   /** RESTORE TABLE TO VERSION AS OF `version`: commit a diff that makes
     * the LATEST state equal the old snapshot — re-adds files the old
@@ -2954,27 +2736,17 @@ object DeltaWriter {
 
     require(!cur.isAppendOnly || removes.isEmpty,
       s"table $tablePath is delta.appendOnly=true: restore would remove data")
-    val newVersion = cur.version + 1
-    val lines = Seq.newBuilder[String]
-    lines += commitInfoJson("RESTORE", Map("version" -> version.toString), nextIct(spark, cur))
-    if (target.schema != cur.schema || target.configuration != cur.configuration)
-      lines += metaDataJson(Some(cur), target.schema.json,
-        target.partitionColumns, target.configuration)
-    removes.foreach { f =>
-      lines += s"""{"remove":{"path":${q(f.path)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${removeExt(cur, f)}}}"""
+    transact(spark, tablePath, Some(cur), "RESTORE", Map("version" -> version.toString), Surface) { _ =>
+      val now = System.currentTimeMillis()
+      (if (target.schema != cur.schema || target.configuration != cur.configuration)
+        Seq(metaDataJson(Some(cur), target.schema.json, target.partitionColumns, target.configuration))
+      else Nil) ++
+        removes.map(f => removeLine(physical(cur, f), now, dataChange = true)) ++
+        // re-added files keep their original row-id range (restore moves the
+        // table back to rows that already had ids; the mark never regresses);
+        // they are re-added without a deletion vector
+        readds.map(f => addLine(physical(target, f).copy(deletionVector = None), dataChange = true))
     }
-    readds.foreach { f =>
-      val pv = physPartitionValues(target, f.partitionValues)
-        .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
-      val statsPart = f.stats.map(s => s""","stats":${q(s)}""").getOrElse("")
-      // re-added files keep their original row-id range (restore moves the
-      // table back to rows that already had ids; the mark never regresses)
-      lines += s"""{"add":{"path":${q(f.path)},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":true$statsPart${rowIdPart(f)}}}"""
-    }
-    commitAtomic(fs, new Path(table, "_delta_log"), newVersion, lines.result(),
-      cur.configuration)
-    DeltaSnapshotReader.invalidate(tablePath)
-    newVersion
   }
 
   /** Delete log entries that predate the newest checkpoint and have aged
@@ -3053,8 +2825,8 @@ object DeltaWriter {
     * removed=true marker must keep shadowing older re-creations). `cdc` actions are not
     * carried: snapshot replay ignores them and CDF readers read the
     * original commits. Runs distributed; the driver streams the result
-    * one partition at a time (commitAtomicStream), never holding the
-    * action list. */
+    * one partition at a time into the file, never holding the action
+    * list. */
   def compactLog(spark: SparkSession, tablePath: String,
                  startVersion: Long, endVersion: Long): String = synchronized {
     require(startVersion >= 0 && endVersion > startVersion,
@@ -3157,9 +2929,8 @@ object DeltaWriter {
     val pvOut =
       if (snap.physicalSchema.isEmpty) col("partitionValues")
       else {
-        val logToPhys = snap.partitionColumns.map(c => c -> snap.physicalFieldName(c)).toMap
         transform_keys(col("partitionValues"),
-          (k, _) => coalesce(element_at(typedLit(logToPhys), k), k))
+          (k, _) => coalesce(element_at(typedLit(physicalKeys(snap)), k), k))
       }
     val addDf = snap.fileSet.df.select(
       struct(col("path"), pvOut.as("partitionValues"), col("size"), col("modificationTime"),
@@ -3228,9 +2999,8 @@ object DeltaWriter {
     val pvOut =
       if (snap.physicalSchema.isEmpty) col("partitionValues")
       else {
-        val logToPhys = snap.partitionColumns.map(c => c -> snap.physicalFieldName(c)).toMap
         transform_keys(col("partitionValues"),
-          (k, _) => coalesce(element_at(typedLit(logToPhys), k), k))
+          (k, _) => coalesce(element_at(typedLit(physicalKeys(snap)), k), k))
       }
     val addDf = snap.fileSet.df.select(
       struct(col("path"), pvOut.as("partitionValues"), col("size"), col("modificationTime"),
@@ -3502,14 +3272,13 @@ object DeltaWriter {
     val created = prior.flatMap(_.metadataCreatedTime)
       .getOrElse(System.currentTimeMillis())
     val pc = partitionBy.map(q).mkString("[", ",", "]")
-    val conf = configuration.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    val conf = jsonMap(configuration.toSeq.sortBy(_._1))
     s"""{"metaData":{"id":${q(id)},"format":{"provider":"parquet","options":{}},"schemaString":${q(schemaJson)},"partitionColumns":$pc,"configuration":$conf,"createdTime":$created}}"""
   }
 
-  /** A foreign writer claimed the target log version first. Appends/
-    * overwrites retry ([[write]]); rewrites (DML/OPTIMIZE) must NOT blind-
-    * retry — their read set may have changed — so they surface this. */
+  /** A foreign writer claimed the target log version first. The
+    * transaction path's conflict rule decides what follows ([[transact]]):
+    * a retry, a typed conflict, or this exception surfacing. */
   final class CommitConflictException(msg: String) extends RuntimeException(msg)
 
   /** A txn-carrying append lost its commit race to a writer that had
@@ -3523,7 +3292,7 @@ object DeltaWriter {
     * protocol — replay ignores it. */
   private def commitInfoJson(operation: String, params: Map[String, String] = Map.empty,
                              ict: Option[Long] = None): String = {
-    val ps = params.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    val ps = jsonMap(params)
     val ictPart = ict.map(t => s""""inCommitTimestamp":$t,""").getOrElse("")
     s"""{"commitInfo":{$ictPart"timestamp":${System.currentTimeMillis()},"operation":${q(operation)},"operationParameters":$ps,"engineInfo":"graft"}}"""
   }
@@ -3658,30 +3427,119 @@ object DeltaWriter {
     try body finally commitOwnerOverride = prev
   }
 
-  /** `config` = the table configuration in force for this commit (the
-    * snapshot being replaced, or the creation config for v0): it carries
-    * the table's declared commit owner. */
-  private def commitAtomic(fs: FileSystem, logDir: Path, version: Long, lines: Seq[String],
-                           config: Map[String, String] = Map.empty): Unit = {
-    ownerFor(config).commit(fs, logDir, version, lines.iterator)
-    Checksum.writeAfterCommit(fs, logDir, version, Some(lines))
-    // UniForm auto-export (VERDICT r15 #3): tables whose configuration
-    // enables Iceberg re-export their metadata on EVERY commit — a
-    // foreign Iceberg reader never sees a stale snapshot. Best-effort,
-    // after the crc (the commit is already durable).
-    IcebergUniform.maybeAutoExport(logDir, config)
+  /** Commit attempts one transaction may make before it gives up. */
+  private val MaxCommitAttempts = 50
+
+  /** What a transaction does when a foreign commit won its version. */
+  private sealed trait OnConflict
+  /** Re-resolve the latest snapshot and render again: `render` re-runs the
+    * op's validations against it ([[write]]). */
+  private case object Rerender extends OnConflict
+  /** Examine the winners against the op's declared read set
+    * ([[ConflictChecker.check]]): the op re-renders on top of disjoint
+    * winners; an overlapping one raises its typed conflict. */
+  private final case class Check(readSet: ConflictChecker.TxnReadSet) extends OnConflict
+  /** Raise the [[CommitConflictException]]: ops that commit once, on the
+    * snapshot they derived their actions from (CREATE, CONVERT and the
+    * clones claim v0; RESTORE, FSCK and the row-id and stats backfills). */
+  private case object Surface extends OnConflict
+
+  /** One attempt of [[transact]]: the snapshot it commits on (None when it
+    * creates the table), the version it claims and its in-commit
+    * timestamp. */
+  private final class Attempt(val cur: Option[DeltaSnapshot], val version: Long,
+                              val ict: Option[Long]) {
+    def snap: DeltaSnapshot = cur.get
+    private[DeltaWriter] var changeDirs = List.empty[Path]
+
+    /** Change-data files of `changes` for this attempt, as `cdc` lines;
+      * [[transact]] deletes them again if the attempt loses. */
+    def changeFiles(spark: SparkSession, changes: DataFrame): Seq[String] = {
+      val (lines, dir) = ChangeDataFeed.writeChangeFiles(spark, snap, version, changes)
+      changeDirs ::= dir
+      lines
+    }
   }
 
-  /** Streaming variant for commits whose action count scales with the
-    * table (row-tracking backfill re-adds every file): lines flow from an
-    * iterator — e.g. `RDD.toLocalIterator`, one partition in memory at a
-    * time — straight into the store's temp file, then one atomic claim. */
-  private def commitAtomicStream(fs: FileSystem, logDir: Path, version: Long,
-                                 lines: Iterator[String],
-                                 config: Map[String, String] = Map.empty): Unit = {
-    ownerFor(config).commit(fs, logDir, version, lines)
-    Checksum.writeAfterCommit(fs, logDir, version)
-    IcebergUniform.maybeAutoExport(logDir, config)
+  /** The table's latest snapshot, or None while its log holds no commit. */
+  private def latestSnapshot(spark: SparkSession, fs: FileSystem,
+                             tablePath: String): Option[DeltaSnapshot] =
+    if (fs.listStatus(new Path(tablePath, "_delta_log")).exists(_.getPath.getName.endsWith(".json")))
+      Some(DeltaSnapshotReader.snapshot(spark, tablePath))
+    else None
+
+  /** The one transaction path: every commit of this writer runs through it.
+    *
+    * Each attempt renders `commitInfo`, then `render`'s actions, then the
+    * streamed `tail` (for commits whose action count scales with the
+    * table, rendered on executors and pulled one partition at a time), and
+    * claims the next version with one call to the table's [[CommitOwner]].
+    *
+    * A won claim runs the post-commit hooks, always in this order: the crc
+    * (incremental from the rendered lines; a commit with a tail takes the
+    * replay fallback), UniForm export, snapshot-cache invalidation,
+    * auto-checkpoint. A lost claim invalidates the cache, deletes the
+    * attempt's change files and applies `onConflict`; at most
+    * [[MaxCommitAttempts]] claims are made.
+    *
+    * `config` is the configuration the commit leaves in force when it sets
+    * one (SET TBLPROPERTIES, ALTER, a clone's v0); by default the one it
+    * commits under. It decides the in-commit timestamp and the
+    * auto-checkpoint. The commit owner and the UniForm export follow the
+    * configuration the commit is made under. */
+  private def transact(spark: SparkSession, tablePath: String, start: Option[DeltaSnapshot],
+                       operation: String, params: Map[String, String], onConflict: OnConflict,
+                       config: Option[Map[String, String]] = None,
+                       tail: Option[() => Iterator[String]] = None)
+                      (render: Attempt => Seq[String]): Long = {
+    val table = new Path(tablePath)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    val logDir = new Path(table, "_delta_log")
+    var cur = start
+    var attempts = 0
+    while (true) {
+      // the configuration the commit leaves in force, and the one it is made under
+      val after = config.orElse(cur.map(_.configuration)).getOrElse(Map.empty)
+      val under = cur.fold(after)(_.configuration)
+      val ict =
+        if (!ictEnabled(after)) None
+        else cur.flatMap(nextIct(spark, _)).orElse(Some(System.currentTimeMillis()))
+      val a = new Attempt(cur, cur.fold(0L)(_.version + 1), ict)
+      val lines = commitInfoJson(operation, params, ict) +: render(a)
+      attempts += 1
+      val won =
+        try {
+          ownerFor(under).commit(fs, logDir, a.version,
+            lines.iterator ++ tail.fold(Iterator.empty[String])(_()))
+          true
+        } catch {
+          case e: CommitConflictException =>
+            DeltaSnapshotReader.invalidate(tablePath)
+            a.changeDirs.foreach(d => try fs.delete(d, true) catch { case _: Exception => () })
+            cur = onConflict match {
+              case Surface => throw e
+              case Rerender => latestSnapshot(spark, fs, tablePath)
+              case Check(rs) =>
+                val fresh = DeltaSnapshotReader.snapshot(spark, tablePath)
+                // throws the typed conflict when a winner overlaps the read set
+                ConflictChecker.check(spark, a.snap, fresh, rs)
+                Some(fresh)
+            }
+            require(attempts < MaxCommitAttempts,
+              s"giving up after $attempts commit conflicts at $tablePath")
+            false
+        }
+      if (won) {
+        Checksum.writeAfterCommit(fs, logDir, a.version, if (tail.isEmpty) Some(lines) else None)
+        // tables whose configuration enables Iceberg re-export their
+        // metadata on every commit; best-effort, the commit is durable
+        IcebergUniform.maybeAutoExport(logDir, under)
+        DeltaSnapshotReader.invalidate(tablePath)
+        maybeAutoCheckpoint(spark, tablePath, a.version, after)
+        return a.version
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** Does the schema contain VARIANT anywhere? (Reader+writer gated: the
@@ -3726,40 +3584,35 @@ object DeltaWriter {
     }
   }
 
+  /** A JSON object of string values, in `kvs`' order. */
+  private[delta] def jsonMap(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+
   /** One add action line. `f.partitionValues` must already carry the
     * physical keys. */
   private def addLine(f: AddFile, dataChange: Boolean): String = {
-    val pv = f.partitionValues.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val statsPart = f.stats.map(s => s""","stats":${q(s)}""").getOrElse("")
     val dvPart = f.deletionVector.map(d =>
       s""","deletionVector":{"storageType":${q(d.storageType)},"pathOrInlineDv":${q(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}""")
       .getOrElse("")
-    s"""{"add":{"path":${q(f.path)},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":$dataChange$statsPart$dvPart${rowIdPart(f)}}}"""
-  }
-
-  /** Row-tracking fields of an add line (empty for untracked adds). */
-  private def rowIdPart(f: AddFile): String =
-    f.baseRowId.map(b =>
+    val rowIdPart = f.baseRowId.map(b =>
       s""","baseRowId":$b,"defaultRowCommitVersion":${f.defaultRowCommitVersion.getOrElse(0L)}""")
       .getOrElse("")
-
-  /** The extended-metadata tail of a remove action: per the protocol,
-    * `size`/`partitionValues` on a remove are meaningful only under
-    * `extendedFileMetadata:true` (delta-spark emits the same triple, and
-    * a spec-conformant log rewriter may drop the fields otherwise); the
-    * size also feeds the incremental crc arithmetic ([[Checksum]]).
-    *
-    * Takes the snapshot because in-memory [[AddFile.partitionValues]] are
-    * LOGICAL names on column-mapped tables while the protocol requires
-    * PHYSICAL keys on anything written back out — the same
-    * [[physPartitionValues]] translation every add-side emitter applies
-    * (ADVICE r13: removes on mapped tables carried logical keys, which a
-    * foreign checkpoint writer consuming extendedFileMetadata mis-keys). */
-  private def removeExt(snap: DeltaSnapshot, f: AddFile): String = {
-    val pv = physPartitionValues(snap, f.partitionValues)
-      .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
-    s""","extendedFileMetadata":true,"partitionValues":$pv,"size":${f.size}"""
+    s"""{"add":{"path":${q(f.path)},"partitionValues":${jsonMap(f.partitionValues)},"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":$dataChange$statsPart$dvPart$rowIdPart}}"""
   }
+
+  /** One remove action line. `f.partitionValues` must already carry the
+    * physical keys. Per the protocol, `size`/`partitionValues` on a remove
+    * are meaningful only under `extendedFileMetadata:true` (delta-spark
+    * emits the same triple, and a spec-conformant log rewriter may drop the
+    * fields otherwise); the size also feeds the incremental crc arithmetic
+    * ([[Checksum]]). */
+  private def removeLine(f: AddFile, deletionTimestamp: Long, dataChange: Boolean): String =
+    s"""{"remove":{"path":${q(f.path)},"deletionTimestamp":$deletionTimestamp,"dataChange":$dataChange,"extendedFileMetadata":true,"partitionValues":${jsonMap(f.partitionValues)},"size":${f.size}}}"""
+
+  /** One live `domainMetadata` action line. */
+  private[delta] def domainLine(domain: String, configuration: String): String =
+    s"""{"domainMetadata":{"domain":${q(domain)},"configuration":${q(configuration)},"removed":false}}"""
 
   /** JSON string escape. */
   private[delta] def q(s: String): String =

@@ -122,8 +122,8 @@ object HadoopRenameLogStore extends LogStore {
   * on the sandbox filesystems:
   *
   *  - the commit body is assembled IN FULL and INVISIBLY first (a
-  *    dot-file readers ignore, streamed so commitAtomicStream's
-  *    bounded-memory discipline holds for table-sized commits) — an
+  *    dot-file readers ignore, streamed so a commit's streamed tail
+  *    keeps its bounded-memory discipline for table-sized commits) — an
   *    object PUT ships complete bytes, so at no point may a concurrent
   *    log replay observe an empty or truncated commit;
   *  - ONE atomic claim-and-publish decides the winner: `link(2)` fails

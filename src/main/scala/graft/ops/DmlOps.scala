@@ -733,7 +733,8 @@ object DmlOps {
     * (a second DV delete) to prove independence, and read back; the
     * oracle restates rename + BOTH masks over the source parquet. Scale:
     * the clone's file copies and add lines run executor-side
-    * (deepClone's commitAtomicStream path — no driver file list). */
+    * (deepClone streams its add lines into the commit; the file list is
+    * never collected). */
   def deltaDeepClone(s: SparkSession, dir: String): DataFrame = {
     val src = sqlDvTemplate(s, dir)
     val dst = new File(

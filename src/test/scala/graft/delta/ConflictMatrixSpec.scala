@@ -2,6 +2,8 @@ package graft.delta
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -59,24 +61,46 @@ class ConflictMatrixSpec extends SparkSpec {
       s"""{"add":{"path":"$rel","partitionValues":$pvJson,"size":${dst.length()},"modificationTime":${dst.lastModified()},"dataChange":$dataChange}}""")
   }
 
-  /** Injects `lines` as the winning commit at `version`, once, immediately
-    * before the loser's claim — then delegates to the real store. */
-  private final class InjectingStore(version: Long, lines: Seq[String]) extends LogStore {
+  /** Injects `winners` as the winning commits at `version`, `version + 1`,
+    * …, once, immediately before the loser's claim — then delegates to the
+    * real store. */
+  private final class InjectingStore(version: Long, winners: Seq[String]*) extends LogStore {
     val conflicts = new AtomicInteger(0)
     private val done = new AtomicInteger(0)
     override def putIfAbsent(fs: FileSystem, target: Path,
                              it: Iterator[String]): Unit = {
-      if (target.getName == f"$version%020d.json" && done.compareAndSet(0, 1)) {
-        val out = fs.create(target, false)
-        lines.foreach(l => out.write((l + "\n").getBytes(StandardCharsets.UTF_8)))
-        out.close()
-      }
+      if (target.getName == f"$version%020d.json" && done.compareAndSet(0, 1))
+        winners.zipWithIndex.foreach { case (lines, i) =>
+          writeCommit(fs, new Path(target.getParent, f"${version + i}%020d.json"), lines)
+        }
       try HadoopRenameLogStore.putIfAbsent(fs, target, it)
       catch {
         case e: DeltaWriter.CommitConflictException =>
           conflicts.incrementAndGet(); throw e
       }
     }
+  }
+
+  private def writeCommit(fs: FileSystem, file: Path, lines: Seq[String]): Unit = {
+    val out = fs.create(file, false)
+    lines.foreach(l => out.write((l + "\n").getBytes(StandardCharsets.UTF_8)))
+    out.close()
+  }
+
+  /** Jobs launched by `body`, counted by a listener over a drained bus. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    BusDrain.drain(sc)
+    val jobs = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      BusDrain.drain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
   }
 
   test("DELETE on partition 0 retries through a concurrent append to partition 1") {
@@ -186,6 +210,44 @@ class ConflictMatrixSpec extends SparkSpec {
     intercept[ConcurrentAppendException] {
       DeltaWriter.withLogStore(store)(DeltaWriter.delete(spark, t, col("id") < 4L))
     }
+  }
+
+  test("a winner's add whose dataChange is not a boolean counts as a data change") {
+    val t = mkPartitioned()
+    val lines = foreignAppend(t, Seq((100L, "f")).toDF("id", "s"), Map("p" -> "1"))
+      .map(_.replace("\"dataChange\":true", "\"dataChange\":\"true\""))
+    assert(lines.exists(_.contains("\"dataChange\":\"true\"")))
+    intercept[ConcurrentAppendException] {
+      DeltaWriter.withLogStore(new InjectingStore(1L, lines)) {
+        DeltaWriter.delete(spark, t, col("id") < 4L)
+      }
+    }
+  }
+
+  test("a partition-scoped DELETE retrying through 3 disjoint appends checks them without a Spark job") {
+    def appends(t: String): Seq[Seq[String]] = (1 to 3).map(i =>
+      foreignAppend(t, Seq((100L + i, "f")).toDF("id", "s"), Map("p" -> "1")))
+    // control: the same three appends are already in the log when the
+    // DELETE starts, so it commits v4 at its first claim
+    val control = mkPartitioned()
+    val fs = new Path(control).getFileSystem(spark.sessionState.newHadoopConf())
+    appends(control).zipWithIndex.foreach { case (lines, i) =>
+      writeCommit(fs, new Path(control, f"_delta_log/${i + 1L}%020d.json"), lines)
+    }
+    DeltaSnapshotReader.invalidate(control)
+    val (vc, controlJobs) = jobsOf(DeltaWriter.delete(spark, control, col("p") === 0L))
+    // the DELETE resolves v0 and loses its claim of v1 to the three appends
+    val t = mkPartitioned()
+    val store = new InjectingStore(1L, appends(t): _*)
+    val (v, jobs) = jobsOf(DeltaWriter.withLogStore(store) {
+      DeltaWriter.delete(spark, t, col("p") === 0L)
+    })
+    assert(store.conflicts.get() == 1 && v == 4L && vc == 4L, s"v=$v control=$vc")
+    assert(jobs == controlJobs,
+      s"the retry launched $jobs jobs against $controlJobs without one: checking the winners ran jobs")
+    DeltaSnapshotReader.invalidate(t)
+    assert(DeltaSnapshotReader.load(spark, t).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 3L, 5L, 7L, 9L, 101L, 102L, 103L))
   }
 
   test("MERGE aborts on any concurrent dataChange append") {

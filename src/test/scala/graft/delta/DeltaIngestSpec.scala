@@ -4,6 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 /** Streaming-ingest side of the Delta layer: txn-based exactly-once writes,
   * additive schema evolution, and the incremental change feed. */
@@ -152,9 +154,17 @@ class DeltaIngestSpec extends SparkSpec {
       .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
 
     // concurrent same-JVM appends (the synchronized path) all land
-    val vs = (3 to 5).map(i => DeltaWriter.write(Seq((i.toLong, "x")).toDF("id", "v"), t, Nil))
-    assert(vs.toSet.size == 3)
-    assert(DeltaSnapshotReader.load(spark, t).count() == 5L)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    val vs = try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val appends = (3 to 5).map(i =>
+        Future(DeltaWriter.write(Seq((i.toLong, "x")).toDF("id", "v"), t, Nil)))
+      Await.result(Future.sequence(appends), 120.seconds)
+    } finally pool.shutdownNow()
+    assert(vs.toSet == Set(3L, 4L, 5L), s"versions $vs")
+    DeltaSnapshotReader.invalidate(t)
+    assert(DeltaSnapshotReader.load(spark, t).select("id").as[Long].collect().sorted.toSeq ==
+      (1L to 5L))
   }
 
   test("streaming source: initial snapshot, then tail of new commits") {
