@@ -237,7 +237,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val deltaDir = new Path(s"$root/${ident.name()}")
     val parquetFile = new Path(s"$root/${ident.name()}.parquet")
     if (fs.exists(new Path(deltaDir, "_delta_log"))) {
-      DeltaSnapshotReader.invalidate(deltaDir.toString)
       fs.delete(deltaDir, true)
     } else if (fs.exists(parquetFile)) {
       fs.delete(parquetFile, true)

@@ -162,7 +162,6 @@ object DedupOps {
     val marker = new java.io.File(idx, "_READY")
     val srcSig = graft.StageMarker.sig(new java.io.File(s"$dir/documents.parquet"))
     if (!graft.StageMarker.fresh(marker, srcSig)) {
-      graft.delta.DeltaSnapshotReader.invalidate(idx.toString)
       graft.delta.DeltaWriter.write(
         bandedSigs(minhashSignatures(s, dir).filter(!isBatch)),
         idx.toString, Nil, "overwrite")

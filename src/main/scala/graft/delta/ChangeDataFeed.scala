@@ -110,8 +110,6 @@ object ChangeDataFeed {
       StructField("timestamp", LongType),
       StructField("inCommitTimestamp", LongType))))))
 
-  private val commitRe = """(\d{20})\.json""".r
-
   /** The change feed of `[fromVersion, toVersion]` (inclusive, latest when
     * None — delta-spark's `table_changes` bounds): table columns +
     * `_change_type`, `_commit_version`, `_commit_timestamp`. Commits with
@@ -121,24 +119,14 @@ object ChangeDataFeed {
     * reclaimed fails, as it must). */
   def read(spark: SparkSession, tablePath: String, fromVersion: Long,
            toVersion: Option[Long] = None): DataFrame = {
-    val endSnap = DeltaSnapshotReader.snapshotAt(spark, tablePath, toVersion)
+    val log = LogListing.ofTable(spark, tablePath)
+    val endSnap = DeltaSnapshotReader.snapshotAt(spark, log, toVersion)
     val end = endSnap.version
     require(isEnabled(endSnap.configuration),
       s"change data feed is not enabled on $tablePath (delta.enableChangeDataFeed)")
     require(fromVersion >= 0 && fromVersion <= end,
       s"version range [$fromVersion, $end] invalid for $tablePath")
-
-    val logPath = new Path(tablePath, "_delta_log")
-    val fs = logPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val commitFiles = fs.listStatus(logPath).flatMap { st =>
-      st.getPath.getName match {
-        case commitRe(v) if v.toLong >= fromVersion && v.toLong <= end =>
-          Some((v.toLong, st.getModificationTime, st.getPath.toString, st.getLen))
-        case _ => None
-      }
-    }.sortBy(_._1)
-    require(commitFiles.length == (end - fromVersion + 1),
-      s"missing commit JSONs in [$fromVersion, $end] — log truncated by checkpoint cleanup?")
+    val commitFiles = log.commitsIn(fromVersion - 1, end)
 
     // The range's action rows. Under the replay byte gate they are decoded
     // on the driver ([[LogReplay.decodeRows]]) and the summary and the
@@ -150,8 +138,8 @@ object ChangeDataFeed {
     // lock the snapshot read path holds, DeltaScaleSpec), and each
     // per-version set reads its OWN commit JSON at execution, so a part
     // never re-scans the range.
-    val sources = commitFiles.map(c => c._1 -> new Path(c._3)).toSeq
-    val onDriver = commitFiles.map(_._4).sum <= LogReplay.localMaxBytes(spark)
+    val sources = commitFiles.map { case (v, st) => v -> st.getPath }
+    val onDriver = commitFiles.map(_._2.getLen).sum <= LogReplay.localMaxBytes(spark)
     val isCdc = col("cdc").isNotNull
     val isAdd = col("add.dataChange") <=> true
     val removedPath = when(col("remove.dataChange"), col("remove.path"))
@@ -235,7 +223,7 @@ object ChangeDataFeed {
     }
 
     // in-commit timestamp (authoritative when present) else file mtime
-    val mtimes = commitFiles.map(c => c._1 -> c._2).toMap
+    val commitAt = commitFiles.toMap
     val icts: Map[Long, Long] =
       summary.collect { case (v, _, _, _, _, Some(ict)) => v -> ict }.toMap
 
@@ -248,7 +236,7 @@ object ChangeDataFeed {
     val outCols = endSnap.schema.map(f => col(f.name)) :+ col(ChangeTypeCol)
     def stamp(df: DataFrame, v: Long): DataFrame = df
       .withColumn(VersionCol, lit(v))
-      .withColumn(TimestampCol, timestamp_millis(lit(icts.getOrElse(v, mtimes(v)))))
+      .withColumn(TimestampCol, timestamp_millis(lit(icts.getOrElse(v, commitAt(v).getModificationTime))))
 
     // per-part file sets in [[DeltaFileSet.schema]] shape, derived from the
     // actions of THAT version's single commit JSON — file-level pruning, so
@@ -257,9 +245,8 @@ object ChangeDataFeed {
     // planning and keeps large ones distributed (driverFileListThreshold,
     // `listMax`), so the feed's scale ceiling equals the scan path's.
     val listMax = DeltaFileSet.driverListThreshold(spark)
-    val commitPath: Map[Long, String] = commitFiles.map(c => c._1 -> c._3).toMap
     def verActs(v: Long): DataFrame =
-      spark.read.schema(cdfActionSchema).json(commitPath(v))
+      spark.read.schema(cdfActionSchema).json(commitAt(v).getPath.toString)
     def fileSet(v: Long, rowPred: Row => Boolean, rowFile: Row => AddFile,
                 pred: Column, file: Seq[Column]): DeltaFileSet =
       if (onDriver) DeltaFileSet.of(localRows(v).filter(rowPred).map(rowFile))
@@ -290,7 +277,7 @@ object ChangeDataFeed {
         // driver-side map probe instead — for a consistent log only: a
         // remove of a file not active at v-1 takes the join, so both
         // placements fail the same way (raise_error, at execution).
-        val prior = DeltaSnapshotReader.snapshotAt(spark, tablePath, Some(v - 1))
+        val prior = DeltaSnapshotReader.snapshotAt(spark, log, Some(v - 1))
         lazy val byPath = prior.files.map(f => f.path -> f).toMap
         lazy val removedPaths = localRows(v).flatMap(rowRemovedPath).distinct.sorted
         val removedSet: DeltaFileSet =

@@ -79,7 +79,7 @@ object Checksum {
     0L +: (10 to 38).map(1L << _).toArray
 
   def crcPath(logDir: Path, version: Long): Path =
-    new Path(logDir, f"$version%020d.crc")
+    new Path(logDir, LogListing.crcName(version))
 
   private def esc(s: String): String =
     "\"" + s.flatMap {
@@ -278,8 +278,8 @@ object Checksum {
     n
   }
 
-  /** Emit the crc for freshly-committed `version`. Called from the single
-    * commit funnel ([[DeltaWriter]] commitAtomic), AFTER the commit is
+  /** Emit the crc for freshly-committed `version`. Called from the one
+    * transaction path ([[DeltaWriter]] `transact`), AFTER the commit is
     * durable. Never throws.
     *
     * The computation is INCREMENTAL whenever possible — exactly
@@ -289,15 +289,14 @@ object Checksum {
     * arithmetic is sound because every remove line this writer emits
     * carries the removed file's `size`, removes only ever name ACTIVE
     * files, and adds only ever name fresh paths or paths removed in the
-    * same commit (the DV re-add pairing) — the one op that re-adds live
-    * paths without removes (row-tracking backfill) commits through the
-    * STREAM funnel, which always takes the replay fallback.
-    * metaData/protocol actions update the crc's echo from the committed
-    * line itself. Everything else (missing/torn previous crc, removes
-    * without sizes — e.g. RESTORE's distributed remove builder — stream
-    * commits whose one-pass iterator is already consumed, any negative
-    * intermediate) falls back to a full log replay + the distributed
-    * file-set aggregate. */
+    * same commit (the DV re-add pairing, which RESTORE also uses for a
+    * file whose deletion vector it changes) — the one op that re-adds
+    * live paths without removes (row-tracking backfill) commits with a
+    * streamed tail, and every commit with a tail takes the replay
+    * fallback. metaData/protocol actions update the crc's echo from the
+    * committed line itself. Everything else (a missing or torn previous
+    * crc, a foreign remove without a size, any negative intermediate)
+    * falls back to a log replay + the file set's state summary. */
   def writeAfterCommit(fs: FileSystem, logDir: Path, version: Long,
                        lines: Option[Seq[String]] = None): Unit =
     try {
@@ -313,16 +312,14 @@ object Checksum {
           s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
 
-  /** Fallback: resolve the post-commit snapshot (full replay, cached for
-    * the post-commit reader) and render from the distributed aggregate.
+  /** Fallback: resolve the post-commit snapshot (a replay, cached for the
+    * post-commit reader) and render from its file set's state summary.
     * Returns null when no SparkSession is active (bare-JVM callers). */
   private def renderByReplay(fs: FileSystem, logDir: Path, version: Long): String = {
     val spark = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).orNull
     if (spark == null) return null
-    val table = logDir.getParent.toString
-    DeltaSnapshotReader.invalidate(table)
-    render(DeltaSnapshotReader.snapshotAt(spark, table, Some(version)))
+    render(DeltaSnapshotReader.snapshotAt(spark, logDir.getParent.toString, Some(version)))
   }
 
   /** Shared mapper: ObjectMapper is thread-safe for read/write and its
@@ -525,14 +522,10 @@ object Checksum {
   /** The crc text of `version`; None when it is absent or unreadable
     * (a crc is advisory: its absence never blocks a read). */
   def read(fs: FileSystem, logDir: Path, version: Long): Option[String] = {
-    val p = crcPath(logDir, version)
     try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      }
+      val in = fs.open(crcPath(logDir, version))
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
     } catch { case _: Exception => None }
   }
 

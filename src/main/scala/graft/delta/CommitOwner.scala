@@ -46,7 +46,7 @@ object LogStoreOwner extends CommitOwner {
   override def commit(fs: FileSystem, logDir: Path, version: Long,
                       lines: Iterator[String]): Unit =
     DeltaWriter.logStore.putIfAbsent(
-      fs, new Path(logDir, f"$version%020d.json"), lines)
+      fs, new Path(logDir, LogListing.commitName(version)), lines)
 }
 
 /** Catalog-owned commits — the coordinated-commits protocol shape, scoped
@@ -142,7 +142,7 @@ object CatalogCommitOwner extends CommitOwner {
   }
 
   private def backfill(log: java.nio.file.Path, version: Long, uuid: String): Unit = {
-    val target = log.resolve(f"$version%020d.json")
+    val target = log.resolve(LogListing.commitName(version))
     val staged = log.resolve(CommitsDirName).resolve(f"$version%020d.$uuid.json")
     if (!Files.exists(target)) {
       try Files.createLink(target, staged)
@@ -202,10 +202,7 @@ object CatalogCommitOwner extends CommitOwner {
       } finally ds.close()
     }
     val names = list(commits)
-    val publishedRe = """(\d{20})\.json""".r
-    val maxPublished = list(log).collect {
-      case publishedRe(v) => v.toLong
-    }.foldLeft(-1L)(math.max)
+    val maxPublished = list(log).flatMap(LogListing.commitVersionOf).foldLeft(-1L)(math.max)
     names.foreach {
       case claimRe(v) =>
         try {

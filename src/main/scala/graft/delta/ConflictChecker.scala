@@ -1,6 +1,5 @@
 package graft.delta
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -157,7 +156,7 @@ object ConflictChecker {
     * with no Spark job. */
   private def summarize(spark: SparkSession, tablePath: String,
                         version: Long): WinnerSummary = {
-    val file = new Path(new Path(tablePath, "_delta_log"), f"$version%020d.json")
+    val file = LogListing.commitFile(tablePath, version)
     val rows = LogReplay.decodeRows(spark, DeltaActions.actionSchema, Seq(version -> file))
     def actions(name: String): Seq[Row] = rows.flatMap(r => Option(r.getAs[Row](name)))
     def names(name: String, field: String): Set[String] =

@@ -189,10 +189,7 @@ final class DeltaFileIndex(
       }.toArray
     }
 
-  override def refresh(): Unit = {
-    DeltaSnapshotReader.invalidate(snap.tablePath)
-    snap = DeltaSnapshotReader.snapshot(spark, snap.tablePath)
-  }
+  override def refresh(): Unit = snap = DeltaSnapshotReader.snapshot(spark, snap.tablePath)
 
   override def sizeInBytes: Long = snap.fileSet.totalBytes
 }

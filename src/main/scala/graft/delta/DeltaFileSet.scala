@@ -46,6 +46,8 @@ final class DeltaFileSet private (
 
   @volatile private var materialized: Option[Seq[AddFile]] = preset
   @volatile private var persisted: Option[DataFrame] = None
+  /** Released ([[unpersist]]): a set built after that is not persisted. */
+  @volatile private var released = false
   /** The last state summary computed, with the bucket bounds it used. */
   @volatile private var summaryMemo: Option[(Seq[Long], DeltaFileSet.Summary)] = None
   @volatile private var validator: Option[() => Unit] = None
@@ -88,7 +90,9 @@ final class DeltaFileSet private (
             .limit(math.min(collectMax, Int.MaxValue - 1L).toInt + 1).collect())
         rows.filter(_.length <= collectMax) match {
           case Some(rs) => materialized = Some(rs.map(DeltaFileSet.decode).toSeq.sortBy(_.path))
-          case None => persisted = Some(build().persist(StorageLevel.MEMORY_AND_DISK))
+          case None =>
+            val built = build()
+            persisted = Some(if (released) built else built.persist(StorageLevel.MEMORY_AND_DISK))
         }
       }
     }
@@ -325,9 +329,12 @@ final class DeltaFileSet private (
     }
   }
 
+  /** Release the persisted rows. A query planned over the set still
+    * reads it: the set is built again at its next touch, unpersisted. */
   def unpersist(): Unit = synchronized {
     persisted.filter(_ => preset.isEmpty).foreach(_.unpersist(blocking = false))
     persisted = None
+    released = true
   }
 }
 

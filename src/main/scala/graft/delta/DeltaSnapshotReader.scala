@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 /** From-scratch Delta transaction-log snapshot reader (SURVEY.md §7 Step 1).
   *
@@ -23,10 +23,16 @@ import scala.collection.concurrent.TrieMap
   * segment — every table with a checkpoint, and a multi-million-action log
   * — is read with `spark.read` and reduced per key group on executors.
   * The placement decides where rows are decoded and reduced, never what
-  * they mean. Snapshots are cached per (table, version) per session — the
-  * reference re-reads the log three times per query
-  * (DeltaMetadataHandler.scala:99,117,150), which SURVEY.md §3.2 flags as
-  * a design flaw to avoid.
+  * they mean.
+  *
+  * Every read lists `_delta_log` once ([[LogListing]]). Snapshots are
+  * cached per (table, version) — the reference re-reads the log three
+  * times per query (DeltaMetadataHandler.scala:99,117,150), which
+  * SURVEY.md §3.2 flags as a design flaw to avoid — and the cache decides
+  * their freshness itself: an entry is served only while that listing
+  * shows the file it was built from ([[snapshotAt]]). It holds at most
+  * [[CacheCapacity]] snapshots, least recently used out first. No writer
+  * has to tell it that a table changed.
   *
   * Job budget of a cold snapshot. On the driver placement: zero jobs, and
   * the file set is born collected, so its files, validation and listing
@@ -48,155 +54,163 @@ import scala.collection.concurrent.TrieMap
 object DeltaSnapshotReader {
   import DeltaActions._
 
-  private val cache = TrieMap.empty[(String, Long), DeltaSnapshot]
+  /** The most snapshots the cache holds. Eviction, least recently used
+    * first, releases the evicted file set ([[DeltaFileSet.unpersist]]); a
+    * query planned over it still reads, building the set again. 64 is well
+    * above the snapshots one operation resolves and then reuses (a
+    * writer's start and retry snapshots, a change feed's prior snapshot
+    * per removing version, read back when the feed runs), so those reuses
+    * stay hits and no job count the budget specs lock moves; and a session
+    * pins at most 64 file sets instead of one per (table, version) it ever
+    * read. */
+  private[delta] val CacheCapacity = 64
 
-  private val commitRe = """(\d{20})\.json""".r
-  private val checkpointRe = """(\d{20})\.checkpoint(?:\.\d{10}\.\d{10})?\.parquet""".r
-  /** V2 (UUID-named) checkpoint: `<v>.checkpoint.<uuid>.{json|parquet}`.
-    * Unlike classic multi-part files, EACH uuid-named file is a complete
-    * checkpoint on its own (its file actions may live in sidecars). The
-    * classic pattern is tried first, so the two never overlap. */
-  private val v2CheckpointRe = """(\d{20})\.checkpoint\.([^.]+)\.(json|parquet)""".r
-  /** Minor log compaction: `<start>.<end>.compacted.json` carries the
-    * reconciled actions of commit range [start, end]
-    * (DeltaWriter.compactLog). */
-  private val compactedRe = """(\d{20})\.(\d{20})\.compacted\.json""".r
+  /** A cached snapshot and the file it was built from: its name, length
+    * and modification time ([[LogListing.fileAt]]). */
+  private final case class Cached(stamp: Option[(String, Long, Long)], snap: DeltaSnapshot)
+  /** Per (table, version), in access order; guarded by itself, and never
+    * held during a replay. */
+  private val cache = new java.util.LinkedHashMap[(String, Long), Cached](16, 0.75f, true)
 
   /** Latest snapshot of the table at `tablePath`. */
   def snapshot(spark: SparkSession, tablePath: String): DeltaSnapshot =
     snapshotAt(spark, tablePath, None)
 
   /** Snapshot at a specific version (time travel), or latest when None. */
-  def snapshotAt(spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): DeltaSnapshot = {
-    val logPath = new Path(tablePath, "_delta_log")
-    val fs = logPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(logPath))
-      throw new IllegalArgumentException(s"not a Delta table (no _delta_log): $tablePath")
-    // Catalog-owned tables (ADVICE r13: ownership is table state, and
-    // readers must route too): complete any claimed-but-unbackfilled
-    // commit BEFORE listing, so an owned commit inside another writer's
-    // claim-then-die window is visible to every reader, not only catalog
-    // API callers. No-ops in one directory probe when the table has no
-    // `_commits` registry (the overwhelmingly common case).
-    CatalogCommitOwner.recoverTable(tablePath)
-    val entries: Array[FileStatus] = fs.listStatus(logPath)
+  def snapshotAt(spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): DeltaSnapshot =
+    snapshotAt(spark, LogListing.ofTable(spark, tablePath), versionAsOf)
 
-    val commits = entries.flatMap { st =>
-      st.getPath.getName match {
-        case commitRe(v) => Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1)
-    // (version, path, isV2): classic multi-part checkpoints share a version
-    // and are read TOGETHER; v2 uuid-named files are each self-contained
-    val checkpoints = entries.flatMap { st =>
-      st.getPath.getName match {
-        case checkpointRe(v) => Some((v.toLong, st.getPath, false))
-        case v2CheckpointRe(v, _, _) => Some((v.toLong, st.getPath, true))
-        case _ => None
-      }
-    }.groupBy(_._1)
-
-    if (commits.isEmpty && checkpoints.isEmpty)
-      throw new IllegalArgumentException(s"empty _delta_log at $tablePath")
-
-    val latest = (commits.map(_._1) ++ checkpoints.keys).max
+  /** Snapshot of `log`'s table at `versionAsOf`, latest when None.
+    *
+    * Freshness is decided here, from the listing the caller already made:
+    * a cached snapshot of (table, v) is served only while the listing
+    * shows the same file it was built from (delta-spark reuses a snapshot
+    * while its log segment's file statuses are unchanged). A table deleted
+    * and recreated at its path, or a log cleaned up past v, shows another
+    * file or none, and the snapshot is replayed again and replaces the
+    * entry. A checkpoint or compaction written later leaves `v.json` as it
+    * was, so the entry still serves. The check costs no file-system call. */
+  private[delta] def snapshotAt(spark: SparkSession, log: LogListing, versionAsOf: Option[Long]): DeltaSnapshot = {
+    val latest = log.latest
     val target = versionAsOf.getOrElse(latest)
-    require(target <= latest, s"version $target > latest $latest for $tablePath")
-
-    cache.getOrElseUpdate((tablePath, target), {
-      // newest checkpoint at or below the target version, if any
-      val cpVersion = checkpoints.keys.filter(_ <= target) match {
-        case ks if ks.isEmpty => None
-        case ks => Some(ks.max)
-      }
-      // Optimized log replay: substitute compacted range files for the
-      // individual commit JSONs they cover. Greedy left-to-right chaining —
-      // at each uncovered version take the longest compacted range starting
-      // exactly there (ranges never overlap or gap by construction of the
-      // walk), fall back to the plain commit otherwise. All actions of a
-      // compacted file replay at its END version: the file is already
-      // reconciled per path, so later commits still win per-path ties.
-      val lo = cpVersion.getOrElse(-1L) + 1
-      val compactedByStart = entries.flatMap { st =>
-        st.getPath.getName match {
-          case compactedRe(a, b) if a.toLong >= lo && b.toLong <= target =>
-            Some((a.toLong, b.toLong, st.getPath))
-          case _ => None
-        }
-      }.groupBy(_._1)
-      val chosenCompactions = Seq.newBuilder[(Long, Long, Path)]
-      var covered = Set.empty[Long]
-      var walk = lo
-      while (walk <= target) {
-        compactedByStart.get(walk).map(_.maxBy(_._2)) match {
-          case Some(c @ (s0, e0, _)) =>
-            chosenCompactions += c; covered ++= (s0 to e0); walk = e0 + 1
-          case None => walk += 1
-        }
-      }
-      val tailCommitPairs = commits
-        .filter { case (v, _) => v >= lo && v <= target && !covered(v) }
-      val chosenC = chosenCompactions.result()
-
-      // The byte gate (`spark.graft.delta.localReplayMaxBytes`) is the one
-      // fork of the replay ([[LogReplay]]): a checkpoint-less segment of at
-      // most that many bytes is decoded and reduced on the driver — zero
-      // Spark jobs, and a born-collected file set, so listing, validation
-      // and pruning stay on the driver too. Any other segment (every table
-      // with a checkpoint; DeltaScaleSpec's 50k-file logs) replays
-      // distributed. A source missing from the listing disqualifies the
-      // driver placement (no sentinel length whose sum could overflow).
-      val statusByPath: Map[Path, FileStatus] = entries.map(st => st.getPath -> st).toMap
-      val sources: Seq[(Long, Path)] =
-        (chosenC.map { case (_, end, p) => (end, p) } ++ tailCommitPairs).sortBy(_._1)
-      val lens = sources.map { case (_, p) => statusByPath.get(p).map(_.getLen) }
-      // the target's crc, read once at the file set's first touch: its
-      // numFiles places the set (DeltaFileSet), then validation checks it
-      lazy val crc = Checksum.read(fs, logPath, target)
-      val snap =
-        if (cpVersion.isEmpty && sources.nonEmpty && lens.forall(_.isDefined) &&
-            lens.flatten.sum <= LogReplay.localMaxBytes(spark))
-          LogReplay.replayOnDriver(tablePath, target, LogReplay.decode(spark, actionSchema, sources))
-        else {
-          val cpDf = cpVersion.map { v =>
-            val (v2Files, classicFiles) = checkpoints(v).partition(_._3)
-            val actions =
-              if (classicFiles.nonEmpty) {
-                val parts = classicFiles.map(_._2).toSeq.sortBy(_.getName)
-                normalizeActions(readCheckpointParquet(spark, parts, statusByPath(parts.head)))
-              } else
-                // several writers may leave several uuid checkpoints for the
-                // same version; each is complete — pick one deterministically
-                readV2Checkpoint(spark, logPath, statusByPath(v2Files.map(_._2).maxBy(_.toString)))
-            actions.withColumn("version", lit(v))
-          }
-          val tail = if (sources.isEmpty) None
-            else Some(LogReplay.actions(spark, actionSchema, sources))
-          LogReplay.replayDistributed(spark, tablePath, target, (cpDf.toSeq ++ tail).reduce(_ unionByName _),
-            DeltaFileSet.driverListThreshold(spark), () => crc.flatMap(Checksum.recordedNumFiles))
-        }
-      // Per-version state-checksum validation ([[Checksum]]): armed LAZY —
-      // it runs at the first access to the file set's distributed rows
-      // (ADVICE r13: eager validation inside the cache fill charged one
-      // distributed aggregate per cold load to metadata-plane callers that
-      // never touch the file set). Data is still never served unvalidated:
-      // every data-plane path goes through fileSet.df, and a mismatch
-      // POISONS the set — the refusal rethrows on every later access
-      // instead of being cached away. (On a collected file set — every
-      // locally-replayed one, and every replayed one at or under
-      // driverFileListThreshold from its first touch — the validation
-      // aggregates are driver-local folds: same contract, zero jobs.)
-      snap.fileSet.armValidator(() => Checksum.validate(logPath, snap, crc))
+    require(target <= latest, s"version $target > latest $latest for ${log.tablePath}")
+    val key = (log.tablePath, target)
+    val stamp = log.fileAt(target).map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+    cache.synchronized(Option(cache.get(key)).filter(_.stamp == stamp)).map(_.snap).getOrElse {
+      val snap = replay(spark, log, target)
+      release(cache.synchronized {
+        val replaced = Option(cache.put(key, Cached(stamp, snap)))
+        val lru = cache.values.iterator
+        replaced ++ Seq.fill(cache.size - CacheCapacity max 0) { val c = lru.next(); lru.remove(); c }
+      })
       snap
-    })
+    }
   }
 
-  /** Evict cached snapshots of a table (e.g. after a write), releasing
-    * their persisted file-set DataFrames. */
-  def invalidate(tablePath: String): Unit =
-    cache.keys.filter(_._1 == tablePath)
-      .foreach(k => cache.remove(k).foreach(_.fileSet.unpersist()))
+  /** Release the file sets of entries taken out of the cache, outside its
+    * lock (a file set's lock may be held by a thread building it). */
+  private def release(gone: Iterable[Cached]): Unit = gone.foreach(_.snap.fileSet.unpersist())
+
+  /** Replay `log`'s table at version `target`. */
+  private def replay(spark: SparkSession, log: LogListing, target: Long): DeltaSnapshot = {
+    // newest checkpoint at or below the target version, if any
+    val cpVersion = log.checkpoints.keys.filter(_ <= target).maxOption
+    // Optimized log replay: substitute compacted range files for the
+    // individual commit JSONs they cover. Greedy left-to-right chaining —
+    // at each uncovered version take the longest compacted range starting
+    // exactly there (ranges never overlap or gap by construction of the
+    // walk), fall back to the plain commit otherwise. All actions of a
+    // compacted file replay at its END version: the file is already
+    // reconciled per path, so later commits still win per-path ties.
+    val lo = cpVersion.getOrElse(-1L) + 1
+    val compactedByStart = log.compacted
+      .filter { case (a, b, _) => a >= lo && b <= target }.groupBy(_._1)
+    val chosenCompactions = Seq.newBuilder[(Long, FileStatus)]
+    var covered = Set.empty[Long]
+    var walk = lo
+    while (walk <= target) {
+      compactedByStart.get(walk).map(_.maxBy(_._2)) match {
+        case Some((s0, e0, st)) =>
+          chosenCompactions += e0 -> st; covered ++= (s0 to e0); walk = e0 + 1
+        case None => walk += 1
+      }
+    }
+    val tail = log.commits.range(lo, target + 1).filter { case (v, _) => !covered(v) }
+
+    // The byte gate (`spark.graft.delta.localReplayMaxBytes`) is the one
+    // fork of the replay ([[LogReplay]]): a checkpoint-less segment of at
+    // most that many bytes is decoded and reduced on the driver — zero
+    // Spark jobs, and a born-collected file set, so listing, validation
+    // and pruning stay on the driver too. Any other segment (every table
+    // with a checkpoint; DeltaScaleSpec's 50k-file logs) replays
+    // distributed.
+    val segment: Seq[(Long, FileStatus)] = (chosenCompactions.result() ++ tail).sortBy(_._1)
+    val sources = segment.map { case (v, st) => v -> st.getPath }
+    val (tablePath, logPath, fs) = (log.tablePath, log.logPath, log.fs)
+    // the target's crc, read once at the file set's first touch: its
+    // numFiles places the set (DeltaFileSet), then validation checks it
+    lazy val crc = Checksum.read(fs, logPath, target)
+    val snap =
+      if (cpVersion.isEmpty && sources.nonEmpty && segment.map(_._2.getLen).sum <= LogReplay.localMaxBytes(spark))
+        LogReplay.replayOnDriver(tablePath, target, LogReplay.decode(spark, actionSchema, sources))
+      else {
+        val cpDf = cpVersion.map { v =>
+          val (v2Files, classicFiles) = log.checkpoints(v).partition(_._2)
+          val actions =
+            if (classicFiles.nonEmpty) {
+              val parts = classicFiles.map(_._1).sortBy(_.getPath.getName)
+              normalizeActions(readCheckpointParquet(spark, parts.map(_.getPath), parts.head))
+            } else
+              // several writers may leave several uuid checkpoints for the
+              // same version; each is complete — pick one deterministically
+              readV2Checkpoint(spark, logPath, v2Files.map(_._1).maxBy(_.getPath.toString))
+          actions.withColumn("version", lit(v))
+        }
+        val tailDf = if (sources.isEmpty) None
+          else Some(LogReplay.actions(spark, actionSchema, sources))
+        LogReplay.replayDistributed(spark, tablePath, target, (cpDf.toSeq ++ tailDf).reduce(_ unionByName _),
+          DeltaFileSet.driverListThreshold(spark), () => crc.flatMap(Checksum.recordedNumFiles))
+      }
+    // Per-version state-checksum validation ([[Checksum]]): armed LAZY —
+    // it runs at the first access to the file set's distributed rows
+    // (ADVICE r13: eager validation inside the cache fill charged one
+    // distributed aggregate per cold load to metadata-plane callers that
+    // never touch the file set). Data is still never served unvalidated:
+    // every data-plane path goes through fileSet.df, and a mismatch
+    // POISONS the set — the refusal rethrows on every later access
+    // instead of being cached away. (On a collected file set — every
+    // locally-replayed one, and every replayed one at or under
+    // driverFileListThreshold from its first touch — the validation
+    // aggregates are driver-local folds: same contract, zero jobs.)
+    snap.fileSet.armValidator(() => Checksum.validate(logPath, snap, crc))
+    snap
+  }
+
+  /** Evict cached snapshots of a table, releasing their file sets: the
+    * next read replays the log cold. Freshness needs no call to this
+    * ([[snapshotAt]] checks each entry against the listing). */
+  def invalidate(tablePath: String): Unit = release(cache.synchronized {
+    val gone = cache.asScala.filter(_._1._1 == tablePath).toSeq
+    gone.foreach(e => cache.remove(e._1))
+    gone.map(_._2)
+  })
+
+  /** `commitInfo.inCommitTimestamp` of a commit line. */
+  private val ictSchema = StructType(Seq(StructField("commitInfo",
+    StructType(Seq(StructField("inCommitTimestamp", LongType))))))
+
+  /** The in-commit timestamps recorded in `commits`, by version: decoded
+    * on the driver ([[LogReplay.decodeRows]]) when the commits total at
+    * most `spark.graft.delta.localReplayMaxBytes`, else read on executors
+    * (one row per commit reaches the driver). */
+  private def inCommitTimestamps(spark: SparkSession, commits: Seq[(Long, FileStatus)]): Map[Long, Long] = {
+    val sources = commits.map { case (v, st) => v -> st.getPath }
+    val stamped =
+      if (commits.map(_._2.getLen).sum <= LogReplay.localMaxBytes(spark)) LogReplay.decodeRows(spark, ictSchema, sources)
+      else LogReplay.actions(spark, ictSchema, sources).where(col("commitInfo.inCommitTimestamp").isNotNull).collect().toSeq
+    stamped.filter(r => !r.isNullAt(0) && !r.getStruct(0).isNullAt(0))
+      .groupMapReduce(_.getLong(1))(_.getStruct(0).getLong(0))(math.max)
+  }
 
   /** Time travel by TIMESTAMP (Delta's second time-travel axis): the
     * latest version whose commit file's modification time is ≤ `tsMillis`
@@ -204,39 +218,19 @@ object DeltaSnapshotReader {
     * same version for the same timestamp. Errors if the timestamp predates
     * the table's first commit. */
   def versionAtTimestamp(spark: SparkSession, tablePath: String, tsMillis: Long): Long = {
-    val logPath = new Path(tablePath, "_delta_log")
-    val fs = logPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(logPath))
-      throw new IllegalArgumentException(s"not a Delta table (no _delta_log): $tablePath")
-    val listed = fs.listStatus(logPath).flatMap { st =>
-      st.getPath.getName match {
-        case commitRe(v) => Some((v.toLong, st.getModificationTime, st.getPath.toString))
-        case _ => None
-      }
-    }.sortBy(_._1)
+    val log = LogListing.ofTable(spark, tablePath)
+    val listed = log.commits.toSeq
     require(listed.nonEmpty, s"no commit JSONs in $tablePath (log truncated?)")
     // In-commit timestamps (delta.enableInCommitTimestamps): the
     // authoritative commit time is commitInfo.inCommitTimestamp — monotone
     // and clock-skew-safe, unlike file mtimes, which a log copy rewrites.
     // Commits that predate enablement keep their mtime (the spec's rule).
     val ictEnabled =
-      try snapshot(spark, tablePath).configuration
+      try snapshotAt(spark, log, None).configuration
         .get("delta.enableInCommitTimestamps").exists(_.equalsIgnoreCase("true"))
       catch { case _: Exception => false }
-    val commits: Seq[(Long, Long)] =
-      if (!ictEnabled) listed.map(c => (c._1, c._2)).toSeq
-      else {
-        val ictSchema = StructType(Seq(StructField("commitInfo",
-          StructType(Seq(StructField("inCommitTimestamp", LongType))))))
-        val icts: Map[Long, Long] =
-          spark.read.schema(ictSchema).json(listed.map(_._3).toSeq: _*)
-            .withColumn("version", LogReplay.commitVersion)
-            .where(col("commitInfo.inCommitTimestamp").isNotNull)
-            .groupBy(col("version"))
-            .agg(max(col("commitInfo.inCommitTimestamp")).as("ict"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        listed.map(c => (c._1, icts.getOrElse(c._1, c._2))).toSeq
-      }
+    val icts = if (ictEnabled) inCommitTimestamps(spark, listed) else Map.empty[Long, Long]
+    val commits = listed.map { case (v, st) => (v, icts.getOrElse(v, st.getModificationTime)) }
     val eligible = commits.filter(_._2 <= tsMillis)
     require(eligible.nonEmpty,
       s"timestamp $tsMillis predates the first commit of $tablePath " +
@@ -244,21 +238,34 @@ object DeltaSnapshotReader {
     eligible.map(_._1).max
   }
 
+  /** [[versionAtTimestamp]] of a timestamp string in the session time
+    * zone (`what` names the argument in a parse error); with
+    * `firstAtOrAfter`, the first version committed at or after it instead
+    * — version 0 when it predates the whole log, where a change feed
+    * starting there starts. */
+  def versionAtTimestamp(spark: SparkSession, tablePath: String, ts: String, what: String,
+                         firstAtOrAfter: Boolean): Long = {
+    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    val millis = org.apache.spark.sql.catalyst.util.DateTimeUtils
+      .stringToTimestamp(org.apache.spark.unsafe.types.UTF8String.fromString(ts), zone)
+      .getOrElse(throw new IllegalArgumentException(s"$what: cannot parse timestamp '$ts'")) / 1000L
+    if (!firstAtOrAfter) versionAtTimestamp(spark, tablePath, millis)
+    // the last version at or before (ts - 1 ms), plus one
+    else try versionAtTimestamp(spark, tablePath, millis - 1L) + 1L
+    catch { case _: IllegalArgumentException => 0L }
+  }
+
   /** Commit time of one version (millis): the in-commit timestamp when the
     * writer recorded one, else the commit file's mtime — the same
-    * resolution rule history/time-travel use. */
+    * resolution rule history/time-travel use. A commit within the replay
+    * byte gate is decoded on the driver, with no Spark job. */
   def commitTimestamp(spark: SparkSession, tablePath: String, version: Long): Long = {
-    val logPath = new Path(tablePath, "_delta_log")
-    val fs = logPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val f = new Path(logPath, f"$version%020d.json")
-    require(fs.exists(f), s"no commit JSON for version $version of $tablePath")
-    val ictSchema = StructType(Seq(StructField("commitInfo",
-      StructType(Seq(StructField("inCommitTimestamp", LongType))))))
-    spark.read.schema(ictSchema).json(f.toString)
-      .where(col("commitInfo.inCommitTimestamp").isNotNull)
-      .select(max(col("commitInfo.inCommitTimestamp")))
-      .collect().headOption.filterNot(_.isNullAt(0)).map(_.getLong(0))
-      .getOrElse(fs.getFileStatus(f).getModificationTime)
+    val f = LogListing.commitFile(tablePath, version)
+    val st = try f.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(f) catch {
+      case _: java.io.FileNotFoundException =>
+        throw new IllegalArgumentException(s"no commit JSON for version $version of $tablePath")
+    }
+    inCommitTimestamps(spark, Seq(version -> st)).getOrElse(version, st.getModificationTime)
   }
 
   /** Snapshot as of a wall-clock timestamp (millis since epoch). */
@@ -274,16 +281,7 @@ object DeltaSnapshotReader {
     * action (nulls for writers that record none). Distributed read of the
     * commit JSONs; newest first, Delta's own display order. */
   def history(spark: SparkSession, tablePath: String): DataFrame = {
-    val logPath = new Path(tablePath, "_delta_log")
-    val fs = logPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(logPath))
-      throw new IllegalArgumentException(s"not a Delta table (no _delta_log): $tablePath")
-    val commitFiles = fs.listStatus(logPath).flatMap { st =>
-      st.getPath.getName match {
-        case commitRe(_) => Some(st.getPath.toString)
-        case _ => None
-      }
-    }.toSeq
+    val commitFiles = LogListing.ofTable(spark, tablePath).commits.values.map(_.getPath.toString).toSeq
     require(commitFiles.nonEmpty, s"no commit JSONs in $tablePath (log truncated?)")
     val ciSchema = StructType(Seq(StructField("commitInfo", StructType(Seq(
       StructField("timestamp", LongType),
@@ -308,22 +306,8 @@ object DeltaSnapshotReader {
 
   /** Latest log version — one directory listing, no replay (the streaming
     * source polls this per micro-batch). */
-  def latestVersion(spark: SparkSession, tablePath: String): Long = {
-    val logPath = new Path(tablePath, "_delta_log")
-    val fs = logPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(logPath))
-      throw new IllegalArgumentException(s"not a Delta table (no _delta_log): $tablePath")
-    val versions = fs.listStatus(logPath).flatMap { st =>
-      st.getPath.getName match {
-        case commitRe(v) => Some(v.toLong)
-        case checkpointRe(v) => Some(v.toLong)
-        case v2CheckpointRe(v, _, _) => Some(v.toLong)
-        case _ => None
-      }
-    }
-    require(versions.nonEmpty, s"empty _delta_log at $tablePath")
-    versions.max
-  }
+  def latestVersion(spark: SparkSession, tablePath: String): Long =
+    LogListing.ofTable(spark, tablePath).latest
 
   /** Read one V2 checkpoint main file (json or parquet) and expand its
     * sidecars: the main file holds the non-file actions (protocol,
@@ -440,22 +424,11 @@ object DeltaSnapshotReader {
   def changes(spark: SparkSession, tablePath: String, fromVersion: Long,
               toVersion: Option[Long] = None,
               nonAppendMode: String = "fail"): DataFrame = {
-    val logPath = new Path(tablePath, "_delta_log")
-    val fs = logPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val endSnap = snapshotAt(spark, tablePath, toVersion)
+    val log = LogListing.ofTable(spark, tablePath)
+    val endSnap = snapshotAt(spark, log, toVersion)
     val end = endSnap.version
     require(fromVersion <= end, s"fromVersion $fromVersion > end version $end")
-    val commits = fs.listStatus(logPath).flatMap { st =>
-      st.getPath.getName match {
-        case commitRe(v) if v.toLong > fromVersion && v.toLong <= end => Some(v.toLong -> st)
-        case _ => None
-      }
-    }.sortBy(_._1)
-    require(commits.length == (end - fromVersion),
-      s"missing commit JSONs in ($fromVersion, $end] — log truncated by checkpoint cleanup?")
-    if (commits.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], endSnap.schema)
+    val commits = log.commitsIn(fromVersion, end)
     // append-only guard (same default as Delta's streaming source): a
     // dataChange remove in the range means rows were deleted/rewritten and
     // "rows added" would double-count — by default the consumer must

@@ -1,6 +1,5 @@
 package graft.delta
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
@@ -114,7 +113,7 @@ final class DeltaStreamSource(sqlContext: SQLContext, tablePath: String,
   private val addCounts = scala.collection.concurrent.TrieMap.empty[Long, Long]
 
   private def addCountOf(v: Long): Long = addCounts.getOrElseUpdate(v, {
-    val p = new Path(tablePath, f"_delta_log/$v%020d.json")
+    val p = LogListing.commitFile(tablePath, v)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()

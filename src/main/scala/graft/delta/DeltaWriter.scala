@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -26,9 +26,9 @@ import java.util.UUID
   * OPTIMIZE and the other rewrites, metadata and domain commits), or
   * surface the conflict (single-shot ops, v0 creation among them). A won
   * claim runs the post-commit hooks in one order: crc, UniForm export,
-  * snapshot-cache invalidation, auto-checkpoint. Atomicity of the claim
-  * relies on the store's no-overwrite rename or conditional put
-  * ([[LogStore]]), exactly as Delta itself requires.
+  * auto-checkpoint. Atomicity of the claim relies on the store's
+  * no-overwrite rename or conditional put ([[LogStore]]), exactly as
+  * Delta itself requires.
   */
 object DeltaWriter {
 
@@ -819,9 +819,7 @@ object DeltaWriter {
     val fs = table.getFileSystem(hconf)
     // an EMPTY _delta_log (a previously-refused conversion's tmp parent)
     // does not make the directory a Delta table — only log content does
-    val logDir = new Path(table, "_delta_log")
-    require(!fs.exists(logDir) || fs.listStatus(logDir).isEmpty,
-      s"$dir is already a Delta table")
+    require(!LogListing.read(fs, dir).hasVersions, s"$dir is already a Delta table")
     val df = spark.read.parquet(dir)
     partitionColumns.foreach(c => require(df.schema.fieldNames.contains(c),
       s"partition column $c not found (inferred: ${df.schema.simpleString})"))
@@ -2252,9 +2250,7 @@ object DeltaWriter {
     val spark = df.sparkSession
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(table, "_delta_log")
-    require(!fs.exists(logDir) ||
-      !fs.listStatus(logDir).exists(_.getPath.getName.endsWith(".json")),
+    require(!LogListing.read(fs, tablePath).hasCommits,
       s"createColumnMapped: $tablePath already exists (use enableColumnMapping to upgrade)")
     // ids via the shared assigner, then fresh uuid physical names at every
     // (nested) struct level — creation-time mapping is never name-derived
@@ -2722,16 +2718,22 @@ object DeltaWriter {
     val target = DeltaSnapshotReader.snapshotAt(spark, tablePath, Some(version))
     require(target.partitionColumns == cur.partitionColumns,
       s"restore across repartitioning not supported")
-    val curPaths = cur.files.map(_.path).toSet
-    val targetPaths = target.files.map(_.path).toSet
-    val readds = target.files.filterNot(f => curPaths.contains(f.path))
-    val removes = cur.files.filterNot(f => targetPaths.contains(f.path))
+    // a file is its path and its deletion vector: one whose vector differs
+    // (a DV DELETE keeps the path) is removed and re-added with the
+    // target's vector
+    def key(f: AddFile) = (f.path, f.deletionVector)
+    val curKeys = cur.files.map(key).toSet
+    val targetKeys = target.files.map(key).toSet
+    val readds = target.files.filterNot(f => curKeys.contains(key(f)))
+    val removes = cur.files.filterNot(f => targetKeys.contains(key(f)))
 
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     readds.foreach { f =>
       require(fs.exists(new Path(table, decodePath(f.path))),
         s"cannot restore: ${f.path} was vacuumed")
+      f.deletionVector.flatMap(_.filePath(tablePath)).foreach(dv =>
+        require(fs.exists(dv), s"cannot restore: the deletion vector of ${f.path} was vacuumed"))
     }
 
     require(!cur.isAppendOnly || removes.isEmpty,
@@ -2743,9 +2745,9 @@ object DeltaWriter {
       else Nil) ++
         removes.map(f => removeLine(physical(cur, f), now, dataChange = true)) ++
         // re-added files keep their original row-id range (restore moves the
-        // table back to rows that already had ids; the mark never regresses);
-        // they are re-added without a deletion vector
-        readds.map(f => addLine(physical(target, f).copy(deletionVector = None), dataChange = true))
+        // table back to rows that already had ids; the mark never regresses)
+        // and the target's deletion vector
+        readds.map(f => addLine(physical(target, f), dataChange = true))
     }
   }
 
@@ -2758,32 +2760,15 @@ object DeltaWriter {
     * grows one file per commit forever. Returns deleted names (sorted). */
   def cleanupLog(spark: SparkSession, tablePath: String,
                  retainMs: Long = 30L * 24 * 60 * 60 * 1000): Seq[String] = synchronized {
-    val logDir = new Path(tablePath, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val commitRe = """(\d{20})\.json""".r
-    val cpRe = """(\d{20})\.checkpoint(?:\.\d{10}\.\d{10})?\.parquet""".r
-    val v2CpRe = """(\d{20})\.checkpoint\.[^.]+\.(?:json|parquet)""".r
-    val compactedRe = """\d{20}\.(\d{20})\.compacted\.json""".r
-    val crcRe = """(\d{20})\.crc""".r
-    val entries = fs.listStatus(logDir)
-    val cpVersions = entries.flatMap(st => st.getPath.getName match {
-      case cpRe(v) => Some(v.toLong)
-      case v2CpRe(v) => Some(v.toLong)
-      case _ => None
-    })
-    if (cpVersions.isEmpty) return Nil // nothing to bootstrap from — keep all
-    val cp = cpVersions.max
+    val log = LogListing.ofTable(spark, tablePath)
+    val (fs, logDir) = (log.fs, log.logPath)
+    if (log.checkpoints.isEmpty) return Nil // nothing to bootstrap from — keep all
+    val cp = log.checkpoints.keys.max
     val horizon = System.currentTimeMillis() - retainMs
-    val deletable = entries.filter { st =>
-      st.getModificationTime < horizon && (st.getPath.getName match {
-        case commitRe(v) => v.toLong < cp  // replay starts at the checkpoint
-        case cpRe(v) => v.toLong < cp      // superseded checkpoint
-        case v2CpRe(v) => v.toLong < cp    // superseded uuid checkpoint
-        case compactedRe(end) => end.toLong < cp // range fully below bootstrap
-        case crcRe(v) => v.toLong < cp // state checksum of a cleaned commit
-        case _ => false
-      })
-    }
+    // replay starts at the checkpoint: commits, superseded checkpoints,
+    // compacted ranges and crcs that end below it go
+    val deletable = log.entries.filter(st =>
+      st.getModificationTime < horizon && log.versionOf(st).exists(_ < cp))
     deletable.foreach(st => fs.delete(st.getPath, false))
     // the catalog owner's registry ages with the log: claims and staged
     // bodies for versions below the bootstrap floor would otherwise (a)
@@ -2831,15 +2816,9 @@ object DeltaWriter {
                  startVersion: Long, endVersion: Long): String = synchronized {
     require(startVersion >= 0 && endVersion > startVersion,
       s"invalid compaction range [$startVersion, $endVersion]")
-    val logDir = new Path(tablePath, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val commitFiles = (startVersion to endVersion).map { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      if (!fs.exists(p))
-        throw new IllegalArgumentException(
-          s"cannot compact [$startVersion,$endVersion]: missing commit $p")
-      v -> p
-    }
+    val log = LogListing.ofTable(spark, tablePath)
+    val (fs, logDir) = (log.fs, log.logPath)
+    val commitFiles = log.commitsIn(startVersion - 1, endVersion).map { case (v, st) => v -> st.getPath }
     val actions = LogReplay.actions(spark, actionSchema, commitFiles)
     // the replay's own reducer: one surviving action per key (a remove
     // winner is a tombstone line, a removed=true domain stays a marker);
@@ -2848,7 +2827,7 @@ object DeltaWriter {
     val all = LogReplay.winners(spark, actions, Seq(LogReplay.FileKey,
         LogReplay.MetaKey, LogReplay.ProtocolKey, LogReplay.TxnKey, LogReplay.DomainKey))
       .select(to_json(struct(actionSchema.fieldNames.toSeq.map(col): _*)).as("line"))
-    val name = f"$startVersion%020d.$endVersion%020d.compacted.json"
+    val name = LogListing.compactedName(startVersion, endVersion)
     val target = new Path(logDir, name)
     val tmp = new Path(logDir, s".$name.${UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, true)
@@ -2867,6 +2846,77 @@ object DeltaWriter {
     name
   }
 
+  /** The state a checkpoint of `snap` restates, as rows of
+    * [[DeltaActions.actionSchema]]: `heads` holds the protocol, the
+    * metaData, the txn watermarks and the live metadata domains (bounded by
+    * the number of writers and features), `tombstones` the removes inside
+    * the retention window (checkpoints keep them for VACUUM safety of other
+    * readers), and `adds` is a projection of the distributed file set (the
+    * part that scales with the table, never collected). */
+  private final case class CheckpointState(heads: Seq[Row], tombstones: Seq[Row], adds: DataFrame)
+
+  private def checkpointState(snap: DeltaSnapshot): CheckpointState = {
+    def action(name: String, a: Row): Row =
+      Row.fromSeq(actionSchema.fieldNames.toSeq.map(n => if (n == name) a else null))
+    // re-emit the table's protocol verbatim (downgrading would strip
+    // feature gates like deletionVectors); legacy tables default to the
+    // writer level their properties imply (CHECK constraints ⇒ 3)
+    val proto = snap.protocol.getOrElse(DeltaProtocol(1,
+      if (snap.configuration.keys.exists(_.startsWith("delta.constraints."))) 3 else 2))
+    val protocol = action("protocol", Row(proto.minReaderVersion, proto.minWriterVersion,
+      proto.readerFeatures.orNull, proto.writerFeatures.orNull))
+    // a checkpoint restates state: the table keeps its identity
+    val meta = action("metaData", Row(snap.metadataId.getOrElse(UUID.randomUUID().toString), null,
+      Row("parquet"), snap.schema.json, snap.partitionColumns, snap.configuration,
+      snap.metadataCreatedTime.map(Long.box).orNull))
+    val txns = snap.txns.map(t => action("txn", Row(t.appId, t.version, t.lastUpdated.map(Long.box).orNull)))
+    // live metadata domains survive checkpointing (row-tracking high-water
+    // mark, clustering spec, …) — dropping one would reset its feature
+    val domains = snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, cfg) =>
+      action("domainMetadata", Row(d, cfg, false))
+    }
+    val horizon = System.currentTimeMillis() - TOMBSTONE_RETENTION_MS
+    val tombstones = snap.tombstones.filter(_.deletionTimestamp >= horizon).map { t =>
+      action("remove", Row(t.path, t.deletionTimestamp, t.dataChange))
+    }
+    // deletionVector must survive checkpointing — a checkpoint that drops
+    // it silently resurrects the deleted rows. partitionValues go back out
+    // under PHYSICAL keys on column-mapped tables (snapshot build
+    // translated them to logical; the log form is physical per the spec).
+    val pvOut =
+      if (snap.physicalSchema.isEmpty) col("partitionValues")
+      else transform_keys(col("partitionValues"),
+        (k, _) => coalesce(element_at(typedLit(physicalKeys(snap)), k), k))
+    val adds = snap.fileSet.df.select(
+      struct(col("path"), pvOut.as("partitionValues"), col("size"), col("modificationTime"),
+        lit(true).as("dataChange"), col("stats"), col("deletionVector"),
+        col("baseRowId"), col("defaultRowCommitVersion"))
+        .cast(addType).as("add") +:
+        actionSchema.fields.toSeq.tail.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+    CheckpointState(Seq(protocol, meta) ++ txns ++ domains, tombstones, adds)
+  }
+
+  /** Write `df` as parquet into a temporary directory under `logDir`, then
+    * move its part files, in part order, to `target(i, n)` (part i of n)
+    * and drop the directory. `parts`, when given, is the part count the
+    * write must produce. Returns the moved files. */
+  private def writeParts(fs: FileSystem, logDir: Path, df: DataFrame, parts: Option[Int] = None)
+                        (target: (Int, Int) => Path): Seq[Path] = {
+    val tmp = new Path(logDir, s".cp-tmp-${UUID.randomUUID()}")
+    df.write.parquet(tmp.toString)
+    val written = fs.listStatus(tmp).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      .sortBy(_.getName).toSeq
+    parts.foreach(n => require(written.length == n, s"expected $n checkpoint parts, wrote ${written.length}"))
+    val moved = written.zipWithIndex.map { case (p, i) =>
+      val to = target(i, written.length)
+      fs.rename(p, to)
+      to
+    }
+    fs.delete(tmp, true)
+    moved
+  }
+
   /** Write a parquet checkpoint of the current snapshot + `_last_checkpoint`.
     * `parts > 1` writes the spec's multi-part form
     * (`<v>.checkpoint.<i>.<n>.parquet`) — at 100 TB a snapshot can hold
@@ -2875,96 +2925,19 @@ object DeltaWriter {
   def checkpoint(spark: SparkSession, tablePath: String, parts: Int = 1): Unit = synchronized {
     require(parts >= 1, s"parts=$parts")
     val snap = DeltaSnapshotReader.snapshot(spark, tablePath)
-    val conf = spark.sessionState.newHadoopConf()
     val logDir = new Path(tablePath, "_delta_log")
-    val fs = logDir.getFileSystem(conf)
-
+    val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val state = checkpointState(snap)
+    val rows = state.heads ++ state.tombstones
     import scala.jdk.CollectionConverters._
-    // Driver-side head: protocol + metaData + retained tombstones + txn
-    // watermarks (tombstones are bounded by the retention window, txns by
-    // the number of writers). The ADD actions — the part that scales with
-    // the table — are a projection of the distributed file set and are
-    // written without ever touching the driver.
-    val headRows: Seq[org.apache.spark.sql.Row] = {
-      // re-emit the table's protocol verbatim (downgrading would strip
-      // feature gates like deletionVectors); legacy tables default to the
-      // writer level their properties imply (CHECK constraints ⇒ 3)
-      val proto = snap.protocol.getOrElse(DeltaProtocol(1,
-        if (snap.configuration.keys.exists(_.startsWith("delta.constraints."))) 3 else 2))
-      val protocol = org.apache.spark.sql.Row(null, null, null,
-        org.apache.spark.sql.Row(proto.minReaderVersion, proto.minWriterVersion,
-          proto.readerFeatures.orNull, proto.writerFeatures.orNull), null, null)
-      // a checkpoint restates state: the table keeps its identity
-      val meta = org.apache.spark.sql.Row(null, null,
-        org.apache.spark.sql.Row(snap.metadataId.getOrElse(UUID.randomUUID().toString), null,
-          org.apache.spark.sql.Row("parquet"), snap.schema.json,
-          snap.partitionColumns, snap.configuration, snap.metadataCreatedTime.map(Long.box).orNull),
-        null, null, null)
-      // Spec: checkpoints retain remove tombstones until retention expiry
-      // (VACUUM safety for other readers) and all txn watermarks (streaming
-      // writer idempotency).
-      val horizon = System.currentTimeMillis() - TOMBSTONE_RETENTION_MS
-      val removes = snap.tombstones.filter(_.deletionTimestamp >= horizon).map { t =>
-        org.apache.spark.sql.Row(null,
-          org.apache.spark.sql.Row(t.path, t.deletionTimestamp, t.dataChange),
-          null, null, null, null)
-      }
-      val txns = snap.txns.map { t =>
-        org.apache.spark.sql.Row(null, null, null, null,
-          org.apache.spark.sql.Row(t.appId, t.version, t.lastUpdated.map(Long.box).orNull),
-          null)
-      }
-      // live metadata domains survive checkpointing (row-tracking high-water
-      // mark, clustering spec, …) — dropping one would reset its feature
-      val domains = snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, cfg) =>
-        org.apache.spark.sql.Row(null, null, null, null, null,
-          org.apache.spark.sql.Row(d, cfg, false))
-      }
-      (protocol +: meta +: removes) ++ txns ++ domains
-    }
-    // deletionVector must survive checkpointing — a checkpoint that drops
-    // it silently resurrects the deleted rows. partitionValues go back out
-    // under PHYSICAL keys on column-mapped tables (snapshot build
-    // translated them to logical; the log form is physical per the spec).
-    val pvOut =
-      if (snap.physicalSchema.isEmpty) col("partitionValues")
-      else {
-        transform_keys(col("partitionValues"),
-          (k, _) => coalesce(element_at(typedLit(physicalKeys(snap)), k), k))
-      }
-    val addDf = snap.fileSet.df.select(
-      struct(col("path"), pvOut.as("partitionValues"), col("size"), col("modificationTime"),
-        lit(true).as("dataChange"), col("stats"), col("deletionVector"),
-        col("baseRowId"), col("defaultRowCommitVersion"))
-        .cast(addType).as("add"),
-      lit(null).cast(removeType).as("remove"),
-      lit(null).cast(metaDataType).as("metaData"),
-      lit(null).cast(protocolType).as("protocol"),
-      lit(null).cast(txnType).as("txn"),
-      lit(null).cast(domainMetadataType).as("domainMetadata"))
-    val nActions = headRows.size + snap.fileSet.count
-    val unioned = spark.createDataFrame(headRows.asJava, actionSchema).unionByName(addDf)
+    val unioned = spark.createDataFrame(rows.asJava, actionSchema).unionByName(state.adds)
     // one output file per checkpoint part; a single part needs no shuffle
-    val df = if (parts == 1) unioned.coalesce(1) else unioned.repartition(parts)
-    val tmp = new Path(logDir, s".cp-tmp-${UUID.randomUUID()}")
-    df.write.parquet(tmp.toString)
-    val partFiles = fs.listStatus(tmp).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    require(partFiles.length == parts,
-      s"expected $parts checkpoint parts, wrote ${partFiles.length}")
-    if (parts == 1) {
-      fs.rename(partFiles.head, new Path(logDir, f"${snap.version}%020d.checkpoint.parquet"))
-    } else {
-      partFiles.zipWithIndex.foreach { case (p, i) =>
-        fs.rename(p,
-          new Path(logDir, f"${snap.version}%020d.checkpoint.${i + 1}%010d.$parts%010d.parquet"))
-      }
+    writeParts(fs, logDir, if (parts == 1) unioned.coalesce(1) else unioned.repartition(parts), Some(parts)) {
+      (i, n) => new Path(logDir, LogListing.checkpointName(snap.version, i + 1, n))
     }
-    fs.delete(tmp, true)
     val partsField = if (parts == 1) "" else s""","parts":$parts"""
     LogStore.replace(fs, new Path(logDir, "_last_checkpoint"),
-      s"""{"version":${snap.version},"size":$nActions$partsField}""")
+      s"""{"version":${snap.version},"size":${rows.size + snap.fileSet.count}$partsField}""")
   }
 
   /** Write a V2 (uuid-named) checkpoint: the main file carries the
@@ -2990,88 +2963,31 @@ object DeltaWriter {
         Some(bumped), "UPGRADE CHECKPOINT POLICY", Map("policy" -> "v2"))
       snap = DeltaSnapshotReader.snapshot(spark, tablePath)
     }
-    val conf = spark.sessionState.newHadoopConf()
     val logDir = new Path(tablePath, "_delta_log")
-    val fs = logDir.getFileSystem(conf)
+    val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
     val uuid = UUID.randomUUID().toString
-
-    // ---- sidecars: file actions only (adds + retained tombstones) ----
-    val pvOut =
-      if (snap.physicalSchema.isEmpty) col("partitionValues")
-      else {
-        transform_keys(col("partitionValues"),
-          (k, _) => coalesce(element_at(typedLit(physicalKeys(snap)), k), k))
-      }
-    val addDf = snap.fileSet.df.select(
-      struct(col("path"), pvOut.as("partitionValues"), col("size"), col("modificationTime"),
-        lit(true).as("dataChange"), col("stats"), col("deletionVector"),
-        col("baseRowId"), col("defaultRowCommitVersion"))
-        .cast(addType).as("add"),
-      lit(null).cast(removeType).as("remove"),
-      lit(null).cast(metaDataType).as("metaData"),
-      lit(null).cast(protocolType).as("protocol"),
-      lit(null).cast(txnType).as("txn"),
-      lit(null).cast(domainMetadataType).as("domainMetadata"))
+    val state = checkpointState(snap)
     import scala.jdk.CollectionConverters._
-    val horizon = System.currentTimeMillis() - TOMBSTONE_RETENTION_MS
-    val removeRows = snap.tombstones.filter(_.deletionTimestamp >= horizon).map { t =>
-      org.apache.spark.sql.Row(null,
-        org.apache.spark.sql.Row(t.path, t.deletionTimestamp, t.dataChange),
-        null, null, null, null)
-    }
-    val fileActions = spark.createDataFrame(removeRows.asJava, actionSchema)
-      .unionByName(addDf).repartition(sidecarParts)
-    val tmp = new Path(logDir, s".cp2-tmp-$uuid")
-    fileActions.write.parquet(tmp.toString)
+
+    // sidecars: file actions only (adds + retained tombstones)
     val sidecarDir = new Path(logDir, "_sidecars")
     fs.mkdirs(sidecarDir)
-    val parts = fs.listStatus(tmp).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    val sidecarNames = parts.zipWithIndex.map { case (p, i) =>
-      val name = s"$uuid-$i.parquet"
-      fs.rename(p, new Path(sidecarDir, name))
-      name
-    }
-    fs.delete(tmp, true)
+    val sidecars = writeParts(fs, logDir, spark.createDataFrame(state.tombstones.asJava, actionSchema)
+      .unionByName(state.adds).repartition(sidecarParts)) { (i, _) => new Path(sidecarDir, s"$uuid-$i.parquet") }
 
-    // ---- main file: non-file actions + sidecar pointers ----
-    val proto = snap.protocol.get // v2Checkpoint upgrade above guarantees one
-    def mainRow(add: Any, remove: Any, meta: Any, protocol: Any, txn: Any,
-                domain: Any, sidecar: Any, cpMeta: Any) =
-      org.apache.spark.sql.Row(add, remove, meta, protocol, txn, domain, sidecar, cpMeta)
-    val headRows = Seq(
-      mainRow(null, null, null, null, null, null, null,
-        org.apache.spark.sql.Row(snap.version, Map.empty[String, String])),
-      mainRow(null, null, null,
-        org.apache.spark.sql.Row(proto.minReaderVersion, proto.minWriterVersion,
-          proto.readerFeatures.orNull, proto.writerFeatures.orNull), null, null, null, null),
-      // a checkpoint restates state: the table keeps its identity
-      mainRow(null, null,
-        org.apache.spark.sql.Row(snap.metadataId.getOrElse(UUID.randomUUID().toString), null,
-          org.apache.spark.sql.Row("parquet"), snap.schema.json,
-          snap.partitionColumns, snap.configuration, snap.metadataCreatedTime.map(Long.box).orNull),
-        null, null, null, null, null)) ++
-      snap.txns.map(t => mainRow(null, null, null, null,
-        org.apache.spark.sql.Row(t.appId, t.version, t.lastUpdated.map(Long.box).orNull),
-        null, null, null)) ++
-      snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, cfg) =>
-        mainRow(null, null, null, null, null,
-          org.apache.spark.sql.Row(d, cfg, false), null, null)
-      } ++
-      sidecarNames.map { n =>
-        val st = fs.getFileStatus(new Path(sidecarDir, n))
-        mainRow(null, null, null, null, null, null,
-          org.apache.spark.sql.Row(n, st.getLen, st.getModificationTime), null)
-      }
-    val mainTmp = new Path(logDir, s".cp2-main-$uuid")
-    spark.createDataFrame(headRows.asJava, v2CheckpointFileSchema)
-      .coalesce(1).write.parquet(mainTmp.toString)
-    val mainPart = fs.listStatus(mainTmp).map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet")).get
-    fs.rename(mainPart, new Path(logDir, f"${snap.version}%020d.checkpoint.$uuid%s.parquet"))
-    fs.delete(mainTmp, true)
-    val nActions = headRows.size + snap.fileSet.count + removeRows.size
+    // main file: the checkpointMetadata marker, the non-file actions and
+    // the sidecar pointers
+    def v2Row(action: Row, sidecar: Row, cpMeta: Row) = Row.fromSeq(action.toSeq ++ Seq(sidecar, cpMeta))
+    val none = Row.fromSeq(actionSchema.map(_ => null))
+    val mainRows = v2Row(none, null, Row(snap.version, Map.empty[String, String])) +:
+      (state.heads.map(v2Row(_, null, null)) ++ sidecars.map { p =>
+        val st = fs.getFileStatus(p)
+        v2Row(none, Row(p.getName, st.getLen, st.getModificationTime), null)
+      })
+    writeParts(fs, logDir, spark.createDataFrame(mainRows.asJava, v2CheckpointFileSchema).coalesce(1)) {
+      (_, _) => new Path(logDir, LogListing.v2CheckpointName(snap.version, uuid))
+    }
+    val nActions = mainRows.size + snap.fileSet.count + state.tombstones.size
     LogStore.replace(fs, new Path(logDir, "_last_checkpoint"),
       s"""{"version":${snap.version},"size":$nActions,"checkpointSchema":null}""")
   }
@@ -3463,10 +3379,10 @@ object DeltaWriter {
 
   /** The table's latest snapshot, or None while its log holds no commit. */
   private def latestSnapshot(spark: SparkSession, fs: FileSystem,
-                             tablePath: String): Option[DeltaSnapshot] =
-    if (fs.listStatus(new Path(tablePath, "_delta_log")).exists(_.getPath.getName.endsWith(".json")))
-      Some(DeltaSnapshotReader.snapshot(spark, tablePath))
-    else None
+                             tablePath: String): Option[DeltaSnapshot] = {
+    val log = LogListing.read(fs, tablePath)
+    if (log.hasCommits) Some(DeltaSnapshotReader.snapshotAt(spark, log, None)) else None
+  }
 
   /** The one transaction path: every commit of this writer runs through it.
     *
@@ -3477,10 +3393,11 @@ object DeltaWriter {
     *
     * A won claim runs the post-commit hooks, always in this order: the crc
     * (incremental from the rendered lines; a commit with a tail takes the
-    * replay fallback), UniForm export, snapshot-cache invalidation,
-    * auto-checkpoint. A lost claim invalidates the cache, deletes the
-    * attempt's change files and applies `onConflict`; at most
-    * [[MaxCommitAttempts]] claims are made.
+    * replay fallback), UniForm export, auto-checkpoint. A lost claim
+    * deletes the attempt's change files and applies `onConflict`; at most
+    * [[MaxCommitAttempts]] claims are made. Neither touches the snapshot
+    * cache: the next listing shows the new version, and a cached snapshot
+    * of an older one stays correct ([[DeltaSnapshotReader.snapshotAt]]).
     *
     * `config` is the configuration the commit leaves in force when it sets
     * one (SET TBLPROPERTIES, ALTER, a clone's v0); by default the one it
@@ -3514,7 +3431,6 @@ object DeltaWriter {
           true
         } catch {
           case e: CommitConflictException =>
-            DeltaSnapshotReader.invalidate(tablePath)
             a.changeDirs.foreach(d => try fs.delete(d, true) catch { case _: Exception => () })
             cur = onConflict match {
               case Surface => throw e
@@ -3534,7 +3450,6 @@ object DeltaWriter {
         // tables whose configuration enables Iceberg re-export their
         // metadata on every commit; best-effort, the commit is durable
         IcebergUniform.maybeAutoExport(logDir, under)
-        DeltaSnapshotReader.invalidate(tablePath)
         maybeAutoCheckpoint(spark, tablePath, a.version, after)
         return a.version
       }

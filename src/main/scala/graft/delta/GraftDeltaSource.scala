@@ -70,17 +70,8 @@ final class GraftDeltaSource extends RelationProvider with StreamSourceProvider
           "graftdelta streaming: specify startingVersion OR startingTimestamp, not both")
         case (Some(v), None) => Some(v.toLong)
         case (None, Some(ts)) =>
-          val spark = sqlContext.sparkSession
-          val path = pathOf(parameters)
-          val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-          val micros = org.apache.spark.sql.catalyst.util.DateTimeUtils.stringToTimestamp(
-            org.apache.spark.unsafe.types.UTF8String.fromString(ts), zone)
-            .getOrElse(throw new IllegalArgumentException(
-              s"graftdelta: cannot parse startingTimestamp '$ts'"))
-          val millis = micros / 1000L
-          Some(
-            try DeltaSnapshotReader.versionAtTimestamp(spark, path, millis - 1L) + 1L
-            catch { case _: IllegalArgumentException => 0L })
+          Some(DeltaSnapshotReader.versionAtTimestamp(sqlContext.sparkSession, pathOf(parameters), ts,
+            "graftdelta startingTimestamp", firstAtOrAfter = true))
         case (None, None) => None
       },
       maxFilesPerTrigger = parameters.get("maxFilesPerTrigger").map { v =>
@@ -130,12 +121,6 @@ object GraftDeltaSource {
   private[graft] def resolveVersion(spark: org.apache.spark.sql.SparkSession,
                                     path: String, versionAsOf: Option[String],
                                     timestampAsOf: Option[String]): Option[Long] =
-    versionAsOf.map(_.toLong).orElse(timestampAsOf.map { ts =>
-      val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-      val micros = org.apache.spark.sql.catalyst.util.DateTimeUtils.stringToTimestamp(
-        org.apache.spark.unsafe.types.UTF8String.fromString(ts), zone)
-        .getOrElse(throw new IllegalArgumentException(
-          s"graftdelta: cannot parse timestampAsOf '$ts'"))
-      DeltaSnapshotReader.versionAtTimestamp(spark, path, micros / 1000L)
-    })
+    versionAsOf.map(_.toLong).orElse(timestampAsOf.map(ts =>
+      DeltaSnapshotReader.versionAtTimestamp(spark, path, ts, "graftdelta timestampAsOf", firstAtOrAfter = false)))
 }

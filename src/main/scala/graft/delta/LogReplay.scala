@@ -56,9 +56,7 @@ private[delta] object LogReplay {
 
   /** Version of a commit file's rows, from the file's name. */
   def commitVersion: Column =
-    regexp_extract(input_file_name(), """(\d{20})\.json""", 1).cast(LongType)
-
-  private val commitRe = """\d{20}\.json""".r
+    regexp_extract(input_file_name(), LogListing.CommitPattern, 1).cast(LongType)
 
   /** Driver placement of the decoder: the JSON lines of `sources` —
     * (replay version, log file) pairs; a compacted range replays at its
@@ -98,7 +96,7 @@ private[delta] object LogReplay {
     * a DataFrame of `schema` plus a `version` column — one JSON read of
     * the commit files, plus one per compacted file. */
   def actions(spark: SparkSession, schema: StructType, sources: Seq[(Long, Path)]): DataFrame = {
-    val (commits, compacted) = sources.partition(s => commitRe.matches(s._2.getName))
+    val (commits, compacted) = sources.partition(s => LogListing.commitVersionOf(s._2.getName).isDefined)
     val commitDf = if (commits.isEmpty) None else Some(
       spark.read.schema(schema).json(commits.map(_._2.toString): _*)
         .withColumn("version", commitVersion))

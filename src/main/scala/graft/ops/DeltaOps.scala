@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Det, Tables}
-import graft.delta.{DeltaSnapshotReader, DeltaWriter, SplitPlanner}
+import graft.delta.{DeltaSnapshotReader, DeltaWriter, LogListing, SplitPlanner}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,7 +59,6 @@ object DeltaOps {
         }
         rm(dir)
       }
-      graft.delta.DeltaSnapshotReader.invalidate(dir.toString)
       val orders = Tables.orders(spark, sfDir)
         .withColumn("o_year", year(col("o_orderdate")))
       DeltaWriter.write(orders.filter(col("o_year") <= 1997), dir.toString, Seq("o_year"), "overwrite")
@@ -108,7 +107,6 @@ object DeltaOps {
     val marker = new File(t, "_READY")
     val sig = graft.StageMarker.sig(new File(s"$dir/customer.parquet"))
     if (!graft.StageMarker.fresh(marker, sig)) {
-      graft.delta.DeltaSnapshotReader.invalidate(t.toString)
       DeltaWriter.write(
         Tables.customer(s, dir).select(col("c_custkey"),
           expr("collate(CASE WHEN c_custkey % 2 = 0 THEN c_mktsegment " +
@@ -137,7 +135,6 @@ object DeltaOps {
     val marker = new File(t, "_READY")
     val sig = graft.StageMarker.sig(new File(s"$dir/orders.parquet"))
     if (!graft.StageMarker.fresh(marker, sig)) {
-      graft.delta.DeltaSnapshotReader.invalidate(t.toString)
       DeltaWriter.write(
         Tables.orders(s, dir).select(col("o_orderkey"),
           expr("parse_json(to_json(struct(o_orderkey AS k, " +
@@ -266,7 +263,7 @@ object DeltaOps {
     // bounded by the threshold guard (never the crc's own claim).
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     def crcNode(v: Long): Option[com.fasterxml.jackson.databind.JsonNode] = try {
-      val p = new File(t, f"_delta_log/$v%020d.crc")
+      val p = new File(new File(t, "_delta_log"), LogListing.crcName(v))
       if (!p.exists()) None else Option(om.readTree(p))
     } catch { case _: Exception => None }
     (0L to latest).map { v =>
@@ -383,7 +380,6 @@ object DeltaOps {
           }
           rm(dir)
         }
-        graft.delta.DeltaSnapshotReader.invalidate(dir.toString)
         val orders = Tables.orders(s, sfDir)
           .filter(col("o_orderkey") % 4 === 2)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
@@ -440,7 +436,6 @@ object DeltaOps {
           }
           rm(dir)
         }
-        graft.delta.DeltaSnapshotReader.invalidate(dir.toString)
         val li = Tables.lineitem(s, sfDir).filter(col("l_orderkey") % 7 === 0)
         val items = li.groupBy(col("l_orderkey")).agg(
           sort_array(collect_list(struct(
@@ -646,7 +641,6 @@ object DeltaOps {
     // must rebuild this derived table, or its oracle compares stale data
     val sig = graft.StageMarker.sig(new File(s"$sfDir/orders.parquet"))
     if (!graft.StageMarker.fresh(marker, sig)) {
-      graft.delta.DeltaSnapshotReader.invalidate(dir.toString)
       if (dir.exists()) {
         def rm(f: File): Unit = {
           if (f.isDirectory) f.listFiles().foreach(rm)
@@ -723,7 +717,6 @@ object DeltaOps {
     // must rebuild this derived table, or its oracle compares stale data
     val sig = graft.StageMarker.sig(new File(s"$sfDir/orders.parquet"))
     if (!graft.StageMarker.fresh(marker, sig)) {
-      graft.delta.DeltaSnapshotReader.invalidate(dir.toString)
       if (dir.exists()) {
         def rm(f: File): Unit = {
           if (f.isDirectory) f.listFiles().foreach(rm)
@@ -763,7 +756,6 @@ object DeltaOps {
     // must rebuild this derived table, or its oracle compares stale data
     val sig = graft.StageMarker.sig(new File(s"$sfDir/orders.parquet"))
     if (!graft.StageMarker.fresh(marker, sig)) {
-      graft.delta.DeltaSnapshotReader.invalidate(dir.toString)
       if (dir.exists()) {
         def rm(f: File): Unit = {
           if (f.isDirectory) f.listFiles().foreach(rm)
@@ -821,7 +813,6 @@ object DeltaOps {
     // must rebuild this derived table, or its oracle compares stale data
     val sig = graft.StageMarker.sig(new File(s"$sfDir/orders.parquet"))
     if (!graft.StageMarker.fresh(marker, sig)) {
-      graft.delta.DeltaSnapshotReader.invalidate(dir.toString)
       if (dir.exists()) {
         def rm(f: File): Unit = {
           if (f.isDirectory) f.listFiles().foreach(rm)
@@ -872,7 +863,6 @@ object DeltaOps {
     // must rebuild this derived table, or its oracle compares stale data
     val sig = graft.StageMarker.sig(new File(s"$sfDir/orders.parquet"))
     if (!graft.StageMarker.fresh(marker, sig)) {
-      graft.delta.DeltaSnapshotReader.invalidate(dir.toString)
       if (dir.exists()) {
         def rm(f: File): Unit = {
           if (f.isDirectory) f.listFiles().foreach(rm)
@@ -937,7 +927,6 @@ object DeltaOps {
         }
         rmr(dst)
       }
-      DeltaSnapshotReader.invalidate(dst.toString)
       DeltaWriter.shallowClone(s, src, dst.toString)
       graft.StageMarker.write(marker, sig)
     }

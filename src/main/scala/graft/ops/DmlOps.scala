@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Det, Tables}
-import graft.delta.{ChangeDataFeed, DeltaSnapshotReader, DeltaWriter}
+import graft.delta.{ChangeDataFeed, DeltaSnapshotReader, DeltaWriter, LogListing}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,7 +68,6 @@ object DmlOps {
     val sig = graft.StageMarker.sig(new File(s"$sfDir/orders.parquet"))
     if (!graft.StageMarker.fresh(marker, sig)) {
       if (dir.exists()) rm(dir)
-      DeltaSnapshotReader.invalidate(dir.toString)
       val orders = Tables.orders(spark, sfDir)
         .filter(col("o_orderkey") % 4 === 0) // deterministic quarter: the DML
         // semantics are exercised identically, the rebuild costs 4x less
@@ -105,7 +104,6 @@ object DmlOps {
         graft.Tables.all.map(t => new File(s"$dir/$t.parquet")))
       if (!graft.StageMarker.fresh(marker, sig)) {
         if (d.exists()) rm(d)
-        DeltaSnapshotReader.invalidate(d.toString)
         build(d)
         graft.StageMarker.write(marker, sig)
       }
@@ -113,9 +111,10 @@ object DmlOps {
     }
 
   /** Tree-copy a marker-cached template to a fresh destination, skipping
-    * the readiness marker itself. The destination is wiped first; the
-    * snapshot cache for the path is invalidated (the path may carry a
-    * cached snapshot from a previous call's post-mutation state). */
+    * the readiness marker itself. The destination is wiped first. A
+    * snapshot cached for the path from a previous call's post-mutation
+    * state was built from a commit file the copy does not have, so it is
+    * not served again; one built from a linked template commit is. */
   private def copyTemplate(tpl: File, dst: File, marker: String): Unit = {
     if (dst.exists()) rm(dst)
     val src = tpl.toPath
@@ -146,7 +145,6 @@ object DmlOps {
         }
       }
     }
-    DeltaSnapshotReader.invalidate(dst.toString)
   }
 
   private def freshOrdersTable(spark: SparkSession, sfDir: String, tag: String,
@@ -296,9 +294,8 @@ object DmlOps {
     * `0.3.compacted.json` range file, and deletes the four covered commit
     * JSONs — the timed read can only bootstrap through the compacted file,
     * so the key measures exactly the replay path a 1000-commit streaming
-    * table uses between checkpoints. The snapshot cache is invalidated per
-    * call so every rep pays a REAL replay, not a cache hit. Fixture is
-    * immutable (read-only key): consumed in place like the CDF template. */
+    * table uses between checkpoints. Fixture is immutable (read-only
+    * key): consumed in place like the CDF template. */
   def deltaLogCompact(s: SparkSession, dir: String): DataFrame = {
     val tpl = template(dir, "logcompact1") { d =>
       val orders = Tables.orders(s, dir)
@@ -309,9 +306,10 @@ object DmlOps {
       DeltaWriter.delete(s, d.toString, col("o_totalprice") < 50000.0) // v4
       DeltaWriter.compactLog(s, d.toString, 0, 3)
       (0L to 3L).foreach { v =>
-        new File(new File(d, "_delta_log"), f"$v%020d.json").delete()
+        new File(new File(d, "_delta_log"), LogListing.commitName(v)).delete()
       }
     }
+    // a cold replay on every call: the key times the compacted-range replay
     DeltaSnapshotReader.invalidate(tpl.toString)
     DeltaSnapshotReader.load(s, tpl.toString)
       .groupBy(col("o_orderstatus"))
@@ -482,7 +480,6 @@ object DmlOps {
       sys.props("java.io.tmpdir"),
       "graft_delta_dml_ivm_" + dir.replaceAll("[^A-Za-z0-9.]", "_")).toString
     rm(new File(aggPath))
-    DeltaSnapshotReader.invalidate(aggPath)
 
     // bootstrap: aggregate of the pre-mutation snapshot (version 1)
     val v1 = DeltaSnapshotReader.load(s, base, Some(1L))
@@ -716,7 +713,6 @@ object DmlOps {
       val vf = new File(snap.absolutePath(f))
       require(vf.delete(), s"could not delete $vf")
     }
-    DeltaSnapshotReader.invalidate(t)
     val repaired = s.sql(s"FSCK REPAIR TABLE delta.`$t`").count()
     require(repaired > 0, "FSCK found nothing to repair")
     DeltaSnapshotReader.load(s, t)
@@ -741,7 +737,6 @@ object DmlOps {
       sys.props("java.io.tmpdir"),
       "graft_delta_dml_deepcl_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
     rm(dst)
-    DeltaSnapshotReader.invalidate(dst.toString)
     DeltaWriter.deepClone(s, src, dst.toString)
     // clone-side mutation: masks land in the CLONE's bins only
     DeltaWriter.deleteWithDV(s, dst.toString, col("status") === "O")

@@ -497,8 +497,6 @@ object SimOps {
         f.delete()
       }
       if (base.exists()) rm(base)
-      graft.delta.DeltaSnapshotReader.invalidate(s"$base/centroids")
-      graft.delta.DeltaSnapshotReader.invalidate(s"$base/assignments")
       buildAnnIndex(s, dir, base.toString)
       graft.StageMarker.write(marker, sig)
     }

@@ -69,27 +69,10 @@ object TableChanges {
                        isStart: Boolean): Long = v match {
     case i: Int => i.toLong
     case l: Long => l
-    case s: UTF8String => timestampBound(spark, path, s.toString, isStart)
-    case s: String => timestampBound(spark, path, s, isStart)
+    case s: UTF8String => DeltaSnapshotReader.versionAtTimestamp(spark, path, s.toString, "table_changes", isStart)
+    case s: String => DeltaSnapshotReader.versionAtTimestamp(spark, path, s, "table_changes", isStart)
     case other => throw new IllegalArgumentException(
       s"table_changes: version/timestamp argument must be an integer or a " +
         s"timestamp string, got $other")
-  }
-
-  private def timestampBound(spark: SparkSession, path: String, ts: String,
-                             isStart: Boolean): Long = {
-    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-    val micros = org.apache.spark.sql.catalyst.util.DateTimeUtils
-      .stringToTimestamp(UTF8String.fromString(ts), zone)
-      .getOrElse(throw new IllegalArgumentException(
-        s"table_changes: cannot parse timestamp '$ts'"))
-    val millis = micros / 1000L
-    if (!isStart) DeltaSnapshotReader.versionAtTimestamp(spark, path, millis)
-    else {
-      // first commit at-or-after: last at-or-before (ts - 1ms) plus one;
-      // a timestamp predating the whole log starts the feed at version 0
-      try DeltaSnapshotReader.versionAtTimestamp(spark, path, millis - 1L) + 1L
-      catch { case _: IllegalArgumentException => 0L }
-    }
   }
 }

@@ -260,7 +260,6 @@ object EventOps {
           f.delete()
         }
         if (base.exists()) rm(base)
-        graft.delta.DeltaSnapshotReader.invalidate(base.toString)
         val orders = Tables.orders(s, dir)
           .filter(col("o_orderkey") % 4 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -752,7 +751,6 @@ object EventOps {
       "graft_stream_upsert_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
     val all = Tables.events(s, dir).select(col("event_id"), col("ts"), col("user_id"), col("value"))
     val table = new java.io.File(base, "table").toString
-    graft.delta.DeltaSnapshotReader.invalidate(table)
     val stream = s.readStream
       .schema(all.schema)
       .option("maxFilesPerTrigger", "1")
@@ -836,7 +834,6 @@ object EventOps {
     }
     if (work.exists()) rm(work)
     val aggPath = new java.io.File(work, "agg").toString
-    DeltaSnapshotReader.invalidate(aggPath)
     val v1 = DeltaSnapshotReader.load(s, base, Some(1L))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
@@ -864,7 +861,6 @@ object EventOps {
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    DeltaSnapshotReader.invalidate(aggPath)
     DeltaSnapshotReader.load(s, aggPath)
       .select(col("o_orderstatus"), col("n"), dfin(col("sum_price")).as("sum_price"))
       .orderBy(col("o_orderstatus"))

@@ -413,4 +413,23 @@ class DeltaDvWriteSpec extends SparkSpec {
     DeltaSnapshotReader.invalidate(t)
     assert(DeltaSnapshotReader.load(spark, t).count() == 5L)
   }
+
+  test("RESTORE to before a DV DELETE brings the deleted rows back") {
+    val t = newTable()
+    DeltaWriter.write((0L until 10L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), t) // v0
+    DeltaWriter.deleteWithDV(spark, t, col("id") < 3L)                                    // v1
+    assert(DeltaSnapshotReader.load(spark, t).count() == 7L)
+    DeltaWriter.restore(spark, t, 0L)                                                       // v2
+    assert(DeltaSnapshotReader.load(spark, t).select("id").as[Long].collect().sorted.toSeq == (0L until 10L))
+  }
+
+  test("RESTORE re-adds a file with the deletion vector the target version had") {
+    val t = newTable()
+    DeltaWriter.write((0L until 10L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), t) // v0
+    DeltaWriter.deleteWithDV(spark, t, col("id") < 3L)                                    // v1
+    DeltaWriter.delete(spark, t, lit(true))                                                 // v2
+    assert(DeltaSnapshotReader.load(spark, t).count() == 0L)
+    DeltaWriter.restore(spark, t, 1L)                                                       // v3
+    assert(DeltaSnapshotReader.load(spark, t).select("id").as[Long].collect().sorted.toSeq == (3L until 10L))
+  }
 }

@@ -1,6 +1,8 @@
 package graft.delta
 
 import graft.SparkSpec
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -54,5 +56,29 @@ class IctWriteSpec extends SparkSpec {
     assert(DeltaSnapshotReader.versionAtTimestamp(spark, t, ict3 - 1) == 2L)
     assert(DeltaSnapshotReader.versionAtTimestamp(spark, t, ict3) == 3L)
     assert(DeltaSnapshotReader.loadAtTime(spark, t, ict2).count() == 2L)
+  }
+
+  /** Jobs launched by `body`, counted by a listener over a drained bus. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    BusDrain.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try { body; BusDrain.drain(sc); jobs.get } finally sc.removeSparkListener(l)
+  }
+
+  test("an append to an ICT table launches as many jobs as a plain append") {
+    val (plain, ict) = (newTable(), newTable())
+    Seq(plain, ict).foreach(t => DeltaWriter.write(Seq((1L, "a")).toDF("id", "s"), t))
+    DeltaWriter.setProperties(spark, ict, Map("delta.enableInCommitTimestamps" -> "true"))
+    val jobs = Seq(plain, ict).map { t =>
+      DeltaSnapshotReader.snapshot(spark, t).files // the writer's prior snapshot, warm
+      jobsOf(DeltaWriter.write(Seq((2L, "b")).toDF("id", "s"), t))
+    }
+    assert(jobs(1) == jobs(0), s"an ICT append launched ${jobs(1)} jobs, a plain one ${jobs(0)}")
+    assert(DeltaSnapshotReader.commitTimestamp(spark, ict, 2L) > DeltaSnapshotReader.commitTimestamp(spark, ict, 1L))
   }
 }

@@ -1,0 +1,47 @@
+package graft.delta
+
+import graft.SparkSpec
+import org.apache.spark.sql.functions._
+
+import java.nio.file.Files
+
+/** File-system calls on `_delta_log` of the two metadata-plane operations
+  * an ingest table repeats: a plain append on a warm snapshot, and a
+  * fresh snapshot + load of a checkpointed table. Each bound is the count
+  * the engine made before its snapshot cache checked entries against the
+  * listing (append 2 listStatus, 3 exists, 1 open; fresh read 4, 5, 6),
+  * so that check can never add a call. */
+class LogFsCallSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def append(t: String, i: Int): Unit =
+    DeltaWriter.write((0 until 50).map(j => (i * 50L + j, j % 7, i)).toDF("id", "grp", "batch"), t)
+
+  /** 3 appends and a checkpoint at v2, its snapshot warm. */
+  private def checkpointed(): String = {
+    val t = Files.createTempDirectory("graft_fscalls").toString + "/tbl"
+    (0 until 3).foreach(append(t, _))
+    DeltaWriter.checkpoint(spark, t)
+    DeltaSnapshotReader.snapshot(spark, t).files
+    t
+  }
+
+  test("a plain append: listStatus, exists and open calls on _delta_log") {
+    val t = checkpointed()
+    val (_, calls) = CountingFileSystem.count(spark)(append(t, 3))
+    info(s"plain append: $calls")
+    assert(calls.listStatus <= 2 && calls.exists <= 3 && calls.open <= 1, s"a plain append made $calls")
+  }
+
+  test("snapshot + load at its version of a checkpointed table: listStatus, exists and open calls") {
+    val t = checkpointed()
+    append(t, 3) // v3: a version no snapshot has resolved yet
+    val (n, calls) = CountingFileSystem.count(spark) {
+      val snap = DeltaSnapshotReader.snapshot(spark, t)
+      DeltaSnapshotReader.load(spark, t, Some(snap.version)).filter(col("grp") === 3).count()
+    }
+    assert(n == 4 * 7) // grp 3 holds 7 of every 50-row batch's rows
+    info(s"fresh read: $calls")
+    assert(calls.listStatus <= 4 && calls.exists <= 5 && calls.open <= 6, s"a fresh read made $calls")
+  }
+}
