@@ -312,9 +312,11 @@ object Checksum {
           s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
 
-  /** Fallback: resolve the post-commit snapshot (a replay, cached for the
-    * post-commit reader) and render from its file set's state summary.
-    * Returns null when no SparkSession is active (bare-JVM callers). */
+  /** Fallback: resolve the post-commit snapshot (advanced from the
+    * writer's cached one when the driver holds it, else a replay; cached
+    * for the post-commit reader either way) and render from its file
+    * set's state summary. Returns null when no SparkSession is active
+    * (bare-JVM callers). */
   private def renderByReplay(fs: FileSystem, logDir: Path, version: Long): String = {
     val spark = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).orNull

@@ -89,10 +89,14 @@ object Clustering {
     * maintenance cycle and touching just the day's ingest; the already-
     * clustered bulk is never read. Each incremental pass clusters the new
     * slice into its own sorted run (stats skipping is per-file, so mixed
-    * runs keep their pruning power); a checkpoint resets `addedVersion`
-    * floors upward, which can only widen the rewrite back toward full —
-    * never miss a file. No new files since the watermark ⇒ no-op commit-
-    * free return. */
+    * runs keep their pruning power). `addedVersion` is never below the
+    * version that added a file, so no file added since the watermark is
+    * missed: a cold replay from a checkpoint raises it to the
+    * checkpoint's version, which can only widen the rewrite back toward
+    * full; a snapshot advanced from a cached one keeps the version the
+    * cached one held, never above the cold replay's, so it selects the
+    * same files or fewer. No new files since the watermark ⇒ no-op
+    * commit-free return. */
   def optimize(spark: SparkSession, tablePath: String,
                targetBytes: Long = 128L * 1024 * 1024): Long = {
     val snap = DeltaSnapshotReader.snapshot(spark, tablePath)

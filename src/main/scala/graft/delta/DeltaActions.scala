@@ -174,11 +174,14 @@ final case class AddFile(
     /** Row tracking: commit version stamped on this file's rows. */
     defaultRowCommitVersion: Option[Long] = None,
     /** ENGINE-SIDE replay info, never serialized to the log or checkpoints:
-      * the commit version whose add action won the per-path replay (after a
-      * checkpoint, the checkpoint's version — a floor, not the original
-      * add's). Incremental clustering compares it against the recorded
-      * clustered-at watermark; the post-checkpoint floor only ever
-      * OVER-selects files to re-cluster, never under. */
+      * the commit version whose add action won the per-path replay. It is
+      * never below that version, and may be above it: a cold replay from a
+      * checkpoint (or a compacted range) gives the adds it restates that
+      * file's version, while a snapshot advanced from a cached one keeps
+      * the version the cached one held (so it is ≤ the cold value).
+      * Incremental clustering compares it against the recorded
+      * clustered-at watermark; a raised value only ever OVER-selects files
+      * to re-cluster, never under. */
     addedVersion: Option[Long] = None)
 
 /** A `remove` tombstone that is still current (file deleted, not re-added).

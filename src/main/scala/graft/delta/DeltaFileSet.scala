@@ -30,19 +30,19 @@ import org.apache.spark.storage.StorageLevel
   * ([[ensureBuilt]]), from the file count the table already records (the
   * crc's `numFiles`) — never from a pass over the log. A set recorded at
   * or under `spark.graft.delta.driverFileListThreshold` (default 10k
-  * files; fixed when the set is made) is collected by the pass that builds
-  * it, so crc validation, the DV probe and [[DeltaFileIndex.listFiles]]
-  * all run as driver folds — two Spark jobs for the whole file-set side of
-  * a cold read (the build's shuffle and its collect). Any other replayed
-  * set is built once and persisted on executors, and the validator's
-  * count, bytes, digest and size histogram come from ONE aggregate
-  * ([[sizeHistogram]]).
+  * files; fixed when the set is made) is collected by the replay's pass
+  * that builds it ([[LogReplay.replayDistributed]]), so crc validation,
+  * the DV probe and [[DeltaFileIndex.listFiles]] all run as driver folds —
+  * two Spark jobs for the whole file-set side of a cold read (the build's
+  * shuffle and its collect). Any other replayed set is built once and
+  * persisted on executors, and the validator's count, bytes, digest and
+  * size histogram come from ONE aggregate ([[sizeHistogram]]).
   */
 final class DeltaFileSet private (
     build: () => DataFrame,
     preset: Option[Seq[AddFile]],
     collectMax: Long,
-    recordedCount: () => Option[Long]) {
+    collectFirst: () => Option[Seq[AddFile]]) {
 
   @volatile private var materialized: Option[Seq[AddFile]] = preset
   @volatile private var persisted: Option[DataFrame] = None
@@ -74,26 +74,17 @@ final class DeltaFileSet private (
     * caching a stale infrastructure error. */
   def armValidator(v: () => Unit): Unit = { validator = Some(v) }
 
-  /** First touch of a replayed set: build it in the form its recorded
-    * size calls for. Recorded at or under `collectMax`: ONE pass builds
-    * and collects it (two Spark jobs: the replay's shuffle and a
-    * single-task collect that stops at `collectMax + 1` rows, so a record
-    * that under-reports never makes the driver hold more). Recorded above
-    * it, not recorded, or past that cap: the set is built and persisted on
-    * executors, in one pass over the log. */
+  /** First touch of a replayed set: the replay's collecting pass
+    * (`collectFirst`) brings the set to the driver when the table records
+    * it as small; otherwise the set is built and persisted on executors,
+    * in one pass over the log. */
   private def ensureBuilt(): Unit =
     if (materialized.isEmpty && persisted.isEmpty) synchronized {
-      if (materialized.isEmpty && persisted.isEmpty) {
-        val rows =
-          if (collectMax <= 0 || !recordedCount().exists(_ <= collectMax)) None
-          else Some(build().coalesce(1)
-            .limit(math.min(collectMax, Int.MaxValue - 1L).toInt + 1).collect())
-        rows.filter(_.length <= collectMax) match {
-          case Some(rs) => materialized = Some(rs.map(DeltaFileSet.decode).toSeq.sortBy(_.path))
-          case None =>
-            val built = build()
-            persisted = Some(if (released) built else built.persist(StorageLevel.MEMORY_AND_DISK))
-        }
+      if (materialized.isEmpty && persisted.isEmpty) collectFirst() match {
+        case Some(files) => materialized = Some(files)
+        case None =>
+          val built = build()
+          persisted = Some(if (released) built else built.persist(StorageLevel.MEMORY_AND_DISK))
       }
     }
 
@@ -381,13 +372,13 @@ object DeltaFileSet {
   def of(files: Seq[AddFile]): DeltaFileSet =
     new DeltaFileSet(() => dfFromSeq(files), Some(files), 0L, () => None)
 
-  /** Wrap a lazily-built distributed add-row DataFrame (log replay). The
-    * set is collected by the pass that builds it when `recordedCount`
-    * (consulted at the first touch) says it holds at most `collectMax`
-    * files; `collectMax` 0 keeps every replayed set distributed. */
+  /** Wrap a lazily-built distributed add-row DataFrame (log replay). At
+    * the first touch the set is `collectFirst`'s files when it gives some
+    * (the replay's collecting pass), else `build` persisted; `collectMax`
+    * is the largest set planned from a driver list. */
   def fromDf(build: () => DataFrame, collectMax: Long,
-             recordedCount: () => Option[Long] = () => None): DeltaFileSet =
-    new DeltaFileSet(build, None, collectMax, recordedCount)
+             collectFirst: () => Option[Seq[AddFile]] = () => None): DeltaFileSet =
+    new DeltaFileSet(build, None, collectMax, collectFirst)
 
   /** `spark.graft.delta.driverFileListThreshold` of `spark` (default 10k
     * files): the largest file set that is planned from a driver list. */

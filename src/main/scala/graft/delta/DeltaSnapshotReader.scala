@@ -32,7 +32,12 @@ import scala.jdk.CollectionConverters._
   * their freshness itself: an entry is served only while that listing
   * shows the file it was built from ([[snapshotAt]]). It holds at most
   * [[CacheCapacity]] snapshots, least recently used out first. No writer
-  * has to tell it that a table changed.
+  * has to tell it that a table changed. A version after a cached one is
+  * advanced from it rather than replayed ([[advanced]]): the new commits
+  * are decoded on the driver and folded into the cached snapshot's
+  * winners by the same reducer and assembly, so a read after a write —
+  * the session's own, another writer's, a conflict retry's, a
+  * checkpoint's — resolves with no Spark job.
   *
   * Job budget of a cold snapshot. On the driver placement: zero jobs, and
   * the file set is born collected, so its files, validation and listing
@@ -40,16 +45,19 @@ import scala.jdk.CollectionConverters._
   * the checkpoint's schema comes from its footer, read on the driver (no
   * inference job), and protocol + metaData come from ONE collect — 1 job
   * to resolve the snapshot (V2 checkpoints add 1 for their sidecar
-  * paths). The file set costs 2 more at its first touch (its key shuffle
-  * and the pass that builds it), where
-  * `spark.graft.delta.driverFileListThreshold` applies ([[DeltaFileSet]]):
-  * when the version's crc records at most that many files the set is
-  * collected in that same pass, and crc validation, the DV probe and
+  * paths). The rest costs 2 more at the first touch of the file set, or
+  * of its tombstones, txns or domains (a key shuffle and the pass that
+  * builds them), where `spark.graft.delta.driverFileListThreshold`
+  * applies ([[DeltaFileSet]]): when the version's crc records at most
+  * that many files, that one pass collects the file set, tombstones,
+  * txns and domains together, and crc validation, the DV probe and
   * listing run on the driver, so a cold snapshot + load + filtered count
-  * costs 5 jobs in all. A set the crc records as larger, or a version
-  * without a crc, is persisted on executors instead, after one pass over
-  * the log. Tombstones (2 jobs) and txns + domains (2) are lazy. Each
-  * pass reads only the action columns it needs.
+  * costs 5 jobs in all, and the snapshot can be advanced. A set the crc
+  * records as larger, or a version without a crc, is persisted on
+  * executors instead, after one pass over the log; tombstones (2 jobs)
+  * and txns + domains (2) are then lazy passes of their own. Each pass
+  * reads only the action columns it needs. An advanced snapshot costs no
+  * job: a fresh read after an append costs only its query's.
   */
 object DeltaSnapshotReader {
   import DeltaActions._
@@ -65,12 +73,15 @@ object DeltaSnapshotReader {
     * read. */
   private[delta] val CacheCapacity = 64
 
-  /** A cached snapshot and the file it was built from: its name, length
-    * and modification time ([[LogListing.fileAt]]). */
-  private final case class Cached(stamp: Option[(String, Long, Long)], snap: DeltaSnapshot)
+  /** A cached snapshot, with its winners ([[LogReplay.Replayed]]), and the
+    * file it was built from: its name, length and modification time
+    * ([[LogListing.fileAt]]). */
+  private final case class Cached(stamp: Option[(String, Long, Long)], replayed: LogReplay.Replayed)
   /** Per (table, version), in access order; guarded by itself, and never
     * held during a replay. */
   private val cache = new java.util.LinkedHashMap[(String, Long), Cached](16, 0.75f, true)
+
+  private val logger = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
   /** Latest snapshot of the table at `tablePath`. */
   def snapshot(spark: SparkSession, tablePath: String): DeltaSnapshot =
@@ -80,6 +91,9 @@ object DeltaSnapshotReader {
   def snapshotAt(spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): DeltaSnapshot =
     snapshotAt(spark, LogListing.ofTable(spark, tablePath), versionAsOf)
 
+  private def stampAt(log: LogListing, v: Long): Option[(String, Long, Long)] =
+    log.fileAt(v).map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+
   /** Snapshot of `log`'s table at `versionAsOf`, latest when None.
     *
     * Freshness is decided here, from the listing the caller already made:
@@ -87,32 +101,98 @@ object DeltaSnapshotReader {
     * shows the same file it was built from (delta-spark reuses a snapshot
     * while its log segment's file statuses are unchanged). A table deleted
     * and recreated at its path, or a log cleaned up past v, shows another
-    * file or none, and the snapshot is replayed again and replaces the
+    * file or none, and the snapshot is resolved again and replaces the
     * entry. A checkpoint or compaction written later leaves `v.json` as it
-    * was, so the entry still serves. The check costs no file-system call. */
+    * was, so the entry still serves. The check costs no file-system call.
+    *
+    * A version not cached is advanced from an earlier cached one when it
+    * can be ([[advanced]]), else replayed ([[replay]]). Each resolution
+    * logs one DEBUG line saying which: `hit`, `advanced from u (k
+    * commits)`, `cold driver` or `cold distributed`. */
   private[delta] def snapshotAt(spark: SparkSession, log: LogListing, versionAsOf: Option[Long]): DeltaSnapshot = {
     val latest = log.latest
     val target = versionAsOf.getOrElse(latest)
     require(target <= latest, s"version $target > latest $latest for ${log.tablePath}")
     val key = (log.tablePath, target)
-    val stamp = log.fileAt(target).map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
-    cache.synchronized(Option(cache.get(key)).filter(_.stamp == stamp)).map(_.snap).getOrElse {
-      val snap = replay(spark, log, target)
-      release(cache.synchronized {
-        val replaced = Option(cache.put(key, Cached(stamp, snap)))
-        val lru = cache.values.iterator
-        replaced ++ Seq.fill(cache.size - CacheCapacity max 0) { val c = lru.next(); lru.remove(); c }
-      })
-      snap
+    val stamp = stampAt(log, target)
+    cache.synchronized(Option(cache.get(key)).filter(_.stamp == stamp)) match {
+      case Some(hit) => resolved(log, target, "hit"); hit.replayed.snap
+      case None =>
+        // the target's crc, read once at the file set's first touch: its
+        // numFiles places a replayed set (DeltaFileSet), then validation
+        // checks the set against it
+        lazy val crc = Checksum.read(log.fs, log.logPath, target)
+        val r = advanced(spark, log, target).getOrElse(replay(spark, log, target, () => crc))
+        // Per-version state-checksum validation ([[Checksum]]): armed LAZY —
+        // it runs at the first access to the file set's rows (ADVICE r13:
+        // eager validation inside the cache fill charged one distributed
+        // aggregate per cold load to metadata-plane callers that never
+        // touch the file set). Data is still never served unvalidated:
+        // every data-plane path goes through fileSet.df, and a mismatch
+        // POISONS the set — the refusal rethrows on every later access
+        // instead of being cached away. (On a collected file set — every
+        // advanced or locally-replayed one, and every replayed one at or
+        // under driverFileListThreshold from its first touch — the
+        // validation aggregates are driver-local folds: same contract,
+        // zero jobs.)
+        r.snap.fileSet.armValidator(() => Checksum.validate(log.logPath, r.snap, crc))
+        release(cache.synchronized {
+          val replaced = Option(cache.put(key, Cached(stamp, r)))
+          val lru = cache.values.iterator
+          replaced ++ Seq.fill(cache.size - CacheCapacity max 0) { val c = lru.next(); lru.remove(); c }
+        })
+        r.snap
     }
   }
 
+  /** The DEBUG line of one resolution, logged as its path is taken. */
+  private def resolved(log: LogListing, target: Long, how: String): Unit =
+    logger.debug(s"snapshot ${log.tablePath} v$target: $how")
+
   /** Release the file sets of entries taken out of the cache, outside its
     * lock (a file set's lock may be held by a thread building it). */
-  private def release(gone: Iterable[Cached]): Unit = gone.foreach(_.snap.fileSet.unpersist())
+  private def release(gone: Iterable[Cached]): Unit = gone.foreach(_.replayed.snap.fileSet.unpersist())
 
-  /** Replay `log`'s table at version `target`. */
-  private def replay(spark: SparkSession, log: LogListing, target: Long): DeltaSnapshot = {
+  /** Snapshot `target` advanced from the newest cached snapshot u <
+    * `target` of the same table, when
+    *  - the listing still shows the file u was built from;
+    *  - the driver holds all of u's winners (a collected file set, plus
+    *    resolved tombstones, txns and domains), and its file set is within
+    *    `spark.graft.delta.driverFileListThreshold`, the largest planned
+    *    from a driver list;
+    *  - every commit in (u, target] is listed as a plain commit file;
+    *  - those commits total at most `spark.graft.delta.localReplayMaxBytes`.
+    * The commits are decoded on the driver and folded into u's winners by
+    * the replay's own reducer and assembly ([[LogReplay.replayOnDriver]]):
+    * zero Spark jobs, and the result is what a cold replay gives, with
+    * two exceptions. An add keeps the `addedVersion` u held for it, where
+    * a cold replay from a checkpoint or compacted range newer than the add
+    * raises it to that file's version, so the advanced one is never higher
+    * ([[AddFile.addedVersion]]). And a tombstone u held stays, where a
+    * newer checkpoint may have dropped it past its retention. None when
+    * any condition fails: the caller replays cold. */
+  private def advanced(spark: SparkSession, log: LogListing, target: Long): Option[LogReplay.Replayed] = {
+    val base = cache.synchronized(cache.asScala.toSeq.collect {
+      case ((t, u), c) if t == log.tablePath && u < target => (u, c)
+    }.maxByOption(_._1))
+    for {
+      (u, cached) <- base
+      if cached.stamp == stampAt(log, u)
+      winners <- cached.replayed.winners()
+      if winners.count(LogReplay.isAdd) <= DeltaFileSet.driverListThreshold(spark)
+      commits = log.commits.range(u + 1, target + 1).toSeq
+      if commits.length == target - u && commits.map(_._2.getLen).sum <= LogReplay.localMaxBytes(spark)
+    } yield {
+      resolved(log, target, s"advanced from $u (${commits.length} commits)")
+      val tail = LogReplay.decode(spark, actionSchema, commits.map { case (v, st) => v -> st.getPath })
+      LogReplay.replayOnDriver(log.tablePath, target, winners.iterator ++ tail.iterator)
+    }
+  }
+
+  /** Replay `log`'s table at version `target`; `crc` is the target's crc
+    * text, whose `numFiles` places a distributed file set. */
+  private def replay(spark: SparkSession, log: LogListing, target: Long,
+                     crc: () => Option[String]): LogReplay.Replayed = {
     // newest checkpoint at or below the target version, if any
     val cpVersion = log.checkpoints.keys.filter(_ <= target).maxOption
     // Optimized log replay: substitute compacted range files for the
@@ -146,44 +226,30 @@ object DeltaSnapshotReader {
     // distributed.
     val segment: Seq[(Long, FileStatus)] = (chosenCompactions.result() ++ tail).sortBy(_._1)
     val sources = segment.map { case (v, st) => v -> st.getPath }
-    val (tablePath, logPath, fs) = (log.tablePath, log.logPath, log.fs)
-    // the target's crc, read once at the file set's first touch: its
-    // numFiles places the set (DeltaFileSet), then validation checks it
-    lazy val crc = Checksum.read(fs, logPath, target)
-    val snap =
-      if (cpVersion.isEmpty && sources.nonEmpty && segment.map(_._2.getLen).sum <= LogReplay.localMaxBytes(spark))
-        LogReplay.replayOnDriver(tablePath, target, LogReplay.decode(spark, actionSchema, sources))
-      else {
-        val cpDf = cpVersion.map { v =>
-          val (v2Files, classicFiles) = log.checkpoints(v).partition(_._2)
-          val actions =
-            if (classicFiles.nonEmpty) {
-              val parts = classicFiles.map(_._1).sortBy(_.getPath.getName)
-              normalizeActions(readCheckpointParquet(spark, parts.map(_.getPath), parts.head))
-            } else
-              // several writers may leave several uuid checkpoints for the
-              // same version; each is complete — pick one deterministically
-              readV2Checkpoint(spark, logPath, v2Files.map(_._1).maxBy(_.getPath.toString))
-          actions.withColumn("version", lit(v))
-        }
-        val tailDf = if (sources.isEmpty) None
-          else Some(LogReplay.actions(spark, actionSchema, sources))
-        LogReplay.replayDistributed(spark, tablePath, target, (cpDf.toSeq ++ tailDf).reduce(_ unionByName _),
-          DeltaFileSet.driverListThreshold(spark), () => crc.flatMap(Checksum.recordedNumFiles))
+    val (tablePath, logPath) = (log.tablePath, log.logPath)
+    if (cpVersion.isEmpty && sources.nonEmpty && segment.map(_._2.getLen).sum <= LogReplay.localMaxBytes(spark)) {
+      resolved(log, target, "cold driver")
+      LogReplay.replayOnDriver(tablePath, target, LogReplay.decode(spark, actionSchema, sources).iterator)
+    } else {
+      resolved(log, target, "cold distributed")
+      val cpDf = cpVersion.map { v =>
+        val (v2Files, classicFiles) = log.checkpoints(v).partition(_._2)
+        val actions =
+          if (classicFiles.nonEmpty) {
+            val parts = classicFiles.map(_._1).sortBy(_.getPath.getName)
+            normalizeActions(readCheckpointParquet(spark, parts.map(_.getPath), parts.head))
+          } else
+            // several writers may leave several uuid checkpoints for the
+            // same version; each is complete — pick one deterministically
+            readV2Checkpoint(spark, logPath, v2Files.map(_._1).maxBy(_.getPath.toString))
+        actions.withColumn("version", lit(v))
       }
-    // Per-version state-checksum validation ([[Checksum]]): armed LAZY —
-    // it runs at the first access to the file set's distributed rows
-    // (ADVICE r13: eager validation inside the cache fill charged one
-    // distributed aggregate per cold load to metadata-plane callers that
-    // never touch the file set). Data is still never served unvalidated:
-    // every data-plane path goes through fileSet.df, and a mismatch
-    // POISONS the set — the refusal rethrows on every later access
-    // instead of being cached away. (On a collected file set — every
-    // locally-replayed one, and every replayed one at or under
-    // driverFileListThreshold from its first touch — the validation
-    // aggregates are driver-local folds: same contract, zero jobs.)
-    snap.fileSet.armValidator(() => Checksum.validate(logPath, snap, crc))
-    snap
+      val tailDf = if (sources.isEmpty) None
+        else Some(LogReplay.actions(spark, actionSchema, sources))
+      LogReplay.replayDistributed(spark, tablePath, target,
+        (cpDf.toSeq ++ tailDf).reduce(_ unionByName _),
+        DeltaFileSet.driverListThreshold(spark), () => crc().flatMap(Checksum.recordedNumFiles))
+    }
   }
 
   /** Evict cached snapshots of a table, releasing their file sets: the

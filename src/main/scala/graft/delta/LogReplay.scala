@@ -279,35 +279,70 @@ private[delta] object LogReplay {
 
   private def kindOf(r: InternalRow): Int = keyOf(r)._1
 
-  /** Driver placement: reduce the decoded rows, assemble; the file set is
-    * born collected. */
-  def replayOnDriver(tablePath: String, version: Long, rows: Seq[InternalRow]): DeltaSnapshot = {
-    val won = reduce(rows.iterator).values.toSeq
-    def of(kinds: Int*) = won.filter(r => kinds.contains(kindOf(r)))
+  /** A replayed snapshot, with the reducer's winners it was assembled
+    * from once the driver holds all of them: the winning add, remove,
+    * metaData, protocol, txn and domain rows. [[DeltaSnapshotReader]]
+    * advances a snapshot by folding new commits into them. */
+  final case class Replayed(snap: DeltaSnapshot, winners: () => Option[Seq[InternalRow]])
+
+  /** The winning adds of `rows` as [[AddFile]]s through `fileRow`, by path. */
+  private def addFiles(rows: Seq[InternalRow], fileRow: InternalRow => InternalRow): Seq[AddFile] = {
     val toFile = CatalystTypeConverters.createToScalaConverter(DeltaFileSet.schema)
-    assemble(tablePath, version, of(MetaKey, ProtocolKey),
-      fileRow => DeltaFileSet.of(of(FileKey).filter(isAdd)
-        .map(r => DeltaFileSet.decode(toFile(fileRow(r)).asInstanceOf[Row])).sortBy(_.path)),
-      () => of(FileKey).filterNot(isAdd), () => of(TxnKey, DomainKey))
+    rows.filter(isAdd).map(r => DeltaFileSet.decode(toFile(fileRow(r)).asInstanceOf[Row])).sortBy(_.path)
+  }
+
+  /** Driver placement: reduce the rows, assemble; the file set is born
+    * collected, and the winners are held. The rows are decoded log lines,
+    * or an earlier snapshot's winners followed by the decoded lines of
+    * the commits after it: the same fold either way, since a winner only
+    * ever loses to a newer row of its key. */
+  def replayOnDriver(tablePath: String, version: Long, rows: Iterator[InternalRow]): Replayed = {
+    val won = reduce(rows).values.toSeq
+    def of(kinds: Int*) = won.filter(r => kinds.contains(kindOf(r)))
+    Replayed(assemble(tablePath, version, of(MetaKey, ProtocolKey),
+      fileRow => DeltaFileSet.of(addFiles(of(FileKey), fileRow)),
+      () => of(FileKey).filterNot(isAdd), () => of(TxnKey, DomainKey)), () => Some(won))
   }
 
   /** Distributed placement: protocol and metaData come from one collect
-    * (each partition's winners, reduced again on the driver: 1 Spark job);
-    * the file set (at its first touch), tombstones and txns + domains
-    * (together) are lazy, a key shuffle each. Each pass reads only its own
-    * action columns ([[narrow]]). `collectMax` and `recordedFiles` place
-    * the file set ([[DeltaFileSet.fromDf]]). */
+    * (each partition's winners, reduced again on the driver: 1 Spark job).
+    * The rest waits for the file set's first touch, or a read of the
+    * tombstones, txns or domains. When the table records at most
+    * `collectMax` files (`recordedFiles`, the crc's count), one key
+    * shuffle over the file, txn and domain actions brings all their
+    * winners to the driver, in a single task that stops past `collectMax`
+    * adds, so a record that under-reports never makes the driver hold
+    * more: they build the file set, tombstones, txns and domains, and are
+    * held. Otherwise the file set is built and persisted on executors
+    * ([[DeltaFileSet.fromDf]]), and tombstones and txns + domains are a
+    * key shuffle each, lazily. Each pass reads only its own action
+    * columns ([[narrow]]). */
   def replayDistributed(spark: SparkSession, tablePath: String, version: Long, actions: DataFrame,
-                        collectMax: Long, recordedFiles: () => Option[Long]): DeltaSnapshot = {
-    val heads = narrow(actions, Seq(MetaKey, ProtocolKey)).queryExecution.toRdd
-      .mapPartitions(rows => reduce(rows).valuesIterator).collect()
-    assemble(tablePath, version, reduce(heads.iterator).values,
+                        collectMax: Long, recordedFiles: () => Option[Long]): Replayed = {
+    val heads = reduce(narrow(actions, Seq(MetaKey, ProtocolKey)).queryExecution.toRdd
+      .mapPartitions(rows => reduce(rows).valuesIterator).collect().iterator).values.toSeq
+    @volatile var held = Option.empty[Seq[InternalRow]]
+    lazy val collected: Option[Seq[InternalRow]] = {
+      held = if (collectMax <= 0 || !recordedFiles().exists(_ <= collectMax)) None else {
+        val rows = reduceDistributed(actions, Seq(FileKey, TxnKey, DomainKey)).coalesce(1)
+          .mapPartitions { rows =>
+            var adds = 0L
+            rows.takeWhile(_ => adds <= collectMax).map { r => if (isAdd(r)) adds += 1; r }
+          }.collect().toSeq
+        Some(rows).filter(_.count(isAdd) <= collectMax)
+      }
+      held
+    }
+    Replayed(assemble(tablePath, version, heads,
       fileRow => DeltaFileSet.fromDf(
         () => InternalRows.toDataFrame(spark,
           reduceDistributed(actions, Seq(FileKey)).filter(isAdd).map(fileRow), DeltaFileSet.schema),
-        collectMax, recordedFiles),
-      () => reduceDistributed(actions, Seq(FileKey), addPathOnly = true).filter(!isAdd(_)).collect().toSeq,
-      () => reduceDistributed(actions, Seq(TxnKey, DomainKey)).collect().toSeq)
+        collectMax, () => collected.map(addFiles(_, fileRow))),
+      () => collected.map(_.filter(r => kindOf(r) == FileKey && !isAdd(r))).getOrElse(
+        reduceDistributed(actions, Seq(FileKey), addPathOnly = true).filter(!isAdd(_)).collect().toSeq),
+      () => collected.map(_.filter(kindOf(_) != FileKey)).getOrElse(
+        reduceDistributed(actions, Seq(TxnKey, DomainKey)).collect().toSeq)),
+      () => held.map(heads ++ _))
   }
 
   private val emptyMap: MapData =

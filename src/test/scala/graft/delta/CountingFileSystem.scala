@@ -25,16 +25,17 @@ class CountingFileSystem extends LocalFileSystem {
     super.exists(f)
   }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-    if (onLog(f)) opens.incrementAndGet()
+    if (onLog(f)) { opens.incrementAndGet(); opened.add(f.getName) }
     super.open(f, bufferSize)
   }
 }
 
 object CountingFileSystem {
   private val lists, existss, opens = new AtomicLong()
+  private val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  /** `_delta_log` calls of one body. */
-  final case class Calls(listStatus: Long, exists: Long, open: Long)
+  /** `_delta_log` calls of one body, and the names of the files it opened. */
+  final case class Calls(listStatus: Long, exists: Long, open: Long, opened: Seq[String])
 
   /** `body`'s result and the `_delta_log` calls it made through the
     * session's Hadoop configurations (the driver's and, in local mode,
@@ -45,9 +46,11 @@ object CountingFileSystem {
       "fs.file.impl.disable.cache" -> "true")
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     Seq(lists, existss, opens).foreach(_.set(0))
+    opened.clear()
     try {
       val a = body
-      (a, Calls(lists.get, existss.get, opens.get))
+      import scala.jdk.CollectionConverters._
+      (a, Calls(lists.get, existss.get, opens.get, opened.asScala.toSeq))
     } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
   }
 }

@@ -10,7 +10,9 @@ import java.nio.file.Files
   * fresh snapshot + load of a checkpointed table. Each bound is the count
   * the engine made before its snapshot cache checked entries against the
   * listing (append 2 listStatus, 3 exists, 1 open; fresh read 4, 5, 6),
-  * so that check can never add a call. */
+  * so that check can never add a call. The two together are locked at
+  * the count measured once a fresh read advances the writer's snapshot
+  * (3, 2, 3), and must open no checkpoint. */
 class LogFsCallSpec extends SparkSpec {
   import spark.implicits._
 
@@ -43,5 +45,20 @@ class LogFsCallSpec extends SparkSpec {
     assert(n == 4 * 7) // grp 3 holds 7 of every 50-row batch's rows
     info(s"fresh read: $calls")
     assert(calls.listStatus <= 4 && calls.exists <= 5 && calls.open <= 6, s"a fresh read made $calls")
+  }
+
+  test("an append followed by snapshot + load: listStatus, exists and open calls, and no checkpoint opened") {
+    val t = checkpointed()
+    val (n, calls) = CountingFileSystem.count(spark) {
+      append(t, 3)
+      val snap = DeltaSnapshotReader.snapshot(spark, t)
+      DeltaSnapshotReader.load(spark, t, Some(snap.version)).filter(col("grp") === 3).count()
+    }
+    assert(n == 4 * 7)
+    info(s"append + fresh read: $calls")
+    // the new version is advanced from the writer's snapshot: the read
+    // opens the new commit and its crc, and no checkpoint
+    assert(!calls.opened.exists(_.contains(".checkpoint")), s"a checkpoint was opened: $calls")
+    assert(calls.listStatus <= 3 && calls.exists <= 2 && calls.open <= 3, s"an append + fresh read made $calls")
   }
 }

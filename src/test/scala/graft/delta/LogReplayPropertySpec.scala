@@ -26,6 +26,12 @@ import scala.util.{Random, Try}
   *    are identical with `spark.graft.delta.localReplayMaxBytes` at its
   *    default and at 0, or both fail with the same exception class.
   *  - End to end, checkpointed: the replay equals the model.
+  *  - Advance: a snapshot advanced one commit at a time from the one
+  *    before it ([[DeltaSnapshotReader]]), from version 0 or from a cold
+  *    snapshot of a checkpoint, reads at every version what a cold replay
+  *    reads, or both throw the same exception class; its `addedVersion`
+  *    is never above the cold one, and equal until a checkpoint or
+  *    compacted range ends at or below the version.
   *
   * The model is the spec's reconciliation rule, written independently:
   * per key the live actions at the highest (version, add over remove)
@@ -70,6 +76,19 @@ class LogReplayPropertySpec extends SparkSpec {
 
   private def materialize(seg: Segment): String =
     materialize((seg.commits ++ seg.compacted).map(s => s.name -> s.text), seg.dataPaths)
+
+  /** Write `cp`'s actions as a classic two-part checkpoint into the log of
+    * each of `tables`. */
+  private def writeCheckpoint(cp: Source, tables: Seq[String]): Unit = {
+    val dir = Files.createTempDirectory("graft_replay_cp").toString + "/cp"
+    spark.read.schema(DeltaActions.actionSchema).json(cp.acts.map(_.line).toDS())
+      .repartition(2).write.parquet(dir)
+    val parts = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).sortBy(_.getName)
+    for (t <- tables; (f, n) <- parts.zipWithIndex)
+      Files.copy(f.toPath, Paths.get(t, "_delta_log",
+        LogListing.checkpointName(cp.version, n + 1, parts.length)))
+  }
 
   /** A session whose replays take the distributed placement. */
   private lazy val distributedSession = {
@@ -184,15 +203,7 @@ class LogReplayPropertySpec extends SparkSpec {
       val seg = segment(20000L + i, dataFile.length.toLong, checkpointed = true)
       val t = materialize(seg)
       val cp = seg.checkpoint.get
-      val dir = Files.createTempDirectory("graft_replay_cp").toString + "/cp"
-      spark.read.schema(DeltaActions.actionSchema).json(cp.acts.map(_.line).toDS())
-        .repartition(2).write.parquet(dir)
-      val parts = new java.io.File(dir).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, n) =>
-        Files.move(f.toPath, Paths.get(t, "_delta_log",
-          f"${cp.version}%020d.checkpoint.${n + 1}%010d.${parts.length}%010d.parquet"))
-      }
+      writeCheckpoint(cp, Seq(t))
       val log = s"seed ${seg.seed}\n${seg.describe}"
       val expect = model(seg.replayed)
       def cands(kind: Int) = expect.collect { case ((`kind`, name), m) => name -> m }
@@ -248,33 +259,125 @@ class LogReplayPropertySpec extends SparkSpec {
       (v0 ++ v1).flatMap(l => """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1)))),
       (v0 ++ v1).mkString("\n")))).head
 
+  private lazy val mistyped = Seq(
+    addLine("p=a/f1.parquet", size = "\"123\"", mtime = 2),
+    addLine("p=b/f2.parquet", size = "1.5", mtime = 3),
+    addLine("p=a/f3.parquet", size = null, mtime = 4, dataChange = "\"true\""))
+  private lazy val unreadableProtocol = Seq("""{"protocol":{"minReaderVersion":"4","minWriterVersion":7}}""",
+    addLine("p=b/f1.parquet", size = null, mtime = 2))
+  private lazy val duplicateAdd = Seq(
+    addLine("p=b/f1.parquet", size = null, mtime = 7),
+    addLine("p=b/f1.parquet", size = null, mtime = 2),
+    addLine("p=b/f1.parquet", size = null, mtime = 5))
+  private lazy val truncated = Seq(
+    addLine("p=b/f1.parquet", size = null, mtime = 2),
+    """{"remove":{"path":"p=a/f0.parquet","deletionTimestamp":1,"dataChange":true}""")
+
   test("drift: a commit with \"size\":\"123\", \"size\":1.5 or \"dataChange\":\"true\" reads the same on both placements") {
-    val (snap, _) = drift(Seq(
-      addLine("p=a/f1.parquet", size = "\"123\"", mtime = 2),
-      addLine("p=b/f2.parquet", size = "1.5", mtime = 3),
-      addLine("p=a/f3.parquet", size = null, mtime = 4, dataChange = "\"true\"")))
+    val (snap, _) = drift(mistyped)
     assert(snap.isRight)
   }
 
   test("drift: a \"minReaderVersion\":\"4\" protocol is refused on both placements") {
     val refused = Left(classOf[DeltaUnsupportedFeatureException].getName)
-    assert(drift(Seq("""{"protocol":{"minReaderVersion":"4","minWriterVersion":7}}""",
-      addLine("p=b/f1.parquet", size = null, mtime = 2))) == (refused, refused))
+    assert(drift(unreadableProtocol) == (refused, refused))
   }
 
   test("drift: a duplicate add of one path in one commit reads the same on both placements") {
-    val (snap, _) = drift(Seq(
-      addLine("p=b/f1.parquet", size = null, mtime = 7),
-      addLine("p=b/f1.parquet", size = null, mtime = 2),
-      addLine("p=b/f1.parquet", size = null, mtime = 5)))
+    val (snap, _) = drift(duplicateAdd)
     assert(snap.isRight)
   }
 
   test("drift: a truncated last line reads the same on both placements") {
-    val (snap, _) = drift(Seq(
-      addLine("p=b/f1.parquet", size = null, mtime = 2),
-      """{"remove":{"path":"p=a/f0.parquet","deletionTimestamp":1,"dataChange":true}"""))
+    val (snap, _) = drift(truncated)
     assert(snap.isRight)
+  }
+
+  // ---- advance: a snapshot advanced commit by commit equals a cold replay ----
+
+  /** Everything a snapshot resolves, its files without their
+    * `addedVersion`, and the crc it renders; beside that, each file's
+    * `addedVersion`. Or the class of what it threw. */
+  private type Resolved = Either[String, (Any, Map[String, Option[Long]])]
+
+  /** [[Resolved]] of `t` at `v`. */
+  private def resolve(t: String, v: Long): Resolved =
+    Try {
+      val s = DeltaSnapshotReader.snapshotAt(spark, t, Some(v))
+      ((s.files.map(_.copy(addedVersion = None)), s.tombstones, s.txns, s.domainMetadata, s.protocol,
+        s.schema, s.partitionColumns, s.configuration, s.physicalSchema, s.metadataId,
+        s.metadataCreatedTime, Checksum.render(s)), s.files.map(f => f.path -> f.addedVersion).toMap)
+    }.toEither.left.map(_.getClass.getName)
+
+  /** [[resolve]] of a cold replay of `t` at each version up to `last`. */
+  private def coldReplays(t: String, last: Long): Seq[Resolved] =
+    (0L to last).map { v => DeltaSnapshotReader.invalidate(t); resolve(t, v) }
+
+  /** Resolves `chain` at versions `from` to `to` in turn, the first cold
+    * and each later one advanced from the one before when that one read,
+    * and at every version compares with `cold`, the cold replays of a copy
+    * of the same table ([[coldReplays]]): the same result, or the same
+    * exception class. `addedVersion` is equal at a version no checkpoint or
+    * compacted range in `floors` (their versions) ends at or below, and
+    * never above the cold one. Returns how many versions were advanced. */
+  private def assertAdvance(chain: String, cold: Seq[Resolved],
+                            from: Long, to: Long, floors: Seq[Long], log: String): Int = {
+    DeltaSnapshotReader.invalidate(chain)
+    (from to to).foldLeft((Option.empty[Boolean], 0)) { case ((prevRead, advanced), v) =>
+      val (got, lines) = ResolutionLog.capture(resolve(chain, v))
+      val want = cold(v.toInt)
+      val how = lines.map(ResolutionLog.kind)
+      assert(how.size == 1, s"v$v resolved as $how\n$log")
+      if (v == from) assert(how.head.startsWith("cold"), s"v$v: $how\n$log")
+      if (prevRead.contains(true)) assert(how.head == s"advanced from ${v - 1} (1 commits)", s"v$v: $how\n$log")
+      assert(got.map(_._1) == want.map(_._1), s"v$v advanced: $got\ncold: $want\n$log")
+      (got, want) match {
+        case (Right((_, a)), Right((_, c))) =>
+          if (floors.exists(_ <= v)) assert(a.forall { case (p, av) => av.get <= c(p).get }, s"v$v: $a > $c\n$log")
+          else assert(a == c, s"v$v addedVersion: advanced $a, cold $c\n$log")
+        case _ =>
+      }
+      (Some(got.isRight), advanced + how.count(_.startsWith("advanced")))
+    }._2
+  }
+
+  test("advance: checkpoint-less segments advanced commit by commit read as a cold replay at every version") {
+    val advanced = (1L to 16L).map { i =>
+      val seg = segment(30000L + i, dataFile.length.toLong, checkpointed = false)
+      val last = seg.commits.size - 1L
+      assertAdvance(materialize(seg), coldReplays(materialize(seg), last), 0L, last,
+        seg.compacted.map(_.version).toSeq, s"seed ${seg.seed}\n${seg.describe}")
+    }.sum
+    assert(advanced >= 32, s"only $advanced versions advanced")
+  }
+
+  test("advance: classic-checkpointed segments, from a cold checkpointed snapshot and across the checkpoint") {
+    val advanced = (1L to 8L).map { i =>
+      val seg = segment(40000L + i, dataFile.length.toLong, checkpointed = true)
+      val cp = seg.checkpoint.get
+      val (chain, cold) = (materialize(seg), materialize(seg))
+      writeCheckpoint(cp, Seq(chain, cold))
+      // the crc's count makes a cold snapshot of the checkpoint collect its
+      // winners in one pass, so it can be advanced
+      val live = model(seg.replayed.filter(_.version <= cp.version)).count { case ((k, _), m) => k == LogReplay.FileKey && m._2 }
+      Seq(chain, cold).foreach(t => Files.write(Paths.get(t, "_delta_log", LogListing.crcName(cp.version)),
+        s"""{"numFiles":$live}""".getBytes(UTF_8)))
+      val (last, floors) = (seg.commits.size - 1L, cp.version +: seg.compacted.map(_.version).toSeq)
+      val log = s"seed ${seg.seed}\n${seg.describe}"
+      val colds = coldReplays(cold, last)
+      assertAdvance(chain, colds, cp.version, last, floors, log) + assertAdvance(chain, colds, 0L, last, floors, log)
+    }.sum
+    assert(advanced >= 24, s"only $advanced versions advanced")
+  }
+
+  test("advance: the drift inputs advance to what a cold replay reads") {
+    val advanced = Seq(mistyped, unreadableProtocol, duplicateAdd, truncated).map { v1 =>
+      val files = Seq(LogListing.commitName(0) -> v0.mkString("\n"), LogListing.commitName(1) -> v1.mkString("\n"))
+      val data = (v0 ++ v1).flatMap(l => """"path":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1)))
+      assertAdvance(materialize(files, data), coldReplays(materialize(files, data), 1L), 0L, 1L, Nil,
+        (v0 ++ v1).mkString("\n"))
+    }.sum
+    assert(advanced == 4)
   }
 }
 

@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Job budget and placement parity of the distributed cold-snapshot path —
   * every table with a checkpoint takes it.
@@ -19,8 +19,11 @@ import java.nio.file.Files
   * no more than `spark.graft.delta.driverFileListThreshold` files, so crc
   * validation, the DV probe and listing run on the driver), 2 for the
   * query. With both gates at 0 the file set stays distributed; its count
-  * is locked too, and so is the cost of an append that auto-checkpoints,
-  * so no change can raise any of them silently. On the driver placement
+  * is locked too. A version after one the session holds is advanced from
+  * it with no job: a fresh read after an append, the session's own or a
+  * foreign one, costs only its query's 2 jobs, and an append that
+  * auto-checkpoints costs 2 (the append and the checkpoint write). So no
+  * change can raise any of them silently. On the driver placement
   * (a small checkpoint-less log) a cold snapshot, its files and the plan
   * of a small change feed launch no job at all. Both placements must give
   * the same snapshot and refuse a tampered crc before serving a row; the
@@ -60,8 +63,7 @@ class SnapshotJobBudgetSpec extends SparkSpec {
     * JSON tail, the shape of an ingest table in use. */
   private lazy val events: String = {
     val t = newTable()
-    for (i <- 0 until 15)
-      DeltaWriter.write((0 until 50).map(j => (i * 50L + j, j % 7, i)).toDF("id", "grp", "batch"), t)
+    (0 until 15).foreach(append(t, _))
     assert(new java.io.File(t, f"_delta_log/${10L}%020d.checkpoint.parquet").exists())
     t
   }
@@ -94,22 +96,77 @@ class SnapshotJobBudgetSpec extends SparkSpec {
     assert(jobs <= 8, s"distributed cold read launched $jobs jobs")
   }
 
+  private def append(t: String, i: Int): Unit =
+    DeltaWriter.write((0 until 50).map(j => (i * 50L + j, j % 7, i)).toDF("id", "grp", "batch"), t)
+
   test("a plain append is 1 job; one that auto-checkpoints stays within its recorded budget") {
     val t = newTable()
-    def append(i: Int): Unit =
-      DeltaWriter.write((0 until 50).map(j => (i * 50L + j, j % 7, i)).toDF("id", "grp", "batch"), t)
-    (0 until 11).foreach(append) // v0..v10, checkpointed at v10
+    (0 until 11).foreach(append(t, _)) // v0..v10, checkpointed at v10
     DeltaSnapshotReader.snapshot(spark, t).files // the writer's prior snapshot, warm
-    val (_, plain) = jobsOf(append(11))
-    (12 until 20).foreach(append)
+    val (_, plain) = jobsOf(append(t, 11))
+    (12 until 20).foreach(append(t, _))
     DeltaSnapshotReader.snapshot(spark, t).files
-    val (_, checkpointed) = jobsOf(append(20))
+    val (_, checkpointed) = jobsOf(append(t, 20))
     assert(new java.io.File(t, f"_delta_log/${20L}%020d.checkpoint.parquet").exists())
     assert(plain == 1, s"a plain append launched $plain jobs")
-    // 1 append; 1 protocol + metaData and 2 file-set jobs for the new
-    // version's snapshot; 2 for its tombstones, 2 for txns + domains
-    // together; 1 to write the single-part checkpoint
-    assert(checkpointed <= 9, s"an auto-checkpointing append launched $checkpointed jobs")
+    // 1 append, 1 to write the single-part checkpoint: the checkpoint's
+    // snapshot is advanced from the writer's, tombstones, txns and
+    // domains included, with no job
+    assert(checkpointed <= 2, s"an auto-checkpointing append launched $checkpointed jobs")
+  }
+
+  test("an auto-checkpointing append after a cold read of the table: 2 jobs") {
+    val t = newTable()
+    (0 until 20).foreach(append(t, _)) // checkpointed at v10, a 9-commit tail
+    DeltaSnapshotReader.invalidate(t)
+    val (_, resolutions) = ResolutionLog.capture(DeltaSnapshotReader.snapshot(spark, t).files)
+    assert(resolutions.map(ResolutionLog.kind) == Seq("cold distributed"))
+    val (_, jobs) = jobsOf(append(t, 20))
+    assert(new java.io.File(t, f"_delta_log/${20L}%020d.checkpoint.parquet").exists())
+    assert(jobs <= 2, s"an auto-checkpointing append after a cold read launched $jobs jobs")
+  }
+
+  /** A checkpointed table at v10 (11 appends), read cold once. */
+  private def readCheckpointed(): String = {
+    val t = newTable()
+    (0 until 11).foreach(append(t, _))
+    coldRead(t)
+    t
+  }
+
+  /** A fresh snapshot + load + filtered count, its jobs and resolutions. */
+  private def freshRead(t: String): ((Long, Int), Seq[String]) = ResolutionLog.capture {
+    jobsOf {
+      val snap = DeltaSnapshotReader.snapshot(spark, t)
+      DeltaSnapshotReader.load(spark, t, Some(snap.version)).filter(col("grp") === 3).count()
+    }
+  }
+
+  test("a fresh read after the session's own append to a checkpointed table: the query's 2 jobs") {
+    val t = readCheckpointed()
+    append(t, 11)
+    val ((n, jobs), resolutions) = freshRead(t)
+    assert(n == 12 * 7)
+    assert(resolutions.map(ResolutionLog.kind) == Seq("advanced from 10 (1 commits)", "hit"))
+    assert(jobs <= 2, s"a fresh read after an append launched $jobs jobs")
+  }
+
+  test("a fresh read after a foreign commit to a checkpointed table: the query's 2 jobs, new rows visible") {
+    val t = readCheckpointed()
+    // another writer's commit: a data file and a raw commit JSON
+    val dir = Files.createTempDirectory("graft_foreign").toString + "/d"
+    (0 until 50).map(j => (1000L + j, j % 7, 99)).toDF("id", "grp", "batch").coalesce(1).write.parquet(dir)
+    val part = new java.io.File(dir).listFiles().find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, Paths.get(t, "foreign-0.parquet"))
+    Files.write(Paths.get(t, "_delta_log", LogListing.commitName(11)), Seq(
+      """{"commitInfo":{"timestamp":1700000000000,"operation":"WRITE","engineInfo":"foreign"}}""",
+      s"""{"add":{"path":"foreign-0.parquet","partitionValues":{},"size":${part.length},""" +
+        s""""modificationTime":${part.lastModified},"dataChange":true}}""").mkString("", "\n", "\n")
+      .getBytes(StandardCharsets.UTF_8))
+    val ((n, jobs), resolutions) = freshRead(t)
+    assert(n == 11 * 7 + 7) // grp 3: 7 of each appended batch, 7 of the foreign file's 50 rows
+    assert(resolutions.map(ResolutionLog.kind) == Seq("advanced from 10 (1 commits)", "hit"))
+    assert(jobs <= 2, s"a fresh read after a foreign commit launched $jobs jobs")
   }
 
   test("driver placement: a cold snapshot + files of a small checkpoint-less table launch no job") {
