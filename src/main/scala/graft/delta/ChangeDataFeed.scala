@@ -42,25 +42,22 @@ object ChangeDataFeed {
     configuration.get("delta.enableChangeDataFeed").exists(_.equalsIgnoreCase("true"))
 
   /** Write one DML commit's change rows (`changeData` = table columns +
-    * [[ChangeTypeCol]]) under `_change_data/v<version>/`, hive-partitioned
-    * like the data files, and render their `cdc` action lines. Runs BEFORE
-    * the commit that references them (files without a commit are invisible
-    * garbage, the same write-then-commit order the data files use). */
-  /** Returns the cdc action lines AND the commit-unique directory they
-    * were written under, so a conflict-checked retry loop can DELETE a
-    * losing attempt's change files before re-rendering (ADVICE r12: lost
-    * attempts used to orphan their `_change_data` files until VACUUM). */
-  private[delta] def writeChangeFiles(spark: SparkSession, snap: DeltaSnapshot,
-                                      version: Long, changeData: DataFrame): (Seq[String], Path) = {
+    * [[ChangeTypeCol]]) under `_change_data/v<version>-<id>/`,
+    * hive-partitioned like the data files ([[DataFiles.write]]), and
+    * return their `cdc` action lines and that directory, so a
+    * conflict-checked retry can delete a losing attempt's change files.
+    * Runs BEFORE the commit that references them (files without a commit
+    * are invisible garbage, the same write-then-commit order the data
+    * files use). */
+  private[delta] def writeChangeFiles(snap: DeltaSnapshot, version: Long,
+                                      changeData: DataFrame): (Seq[String], Path) = {
     val table = new Path(snap.tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     // commit-unique dir (consumers resolve cdc files through the LOG's
     // action paths, never the dir name): two processes racing DML at the
     // same version must not collide on the change-file paths, and a
     // conflict-checked retry re-renders its change files under the fresh
     // version without tripping over the lost attempt's directory
-    val dir = new Path(new Path(table, "_change_data"),
-      s"v$version-${java.util.UUID.randomUUID().toString.take(8)}")
+    val dir = s"_change_data/v$version-${java.util.UUID.randomUUID().toString.take(8)}"
     val partitionBy = snap.partitionColumns
     // disk form is physical on column-mapped tables ([[ColumnMapping]]);
     // `_change_type` itself is never mapped (spec: CDF columns are not)
@@ -73,15 +70,11 @@ object ChangeDataFeed {
         StructType(ps.fields :+ StructField(ChangeTypeCol, StringType)))
       case None => logical
     }
-    val writer =
-      if (partitionBy.nonEmpty) ordered.write.partitionBy(diskPartitionBy: _*) else ordered.write
-    writer.mode("errorifexists").parquet(dir.toString)
-    val lines = DeltaWriter.listDataFiles(fs, dir).map { st =>
-      val rel = DeltaWriter.relativize(table, st.getPath)
-      val pv = DeltaWriter.jsonMap(DeltaWriter.hivePartitionValues(rel, diskPartitionBy))
-      s"""{"cdc":{"path":${DeltaWriter.q(DeltaActions.encodePath(rel))},"partitionValues":$pv,"size":${st.getLen},"dataChange":false}}"""
+    val lines = DataFiles.write(ordered, table, dir, diskPartitionBy).map { w =>
+      val pv = DeltaWriter.jsonMap(DeltaWriter.hivePartitionValues(w.path, diskPartitionBy))
+      s"""{"cdc":{"path":${DeltaWriter.q(DeltaActions.encodePath(w.path))},"partitionValues":$pv,"size":${w.size},"dataChange":false}}"""
     }
-    (lines, dir)
+    (lines, new Path(table, dir))
   }
 
   /** Action metadata the reader needs per commit (cdc is absent from the

@@ -416,19 +416,13 @@ object DeltaSnapshotReader {
     * checkpoint shares a schema. */
   private def readCheckpointParquet(spark: SparkSession, files: Seq[Path],
                                     schemaFrom: FileStatus): DataFrame = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromStatus(schemaFrom, spark.sessionState.newHadoopConf()))
-    val schema = try {
-      val meta = reader.getFooter.getFileMetaData
-      // Spark-written files carry their exact Spark schema in the footer;
-      // inference prefers it over the parquet types, and so do we
-      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
-    } finally reader.close()
+    val meta = DataFiles.readFooter(schemaFrom, spark.sessionState.newHadoopConf()).getFileMetaData
+    // Spark-written files carry their exact Spark schema in the footer;
+    // inference prefers it over the parquet types, and so do we
+    val schema = Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
     spark.read.schema(schema).parquet(files.map(_.toString): _*)
   }
 

@@ -14,7 +14,10 @@ import java.util.UUID
   * sink, (b) to author the log fixtures the reader is tested against
   * (FIXTURES.md "Delta-log fixtures"). Data files land under a
   * commit-unique subdirectory first, so losing a version race never
-  * collides on paths and a retry only rewrites the log entry.
+  * collides on paths and a retry only rewrites the log entry. The adds
+  * are built from what the write tasks report of their files
+  * ([[DataFiles.write]]); a file a failed task attempt leaves behind is in
+  * no commit, and only VACUUM removes it.
   *
   * Every commit runs through one transaction path ([[transact]], the shape
   * of delta-spark's OptimisticTransaction): per attempt it renders
@@ -168,23 +171,13 @@ object DeltaWriter {
       case Some(snap) => ColumnMapping.renameToPhysical(data, snap.schema, snap.physicalSchema.get)
       case None => data
     }
-    val writer =
-      if (diskPartitionBy.nonEmpty) diskData.write.partitionBy(diskPartitionBy: _*) else diskData.write
-    writer.mode("errorifexists").parquet(new Path(table, commitDir).toString)
     val dataSchema = mapped match {
       case Some(snap) => snap.physicalDataSchema
       case None => org.apache.spark.sql.types.StructType(
         data.schema.filterNot(f => partitionBy.contains(f.name)))
     }
-    val statsByPath = computeStats(spark, new Path(table, commitDir), dataSchema,
-      priorForPrep.map(_.configuration).getOrElse(Map.empty))
-    val adds = listDataFiles(fs, new Path(table, commitDir)).map { st =>
-      // log form is percent-encoded per the spec; partition values parse
-      // from the RAW on-disk segments
-      val rel = relativize(table, st.getPath)
-      AddFile(encodePath(rel), hivePartitionValues(rel, diskPartitionBy), st.getLen,
-        st.getModificationTime, statsByPath.get(st.getPath.toUri.getPath))
-    }
+    val adds = DataFiles.write(diskData, table, commitDir, diskPartitionBy, Some(DataFiles.statColumns(
+      dataSchema, priorForPrep.map(_.configuration).getOrElse(Map.empty)))).map(_.toAdd(diskPartitionBy))
 
     // Optimistic concurrency, re-render rule: a losing attempt re-resolves
     // the latest snapshot and renders again, re-running every validation
@@ -443,7 +436,6 @@ object DeltaWriter {
     if (rewrites.isEmpty) return None
 
     val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     // commit-unique output dir: racing processes must never collide on paths
     val commitDir = s"v${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
     // raw physical-to-physical rewrite: on a mapped table the files are
@@ -463,7 +455,6 @@ object DeltaWriter {
     // sequential submit→run→collect round-trips; Spark's scheduler
     // interleaves the per-bin jobs across executors.
     def rewriteBin(pv: Map[String, String], files: Seq[AddFile], i: Int): AddFile = {
-      val out = new Path(table, s"$commitDir/bin-$i")
       // DV purge: masked rows of the bin's inputs are dropped at read
       // time (same per-row bitmap filter as the read path's applyToScan,
       // scoped to the bin's own descriptors) — the rewrite then carries
@@ -523,16 +514,12 @@ object DeltaWriter {
             .withColumnRenamed("__rid", matId)
             .withColumnRenamed("__rver", matVer)
         }
-      bin.coalesce(1).write.parquet(out.toString)
-      val st = listDataFiles(fs, out).head
-      // a DV purge changes the row set, so merged input stats would
-      // overstate numRecords (stats-only COUNT would then overcount the
-      // compacted table); recompute from the written output instead
-      val stats =
-        if (dvDescs.isEmpty) mergeStats(files)
-        else computeStats(spark, out, dataSchema, snap.configuration).get(st.getPath.toUri.getPath)
-      physical(snap, AddFile(encodePath(relativize(table, st.getPath)), pv,
-        st.getLen, st.getModificationTime, stats))
+      // stats of the written file itself, read by its write task: exact
+      // after a DV purge too, where the inputs' stats would overstate
+      // numRecords (stats-only COUNT would then overcount)
+      val out = DataFiles.write(bin.coalesce(1), table, s"$commitDir/bin-$i",
+        statCols = Some(DataFiles.statColumns(dataSchema, snap.configuration))).head
+      physical(snap, out.toAdd(Nil).copy(partitionValues = pv))
     }
     if (tracked) graft.functions.PathNorm.register(spark) // once, pre-pool
     val maxThreads = math.max(1, spark.conf
@@ -826,30 +813,24 @@ object DeltaWriter {
     val dataSchema = org.apache.spark.sql.types.StructType(
       df.schema.fields.filterNot(f => partitionColumns.contains(f.name)))
     val stats: Map[String, String] =
-      if (collectStats) computeStats(spark, table, dataSchema) else Map.empty
-    val raw = fs.listFiles(table, true)
-    val addLines = Iterator.continually(()).takeWhile(_ => raw.hasNext)
-      .map(_ => raw.next())
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map { st =>
-        val rel = relativize(table, st.getPath)
-        // every k=v directory segment must be a DECLARED partition column:
-        // silently treating one as a data column would read as all-null
-        // (the files physically lack it) — corruption, not a conversion
-        val dirKeys = rel.split('/').iterator
-          .filter(_.contains('=')).map(_.split("=", 2)(0)).toSet
-        val undeclared = dirKeys -- partitionColumns.toSet
-        require(undeclared.isEmpty,
-          s"$dir has hive partition dir(s) for undeclared column(s) " +
-            s"${undeclared.toSeq.sorted.mkString(", ")} (in $rel) — pass them " +
-            "as partitionColumns")
-        addLine(AddFile(encodePath(rel), hivePartitionValues(rel, partitionColumns),
-          st.getLen, st.getModificationTime, stats.get(st.getPath.toUri.getPath)),
-          dataChange = true)
-      }
+      if (collectStats) DataFiles.listedStats(spark, table, DataFiles.statColumns(dataSchema, Map.empty))
+      else Map.empty
+    val addLines = DataFiles.listDataFiles(fs, table).map { st =>
+      val rel = relativize(table, st.getPath)
+      // every k=v directory segment must be a DECLARED partition column:
+      // silently treating one as a data column would read as all-null
+      // (the files physically lack it) — corruption, not a conversion
+      val dirKeys = rel.split('/').iterator
+        .filter(_.contains('=')).map(_.split("=", 2)(0)).toSet
+      val undeclared = dirKeys -- partitionColumns.toSet
+      require(undeclared.isEmpty,
+        s"$dir has hive partition dir(s) for undeclared column(s) " +
+          s"${undeclared.toSeq.sorted.mkString(", ")} (in $rel) — pass them " +
+          "as partitionColumns")
+      addLine(AddFile(encodePath(rel), hivePartitionValues(rel, partitionColumns),
+        st.getLen, st.getModificationTime, stats.get(st.getPath.toUri.getPath)),
+        dataChange = true)
+    }
     transact(spark, dir, None, "CONVERT",
         Map("source" -> "parquet", "partitionedBy" -> partitionColumns.mkString(",")),
         Surface, tail = Some(() => addLines)) { _ =>
@@ -1778,12 +1759,11 @@ object DeltaWriter {
       }
     }
     val table = new Path(snap.tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     val adds = newData.toSeq.flatMap { d =>
       // commit-unique data directory: two processes racing rewrites at the
       // same version must never collide on file paths (the append path's
       // c-<uuid> rule); the version prefix is debugging sugar only
-      val commitDir = new Path(table, s"v${snap.version + 1}-${UUID.randomUUID().toString.take(8)}")
+      val commitDir = s"v${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
       // disk form is physical on column-mapped tables (parquet names, hive
       // dirs, stats keys, partitionValues keys); the rewrite itself is logical
       val diskPartitionBy = snap.partitionColumns.map(snap.physicalFieldName)
@@ -1795,15 +1775,8 @@ object DeltaWriter {
         case None => d.select(snap.schema.map(f => col(f.name)) ++
           extraDataCols.map(c => col(s"`$c`")): _*)
       }
-      val writer =
-        if (diskPartitionBy.nonEmpty) ordered.write.partitionBy(diskPartitionBy: _*) else ordered.write
-      writer.mode("errorifexists").parquet(commitDir.toString)
-      val statsByPath = computeStats(spark, commitDir, snap.physicalDataSchema, snap.configuration)
-      listDataFiles(fs, commitDir).map { st =>
-        val rel = relativize(table, st.getPath)
-        AddFile(encodePath(rel), hivePartitionValues(rel, diskPartitionBy), st.getLen,
-          st.getModificationTime, statsByPath.get(st.getPath.toUri.getPath))
-      }
+      DataFiles.write(ordered, table, commitDir, diskPartitionBy,
+        Some(DataFiles.statColumns(snap.physicalDataSchema, snap.configuration))).map(_.toAdd(diskPartitionBy))
     }
     // whole-table rewrites (full ZORDER, BY SOURCE clause MERGE): the
     // remove set IS the active file set — its lines are rendered on
@@ -1838,7 +1811,7 @@ object DeltaWriter {
           IdentityColumns.withWatermarks(cur.schema, identityMarks).json,
           cur.partitionColumns, cur.configuration)
       if (dataChange && ChangeDataFeed.isEnabled(cur.configuration))
-        lines ++= a.changeFiles(spark, changeData.getOrElse(throw DeltaUnsupportedFeatureException(
+        lines ++= a.changeFiles(changeData.getOrElse(throw DeltaUnsupportedFeatureException(
           "changeDataFeed",
           s"$operation on ${snap.tablePath}: CDF table, but the rewrite derived no change rows")))
       val now = System.currentTimeMillis()
@@ -1887,53 +1860,6 @@ object DeltaWriter {
       }
   }
 
-  /** Union of the compacted inputs' stats: min of mins, max of maxs,
-    * summed record counts — valid (conservative) for the merged file. */
-  private def mergeStats(files: Seq[AddFile]): Option[String] = {
-    val parsed = files.flatMap(_.stats.flatMap(DataSkipping.parse))
-    if (parsed.size != files.size) return None // any input without stats → none
-    val n = parsed.flatMap(_.numRecords)
-    val cols = parsed.flatMap(_.mins.keys).distinct
-    def pick(maps: Seq[Map[String, Any]], takeMax: Boolean): Map[String, Any] =
-      cols.flatMap { c =>
-        val vs = maps.flatMap(_.get(c))
-        if (vs.size != maps.size) None
-        else Some(c -> vs.reduce { (a, b) =>
-          val cmpRes = (a, b) match {
-            case (x: BigDecimal, y: BigDecimal) => x.compare(y)
-            // UTF-8 binary order — same order Spark min/max used to produce
-            // the input stats (String.compareTo diverges on supplementary
-            // chars and could persist non-conservative merged bounds)
-            case (x: String, y: String) =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(x)
-                .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
-            case _ => 0
-          }
-          if ((cmpRes >= 0) == takeMax) a else b
-        })
-      }.toMap
-    def render(m: Map[String, Any]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) =>
-        val jv = v match {
-          case s: String => q(s)
-          case d: BigDecimal => d.bigDecimal.toPlainString
-          case other => other.toString
-        }
-        s"${q(k)}:$jv"
-      }.mkString("{", ",", "}")
-    if (n.size != parsed.size) None
-    else {
-      // merged nullCount: sum, for columns every input reports
-      val nullCols = parsed.flatMap(_.nulls.keys).distinct
-      val nulls = nullCols.flatMap { c =>
-        val vs = parsed.map(_.nulls.get(c))
-        if (vs.exists(_.isEmpty)) None else Some(c -> vs.flatten.sum)
-      }
-      val nullsJson = nulls.sortBy(_._1).map { case (c, v) => s"${q(c)}:$v" }.mkString("{", ",", "}")
-      Some(s"""{"numRecords":${n.sum},"minValues":${render(pick(parsed.map(_.mins), takeMax = false))},"maxValues":${render(pick(parsed.map(_.maxs), takeMax = true))},"nullCount":$nullsJson}""")
-    }
-  }
-
   /** VACUUM: physically delete data files that are no longer part of the
     * current snapshot and are older than `retentionMs` (default: the
     * protocol's 1-week `delta.deletedFileRetentionDuration`). The retention
@@ -1951,7 +1877,7 @@ object DeltaWriter {
     // from the paged iterator — the driver never holds the raw path array
     val active = snap.fileSet.pathsIterator.map(decodePath).toSet
     val horizon = System.currentTimeMillis() - retentionMs
-    val deletable = listDataFiles(fs, table).filter { st =>
+    val deletable = DataFiles.listDataFiles(fs, table).toSeq.filter { st =>
       val rel = relativize(table, st.getPath)
       // metadata/ is the UniForm (Iceberg) export dir: its parquet files
       // are position-delete files referenced by Iceberg manifests, never
@@ -2278,19 +2204,10 @@ object DeltaWriter {
       .map { case (lf, pf) => lf.name -> pf.name }.toMap
     val diskPartitionBy = partitionBy.map(physByLogical)
     val diskData = ColumnMapping.renameToPhysical(df, mapped, physicalSchema)
-    val commitDir = s"c-${UUID.randomUUID()}"
-    val writer =
-      if (diskPartitionBy.nonEmpty) diskData.write.partitionBy(diskPartitionBy: _*)
-      else diskData.write
-    writer.mode("errorifexists").parquet(new Path(table, commitDir).toString)
     val physDataSchema = StructType(
       physicalSchema.fields.filterNot(f => diskPartitionBy.contains(f.name)))
-    val statsByPath = computeStats(spark, new Path(table, commitDir), physDataSchema)
-    val adds = listDataFiles(fs, new Path(table, commitDir)).map { st =>
-      val rel = relativize(table, st.getPath)
-      AddFile(encodePath(rel), hivePartitionValues(rel, diskPartitionBy), st.getLen,
-        st.getModificationTime, statsByPath.get(st.getPath.toUri.getPath))
-    }
+    val adds = DataFiles.write(diskData, table, s"c-${UUID.randomUUID()}", diskPartitionBy,
+      Some(DataFiles.statColumns(physDataSchema, Map.empty))).map(_.toAdd(diskPartitionBy))
     transact(spark, tablePath, None, "CREATE TABLE", Map("columnMapping.mode" -> mode), Surface) { _ =>
       Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
         metaDataJson(None, mapped.json, partitionBy,
@@ -2383,21 +2300,14 @@ object DeltaWriter {
     val snap = DeltaSnapshotReader.snapshot(spark, tablePath)
     assertWritable(snap, "COMPUTE STATISTICS")
     val root = snap.qualifiedTableRoot
-    import org.apache.spark.sql.types._
-    val statCols: Seq[(String, DataType)] =
-      snap.physicalDataSchema.fields.toSeq.take(statsIndexLimit(snap.configuration))
-        .collect {
-          case f if f.dataType == StringType || f.dataType == DateType ||
-            (f.dataType.isInstanceOf[NumericType] &&
-              !f.dataType.isInstanceOf[DecimalType]) => f.name -> f.dataType
-        }
+    val statCols = DataFiles.statColumns(snap.physicalDataSchema, snap.configuration)
     val keys = physicalKeys(snap)
     val bcConf = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val addLines = snap.fileSet.df.rdd.map(DeltaFileSet.decode).map { f =>
       val abs = DeltaActions.normAbsolute(root, f.path)
       addLine(withKeys(f, keys).copy(
-        stats = footerStatsJson(abs, bcConf.value.value, statCols).orElse(f.stats)),
+        stats = DataFiles.footerStatsJson(new Path(abs), bcConf.value.value, statCols).orElse(f.stats)),
         dataChange = false)
     }
     transact(spark, tablePath, Some(snap), "COMPUTE STATS", Map.empty, Surface,
@@ -2899,21 +2809,19 @@ object DeltaWriter {
   /** Write `df` as parquet into a temporary directory under `logDir`, then
     * move its part files, in part order, to `target(i, n)` (part i of n)
     * and drop the directory. `parts`, when given, is the part count the
-    * write must produce. Returns the moved files. */
+    * write must produce. Returns the moved files with what their write
+    * tasks reported of them. */
   private def writeParts(fs: FileSystem, logDir: Path, df: DataFrame, parts: Option[Int] = None)
-                        (target: (Int, Int) => Path): Seq[Path] = {
-    val tmp = new Path(logDir, s".cp-tmp-${UUID.randomUUID()}")
-    df.write.parquet(tmp.toString)
-    val written = fs.listStatus(tmp).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .sortBy(_.getName).toSeq
+                        (target: (Int, Int) => Path): Seq[(Path, DataFiles.Written)] = {
+    val tmp = s".cp-tmp-${UUID.randomUUID()}"
+    val written = DataFiles.write(df, logDir, tmp)
     parts.foreach(n => require(written.length == n, s"expected $n checkpoint parts, wrote ${written.length}"))
-    val moved = written.zipWithIndex.map { case (p, i) =>
+    val moved = written.zipWithIndex.map { case (w, i) =>
       val to = target(i, written.length)
-      fs.rename(p, to)
-      to
+      fs.rename(new Path(logDir, w.path), to)
+      to -> w
     }
-    fs.delete(tmp, true)
+    fs.delete(new Path(logDir, tmp), true)
     moved
   }
 
@@ -2980,9 +2888,8 @@ object DeltaWriter {
     def v2Row(action: Row, sidecar: Row, cpMeta: Row) = Row.fromSeq(action.toSeq ++ Seq(sidecar, cpMeta))
     val none = Row.fromSeq(actionSchema.map(_ => null))
     val mainRows = v2Row(none, null, Row(snap.version, Map.empty[String, String])) +:
-      (state.heads.map(v2Row(_, null, null)) ++ sidecars.map { p =>
-        val st = fs.getFileStatus(p)
-        v2Row(none, Row(p.getName, st.getLen, st.getModificationTime), null)
+      (state.heads.map(v2Row(_, null, null)) ++ sidecars.map { case (p, w) =>
+        v2Row(none, Row(p.getName, w.size, w.modificationTime), null)
       })
     writeParts(fs, logDir, spark.createDataFrame(mainRows.asJava, v2CheckpointFileSchema).coalesce(1)) {
       (_, _) => new Path(logDir, LogListing.v2CheckpointName(snap.version, uuid))
@@ -2993,158 +2900,6 @@ object DeltaWriter {
   }
 
   // ------------------------------------------------------------------
-
-  /** Per-file column statistics for data skipping (protocol `stats` field):
-    * numRecords + min/max of every non-decimal numeric/string leaf column,
-    * keyed by absolute file path.
-    *
-    * Read from the parquet FOOTERS (row-group statistics the write already
-    * produced), not by re-scanning the data — stats collection is metadata
-    * cost, not a second full pass over the commit. At 100 TB a commit's
-    * footers are KBs per file; the footer reads are distributed (one task
-    * per batch of files). Parquet's binary stats use unsigned-byte order =
-    * Spark's UTF8String order, and truncated stats stay conservative
-    * bounds, so skipping correctness is preserved. Columns with unreliable
-    * stats (NaN/Inf, all-null row groups, decimals, missing chunks) are
-    * omitted — [[DataSkipping]] treats absence as "cannot disprove". */
-  /** Stats-indexed column budget: `delta.dataSkippingNumIndexedCols`
-    * (delta-spark's knob, default 32; negative = all). At 100 TB a WIDE
-    * schema — the multimodal corpus shape — would otherwise pay per-file
-    * min/max JSON for every column, bloating the log linearly in width;
-    * stats stop after the first N schema-order columns, and every reader
-    * of per-column stats is already conservative about absence. */
-  private def statsIndexLimit(config: Map[String, String]): Int =
-    config.get("delta.dataSkippingNumIndexedCols").map(_.trim.toInt) match {
-      case Some(n) if n < 0 => Int.MaxValue
-      case Some(n) => n
-      case None => 32
-    }
-
-  private def computeStats(spark: SparkSession, commitDir: Path,
-                           dataSchema: org.apache.spark.sql.types.StructType,
-                           config: Map[String, String] = Map.empty): Map[String, String] = {
-    import org.apache.spark.sql.types._
-    val statCols: Seq[(String, DataType)] =
-      dataSchema.fields.toSeq.take(statsIndexLimit(config)).collect {
-        case f if f.dataType == StringType || f.dataType == DateType ||
-          (f.dataType.isInstanceOf[NumericType] &&
-            !f.dataType.isInstanceOf[DecimalType]) => f.name -> f.dataType
-      }
-    val fs = commitDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val paths = listDataFiles(fs, commitDir).map(_.getPath.toString)
-    if (paths.isEmpty) return Map.empty
-    // Small commits read their footers on the driver (footer-only reads,
-    // KBs each, bounded by the gate) — a full Spark job launch per commit
-    // was pure fixed overhead for the common few-file commit. Large
-    // commits (a bulk append landing thousands of files — the 100 TB
-    // ingest shape) keep the distributed pass.
-    val driverMax = spark.conf.getOption("spark.graft.delta.driverStatsMaxFiles")
-      .map(_.toInt).getOrElse(32)
-    if (paths.size <= driverMax) {
-      val conf = spark.sessionState.newHadoopConf()
-      return paths.flatMap(p => footerStatsJson(p, conf, statCols)
-        .map(new Path(p).toUri.getPath -> _)).toMap
-    }
-    val bcConf = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    spark.sparkContext
-      .parallelize(paths, math.max(1, math.min(paths.size, 32)))
-      .map(p => p -> footerStatsJson(p, bcConf.value.value, statCols))
-      .collect()
-      .collect { case (p, Some(json)) => new Path(p).toUri.getPath -> json }
-      .toMap
-  }
-
-  /** One file's Delta stats JSON from its parquet footer; None if the
-    * footer is unreadable. */
-  private def footerStatsJson(
-      pathStr: String, conf: org.apache.hadoop.conf.Configuration,
-      statCols: Seq[(String, org.apache.spark.sql.types.DataType)]): Option[String] =
-    scala.util.Try {
-      import org.apache.spark.sql.types._
-      import scala.jdk.CollectionConverters._
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(pathStr), conf))
-      try {
-        val groups = reader.getFooter.getBlocks.asScala.toSeq
-        val numRecords = groups.map(_.getRowCount).sum
-        // per-column null counts (protocol `nullCount`): valid only when
-        // every row group reports one (getNumNulls < 0 = unknown)
-        val nullCounts: Seq[(String, Long)] = statCols.flatMap { case (name, _) =>
-          val chunks = groups.map(_.getColumns.asScala.find(_.getPath.toDotString == name))
-          if (groups.isEmpty || chunks.exists(_.isEmpty)) None
-          else {
-            val ns = chunks.map(_.get.getStatistics).map(s => if (s == null) -1L else s.getNumNulls)
-            if (ns.exists(_ < 0)) None else Some(name -> ns.sum)
-          }
-        }
-        def finite(v: Any): Boolean = v match {
-          case f: java.lang.Float => !f.isNaN && !f.isInfinite
-          case d: java.lang.Double => !d.isNaN && !d.isInfinite
-          case _ => true
-        }
-        val bounds: Seq[(String, String, String)] = statCols.flatMap { case (name, dt) =>
-          val chunks = groups.map(_.getColumns.asScala.find(_.getPath.toDotString == name))
-          // every row group must carry usable stats for the bound to be valid
-          if (groups.isEmpty || chunks.exists(_.isEmpty)) None
-          else {
-            val stats = chunks.map(_.get.getStatistics)
-            if (stats.exists(s => s == null || !s.hasNonNullValue)) None
-            else {
-              val mins = stats.map(_.genericGetMin())
-              val maxs = stats.map(_.genericGetMax())
-              if (!(mins ++ maxs).forall(finite)) None
-              else dt match {
-                case StringType =>
-                  val sMin = mins.map(_.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-                    .reduce((a, b) => if (utf8Cmp(a, b) <= 0) a else b)
-                  val sMax = maxs.map(_.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-                    .reduce((a, b) => if (utf8Cmp(a, b) >= 0) a else b)
-                  Some((name, q(sMin), q(sMax)))
-                case FloatType =>
-                  val vs = (mins ++ maxs).map(_.asInstanceOf[java.lang.Float].floatValue)
-                  Some((name, vs.min.toString, vs.max.toString))
-                case DoubleType =>
-                  val vs = (mins ++ maxs).map(_.asInstanceOf[java.lang.Double].doubleValue)
-                  Some((name, vs.min.toString, vs.max.toString))
-                case DateType =>
-                  // parquet DATE = INT32 days since epoch; the protocol
-                  // renders date stats as ISO "YYYY-MM-DD" strings, which
-                  // order lexicographically == chronologically — but ONLY
-                  // for years 0000-9999, so out-of-range dates emit no stats
-                  val ds = (mins ++ maxs).map(_.asInstanceOf[Number].intValue)
-                  val (dMin, dMax) = (ds.min, ds.max)
-                  if (dMin < DateStats.MinEpochDay || dMax > DateStats.MaxEpochDay) None
-                  else Some((name, q(DateStats.render(dMin)), q(DateStats.render(dMax))))
-                case _ => // byte/short/int/long ride on INT32/INT64 stats
-                  val vs = (mins ++ maxs).map(_.asInstanceOf[Number].longValue)
-                  Some((name, vs.min.toString, vs.max.toString))
-              }
-            }
-          }
-        }
-        val minsJson = bounds.map { case (n, mn, _) => s"${q(n)}:$mn" }.mkString("{", ",", "}")
-        val maxsJson = bounds.map { case (n, _, mx) => s"${q(n)}:$mx" }.mkString("{", ",", "}")
-        val nullsJson = nullCounts.map { case (n, c) => s"${q(n)}:$c" }.mkString("{", ",", "}")
-        s"""{"numRecords":$numRecords,"minValues":$minsJson,"maxValues":$maxsJson,"nullCount":$nullsJson}"""
-      } finally reader.close()
-    }.toOption
-
-  private def utf8Cmp(a: String, b: String): Int =
-    org.apache.spark.unsafe.types.UTF8String.fromString(a)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-
-  private[delta] def listDataFiles(fs: FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val it = fs.listFiles(dir, true)
-    val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        out += st
-    }
-    out.result()
-  }
 
   private[delta] def relativize(table: Path, file: Path): String = {
     val t = table.toUri.getPath.stripSuffix("/")
@@ -3370,8 +3125,8 @@ object DeltaWriter {
 
     /** Change-data files of `changes` for this attempt, as `cdc` lines;
       * [[transact]] deletes them again if the attempt loses. */
-    def changeFiles(spark: SparkSession, changes: DataFrame): Seq[String] = {
-      val (lines, dir) = ChangeDataFeed.writeChangeFiles(spark, snap, version, changes)
+    def changeFiles(changes: DataFrame): Seq[String] = {
+      val (lines, dir) = ChangeDataFeed.writeChangeFiles(snap, version, changes)
       changeDirs ::= dir
       lines
     }

@@ -90,3 +90,30 @@ object InternalRows {
                   rows: RDD[org.apache.spark.sql.catalyst.InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }
+
+/** Parquet writes through Spark's `FileFormatWriter` with a caller's
+  * `FileCommitProtocol`, the call delta-spark's `TransactionalWrite` makes:
+  * `df.write.parquet` runs the same writer under Hadoop's staging
+  * `FileOutputCommitter`. Partition columns are checked as
+  * `DataFrameWriter.partitionBy` checks them. */
+object FileWrites {
+
+  def write(df: DataFrame, outputPath: String, partitionColumns: Seq[String],
+            committer: org.apache.spark.internal.io.FileCommitProtocol): Unit = {
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.{FileFormatWriter, PartitioningUtils}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val spark = ds.sparkSession
+    val conf = spark.sessionState.conf
+    PartitioningUtils.validatePartitionColumn(ds.schema, partitionColumns, conf.caseSensitiveAnalysis)
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("write data files")) {
+      val plan = qe.executedPlan
+      val partitionAttrs = partitionColumns.map(c => plan.output.find(a => conf.resolver(a.name, c)).get)
+      FileFormatWriter.write(spark, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(outputPath, Map.empty, plan.output),
+        spark.sessionState.newHadoopConf(), partitionAttrs, None, Nil, Map.empty)
+    }
+  }
+}

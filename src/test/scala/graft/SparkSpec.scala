@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4]")
+      // 2 attempts per task, as a cluster retries: a failed write-task
+      // attempt must leave nothing a commit references (DataFileWriteSpec)
+      .master("local[4,2]")
       .appName("graft-test")
       // the production session shape: native functions + the Delta SQL-DML
       // parser ride the extensions point (SqlDmlSpec exercises spark.sql)
