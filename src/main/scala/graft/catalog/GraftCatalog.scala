@@ -1,6 +1,6 @@
 package graft.catalog
 
-import graft.delta.{DeltaSnapshotReader, DeltaUnsupportedFeatureException, DeltaWriter, GraftDeltaSource, GraftDeltaTable}
+import graft.delta.{DeltaSnapshotReader, DeltaWriter, GraftDeltaTable}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
@@ -25,9 +25,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * Discovery mirrors [[PathCatalog.listTables]]: `<root>/<name>/` with a
-  * `_delta_log` is a Delta table (served by the engine's own
-  * [[GraftDeltaTable]] scan — log-level partition pruning, stats skipping,
-  * parquet pushdown), `<root>/<name>.parquet` is a parquet table (served by
+  * `_delta_log` is a Delta table (a [[GraftDeltaTable]]; with
+  * [[graft.functions.GraftExtensions]] every read of it is planned by
+  * [[graft.delta.DeltaFileIndex.relation]], the engine's one Delta scan —
+  * log-level partition pruning, stats skipping, parquet pushdown,
+  * deletion vectors, column mapping), `<root>/<name>.parquet` is a parquet table (served by
   * Spark's stock v2 `ParquetTable`). One flat `default` namespace — the
   * root IS the schema, exactly the reference's one-bucket=one-schema model.
   *
@@ -120,11 +122,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
       // — a no-op for tables without an owner registry
       graft.delta.CatalogCommitOwner.recoverTable(deltaDir.toString)
       val snap = DeltaSnapshotReader.snapshotAt(spark, deltaDir.toString, versionAsOf)
-      // mapped/DV tables resolve normally: the analyzer-time engine-read
-      // substitution (GraftDeltaEngineReadRule, injected by
-      // graft.functions.GraftExtensions) serves their scans; without the
-      // extensions the table refuses at newScanBuilder, not here — so
-      // DESCRIBE/SHOW TBLPROPERTIES/INSERT still work either way
       new GraftDeltaTable(spark, snap, writable = versionAsOf.isEmpty)
     } else if (fs.exists(parquetFile)) {
       if (versionAsOf.isDefined)

@@ -41,11 +41,12 @@ final class PathCatalog(spark: SparkSession, root: String) {
     * so `spark.sql("… FROM $db.<name> …")` resolves with no temp views —
     * the engine analog of Athena's registered data source (reference
     * README.md:34-38). Parquet tables register `USING parquet`; Delta
-    * tables register `USING graftdelta` ([[graft.delta.GraftDeltaSource]]
-    * is a RelationProvider returning the native [[graft.delta.DeltaFileIndex]]
-    * relation, so catalog-resolved queries keep log-level partition pruning,
-    * stats skipping, and parquet pushdown — the same mechanism delta-spark
-    * uses for its own `USING delta` tables). Idempotent per session. */
+    * tables register `USING graftdelta` ([[graft.delta.GraftDeltaSource]]).
+    * Each query over a Delta table reads its latest version, planned by
+    * [[graft.delta.DeltaFileIndex.relation]] when the session has
+    * [[graft.functions.GraftExtensions]]: log-level partition pruning,
+    * stats skipping and parquet pushdown, as delta-spark's own
+    * `USING delta` tables have. Idempotent per session. */
   def registerAll(db: String = "graft"): Unit = {
     ensureDatabase(db)
     // events.ts drifts between physical TIMESTAMP(NANOS) and

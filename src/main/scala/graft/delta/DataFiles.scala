@@ -209,18 +209,16 @@ object DataFiles {
     org.apache.spark.unsafe.types.UTF8String.fromString(a)
       .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
 
-  /** Stats of the parquet files already under `dir` — for CONVERT TO
-    * DELTA, whose files no write of this engine produced — keyed by
-    * absolute file path. Up to `spark.graft.delta.driverStatsMaxFiles`
-    * files (default 32) the footers are read on the driver; more take one
-    * distributed pass (one task per batch of files). CONVERT is the one
-    * caller; `recomputeStats` reads its footers on executors whatever the
-    * file count, and data-writing commits take stats from their write
-    * tasks ([[write]]). */
-  def listedStats(spark: SparkSession, dir: Path,
+  /** Stats of parquet files listed by the caller — for CONVERT TO DELTA,
+    * whose files no write of this engine produced — keyed by absolute file
+    * path. Up to `spark.graft.delta.driverStatsMaxFiles` files (default
+    * 32) the footers are read on the driver; more take one distributed
+    * pass (one task per batch of files). CONVERT is the one caller;
+    * `recomputeStats` reads its footers on executors whatever the file
+    * count, and data-writing commits take stats from their write tasks
+    * ([[write]]). */
+  def listedStats(spark: SparkSession, files: Seq[FileStatus],
                   statCols: Seq[(String, DataType)]): Map[String, String] = {
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = listDataFiles(fs, dir).toSeq
     val driverMax = spark.conf.getOption("spark.graft.delta.driverStatsMaxFiles")
       .map(_.toInt).getOrElse(32)
     val stats: Seq[(String, Option[String])] =

@@ -37,7 +37,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * after a write costs only the query's 2. */
 final class DeltaFileIndex(
     spark: SparkSession,
-    @volatile private var snap: DeltaSnapshot) extends FileIndex {
+    snap: DeltaSnapshot) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(new Path(snap.tablePath))
 
@@ -191,7 +191,9 @@ final class DeltaFileIndex(
       }.toArray
     }
 
-  override def refresh(): Unit = snap = DeltaSnapshotReader.snapshot(spark, snap.tablePath)
+  /** An index is one snapshot's: every read resolves its snapshot when it
+    * is planned, so there is nothing to refresh (as delta-spark's index). */
+  override def refresh(): Unit = ()
 
   override def sizeInBytes: Long = snap.fileSet.totalBytes
 }

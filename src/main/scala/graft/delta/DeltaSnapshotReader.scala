@@ -462,7 +462,10 @@ object DeltaSnapshotReader {
     * ([[DeltaFileIndex]] inside a HadoopFsRelation): partition values are
     * injected from the log by the scan (reference A10), partition filters
     * prune at the log level via `PruneFileSourcePartitions` (A6), data
-    * filters push to parquet row groups, and the read is vectorized. */
+    * filters push to parquet row groups, and the read is vectorized.
+    * `load` resolves the snapshot, which lists `_delta_log`; a caller that
+    * already holds a snapshot reads it with
+    * `DeltaFileIndex.relation(spark, snap)`, which lists nothing more. */
   def load(spark: SparkSession, tablePath: String, versionAsOf: Option[Long] = None): DataFrame =
     DeltaFileIndex.relation(spark, snapshotAt(spark, tablePath, versionAsOf))
 

@@ -1,6 +1,6 @@
 package graft.delta
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -795,9 +795,11 @@ object DeltaWriter {
     * inference; per-file min/max/nullCount stats are read from footers in
     * one distributed pass (`collectStats = false` skips it for a quick
     * conversion of a huge table — the cost is only data-skipping
-    * effectiveness). The file listing STREAMS through the commit writer
+    * effectiveness). The table tree is listed once. With stats on, the
+    * footer pass needs the whole list, so it is held on the driver; with
+    * `collectStats = false` the listing STREAMS through the commit writer
     * (one `RemoteIterator` element at a time), so converting a 10M-file
-    * table never materializes the list on the driver. */
+    * table never materializes the list. */
   def convertToDelta(spark: SparkSession, dir: String,
                      partitionColumns: Seq[String] = Nil,
                      collectStats: Boolean = true): Long = synchronized {
@@ -812,10 +814,13 @@ object DeltaWriter {
       s"partition column $c not found (inferred: ${df.schema.simpleString})"))
     val dataSchema = org.apache.spark.sql.types.StructType(
       df.schema.fields.filterNot(f => partitionColumns.contains(f.name)))
-    val stats: Map[String, String] =
-      if (collectStats) DataFiles.listedStats(spark, table, DataFiles.statColumns(dataSchema, Map.empty))
-      else Map.empty
-    val addLines = DataFiles.listDataFiles(fs, table).map { st =>
+    val (files, stats): (Iterator[FileStatus], Map[String, String]) =
+      if (!collectStats) (DataFiles.listDataFiles(fs, table), Map.empty)
+      else {
+        val listed = DataFiles.listDataFiles(fs, table).toSeq
+        (listed.iterator, DataFiles.listedStats(spark, listed, DataFiles.statColumns(dataSchema, Map.empty)))
+      }
+    val addLines = files.map { st =>
       val rel = relativize(table, st.getPath)
       // every k=v directory segment must be a DECLARED partition column:
       // silently treating one as a data column would read as all-null

@@ -1,8 +1,6 @@
 package graft.delta
 
 import org.apache.spark.sql.SQLContext
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.Source
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
@@ -13,9 +11,14 @@ import org.apache.spark.sql.types.StructType
   *   - `timestampAsOf`: time travel to the latest version committed at or
   *     before a `yyyy-MM-dd HH:mm:ss[.f...]` wall-clock timestamp.
   *
-  * Returns a relation over [[DeltaFileIndex]], so partition pruning /
-  * filter pushdown / vectorized scan are native (partition columns appear
-  * last, Spark's convention for partitioned sources).
+  * Returns [[GraftDeltaEngineRelation]]: the table path and the pinned
+  * version (None = latest, resolved at each analysis). With
+  * [[graft.functions.GraftExtensions]] the analyzer plans every read of it
+  * through [[DeltaFileIndex.relation]] ([[GraftDeltaEngineReadRule]]):
+  * partition pruning, stats skipping, parquet pushdown, deletion vectors
+  * and column mapping, columns in table-schema order. A bare session reads
+  * every live row through the relation's `TableScan`. A table registered
+  * `USING graftdelta` in the session catalog reads the same way.
   *
   * Also a streaming source: `spark.readStream.format("graftdelta")
   * .load(path)` tails the transaction log ([[DeltaStreamSource]]);
@@ -90,25 +93,9 @@ final class GraftDeltaSource extends RelationProvider with StreamSourceProvider
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String]): BaseRelation = {
     val spark = sqlContext.sparkSession
-    val path = parameters.getOrElse("path",
-      throw new IllegalArgumentException("graftdelta: 'path' option required"))
-    val version = GraftDeltaSource.resolveVersion(spark, path,
-      parameters.get("versionAsOf"), parameters.get("timestampAsOf"))
-    val snap = DeltaSnapshotReader.snapshotAt(spark, path, version)
-    // the plain HadoopFsRelation exposes ONE schema and no row masking, so
-    // column-mapped / DV-carrying snapshots return the engine-read marker:
-    // with GraftExtensions the analyzer substitutes the full engine plan
-    // (GraftDeltaEngineReadRule); bare sessions fall back to its TableScan
-    if (snap.physicalSchema.isDefined || snap.fileSet.hasDeletionVectors)
-      return GraftDeltaEngineRelation(spark, snap)
-    val index = new DeltaFileIndex(spark, snap)
-    HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema = index.dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
-      options = parameters)(spark)
+    val path = pathOf(parameters)
+    GraftDeltaEngineRelation(spark, path, GraftDeltaSource.resolveVersion(spark, path,
+      parameters.get("versionAsOf"), parameters.get("timestampAsOf")))
   }
 }
 

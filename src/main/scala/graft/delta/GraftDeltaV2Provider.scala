@@ -1,59 +1,30 @@
 package graft.delta
 
-import org.apache.parquet.hadoop.ParquetInputFormat
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
+import org.apache.spark.sql.{SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.connector.read.{ScanBuilder, V1Scan}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
-/** DataSource V2 read path for the from-scratch Delta reader:
-  * `spark.read.format("graftdelta2").load(path)`.
+/** DataSource V2 face of the from-scratch Delta reader:
+  * `spark.read.format("graftdelta2").load(path)`, and the table type
+  * [[graft.catalog.GraftCatalog]] loads.
   *
-  * The v1 `graftdelta` relation ([[GraftDeltaSource]]) proves pruning and
-  * pushdown through `HadoopFsRelation`; this provider expresses the same
-  * scan through the connector API the modern catalog integrations use —
-  * `TableProvider` → `Table` → `ScanBuilder` → `Scan`/`Batch` — with the
-  * three pushdowns explicit in the contract:
+  * [[GraftDeltaTable]] is the catalog surface only: schema, partitioning,
+  * properties, capabilities, time travel (`versionAsOf` / `timestampAsOf`,
+  * resolved as the v1 source resolves them) and the V1 write bridge. It
+  * plans no scan of its own. In a session with
+  * [[graft.functions.GraftExtensions]], [[GraftDeltaEngineReadRule]]
+  * replaces every read of it at analysis with [[DeltaFileIndex.relation]]
+  * over its snapshot, the one Delta scan plan: partition pruning, stats
+  * skipping, parquet pushdown, column pruning, deletion-vector masking and
+  * the column-mapping rename all happen there. In a bare session the scan
+  * is a `V1Scan` over [[GraftDeltaEngineRelation]], whose `TableScan` runs
+  * that same plan and returns every live row, without pushdown.
   *
-  *  - PARTITION PRUNING: partition-column predicates are consumed by the
-  *    scan (reference A6) — [[DeltaFileIndex.listFiles]] evaluates them
-  *    against the log's partition values, distributed above the driver
-  *    file-list threshold; pruned partitions never surface a split.
-  *  - FILTER PUSHDOWN: data predicates translate to parquet row-group
-  *    filters AND drive the log's min/max data skipping (reference A11 +
-  *    the stats layer); they stay post-scan residuals, as exactness
-  *    requires.
-  *  - COLUMN PRUNING: `pruneColumns` narrows the parquet read schema
-  *    (reference A9); partition values are injected from the log, never
-  *    read from data files (reference A10).
-  *
-  * Splits are Spark's own `FilePartition` packing over the pruned file set
-  * (reference A7), and the reader factory is the stock vectorized parquet
-  * one — columnar batches, whole-stage-codegen downstream.
-  *
-  * Column-mapped and DV-carrying tables are served by the analyzer-time
-  * engine-read substitution ([[GraftDeltaEngineReadRule]], injected by
-  * `graft.functions.GraftExtensions`) — the plain parquet factory here can
-  * neither rename physical columns nor drop deleted rows, so in a session
-  * WITHOUT the extensions such a table refuses at scan build rather than
-  * silently resurfacing deleted rows.
-  *
-  * Options: `versionAsOf` / `timestampAsOf` (time travel, shared
-  * resolution with v1). Batch read only — streaming stays on
-  * [[DeltaStreamSource]].
+  * Batch read only — streaming stays on [[DeltaStreamSource]].
   */
 final class GraftDeltaV2Provider extends TableProvider with DataSourceRegister {
 
@@ -112,22 +83,15 @@ final class GraftDeltaTable(spark: SparkSession,
     m
   }
 
-  /** True when the plain-parquet scan below cannot serve this snapshot
-    * (physical column renames / DV row masks) — the analyzer rule
-    * [[GraftDeltaEngineReadRule]] substitutes the engine read upstream of
-    * scan planning, so reaching `newScanBuilder` with this set means the
-    * session lacks the extensions: refuse rather than mis-read. */
-  private[graft] def needsEngineRead: Boolean =
-    snap.physicalSchema.isDefined || snap.fileSet.hasDeletionVectors
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    if (needsEngineRead)
-      throw DeltaUnsupportedFeatureException("engineRead-without-extensions",
-        s"${snap.tablePath} uses column mapping and/or deletion vectors; SQL reads " +
-          "need graft.functions.GraftExtensions on the session " +
-          "(spark.sql.extensions) — or read via DeltaSnapshotReader.load")
-    new GraftDeltaScanBuilder(spark, snap)
-  }
+  /** Reached only in a session without the extensions (with them, the
+    * relation is replaced before scan planning): the engine relation of
+    * this snapshot, read through its `TableScan`. */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () =>
+    new V1Scan {
+      override def readSchema(): StructType = snap.schema
+      override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
+        GraftDeltaEngineRelation(spark, snap.tablePath, Some(snap.version)).asInstanceOf[T]
+    }
 
   /** `INSERT INTO` / `INSERT OVERWRITE` (and `df.writeTo(...).append()`)
     * via the V1 write bridge: Spark resolves and reorders the input to the
@@ -154,125 +118,5 @@ final class GraftDeltaTable(spark: SparkSession,
             }
         }
     }
-  }
-}
-
-/** Filter split: a predicate whose references are ALL partition columns is
-  * consumed as a partition filter (pruning is exact — the log's partition
-  * values are authoritative); everything else returns to Spark as a
-  * post-scan residual, with the translatable subset ALSO pushed to parquet
-  * row groups and the log's min/max skipping (both approximate). */
-final class GraftDeltaScanBuilder(spark: SparkSession, snap: DeltaSnapshot)
-    extends ScanBuilder with SupportsPushDownCatalystFilters
-    with SupportsPushDownRequiredColumns {
-
-  private val partCols = snap.partitionColumns.toSet
-  private var requiredSchema: StructType = snap.schema
-  private var partitionFilters: Seq[Expression] = Nil
-  private var dataFilters: Seq[Expression] = Nil
-
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    val (pf, rest) = filters.partition { f =>
-      f.deterministic && !SubqueryExpression.hasSubquery(f) &&
-        f.references.nonEmpty && f.references.forall(a => partCols.contains(a.name))
-    }
-    partitionFilters = pf
-    // stats skipping wants pure data-column predicates (mixed ones would
-    // probe stats keys that never exist — conservatively true, but why pay)
-    dataFilters = rest.filter(f => f.deterministic &&
-      !SubqueryExpression.hasSubquery(f) &&
-      f.references.forall(a => !partCols.contains(a.name)))
-    rest
-  }
-
-  private def pushedParquetFilters: Array[Filter] =
-    dataFilters.flatMap(org.apache.spark.sql.graft.FilterBridge.translate).toArray
-
-  override def pushedFilters: Array[Predicate] =
-    pushedParquetFilters.map(org.apache.spark.sql.graft.FilterBridge.toV2)
-
-  override def pruneColumns(required: StructType): Unit = requiredSchema = required
-
-  override def build(): Scan = new GraftDeltaScan(spark, snap, requiredSchema,
-    partitionFilters, dataFilters, pushedParquetFilters)
-}
-
-final class GraftDeltaScan(spark: SparkSession, snap: DeltaSnapshot,
-                           requiredSchema: StructType,
-                           private[delta] val partitionFilters: Seq[Expression],
-                           private[delta] val dataFilters: Seq[Expression],
-                           pushedParquetFilters: Array[Filter])
-    extends Scan with Batch {
-
-  private val partCols = snap.partitionColumns
-
-  private[delta] val readPartitionSchema: StructType =
-    StructType(requiredSchema.fields.filter(f => partCols.contains(f.name)))
-
-  private[delta] val readDataSchema: StructType =
-    StructType(requiredSchema.fields.filterNot(f => partCols.contains(f.name)))
-
-  /** Connector convention (and Spark's own FileScan): data columns first,
-    * required partition columns appended — the reader factory emits rows in
-    * exactly this shape, partition values injected from the log. */
-  override def readSchema(): StructType =
-    StructType(readDataSchema.fields ++ readPartitionSchema.fields)
-
-  override def toBatch: Batch = this
-
-  override def description(): String =
-    s"GraftDeltaScan ${snap.tablePath} v${snap.version}, " +
-      s"PartitionFilters: [${partitionFilters.mkString(", ")}], " +
-      s"PushedFilters: [${pushedParquetFilters.mkString(", ")}], " +
-      s"ReadSchema: ${readSchema().catalogString}"
-
-  /** Pruned listing → Spark's own bin-packed splits. The listing path is
-    * [[DeltaFileIndex.listFiles]], so partition pruning + min/max skipping
-    * run distributed above the driver threshold — the v2 plan's scale
-    * ceiling equals the v1 scan's. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val index = new DeltaFileIndex(spark, snap)
-    val dirs = index.listFiles(partitionFilters, dataFilters)
-    val fullPs = index.partitionSchema
-    val prjIdx = readPartitionSchema.fields.map(f => fullPs.fieldIndex(f.name))
-    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
-    val splits = dirs.flatMap { dir =>
-      // partition values projected onto the REQUIRED partition columns
-      val prj = InternalRow.fromSeq(
-        prjIdx.toIndexedSeq.map(i => dir.values.get(i, fullPs(i).dataType)))
-      dir.files.flatMap(f => PartitionedFileUtil.splitFiles(
-        f, f.getPath, isSplitable = true, maxSplit, prj))
-    }.sortBy(-_.length)
-    FilePartition.getFilePartitions(spark, splits, maxSplit).toArray
-  }
-
-  /** Stock vectorized parquet reader factory — the same executor-side conf
-    * contract Spark's own v2 parquet scan establishes. */
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = spark.sessionState.conf
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    hadoopConf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
-    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, readDataSchema.json)
-    hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, readDataSchema.json)
-    hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, conf.sessionLocalTimeZone)
-    hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
-      conf.nestedSchemaPruningEnabled)
-    hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key, conf.caseSensitiveAnalysis)
-    ParquetWriteSupport.setSchema(readDataSchema, hadoopConf)
-    hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
-      conf.isParquetBinaryAsString)
-    hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
-      conf.isParquetINT96AsTimestamp)
-    hadoopConf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key,
-      conf.parquetFieldIdReadEnabled)
-    hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
-      conf.parquetInferTimestampNTZEnabled)
-    hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
-      conf.legacyParquetNanosAsLong)
-    val bc = spark.sparkContext.broadcast(
-      new SerializableConfiguration(hadoopConf))
-    ParquetPartitionReaderFactory(conf, bc, snap.dataSchema, readDataSchema,
-      readPartitionSchema, pushedParquetFilters, None,
-      new ParquetOptions(Map.empty[String, String], conf))
   }
 }

@@ -200,8 +200,9 @@ object DeltaOps {
 
   /** The SAME v0 time travel, but as SQL `VERSION AS OF` through the V2
     * [[graft.catalog.GraftCatalog]] — Spark resolves the clause via the
-    * catalog's `loadTable(ident, version)` overload, landing on the
-    * engine's [[graft.delta.GraftDeltaTable]] scan. Must hash-match the
+    * catalog's `loadTable(ident, version)` overload to a
+    * [[graft.delta.GraftDeltaTable]] pinned at v0, whose read the analyzer
+    * plans through [[graft.delta.DeltaFileIndex.relation]]. Must hash-match the
     * `delta_time_travel` oracle (one semantics, two resolution paths). */
   def catalogTimeTravel(s: SparkSession, dir: String): DataFrame = {
     val t = new java.io.File(ensureDemoTable(s, dir))
@@ -613,10 +614,12 @@ object DeltaOps {
   }
 
   /** The same pruned-and-projected scan through the DataSource V2 provider
-    * (`graftdelta2`, [[graft.delta.GraftDeltaV2Provider]]): partition
-    * filter consumed by the scan, projection narrowing the parquet read
-    * schema, aggregation downstream — the connector-API expression of
-    * reference A6+A9+A10, oracle-checked against source orders. */
+    * (`graftdelta2`, [[graft.delta.GraftDeltaV2Provider]]). The analyzer
+    * plans the read through [[graft.delta.DeltaFileIndex.relation]], the
+    * scan every Delta read shares: the partition filter prunes files, the
+    * projection narrows the parquet read schema, aggregation runs
+    * downstream (reference A6+A9+A10), oracle-checked against source
+    * orders. */
   def deltaScanDsv2(s: SparkSession, dir: String): DataFrame = {
     val t = ensureDemoTable(s, dir)
     s.read.format("graftdelta2").load(t)

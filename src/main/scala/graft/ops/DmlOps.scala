@@ -684,17 +684,6 @@ object DmlOps {
         .orderBy(col("leg"), col("status")))
   }
 
-  /** SQL TEXT over a SESSION-CATALOG table that carries BOTH column
-    * mapping (renamed column, physical parquet names unchanged) and
-    * deletion vectors (rows masked, not rewritten) — the exact surface an
-    * Athena-style user has (reference README.md:34-38): register once,
-    * `spark.sql` thereafter. Through round 16 this combination refused on
-    * every SQL-visible read path; now the analyzer substitutes the
-    * engine's DV-aware, mapping-aware read
-    * ([[graft.delta.GraftDeltaEngineReadRule]]) — partition pruning
-    * (`o_year` predicate) and parquet pushdown run against the same
-    * [[graft.delta.DeltaFileIndex]] as the function API. The oracle
-    * restates rename + DV mask + pruning over the source parquet. */
   /** FSCK REPAIR TABLE driven end-to-end: every data file of ONE
     * partition (o_year=1995) is deleted OUT-OF-BAND (the cloud-storage
     * corruption delta-spark's FSCK exists for), the un-repaired table is
@@ -758,6 +747,16 @@ object DmlOps {
         col("status") === "F" && col("o_totalprice") < 150000)
     }.toString
 
+  /** SQL TEXT over a SESSION-CATALOG table that carries BOTH column
+    * mapping (renamed column, physical parquet names unchanged) and
+    * deletion vectors (rows masked, not rewritten) — the exact surface an
+    * Athena-style user has (reference README.md:34-38): register once,
+    * `spark.sql` thereafter. The analyzer plans the read through
+    * [[graft.delta.DeltaFileIndex.relation]]
+    * ([[graft.delta.GraftDeltaEngineReadRule]]), the scan every Delta read
+    * shares: partition pruning (`o_year` predicate), parquet pushdown, the
+    * DV mask and the rename. The oracle restates rename + DV mask +
+    * pruning over the source parquet. */
   def sqlOverDeltaDv(s: SparkSession, dir: String): DataFrame = {
     // the DML chain (mapping enable, rename, DV delete) is deterministic
     // fixture PREPARATION, not the operator under test — templated once

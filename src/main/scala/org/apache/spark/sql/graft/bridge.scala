@@ -27,22 +27,6 @@ object StreamingDataFrame {
   }
 }
 
-/** Visibility bridge for the two `private[sql]`/`protected[sql]` helpers a
-  * DataSource V2 scan builder needs: Catalyst-expression → `sources.Filter`
-  * translation (what every file source's pushdown calls) and the v1→v2
-  * `Predicate` view the `pushedFilters` contract reports. Translation-only
-  * — no behavior is reimplemented. */
-object FilterBridge {
-
-  def translate(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Option[org.apache.spark.sql.sources.Filter] =
-    org.apache.spark.sql.execution.datasources.DataSourceStrategy
-      .translateFilter(e, supportNestedPredicatePushdown = true)
-
-  def toV2(f: org.apache.spark.sql.sources.Filter)
-      : org.apache.spark.sql.connector.expressions.filter.Predicate = f.toV2
-}
-
 /** Arrow interchange (the reference's OUTPUT CONTRACT is Arrow `Block`s —
   * DeltaRecordHandler.scala:4,150): serialize a DataFrame's partitions as
   * Arrow IPC record-batch payloads without collecting rows on the driver,

@@ -47,9 +47,17 @@ class GraftCatalogSpec extends SparkSpec {
   test("latest snapshot resolves through the catalog; engine scan serves it") {
     val got = spark.sql("SELECT * FROM gcat.default.tbl")
     assert(got.count() == 20)
-    // the engine's DSv2 scan, not a generic file scan
-    assert(got.queryExecution.executedPlan.toString.contains("graftdelta"),
-      got.queryExecution.executedPlan.toString)
+    // planned by the engine's one Delta scan: a file-source scan over the
+    // table's DeltaFileIndex, no DSv2 BatchScanExec
+    got.collect()
+    val plan = got.queryExecution.executedPlan
+    val scans = plan.collectWithSubqueries {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location
+    }
+    assert(scans.nonEmpty && scans.forall(_.isInstanceOf[graft.delta.DeltaFileIndex]), plan)
+    assert(plan.collectWithSubqueries {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.isEmpty, plan)
   }
 
   test("SQL VERSION AS OF resolves each commit") {

@@ -77,4 +77,26 @@ class ConvertToDeltaSpec extends SparkSpec {
     assert(DeltaSnapshotReader.load(spark, d).count() == 10L)
     intercept[IllegalArgumentException](DeltaWriter.convertToDelta(spark, d))
   }
+
+  test("collectStats lists the table tree no more often than a conversion without stats") {
+    // per directory (relative to the table root), how often it was listed
+    // outside _delta_log: Spark's schema inference lists each once, and
+    // the conversion's own listing feeds both the footer pass and the adds
+    def listings(collectStats: Boolean): Map[String, Int] = {
+      val d = newDir()
+      (1L to 40L).map(i => (i, s"r$i", (i % 4).toInt)).toDF("id", "s", "bucket")
+        .write.partitionBy("bucket").parquet(d)
+      val root = new java.io.File(d).toURI.getPath.stripSuffix("/")
+      val (_, calls) = CountingFileSystem.count(spark)(
+        DeltaWriter.convertToDelta(spark, d, Seq("bucket"), collectStats = collectStats))
+      info(s"collectStats=$collectStats: $calls")
+      calls.listedData.map(_.stripSuffix("/").stripPrefix(root)).groupBy(identity).map {
+        case (dir, n) => dir -> n.size }
+    }
+    val withStats = listings(collectStats = true)
+    val without = listings(collectStats = false)
+    assert(withStats.size == 5, withStats) // the root and its 4 partition directories
+    assert(withStats == without, s"with stats $withStats, without $without")
+    assert(withStats.values.forall(_ <= 2), withStats)
+  }
 }

@@ -27,7 +27,7 @@ class DeltaFileIndexSpec extends SparkSpec {
 
   test("spark.read.format(graftdelta) resolves via DataSourceRegister") {
     val df = spark.read.format("graftdelta").load(table)
-    assert(df.columns.toSet == Set("id", "s", "yr"))
+    assert(df.columns.toSeq == Seq("id", "yr", "s")) // table-schema order
     assert(df.count() == 5)
     val v0 = spark.read.format("graftdelta").option("versionAsOf", "0").load(table)
     assert(v0.count() == 5)

@@ -100,7 +100,7 @@ class EngineReadSpec extends SparkSpec {
 
   test("bare-session fallback: marker relation TableScan reads live rows") {
     val snap = DeltaSnapshotReader.snapshot(spark, tbl)
-    val rel = GraftDeltaEngineRelation(spark, snap)
+    val rel = GraftDeltaEngineRelation(spark, tbl, Some(snap.version))
     // execute the fallback scan path directly (rule bypassed)
     val n = rel.buildScan().count()
     // 80 live rows at the pre-insert snapshot OR 81 post-insert, depending

@@ -1,16 +1,18 @@
 package graft.delta
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** DataSource V2 provider (`graftdelta2`): scan correctness vs the v1
-  * reader, and the three pushdowns the connector contract makes explicit —
-  * partition pruning (consumed filters + pruned input partitions), column
-  * pruning (narrowed read schema), data-filter pushdown (parquet +
-  * stats). */
+/** DataSource V2 provider (`graftdelta2`): reads equal the v1 reader, and
+  * the plan the analyzer substitutes ([[DeltaFileIndex.relation]]) shows
+  * the three pushdowns on its `FileSourceScanExec` — partition pruning
+  * (consumed partition filters, pruned file listing), column pruning
+  * (narrowed read schema), data-filter pushdown (parquet filters, stats
+  * skipping, a `Filter` residual). No `BatchScanExec` is planned. */
 class GraftDeltaV2Spec extends SparkSpec {
   import spark.implicits._
 
@@ -28,12 +30,21 @@ class GraftDeltaV2Spec extends SparkSpec {
     options.foldLeft(r)((r, o) => r.option(o._1, o._2)).load(table)
   }
 
-  private def scanOf(df: org.apache.spark.sql.DataFrame): GraftDeltaScan = {
+  private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec = {
     df.collect() // finalize any adaptive plan
-    val scans = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-    assert(scans.nonEmpty, s"no BatchScanExec in:\n${df.queryExecution.executedPlan}")
-    scans.head.scan.asInstanceOf[GraftDeltaScan]
+    val plan = df.queryExecution.executedPlan
+    assert(plan.collectWithSubqueries { case b: BatchScanExec => b }.isEmpty, s"BatchScanExec in:\n$plan")
+    val scans = plan.collectWithSubqueries { case f: FileSourceScanExec => f }
+    assert(scans.nonEmpty, s"no FileSourceScanExec in:\n$plan")
+    assert(scans.head.relation.location.isInstanceOf[DeltaFileIndex], scans.head.relation.location)
+    scans.head
   }
+
+  /** The data files the scan reads: its index listed under its own
+    * partition and data filters. */
+  private def filesOf(scan: FileSourceScanExec): Seq[String] =
+    scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
+      .flatMap(_.files.map(_.getPath.toString))
 
   test("full v2 read equals the v1 log reader, in logical column order") {
     val got = v2().orderBy("id").collect().map(_.toSeq).toSeq
@@ -48,10 +59,7 @@ class GraftDeltaV2Spec extends SparkSpec {
     assert(df.count() == 100L)
     val scan = scanOf(df)
     assert(scan.partitionFilters.nonEmpty, "partition filter not consumed")
-    val files = scan.planInputPartitions().flatMap {
-      case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
-        fp.files.map(_.filePath.toString)
-    }
+    val files = filesOf(scan)
     assert(files.nonEmpty && files.forall(_.contains("p=1")),
       s"unpruned files: ${files.mkString(", ")}")
   }
@@ -59,9 +67,9 @@ class GraftDeltaV2Spec extends SparkSpec {
   test("column pruning narrows the read schema; partition col injected last") {
     val df = v2().select("s", "p")
     val scan = scanOf(df)
-    assert(scan.readSchema().fieldNames.toSeq == Seq("s", "p"), scan.readSchema())
-    assert(scan.readDataSchema.fieldNames.toSeq == Seq("s"))
-    assert(scan.readPartitionSchema.fieldNames.toSeq == Seq("p"))
+    assert(scan.requiredSchema.fieldNames.toSeq == Seq("s"), scan.requiredSchema)
+    assert(scan.relation.partitionSchema.fieldNames.toSeq == Seq("p"))
+    assert(scan.output.map(_.name) == Seq("s", "p"), scan.output)
     assert(df.distinct().count() == 301L)
   }
 
@@ -70,7 +78,8 @@ class GraftDeltaV2Spec extends SparkSpec {
     assert(df.count() == 10L)
     val scan = scanOf(df)
     assert(scan.dataFilters.nonEmpty, "data filter lost")
-    assert(scan.description().contains("LessThanOrEqual(id,10)"), scan.description())
+    val pushed = scan.metadata.getOrElse("PushedFilters", "")
+    assert(pushed.contains("LessThanOrEqual(id,10)"), pushed)
     // residual: the executed plan still re-checks the predicate for exactness
     assert(df.queryExecution.executedPlan.toString.contains("Filter"),
       df.queryExecution.executedPlan.toString)
@@ -80,12 +89,8 @@ class GraftDeltaV2Spec extends SparkSpec {
     // id is clustered per file only loosely (repartition(4)), but v1's file
     // (id=301) is provably outside id<=10 by min/max stats; at minimum the
     // pruned listing must be strictly smaller than the full one
-    val all = scanOf(v2()).planInputPartitions().flatMap {
-      case fp: org.apache.spark.sql.execution.datasources.FilePartition => fp.files
-    }.length
-    val pruned = scanOf(v2().filter(col("id") > 300L)).planInputPartitions().flatMap {
-      case fp: org.apache.spark.sql.execution.datasources.FilePartition => fp.files
-    }.length
+    val all = filesOf(scanOf(v2())).length
+    val pruned = filesOf(scanOf(v2().filter(col("id") > 300L))).length
     assert(pruned < all, s"skipping pruned nothing: $pruned vs $all")
   }
 
@@ -105,17 +110,24 @@ class GraftDeltaV2Spec extends SparkSpec {
     assert(df.agg(org.apache.spark.sql.functions.min(col("id"))).head.getLong(0) == 6L)
   }
 
-  test("DV-carrying tables refuse at scan build when the rule is absent") {
+  test("without the extensions the scan reads live rows of a DV-carrying table") {
     val t = Files.createTempDirectory("graft_v2dv_bare").toString + "/tbl"
     // one multi-row file: a partial DV delete must leave a real DV behind
     // (single-row files would fully-delete into plain removes)
     DeltaWriter.write((1L to 20L).toDF("id").coalesce(1), t, Nil, "overwrite")
     DeltaWriter.deleteWithDV(spark, t, col("id") <= 5L)
     val snap = DeltaSnapshotReader.snapshot(spark, t)
-    val tbl = new GraftDeltaTable(spark, snap)
-    val e = intercept[DeltaUnsupportedFeatureException](
-      tbl.newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("path", t))))
-    assert(e.getMessage.contains("GraftExtensions"), e.getMessage)
+    assert(snap.fileSet.hasDeletionVectors)
+    // the scan Spark plans when no rule replaced the relation: a V1 scan
+    // whose TableScan runs the engine plan
+    val scan = new GraftDeltaTable(spark, snap).newScanBuilder(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(java.util.Map.of("path", t))).build()
+    val rel = scan.asInstanceOf[org.apache.spark.sql.connector.read.V1Scan]
+      .toV1TableScan[GraftDeltaEngineRelation](spark.sqlContext)
+    assert(rel.schema == scan.readSchema())
+    // needConversion=false: the rows are Catalyst's internal rows
+    val ids = rel.buildScan().asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
+      .map(_.getLong(0)).collect().sorted.toSeq
+    assert(ids == (6L to 20L))
   }
 }

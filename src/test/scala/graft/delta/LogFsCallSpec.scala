@@ -12,7 +12,9 @@ import java.nio.file.Files
   * listing (append 2 listStatus, 3 exists, 1 open; fresh read 4, 5, 6),
   * so that check can never add a call. The two together are locked at
   * the count measured once a fresh read advances the writer's snapshot
-  * (3, 2, 3), and must open no checkpoint. */
+  * (3, 2, 3), and must open no checkpoint. A caller that holds a
+  * snapshot and reads it through [[DeltaFileIndex.relation]] lists
+  * `_delta_log` once, for the snapshot. */
 class LogFsCallSpec extends SparkSpec {
   import spark.implicits._
 
@@ -60,5 +62,19 @@ class LogFsCallSpec extends SparkSpec {
     // opens the new commit and its crc, and no checkpoint
     assert(!calls.opened.exists(_.contains(".checkpoint")), s"a checkpoint was opened: $calls")
     assert(calls.listStatus <= 3 && calls.exists <= 2 && calls.open <= 3, s"an append + fresh read made $calls")
+  }
+
+  test("a caller holding a snapshot reads it through DeltaFileIndex.relation: one _delta_log listing") {
+    val t = checkpointed()
+    append(t, 3)
+    val (n, calls) = CountingFileSystem.count(spark) {
+      val snap = DeltaSnapshotReader.snapshot(spark, t)
+      DeltaFileIndex.relation(spark, snap).filter(col("grp") === 3).count()
+    }
+    assert(n == 4 * 7)
+    info(s"snapshot in hand: $calls")
+    // the snapshot's own listing is the only one: planning and reading it
+    // list nothing more
+    assert(calls.listStatus == 1, s"snapshot + relation made $calls")
   }
 }
