@@ -238,8 +238,7 @@ object ChangeDataFeed {
     // planning and keeps large ones distributed (driverFileListThreshold,
     // `listMax`), so the feed's scale ceiling equals the scan path's.
     val listMax = DeltaFileSet.driverListThreshold(spark)
-    def verActs(v: Long): DataFrame =
-      spark.read.schema(cdfActionSchema).json(commitAt(v).getPath.toString)
+    def verActs(v: Long): DataFrame = LogReplay.actions(spark, cdfActionSchema, Seq(v -> commitAt(v).getPath))
     def fileSet(v: Long, rowPred: Row => Boolean, rowFile: Row => AddFile,
                 pred: Column, file: Seq[Column]): DeltaFileSet =
       if (onDriver) DeltaFileSet.of(localRows(v).filter(rowPred).map(rowFile))

@@ -2,6 +2,7 @@ package graft.delta
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types._
 
 import java.nio.charset.StandardCharsets
 
@@ -14,45 +15,51 @@ import java.nio.charset.StandardCharsets
   * delta-spark reader would notice missing (VERDICT r12 #4).
   *
   * Contract:
-  *  - Every successful commit emits a crc. The NORMAL path is pure-JVM
-  *    incremental arithmetic — previous crc ± this commit's own actions,
-  *    zero Spark jobs (see [[writeAfterCommit]]); commits outside the
-  *    sound-arithmetic envelope fall back to the snapshot's DISTRIBUTED
-  *    file-set aggregate ([[DeltaFileSet.countAndBytes]] — never a
-  *    driver-side file list), so even the fallback stays metadata-plane
-  *    at any table size. Emission is best-effort: the commit is already
-  *    durable when the crc is computed, so a crc failure warns and moves
-  *    on (the artifact is derived state — the next commit's crc covers
-  *    the table again).
+  *  - Every successful commit emits a crc ([[writeAfterCommit]]), from
+  *    what [[LogReplay]], the one decoder of commit JSON, decodes of the
+  *    committed lines; this object parses crc JSON alone. Path (a): the
+  *    lines folded into the driver-held winners of the pre-commit
+  *    snapshot, [[render]]ed; (b): the previous crc ± the commit's adds
+  *    and removes ([[chained]]); (c): [[render]] of the post-commit
+  *    snapshot, advanced or replayed. Emission is best-effort: the commit
+  *    is already durable, so a crc failure warns and moves on (the
+  *    artifact is derived state — the next commit's crc covers the table
+  *    again).
   *  - Snapshot load validates against the loaded version's crc when one
   *    exists: a VALUE mismatch (tampered or stale crc vs replayed state)
   *    refuses loudly with [[Checksum.ChecksumMismatchException]]; a
   *    MISSING crc is tolerated (foreign logs — delta-standalone and many
   *    writers never emit one); an UNPARSEABLE crc warns and is ignored (a
   *    crashed writer can leave a torn file — that must not brick the
-  *    table, exactly delta-spark's tolerance). On tables at or under
-  *    [[AllFilesEchoThreshold]] files the crc also embeds the complete
-  *    `allFiles` add-set (delta-spark's small-table VersionChecksum shape
-  *    — a foreign reader rebuilds state from the crc alone), maintained by
-  *    the same incremental arithmetic and cross-checked as a set on
-  *    validation. Validation runs LAZILY at
+  *    table, exactly delta-spark's tolerance). Validation runs LAZILY at
   *    the first file-set access ([[DeltaFileSet.armValidator]], ADVICE
   *    r13): metadata-plane callers (history loops, plan-only resolution)
   *    skip the aggregate entirely, while no data-plane consumer can see an
   *    add row before the check passes — a failure poisons the file set and
   *    rethrows on every later access.
+  *  - The `allFiles` echo: on tables at or under [[AllFilesEchoThreshold]]
+  *    files the crc embeds the complete add-set, written only by
+  *    [[render]] (paths (a) and (c)); path (b), whose file set is not on
+  *    the driver, writes none. It is kept for two reasons: parity with
+  *    delta-spark's small-table VersionChecksum, from which a foreign
+  *    reader rebuilds state without a log replay, and full-entry
+  *    validation, which cross-checks every state field of every entry
+  *    (deletion vectors, partition values, stats), not only the (path,
+  *    size) pairs the digest covers. graft's own reader never rebuilds
+  *    state from it.
   *  - Write-path posture under lazy validation: every state-DEPENDENT
   *    commit (UPDATE/DELETE/MERGE rewrite-set resolution, OPTIMIZE,
   *    RESTORE — anything that reads the file set to decide what to write)
   *    still validates before committing. A BLIND append does not touch
   *    the file set and therefore commits over a tampered crc; its own crc
-  *    then chains incrementally from the tampered value — exactly
+  *    then takes path (b) and chains from the tampered value — exactly
   *    delta-spark's incremental-checksum trust model — and the corruption
   *    is caught at the first data-plane READ of any affected version.
   *    Recovery is deleting the bad crc artifacts (derived state, never
   *    data); ChecksumSpec drills the full sequence.
   */
 object Checksum {
+  import DeltaWriter.q
 
   private val logger = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
@@ -64,7 +71,8 @@ object Checksum {
     * enough that the list is cheaper than a log replay, letting a foreign
     * reader rebuild state straight from the crc. Bounded so the crc stays
     * a metadata artifact: above this the field is simply absent (the
-    * setDigest still covers file identity at any size). */
+    * setDigest still covers file identity at any size). See the header
+    * for why the echo is kept. */
   val AllFilesEchoThreshold = 32L
 
   /** Default file-size histogram bin lower boundaries: bucket 0 plus
@@ -81,74 +89,71 @@ object Checksum {
   def crcPath(logDir: Path, version: Long): Path =
     new Path(logDir, LogListing.crcName(version))
 
-  private def esc(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** The crc body for a resolved snapshot — delta-spark field names so a
     * foreign reader that consumes VersionChecksum parses ours as-is. */
   private[delta] def render(snap: DeltaSnapshot): String = {
-    val proto = snap.protocol.getOrElse(DeltaProtocol(1, 2))
-    def feats(n: String, fs: Option[Seq[String]]) = fs
-      .map(f => s""","$n":[${f.sorted.map(esc).mkString(",")}]""").getOrElse("")
-    val protocolJson =
-      s"""{"minReaderVersion":${proto.minReaderVersion},"minWriterVersion":${proto.minWriterVersion}""" +
-        feats("readerFeatures", proto.readerFeatures) +
-        feats("writerFeatures", proto.writerFeatures) + "}"
-    val conf = snap.configuration.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${esc(k)}:${esc(v)}" }.mkString("{", ",", "}")
-    val parts = snap.partitionColumns.map(esc).mkString("[", ",", "]")
-    // the echo is a COMPLETE Metadata action (delta-spark's VersionChecksum
-    // embeds one): a foreign consumer deserializing it must see the table's
-    // stable id + createdTime, not synthesize them (ADVICE r13)
-    val idPart = snap.metadataId.map(i => s""""id":${esc(i)},""").getOrElse("")
-    val createdPart = snap.metadataCreatedTime
-      .map(t => s""","createdTime":$t""").getOrElse("")
-    val metadataJson =
-      s"""{$idPart"partitionColumns":$parts,"configuration":$conf,""" +
-        s""""schemaString":${esc(snap.schema.json)},""" +
-        s""""format":{"provider":"parquet","options":{}}$createdPart}"""
-    // setDigest is a graft EXTENSION field (VERDICT r13 #2): an
-    // order-independent XOR of xxhash64(path, size) over the add-set, so
-    // state corruption that offsets itself in numFiles AND tableSizeBytes
-    // (two swapped adds/removes, a path flip at equal size) still fails
-    // validation. Foreign consumers ignore unknown fields; foreign crcs
-    // without it validate on the two aggregates alone.
     val (nf, bytes, digest) = snap.fileSet.countBytesDigest
-    // allFiles echo (delta-spark VersionChecksum parity): on small tables
-    // the crc carries the complete add-set, so a foreign reader rebuilds
-    // state from the crc alone. collected() is bounded here (nf ≤ threshold)
-    val allFilesPart =
-      if (nf > AllFilesEchoThreshold) ""
-      else {
-        val arr = om.createArrayNode()
-        snap.fileSet.collected.foreach(f =>
-          arr.add(echoAdd(f, snap.physicalFieldName)))
-        s""""allFiles":${om.writeValueAsString(arr)},"""
-      }
-    // file-size histogram (delta-spark VersionChecksum histogramOpt
-    // parity): per-bucket file counts + bytes over the add-set, from the
-    // same pass as countBytesDigest above — the replay path already pays a
-    // full log replay, and the NORMAL (incremental) path maintains the
-    // buckets via pure arithmetic instead of calling render
+    // collected() is bounded here (nf ≤ threshold)
+    val echo = if (nf > AllFilesEchoThreshold) None else Some(snap.fileSet.collected)
+    // the histogram from the same summary as countBytesDigest above
     val (hc, hb) = snap.fileSet.sizeHistogram(DefaultHistogramBoundaries)
-    val histPart = s""""histogramOpt":{"sortedBinBoundaries":[${DefaultHistogramBoundaries.mkString(",")}],""" +
-      s""""fileCounts":[${hc.mkString(",")}],"totalBytes":[${hb.mkString(",")}]},"""
+    body(snap, nf, bytes, digest, echo, Some((DefaultHistogramBoundaries, hc, hb)))
+  }
+
+  private def protocolJson(head: DeltaSnapshot): String = {
+    val proto = head.protocol.getOrElse(DeltaProtocol(1, 2))
+    def feats(n: String, fs: Option[Seq[String]]) = fs
+      .map(f => s""","$n":[${f.sorted.map(q).mkString(",")}]""").getOrElse("")
+    s"""{"minReaderVersion":${proto.minReaderVersion},"minWriterVersion":${proto.minWriterVersion}""" +
+      feats("readerFeatures", proto.readerFeatures) + feats("writerFeatures", proto.writerFeatures) + "}"
+  }
+
+  /** `head`'s metaData as a COMPLETE Metadata action (delta-spark's
+    * VersionChecksum embeds one): a foreign consumer deserializing it must
+    * see the table's stable id + createdTime, not synthesize them (ADVICE
+    * r13). */
+  private def metadataJson(head: DeltaSnapshot): String = {
+    val conf = head.configuration.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    val parts = head.partitionColumns.map(q).mkString("[", ",", "]")
+    val idPart = head.metadataId.map(i => s""""id":${q(i)},""").getOrElse("")
+    val createdPart = head.metadataCreatedTime.map(t => s""","createdTime":$t""").getOrElse("")
+    s"""{$idPart"partitionColumns":$parts,"configuration":$conf,""" +
+      s""""schemaString":${q(head.schema.json)},""" +
+      s""""format":{"provider":"parquet","options":{}}$createdPart}"""
+  }
+
+  /** The one crc renderer: the state aggregates, the `allFiles` echo and
+    * the file-size histogram when given, and the protocol and metaData of
+    * `head`.
+    *  - setDigest is a graft EXTENSION field (VERDICT r13 #2): an
+    *    order-independent XOR of xxhash64(path, size) over the add-set, so
+    *    state corruption that offsets itself in numFiles AND
+    *    tableSizeBytes (two swapped adds/removes, a path flip at equal
+    *    size) still fails validation. Foreign consumers ignore unknown
+    *    fields; foreign crcs without it validate on the two aggregates
+    *    alone.
+    *  - the histogram is delta-spark's VersionChecksum `histogramOpt`:
+    *    per-bucket file counts + bytes over the add-set. */
+  private def body(head: DeltaSnapshot, nf: Long, bytes: Long, digest: Long, echo: Option[Seq[AddFile]],
+                   hist: Option[(Array[Long], Array[Long], Array[Long])]): String = {
+    val allFilesPart = echo.fold("") { files =>
+      val arr = om.createArrayNode()
+      files.foreach(f => arr.add(echoAdd(f, head.physicalFieldName)))
+      s""""allFiles":${om.writeValueAsString(arr)},"""
+    }
+    val histPart = hist.fold("") { case (bounds, counts, byts) =>
+      s""""histogramOpt":{"sortedBinBoundaries":[${bounds.mkString(",")}],""" +
+        s""""fileCounts":[${counts.mkString(",")}],"totalBytes":[${byts.mkString(",")}]},"""
+    }
     s"""{"tableSizeBytes":$bytes,"numFiles":$nf,"setDigest":$digest,$allFilesPart$histPart""" +
-      s""""numMetadata":1,"numProtocol":1,"protocol":$protocolJson,"metadata":$metadataJson}"""
+      s""""numMetadata":1,"numProtocol":1,"protocol":${protocolJson(head)},"metadata":${metadataJson(head)}}"""
   }
 
   /** Parse a crc's `histogramOpt` into (boundaries, counts, bytes);
     * None when absent or shape-malformed (length mismatch, unsorted or
     * negative boundaries) — the CALLER decides whether malformed is
-    * tolerated (incremental adoption drops it) or refused (validation). */
+    * tolerated (path (b) drops it) or refused (validation). */
   private[delta] def parseHistogram(n: com.fasterxml.jackson.databind.JsonNode)
       : Option[(Array[Long], Array[Long], Array[Long])] = {
     val h = n.get("histogramOpt")
@@ -260,49 +265,29 @@ object Checksum {
         (d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes, d.cardinality)),
       f.baseRowId, f.defaultRowCommitVersion)
 
-  /** A commit-line `add` node reshaped into an echo entry: same known
-    * fields, `dataChange` forced false, engine-side/unknown fields dropped
-    * (the echo must restate STATE, not replay the commit). */
-  private def echoAddFromLine(a: com.fasterxml.jackson.databind.JsonNode):
-      com.fasterxml.jackson.databind.node.ObjectNode = {
-    val n = om.createObjectNode()
-    val keep = Seq("path", "partitionValues", "size", "modificationTime",
-      "stats", "deletionVector", "baseRowId", "defaultRowCommitVersion")
-    keep.foreach { k =>
-      Option(a.get(k)).filter(!_.isNull)
-        .foreach(n.set[com.fasterxml.jackson.databind.JsonNode](k, _))
-    }
-    // field order parity with [[echoAdd]] is irrelevant to consumers;
-    // dataChange sits after modificationTime there and here at the end
-    n.put("dataChange", false)
-    n
-  }
-
   /** Emit the crc for freshly-committed `version`. Called from the one
     * transaction path ([[DeltaWriter]] `transact`), AFTER the commit is
-    * durable. Never throws.
-    *
-    * The computation is INCREMENTAL whenever possible — exactly
-    * delta-spark's discipline, and the reason its checksum costs nothing
-    * per commit: new state = previous crc ± this commit's own actions,
-    * pure JVM arithmetic with zero Spark jobs and zero log replay. The
-    * arithmetic is sound because every remove line this writer emits
-    * carries the removed file's `size`, removes only ever name ACTIVE
-    * files, and adds only ever name fresh paths or paths removed in the
-    * same commit (the DV re-add pairing, which RESTORE also uses for a
-    * file whose deletion vector it changes) — the one op that re-adds
-    * live paths without removes (row-tracking backfill) commits with a
-    * streamed tail, and every commit with a tail takes the replay
-    * fallback. metaData/protocol actions update the crc's echo from the
-    * committed line itself. Everything else (a missing or torn previous
-    * crc, a foreign remove without a size, any negative intermediate)
-    * falls back to a log replay + the file set's state summary. */
-  def writeAfterCommit(fs: FileSystem, logDir: Path, version: Long,
-                       lines: Option[Seq[String]] = None): Unit =
+    * durable, with `pre`, the snapshot the commit was made on (None for a
+    * table's first commit), and the committed `lines` (None for a commit
+    * with a streamed tail). Never throws. The first path that applies:
+    *  - (a) the driver holds pre's winners and pre passed validation
+    *    against its own crc, so the crc chain stays a check on the
+    *    replay: [[render]] of pre advanced by the lines, which the
+    *    snapshot cache keeps for the read after the write
+    *    ([[DeltaSnapshotReader.committed]]);
+    *  - (b) the lines are all actions this writer commits: [[chained]];
+    *  - (c) [[render]] of the post-commit snapshot, advanced from a cached
+    *    one or replayed.
+    * (a) and (b) cost no Spark job; (c) runs the replay's jobs on a table
+    * kept on executors. */
+  def writeAfterCommit(spark: SparkSession, fs: FileSystem, tablePath: String, pre: Option[DeltaSnapshot],
+                       version: Long, lines: Option[Seq[String]]): Unit = {
+    val logDir = new Path(tablePath, "_delta_log")
     try {
-      val body = lines.flatMap(incremental(fs, logDir, version, _))
-        .getOrElse(renderByReplay(fs, logDir, version))
-      if (body == null) return // no session for the replay path: skip
+      val body = lines.flatMap { ls =>
+        DeltaSnapshotReader.committed(spark, tablePath, pre, version, ls).map(render)
+          .orElse(chained(spark, fs, logDir, pre, version, ls))
+      }.getOrElse(render(DeltaSnapshotReader.snapshotAt(spark, tablePath, Some(version))))
       val out = fs.create(crcPath(logDir, version), true)
       try out.write((body + "\n").getBytes(StandardCharsets.UTF_8))
       finally out.close()
@@ -311,214 +296,83 @@ object Checksum {
         logger.warn(s"crc write skipped for $logDir v$version: " +
           s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
-
-  /** Fallback: resolve the post-commit snapshot (advanced from the
-    * writer's cached one when the driver holds it, else a replay; cached
-    * for the post-commit reader either way) and render from its file
-    * set's state summary. Returns null when no SparkSession is active
-    * (bare-JVM callers). */
-  private def renderByReplay(fs: FileSystem, logDir: Path, version: Long): String = {
-    val spark = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).orNull
-    if (spark == null) return null
-    render(DeltaSnapshotReader.snapshotAt(spark, logDir.getParent.toString, Some(version)))
   }
 
   /** Shared mapper: ObjectMapper is thread-safe for read/write and its
     * construction is the expensive part — this sits on every commit. */
   private val om = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** The incremental path: previous crc + this commit's lines → new crc
-    * body, pure JVM. None = shape outside the sound-arithmetic envelope
-    * (see [[writeAfterCommit]]); the caller falls back to replay.
-    *
-    * The output is REBUILT from scratch with exactly the fields [[render]]
-    * writes — never a mutation of the previous crc node — so chaining
-    * from a FOREIGN crc (delta-spark's VersionChecksum may embed
-    * allFiles, setTransactions, txnId, …) can never carry that
-    * now-stale state forward under the new version (code-review r13). */
-  private[delta] def incremental(fs: FileSystem, logDir: Path, version: Long,
-                                 lines: Seq[String]): Option[String] = try {
-    var protocolNode: com.fasterxml.jackson.databind.JsonNode = null
-    var metadataNode: com.fasterxml.jackson.databind.JsonNode = null
-    var nf = 0L
-    var bytes = 0L
-    var digest = 0L
-    // allFiles echo tracking: alive only while provably COMPLETE — v0
-    // starts empty; v>0 adopts the previous echo iff its length equals the
-    // previous numFiles. Anything doubtful kills tracking (the field is
-    // then absent, which consumers tolerate; the next replay-rendered crc
-    // reintroduces it) — an echo must never be emitted on a guess.
-    var echo: scala.collection.mutable.LinkedHashMap[String,
-      com.fasterxml.jackson.databind.JsonNode] =
-      scala.collection.mutable.LinkedHashMap.empty
-    // histogram tracking: v0 STARTS the buckets (all-zero, default bins);
-    // v>0 adopts the previous crc's histogram — bucket counters are
-    // incrementally maintainable exactly like numFiles. A prev crc
-    // without one (or malformed) kills tracking: the field is then absent
-    // (consumers tolerate) until the next replay-rendered crc reseeds it.
-    var histBounds: Array[Long] = null
-    var histCounts: Array[Long] = null
-    var histBytes: Array[Long] = null
-    if (version == 0L) {
-      histBounds = DefaultHistogramBoundaries
-      histCounts = new Array[Long](histBounds.length)
-      histBytes = new Array[Long](histBounds.length)
+  /** What path (b) decodes of a commit's lines: a file action's path and
+    * size (the replay's schema has no remove `size`), the protocol and
+    * metaData, and a marker of every other action this writer commits, so
+    * a line that carries none of them is seen. */
+  private val commitSchema: StructType = {
+    val file = StructType(Seq(StructField("path", StringType), StructField("size", LongType)))
+    StructType(Seq(StructField("add", file), StructField("remove", file),
+      StructField("metaData", DeltaActions.metaDataType), StructField("protocol", DeltaActions.protocolType),
+      StructField("txn", DeltaActions.txnType), StructField("domainMetadata", DeltaActions.domainMetadataType),
+      StructField("commitInfo", StructType(Seq(StructField("operation", StringType)))),
+      StructField("cdc", file)))
+  }
+
+  /** Path (b): the previous crc's numFiles, tableSizeBytes, setDigest and
+    * histogram ± the sizes of the commit's adds and removes, pure JVM
+    * (delta-spark's checksum discipline), with the protocol and metaData
+    * of the commit's own lines, else of `pre`; no `allFiles` echo. The
+    * body is rebuilt by [[body]], so a FOREIGN previous crc's other fields
+    * (setTransactions, txnId, …) never carry forward (code-review r13).
+    * Sound because every remove this writer emits carries its file's
+    * size, removes name only ACTIVE files, and adds name fresh paths or
+    * paths removed in the same commit (the DV re-add pairing); the one op
+    * that re-adds live paths without removes (row-tracking backfill)
+    * streams a tail and never gets here. None, for path (c), when the
+    * previous crc is missing, torn or digest-less (a foreign chain cannot
+    * start mid-stream), a file action has no size, a line carries no
+    * action this writer commits (never guess), a total goes negative, or
+    * no metaData is known. */
+  private[delta] def chained(spark: SparkSession, fs: FileSystem, logDir: Path, pre: Option[DeltaSnapshot],
+                             version: Long, lines: Seq[String]): Option[String] = try {
+    val rows = LogReplay.decodeLines(spark, commitSchema, version, lines)
+    if (rows.exists(r => commitSchema.indices.forall(r.isNullAt))) return None
+    var (nf, bytes, digest) = (0L, 0L, 0L)
+    // v0 starts the buckets; a later version adopts the previous crc's,
+    // and writes none when that has none
+    var hist = Option((DefaultHistogramBoundaries, new Array[Long](DefaultHistogramBoundaries.length),
+      new Array[Long](DefaultHistogramBoundaries.length)))
+    if (version > 0) {
+      val prev = read(fs, logDir, version - 1).map(om.readTree).orNull
+      if (prev == null || !Seq("numFiles", "tableSizeBytes", "setDigest").forall(prev.has)) return None
+      nf = prev.get("numFiles").asLong()
+      bytes = prev.get("tableSizeBytes").asLong()
+      digest = prev.get("setDigest").asLong()
+      hist = parseHistogram(prev)
     }
-    if (version > 0L) {
-      val p = crcPath(logDir, version - 1)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      om.readTree(txt) match {
-        case o: com.fasterxml.jackson.databind.node.ObjectNode
-          if o.has("numFiles") && o.has("tableSizeBytes") =>
-          nf = o.get("numFiles").asLong()
-          bytes = o.get("tableSizeBytes").asLong()
-          // a foreign prev crc has no setDigest — the XOR chain cannot
-          // start mid-stream, so fall back to replay (which computes the
-          // digest fresh); every subsequent commit is incremental again
-          if (!o.has("setDigest")) return None
-          digest = o.get("setDigest").asLong()
-          protocolNode = o.get("protocol")
-          metadataNode = o.get("metadata")
-          parseHistogram(o).foreach { case (b, c, y) =>
-            histBounds = b; histCounts = c.clone(); histBytes = y.clone()
-          }
-          o.get("allFiles") match {
-            case arr: com.fasterxml.jackson.databind.node.ArrayNode
-              if arr.size().toLong == nf =>
-              val it = arr.elements()
-              while (it.hasNext && echo != null) {
-                val e = it.next()
-                val p = Option(e.get("path")).filterNot(_.isNull).map(_.asText())
-                p match {
-                  case Some(path) if !echo.contains(path) =>
-                    // reshape even ADOPTED entries (a foreign crc may carry
-                    // dataChange:true or engine-side fields): the echo we
-                    // re-emit must restate state in OUR contract shape
-                    echo.put(path, echoAddFromLine(e))
-                  case _ => echo = null // path-less or duplicate entry
-                }
-              }
-            case _ => echo = null // absent, or length != numFiles
-          }
-        case _ => return None
-      }
-    }
-    // same-commit remove+add of ONE path (the DV re-add pairing) must land
-    // present-with-the-new-entry regardless of line order, so the echo
-    // applies this commit's removes before its adds, order-independently
-    val addedEcho = scala.collection.mutable.LinkedHashMap.empty[String,
-      com.fasterxml.jackson.databind.JsonNode]
-    val removedPaths = scala.collection.mutable.LinkedHashSet.empty[String]
-    for (line <- lines) {
-      val root = om.readTree(line)
-      if (root == null || !root.isObject) return None
-      val it = root.fieldNames()
-      while (it.hasNext) it.next() match {
-        case "add" =>
-          val a = root.get("add")
-          if (!a.has("size")) return None
-          val sz = a.get("size").asLong()
-          nf += 1; bytes += sz
-          val path = a.get("path").asText()
-          digest ^= DeltaFileSet.fileDigest(path, sz)
-          if (echo != null) addedEcho.put(path, echoAddFromLine(a))
-          if (histBounds != null) {
-            val i = DeltaFileSet.histogramBucket(sz, histBounds)
-            histCounts(i) += 1; histBytes(i) += sz
-          }
-        case "remove" =>
-          val r = root.get("remove")
-          if (!r.has("size")) return None // e.g. RESTORE's distributed removes
-          val sz = r.get("size").asLong()
-          nf -= 1; bytes -= sz
-          val path = r.get("path").asText()
-          digest ^= DeltaFileSet.fileDigest(path, sz)
-          removedPaths.add(path)
-          if (histBounds != null) {
-            val i = DeltaFileSet.histogramBucket(sz, histBounds)
-            histCounts(i) -= 1; histBytes(i) -= sz
-          }
-        case "metaData" =>
-          val m = root.get("metaData")
-          val metaEcho = om.createObjectNode()
-          // stable identity fields ride the committed line into the echo
-          // (same completeness as [[render]]'s snapshot path; ADVICE r13)
-          Option(m.get("id")).filter(!_.isNull)
-            .foreach(metaEcho.set[com.fasterxml.jackson.databind.JsonNode]("id", _))
-          Option(m.get("name")).filter(!_.isNull)
-            .foreach(metaEcho.set[com.fasterxml.jackson.databind.JsonNode]("name", _))
-          metaEcho.set("partitionColumns",
-            Option(m.get("partitionColumns")).getOrElse(om.createArrayNode()))
-          metaEcho.set("configuration",
-            Option(m.get("configuration")).getOrElse(om.createObjectNode()))
-          metaEcho.put("schemaString",
-            Option(m.get("schemaString")).map(_.asText("")).getOrElse(""))
-          metaEcho.set("format", om.readTree("""{"provider":"parquet","options":{}}"""))
-          Option(m.get("createdTime")).filter(!_.isNull)
-            .foreach(metaEcho.set[com.fasterxml.jackson.databind.JsonNode]("createdTime", _))
-          metadataNode = metaEcho
-        case "protocol" =>
-          protocolNode = root.get("protocol")
-        // domainMetadata is state-neutral for (numFiles, bytes) and does
-        // not enter the crc echo. The one op that RE-ADDS live paths while
-        // carrying a domain (row-tracking backfill) commits through the
-        // STREAM funnel, whose consumed iterator never reaches this method
-        // — so a domain here (HWM advance on row-tracked writes, the
-        // clustering watermark) always accompanies fresh-path adds and the
-        // arithmetic stays sound. Row-tracked tables would otherwise pay a
-        // full replay on EVERY write (code-review r13).
-        case "domainMetadata" => ()
-        case "commitInfo" | "cdc" | "txn" => () // state-neutral
-        case _ => return None // unknown action: never guess
+    for (r <- rows; (i, sign) <- Seq(0 -> 1, 1 -> -1) if !r.isNullAt(i)) {
+      val f = r.getStruct(i, 2)
+      if (f.isNullAt(0) || f.isNullAt(1)) return None // e.g. a foreign remove without a size
+      val size = f.getLong(1)
+      nf += sign; bytes += sign * size
+      digest ^= DeltaFileSet.fileDigest(f.getUTF8String(0).toString, size)
+      hist.foreach { case (bounds, counts, byts) =>
+        val k = DeltaFileSet.histogramBucket(size, bounds)
+        counts(k) += sign; byts(k) += sign * size
       }
     }
     if (nf < 0 || bytes < 0) return None
-    if (echo != null) {
-      // removes first, then adds (see above); a remove of a path the
-      // echo doesn't hold means the list was never complete — kill it
-      val missing = removedPaths.exists(p => !echo.contains(p) && !addedEcho.contains(p))
-      removedPaths.foreach(echo.remove)
-      addedEcho.foreach { case (p, e) => echo.put(p, e) }
-      if (missing || echo.size.toLong != nf) echo = null
-    }
-    if (metadataNode == null ||
-        Option(metadataNode.get("schemaString")).forall(_.asText("").isEmpty))
-      return None // no declared metadata anywhere: the echo would be junk
-    if (protocolNode == null)
-      protocolNode = om.readTree("""{"minReaderVersion":1,"minWriterVersion":2}""")
-    val out = om.createObjectNode()
-    out.put("tableSizeBytes", bytes)
-    out.put("numFiles", nf)
-    out.put("setDigest", digest)
-    if (echo != null && nf <= AllFilesEchoThreshold) {
-      val arr = om.createArrayNode()
-      echo.toSeq.sortBy(_._1).foreach { case (_, e) => arr.add(e) }
-      out.set[com.fasterxml.jackson.databind.JsonNode]("allFiles", arr)
-    }
-    // a negative bucket means the adopted histogram was wrong/stale —
-    // drop it (never emit a guess); sums must also re-agree with the two
-    // scalar aggregates or the buckets diverged from reality
-    if (histBounds != null &&
-        histCounts.forall(_ >= 0) && histBytes.forall(_ >= 0) &&
-        histCounts.sum == nf && histBytes.sum == bytes) {
-      val h = om.createObjectNode()
-      def put(f: String, vs: Array[Long]): Unit = {
-        val a = om.createArrayNode(); vs.foreach(a.add); h.set[com.fasterxml.jackson.databind.JsonNode](f, a)
-      }
-      put("sortedBinBoundaries", histBounds)
-      put("fileCounts", histCounts)
-      put("totalBytes", histBytes)
-      out.set[com.fasterxml.jackson.databind.JsonNode]("histogramOpt", h)
-    }
-    out.put("numMetadata", 1L)
-    out.put("numProtocol", 1L)
-    out.set[com.fasterxml.jackson.databind.JsonNode]("protocol", protocolNode)
-    out.set[com.fasterxml.jackson.databind.JsonNode]("metadata", metadataNode)
-    Some(om.writeValueAsString(out))
+    // protocol and metaData: the commit's own lines over pre's, each
+    // restated as the action its crc echo is, folded by the replay
+    val heads = lines.zip(rows).collect { case (l, r) if !r.isNullAt(2) || !r.isNullAt(3) => l }
+    val head =
+      if (heads.isEmpty) pre.getOrElse(return None)
+      else LogReplay.replayOnDriver(logDir.getParent.toString, version, (pre.toSeq.flatMap { p =>
+        LogReplay.decodeLines(spark, DeltaActions.actionSchema, p.version,
+          Seq(s"""{"protocol":${protocolJson(p)}}""", s"""{"metaData":${metadataJson(p)}}"""))
+      } ++ LogReplay.decodeLines(spark, DeltaActions.actionSchema, version, heads)).iterator).snap
+    // a negative bucket, or sums that no longer re-agree with the two
+    // totals, mean the adopted histogram was stale: write none, never a guess
+    Some(body(head, nf, bytes, digest, None, hist.filter { case (_, counts, byts) =>
+      counts.forall(_ >= 0) && byts.forall(_ >= 0) && counts.sum == nf && byts.sum == bytes
+    }))
   } catch { case _: Exception => None }
 
   /** The crc text of `version`; None when it is absent or unreadable

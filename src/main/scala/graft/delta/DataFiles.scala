@@ -235,13 +235,16 @@ object DataFiles {
     stats.collect { case (p, Some(json)) => p -> json }.toMap
   }
 
-  /** The data files under `dir`, recursively, as the listing pages in:
-    * parquet files whose names start with neither `_` nor `.`. */
+  /** The data files under `dir`, recursively, as the listing pages in. */
   def listDataFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] = {
     val it = fs.listFiles(dir, true)
-    Iterator.continually(()).takeWhile(_ => it.hasNext).map(_ => it.next()).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }
+    Iterator.continually(()).takeWhile(_ => it.hasNext).map(_ => it.next()).filter(isDataFile)
+  }
+
+  /** Is `st` a data file: a parquet file whose name starts with neither
+    * `_` nor `.`? */
+  def isDataFile(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
   }
 }

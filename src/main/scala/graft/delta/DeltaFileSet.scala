@@ -334,9 +334,9 @@ object DeltaFileSet {
   /** One file's contribution to [[DeltaFileSet.setDigest]]:
     * `xxhash64(path, size)` with Spark's exact semantics (seed 42, the
     * string hash seeding the long hash) so the distributed form stays the
-    * codegen'd `functions.xxhash64` while the incremental crc arithmetic
-    * ([[Checksum.incremental]]) computes the identical value in pure JVM
-    * from the commit's own action lines. */
+    * codegen'd `functions.xxhash64` while the crc arithmetic
+    * ([[Checksum.chained]]) computes the identical value in pure JVM
+    * from the commit's own adds and removes. */
   def fileDigest(path: String, size: Long): Long = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     XXH64.hashLong(size, XXH64.hashUTF8String(

@@ -36,8 +36,10 @@ import scala.jdk.CollectionConverters._
   * advanced from it rather than replayed ([[advanced]]): the new commits
   * are decoded on the driver and folded into the cached snapshot's
   * winners by the same reducer and assembly, so a read after a write —
-  * the session's own, another writer's, a conflict retry's, a
-  * checkpoint's — resolves with no Spark job.
+  * another writer's, a conflict retry's, a checkpoint's — resolves with
+  * no Spark job. The session's own commit is folded in once, from the
+  * lines it committed, and cached ([[committed]]): the read after it is a
+  * hit.
   *
   * Job budget of a cold snapshot. On the driver placement: zero jobs, and
   * the file set is born collected, so its files, validation and listing
@@ -116,7 +118,7 @@ object DeltaSnapshotReader {
     val key = (log.tablePath, target)
     val stamp = stampAt(log, target)
     cache.synchronized(Option(cache.get(key)).filter(_.stamp == stamp)) match {
-      case Some(hit) => resolved(log, target, "hit"); hit.replayed.snap
+      case Some(hit) => resolved(log.tablePath, target, "hit"); hit.replayed.snap
       case None =>
         // the target's crc, read once at the file set's first touch: its
         // numFiles places a replayed set (DeltaFileSet), then validation
@@ -136,18 +138,21 @@ object DeltaSnapshotReader {
         // validation aggregates are driver-local folds: same contract,
         // zero jobs.)
         r.snap.fileSet.armValidator(() => Checksum.validate(log.logPath, r.snap, crc))
-        release(cache.synchronized {
-          val replaced = Option(cache.put(key, Cached(stamp, r)))
-          val lru = cache.values.iterator
-          replaced ++ Seq.fill(cache.size - CacheCapacity max 0) { val c = lru.next(); lru.remove(); c }
-        })
+        put(key, Cached(stamp, r))
         r.snap
     }
   }
 
+  /** Cache `entry` under `key`, evicting past [[CacheCapacity]]. */
+  private def put(key: (String, Long), entry: Cached): Unit = release(cache.synchronized {
+    val replaced = Option(cache.put(key, entry))
+    val lru = cache.values.iterator
+    replaced ++ Seq.fill(cache.size - CacheCapacity max 0) { val c = lru.next(); lru.remove(); c }
+  })
+
   /** The DEBUG line of one resolution, logged as its path is taken. */
-  private def resolved(log: LogListing, target: Long, how: String): Unit =
-    logger.debug(s"snapshot ${log.tablePath} v$target: $how")
+  private def resolved(tablePath: String, target: Long, how: String): Unit =
+    logger.debug(s"snapshot $tablePath v$target: $how")
 
   /** Release the file sets of entries taken out of the cache, outside its
     * lock (a file set's lock may be held by a thread building it). */
@@ -183,9 +188,43 @@ object DeltaSnapshotReader {
       commits = log.commits.range(u + 1, target + 1).toSeq
       if commits.length == target - u && commits.map(_._2.getLen).sum <= LogReplay.localMaxBytes(spark)
     } yield {
-      resolved(log, target, s"advanced from $u (${commits.length} commits)")
+      resolved(log.tablePath, target, s"advanced from $u (${commits.length} commits)")
       val tail = LogReplay.decode(spark, actionSchema, commits.map { case (v, st) => v -> st.getPath })
       LogReplay.replayOnDriver(log.tablePath, target, winners.iterator ++ tail.iterator)
+    }
+  }
+
+  /** The snapshot a writer's commit leaves: `pre`, the snapshot it was
+    * made on (None for a table's first commit: no winners), advanced by
+    * the `lines` committed as `version`, decoded in memory and folded into
+    * pre's winners as [[advanced]] folds. Cached, stamped by one
+    * `getFileStatus` of the commit file, so the read after the write is a
+    * hit. None unless pre is the cached snapshot of its version, the
+    * driver holds its winners, they and the lines number at most
+    * `spark.graft.delta.driverFileListThreshold`, and pre passes
+    * validation against its own crc (a driver fold on a held set). */
+  private[delta] def committed(spark: SparkSession, tablePath: String, pre: Option[DeltaSnapshot],
+                               version: Long, lines: Seq[String]): Option[DeltaSnapshot] = {
+    val base = pre match {
+      case None => Some(Nil)
+      case Some(p) => cache.synchronized(Option(cache.get((p.tablePath, p.version))))
+        .filter(_.replayed.snap eq p).flatMap(_.replayed.winners())
+    }
+    for {
+      winners <- base
+      if winners.count(LogReplay.isAdd) + lines.size <= DeltaFileSet.driverListThreshold(spark)
+      if pre.forall(p => scala.util.Try(p.fileSet.count).isSuccess)
+    } yield {
+      val table = pre.fold(tablePath)(_.tablePath)
+      val r = LogReplay.replayOnDriver(table, version,
+        winners.iterator ++ LogReplay.decodeLines(spark, actionSchema, version, lines).iterator)
+      val commit = LogListing.commitFile(table, version)
+      scala.util.Try(commit.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(commit))
+        .foreach { st =>
+          resolved(table, version, "advanced by its commit")
+          put((table, version), Cached(Some((st.getPath.getName, st.getLen, st.getModificationTime)), r))
+        }
+      r.snap
     }
   }
 
@@ -228,10 +267,10 @@ object DeltaSnapshotReader {
     val sources = segment.map { case (v, st) => v -> st.getPath }
     val (tablePath, logPath) = (log.tablePath, log.logPath)
     if (cpVersion.isEmpty && sources.nonEmpty && segment.map(_._2.getLen).sum <= LogReplay.localMaxBytes(spark)) {
-      resolved(log, target, "cold driver")
+      resolved(log.tablePath, target, "cold driver")
       LogReplay.replayOnDriver(tablePath, target, LogReplay.decode(spark, actionSchema, sources).iterator)
     } else {
-      resolved(log, target, "cold distributed")
+      resolved(log.tablePath, target, "cold distributed")
       val cpDf = cpVersion.map { v =>
         val (v2Files, classicFiles) = log.checkpoints(v).partition(_._2)
         val actions =
@@ -347,16 +386,15 @@ object DeltaSnapshotReader {
     * action (nulls for writers that record none). Distributed read of the
     * commit JSONs; newest first, Delta's own display order. */
   def history(spark: SparkSession, tablePath: String): DataFrame = {
-    val commitFiles = LogListing.ofTable(spark, tablePath).commits.values.map(_.getPath.toString).toSeq
-    require(commitFiles.nonEmpty, s"no commit JSONs in $tablePath (log truncated?)")
+    val commits = LogListing.ofTable(spark, tablePath).commits.toSeq.map { case (v, st) => v -> st.getPath }
+    require(commits.nonEmpty, s"no commit JSONs in $tablePath (log truncated?)")
     val ciSchema = StructType(Seq(StructField("commitInfo", StructType(Seq(
       StructField("timestamp", LongType),
       StructField("inCommitTimestamp", LongType),
       StructField("operation", StringType),
       StructField("operationParameters", MapType(StringType, StringType)),
       StructField("engineInfo", StringType))))))
-    spark.read.schema(ciSchema).json(commitFiles: _*)
-      .withColumn("version", LogReplay.commitVersion)
+    LogReplay.actions(spark, ciSchema, commits)
       // one row per VERSION even when a (foreign) commit wrote no
       // commitInfo: keep the single non-null struct per commit, else null
       .groupBy(col("version"))

@@ -1,7 +1,8 @@
 package graft.delta
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -795,11 +796,9 @@ object DeltaWriter {
     * inference; per-file min/max/nullCount stats are read from footers in
     * one distributed pass (`collectStats = false` skips it for a quick
     * conversion of a huge table — the cost is only data-skipping
-    * effectiveness). The table tree is listed once. With stats on, the
-    * footer pass needs the whole list, so it is held on the driver; with
-    * `collectStats = false` the listing STREAMS through the commit writer
-    * (one `RemoteIterator` element at a time), so converting a 10M-file
-    * table never materializes the list. */
+    * effectiveness). The table tree is listed once, by Spark's inference:
+    * the files come from the inferred relation's own file index, which
+    * holds that listing on the driver, stats on or off. */
   def convertToDelta(spark: SparkSession, dir: String,
                      partitionColumns: Seq[String] = Nil,
                      collectStats: Boolean = true): Long = synchronized {
@@ -814,13 +813,15 @@ object DeltaWriter {
       s"partition column $c not found (inferred: ${df.schema.simpleString})"))
     val dataSchema = org.apache.spark.sql.types.StructType(
       df.schema.fields.filterNot(f => partitionColumns.contains(f.name)))
-    val (files, stats): (Iterator[FileStatus], Map[String, String]) =
-      if (!collectStats) (DataFiles.listDataFiles(fs, table), Map.empty)
-      else {
-        val listed = DataFiles.listDataFiles(fs, table).toSeq
-        (listed.iterator, DataFiles.listedStats(spark, listed, DataFiles.statColumns(dataSchema, Map.empty)))
-      }
-    val addLines = files.map { st =>
+    val files = df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation } match {
+      case Some(HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _)) =>
+        index.allFiles().filter(DataFiles.isDataFile)
+      case other => throw new IllegalStateException(s"$dir read as $other, not a listed parquet relation")
+    }
+    val stats =
+      if (collectStats) DataFiles.listedStats(spark, files, DataFiles.statColumns(dataSchema, Map.empty))
+      else Map.empty[String, String]
+    val addLines = files.iterator.map { st =>
       val rel = relativize(table, st.getPath)
       // every k=v directory segment must be a DECLARED partition column:
       // silently treating one as a data column would read as all-null
@@ -2296,9 +2297,9 @@ object DeltaWriter {
     * budget as the write paths and are read from parquet FOOTERS
     * executor-side; the re-add lines STREAM into the commit one partition
     * at a time — the driver never holds the file list (the row-tracking
-    * backfill discipline, which also keeps the incremental crc honest:
-    * re-adds of live paths without removes are outside its sound
-    * arithmetic, and the stream funnel always takes the replay fallback).
+    * backfill discipline, which also keeps the crc arithmetic honest:
+    * re-adds of live paths without removes are outside it, and a commit
+    * with a streamed tail always renders its crc from the snapshot).
     * A file whose footer is unreadable keeps its previous stats (absence
     * stays conservative). */
   def recomputeStats(spark: SparkSession, tablePath: String): Long = synchronized {
@@ -3151,12 +3152,17 @@ object DeltaWriter {
     * table, rendered on executors and pulled one partition at a time), and
     * claims the next version with one call to the table's [[CommitOwner]].
     *
-    * A won claim runs the post-commit hooks, always in this order: the crc
-    * (incremental from the rendered lines; a commit with a tail takes the
-    * replay fallback), UniForm export, auto-checkpoint. A lost claim
-    * deletes the attempt's change files and applies `onConflict`; at most
-    * [[MaxCommitAttempts]] claims are made. Neither touches the snapshot
-    * cache: the next listing shows the new version, and a cached snapshot
+    * A won claim runs the post-commit hooks, always in this order: the crc,
+    * UniForm export, auto-checkpoint. The crc hook gets the attempt's
+    * snapshot and its rendered lines ([[Checksum.writeAfterCommit]]):
+    * (a) where the driver holds that snapshot's winners, the lines are
+    * folded into them and the post-commit snapshot is cached, so the read
+    * after the write is a hit; (b) otherwise the previous crc ± the lines'
+    * adds and removes; (c) a commit with a tail renders from the
+    * post-commit snapshot, advanced or replayed. A lost claim deletes the
+    * attempt's change files and applies `onConflict`; at most
+    * [[MaxCommitAttempts]] claims are made, and no cache entry is touched:
+    * the next listing shows the winner's version, and a cached snapshot
     * of an older one stays correct ([[DeltaSnapshotReader.snapshotAt]]).
     *
     * `config` is the configuration the commit leaves in force when it sets
@@ -3206,7 +3212,7 @@ object DeltaWriter {
             false
         }
       if (won) {
-        Checksum.writeAfterCommit(fs, logDir, a.version, if (tail.isEmpty) Some(lines) else None)
+        Checksum.writeAfterCommit(spark, fs, tablePath, a.cur, a.version, if (tail.isEmpty) Some(lines) else None)
         // tables whose configuration enables Iceberg re-export their
         // metadata on every commit; best-effort, the commit is durable
         IcebergUniform.maybeAutoExport(logDir, under)
@@ -3280,8 +3286,8 @@ object DeltaWriter {
     * physical keys. Per the protocol, `size`/`partitionValues` on a remove
     * are meaningful only under `extendedFileMetadata:true` (delta-spark
     * emits the same triple, and a spec-conformant log rewriter may drop the
-    * fields otherwise); the size also feeds the incremental crc arithmetic
-    * ([[Checksum]]). */
+    * fields otherwise); the size also feeds the crc arithmetic
+    * ([[Checksum.chained]]). */
   private def removeLine(f: AddFile, deletionTimestamp: Long, dataChange: Boolean): String =
     s"""{"remove":{"path":${q(f.path)},"deletionTimestamp":$deletionTimestamp,"dataChange":$dataChange,"extendedFileMetadata":true,"partitionValues":${jsonMap(f.partitionValues)},"size":${f.size}}}"""
 

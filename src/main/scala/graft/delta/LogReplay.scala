@@ -55,7 +55,7 @@ private[delta] object LogReplay {
       .getOrElse(4L * 1024 * 1024)
 
   /** Version of a commit file's rows, from the file's name. */
-  def commitVersion: Column =
+  private def commitVersion: Column =
     regexp_extract(input_file_name(), LogListing.CommitPattern, 1).cast(LongType)
 
   /** Driver placement of the decoder: the JSON lines of `sources` —
@@ -67,22 +67,36 @@ private[delta] object LogReplay {
     * millisecond. */
   def decode(spark: SparkSession, schema: StructType, sources: Seq[(Long, Path)]): Seq[InternalRow] = {
     val conf = spark.sessionState.newHadoopConf()
-    val sql = spark.sessionState.conf
-    val parser = JsonToStructsEvaluator(Map.empty, schema, sql.columnNameOfCorruptRecord,
-      Some(sql.sessionLocalTimeZone), false)
+    val parse = lineDecoder(spark, schema)
     sources.flatMap { case (v, file) =>
       val in = file.getFileSystem(conf).open(file)
       val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
       // the line breaks the distributed text reader splits on
-      text.split("\r\n|\r|\n").iterator.filterNot(_.isBlank).map { line =>
-        val out = new GenericInternalRow(schema.length + 1)
-        parser.evaluate(UTF8String.fromString(line)) match {
-          case null => // malformed: every action null
-          case r: InternalRow => schema.fields.indices.foreach(i => out.update(i, r.get(i, schema(i).dataType)))
-        }
-        out.setLong(schema.length, v)
-        out
+      text.split("\r\n|\r|\n").iterator.filterNot(_.isBlank).map(parse(v, _))
+    }
+  }
+
+  /** [[decode]] of log lines in hand, one row per line: the lines a
+    * writer just committed as `version`, read without a trip to the file
+    * system. */
+  def decodeLines(spark: SparkSession, schema: StructType, version: Long, lines: Seq[String]): Seq[InternalRow] = {
+    val parse = lineDecoder(spark, schema)
+    lines.map(parse(version, _))
+  }
+
+  /** The decoder of one log line replaying at a version. */
+  private def lineDecoder(spark: SparkSession, schema: StructType): (Long, String) => InternalRow = {
+    val sql = spark.sessionState.conf
+    val parser = JsonToStructsEvaluator(Map.empty, schema, sql.columnNameOfCorruptRecord,
+      Some(sql.sessionLocalTimeZone), false)
+    (v, line) => {
+      val out = new GenericInternalRow(schema.length + 1)
+      parser.evaluate(UTF8String.fromString(line)) match {
+        case null => // malformed: every action null
+        case r: InternalRow => schema.fields.indices.foreach(i => out.update(i, r.get(i, schema(i).dataType)))
       }
+      out.setLong(schema.length, v)
+      out
     }
   }
 

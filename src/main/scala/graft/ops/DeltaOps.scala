@@ -256,9 +256,11 @@ object DeltaOps {
     import s.implicits._
     val t = ensureDemoTable(s, dir)
     val latest = DeltaSnapshotReader.latestVersion(s, t)
-    // echo PRESENCE comes from the artifact (the incremental writer may
-    // legitimately omit the field — e.g. a table that shrank back under
-    // the threshold on a digest-less chain); the echo VALUES are replay-
+    // echo PRESENCE comes from the artifact: a crc rendered from the
+    // post-commit snapshot (path (a)) or from a replay (path (c)) carries
+    // it on a table of at most AllFilesEchoThreshold files, while one
+    // chained from the previous crc (path (b), a file set kept on
+    // executors) legitimately omits it; the echo VALUES are replay-
     // derived, so when an echo exists its length, entry-size sum and path
     // range must match the independently replayed add-set. collected() is
     // bounded by the threshold guard (never the crc's own claim).
@@ -279,8 +281,9 @@ object DeltaOps {
             if (files.isEmpty) None else Some(files.map(_.size).sum),
             files.map(_.path).minOption, files.map(_.path).maxOption)
         } else (None, None, None, None)
-      // histogram columns (r15): PRESENCE from the artifact (incremental
-      // chains may legitimately drop the field), VALUES replay-derived —
+      // histogram columns (r15): PRESENCE from the artifact (a path (b)
+      // chain drops the field when the previous crc had none, or its
+      // buckets stopped re-agreeing with the totals), VALUES replay-derived —
       // bucket sums must re-agree with the scalar aggregates, and the
       // occupied/top-bucket shape pins the per-bucket layout the oracle
       // reads straight from the artifact's own arrays. The replay buckets

@@ -137,35 +137,39 @@ class ChecksumSpec extends SparkSpec {
     assert(DeltaSnapshotReader.snapshotAt(spark, t, Some(0L)).fileSet.count == 1)
   }
 
-  test("incremental(): edge shapes fall back (None); foreign fields never carry forward") {
+  test("chained(): edge shapes fall back (None); foreign fields never carry forward") {
     val t = newTable()
     DeltaWriter.write(df(0, 10), t) // v0 — a real prev crc exists
     val logDir = new org.apache.hadoop.fs.Path(t, "_delta_log")
     val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val pre = Some(DeltaSnapshotReader.snapshot(spark, t))
+    def chained(version: Long, lines: String*) =
+      Checksum.chained(spark, fs, logDir, if (version == 0L) None else pre, version, lines)
     val add = """{"add":{"path":"x.parquet","partitionValues":{},"size":100,"modificationTime":1,"dataChange":true}}"""
-    // happy path: arithmetic against the real v0 crc
+    val commitInfo = """{"commitInfo":{"timestamp":1,"operation":"WRITE"}}"""
+    val cdc = """{"cdc":{"path":"_change_data/c.parquet","partitionValues":{},"size":5,"dataChange":false}}"""
+    // happy path: arithmetic against the real v0 crc; commitInfo and cdc
+    // lines are known actions that leave the state alone; no allFiles echo
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val inc = Checksum.incremental(fs, logDir, 1L, Seq(add))
+    val inc = chained(1L, commitInfo, add, cdc)
     assert(inc.isDefined)
     val node = om.readTree(inc.get)
     assert(node.get("numFiles").asLong == 2)
-    // remove WITHOUT size (RESTORE's distributed builder shape) → fallback
-    assert(Checksum.incremental(fs, logDir, 1L,
-      Seq("""{"remove":{"path":"x","dataChange":true}}""")).isEmpty)
+    assert(!node.has("allFiles"), "path (b) writes no allFiles echo")
+    // remove WITHOUT size (a foreign writer's shape) → fallback
+    assert(chained(1L, """{"remove":{"path":"x","dataChange":true}}""").isEmpty)
     // unknown action → fallback (never guess)
-    assert(Checksum.incremental(fs, logDir, 1L,
-      Seq("""{"futureAction":{"x":1}}""")).isEmpty)
+    assert(chained(1L, """{"futureAction":{"x":1}}""").isEmpty)
     // negative intermediate (remove more bytes than the table has) → fallback
-    assert(Checksum.incremental(fs, logDir, 1L,
-      Seq("""{"remove":{"path":"x","dataChange":true,"size":999999999999}}""")).isEmpty)
+    assert(chained(1L, """{"remove":{"path":"x","dataChange":true,"size":999999999999}}""").isEmpty)
     // torn previous crc → fallback
     hadoopWrite(t, 0, """{"numFi""")
-    assert(Checksum.incremental(fs, logDir, 1L, Seq(add)).isEmpty)
+    assert(chained(1L, add).isEmpty)
     // missing previous crc → fallback
     Files.delete(crcFile(t, 0))
-    assert(Checksum.incremental(fs, logDir, 1L, Seq(add)).isEmpty)
-    // v0 without a metaData action → fallback (echo would be junk)
-    assert(Checksum.incremental(fs, logDir, 0L, Seq(add)).isEmpty)
+    assert(chained(1L, add).isEmpty)
+    // v0 without a metaData action → fallback (the echo would be junk)
+    assert(chained(0L, add).isEmpty)
     // FOREIGN prev crc WITHOUT setDigest (delta-spark's VersionChecksum):
     // the XOR chain cannot start mid-stream → fallback to replay, which
     // restarts the chain with a fresh digest (r14)
@@ -175,8 +179,7 @@ class ChecksumSpec extends SparkSpec {
         """"txnId":"abc","protocol":{"minReaderVersion":1,"minWriterVersion":2},""" +
         """"metadata":{"partitionColumns":[],"configuration":{},"schemaString":"{\"type\":\"struct\",\"fields\":[]}",""" +
         """"format":{"provider":"parquet","options":{}}}}""")
-    assert(Checksum.incremental(fs, logDir, 1L, Seq(add)).isEmpty,
-      "a digest-less foreign chain must fall back to replay")
+    assert(chained(1L, add).isEmpty, "a digest-less foreign chain must fall back to replay")
     // same foreign crc WITH a digest: arithmetic proceeds, but none of the
     // foreign state may survive into the new crc under the new version
     hadoopWrite(t, 0,
@@ -185,35 +188,33 @@ class ChecksumSpec extends SparkSpec {
         """"txnId":"abc","protocol":{"minReaderVersion":1,"minWriterVersion":2},""" +
         """"metadata":{"partitionColumns":[],"configuration":{},"schemaString":"{\"type\":\"struct\",\"fields\":[]}",""" +
         """"format":{"provider":"parquet","options":{}}}}""")
-    val chained = Checksum.incremental(fs, logDir, 1L, Seq(add))
-    assert(chained.isDefined)
-    val out = om.readTree(chained.get)
+    val out = om.readTree(chained(1L, add).get)
     assert(out.get("numFiles").asLong == 2 && out.get("tableSizeBytes").asLong == 600)
     assert(out.get("setDigest").asLong == DeltaFileSet.fileDigest("x.parquet", 100L),
       "digest arithmetic: 0 XOR h(add) == h(add)")
-    for (stale <- Seq("setTransactions", "txnId"))
+    // the foreign echo is never adopted: path (b) writes no echo at all
+    for (stale <- Seq("setTransactions", "txnId", "allFiles"))
       assert(!out.has(stale), s"foreign field '$stale' carried forward")
-    // allFiles is NOT stale state: a complete foreign echo (length ==
-    // numFiles) is ADOPTED and maintained by the arithmetic (r14) — the
-    // new crc must hold the foreign file plus this commit's add
-    import scala.jdk.CollectionConverters._
-    val echoPaths = out.get("allFiles").elements().asScala
-      .map(_.get("path").asText).toSet
-    assert(echoPaths == Set("a.parquet", "x.parquet"), s"echo: $echoPaths")
-    // a foreign echo whose length does NOT match numFiles is never
-    // adopted: the output omits the field instead of guessing
-    hadoopWrite(t, 0,
-      """{"tableSizeBytes":500,"numFiles":1,"setDigest":0,"numMetadata":1,"numProtocol":1,""" +
-        """"allFiles":[],""" +
-        """"protocol":{"minReaderVersion":1,"minWriterVersion":2},""" +
-        """"metadata":{"partitionColumns":[],"configuration":{},"schemaString":"{\"type\":\"struct\",\"fields\":[]}",""" +
-        """"format":{"provider":"parquet","options":{}}}}""")
-    val noEcho = Checksum.incremental(fs, logDir, 1L, Seq(add))
-    assert(noEcho.isDefined && !om.readTree(noEcho.get).has("allFiles"),
-      "incomplete foreign echo must not be adopted")
+    // protocol and metaData come from the snapshot the commit was made on,
+    // never from the previous crc's echo
+    assert(out.get("metadata").get("schemaString").asText == pre.get.schema.json)
+    assert(out.get("metadata").get("id").asText == pre.get.metadataId.get)
+    // ...or from the commit's own lines, which win over it
+    val meta = om.readTree(chained(1L, add,
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""",
+      s"""{"metaData":{"id":"${pre.get.metadataId.get}","format":{"provider":"parquet","options":{}},""" +
+        s""""schemaString":${DeltaWriter.q(pre.get.schema.json)},"partitionColumns":[],""" +
+        """"configuration":{"k":"v"},"createdTime":7}}""").get)
+    assert(meta.get("protocol").get("minWriterVersion").asInt == 4)
+    assert(meta.get("metadata").get("configuration").get("k").asText == "v")
+    assert(meta.get("metadata").get("createdTime").asLong == 7)
+    // a protocol-only commit keeps pre's metaData
+    val proto = om.readTree(chained(1L, """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""").get)
+    assert(proto.get("protocol").get("minWriterVersion").asInt == 4)
+    assert(proto.get("metadata").get("schemaString").asText == pre.get.schema.json)
     // foreign prev WITHOUT the state aggregates → fallback
     hadoopWrite(t, 0, """{"txnId":"abc"}""")
-    assert(Checksum.incremental(fs, logDir, 1L, Seq(add)).isEmpty)
+    assert(chained(1L, add).isEmpty)
   }
 
   test("fileDigest == Spark's codegen'd xxhash64(path, size) — the two forms must agree") {

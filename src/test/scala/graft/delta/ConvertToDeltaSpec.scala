@@ -81,7 +81,7 @@ class ConvertToDeltaSpec extends SparkSpec {
   test("collectStats lists the table tree no more often than a conversion without stats") {
     // per directory (relative to the table root), how often it was listed
     // outside _delta_log: Spark's schema inference lists each once, and
-    // the conversion's own listing feeds both the footer pass and the adds
+    // its file index feeds both the footer pass and the adds
     def listings(collectStats: Boolean): Map[String, Int] = {
       val d = newDir()
       (1L to 40L).map(i => (i, s"r$i", (i % 4).toInt)).toDF("id", "s", "bucket")
@@ -97,6 +97,6 @@ class ConvertToDeltaSpec extends SparkSpec {
     val without = listings(collectStats = false)
     assert(withStats.size == 5, withStats) // the root and its 4 partition directories
     assert(withStats == without, s"with stats $withStats, without $without")
-    assert(withStats.values.forall(_ <= 2), withStats)
+    assert(withStats.values.forall(_ == 1), withStats)
   }
 }

@@ -321,6 +321,9 @@ class DeltaScaleSpec extends SparkSpec {
     // same artifact shape a million-file table has
     if (dvEnabled)
       DeltaWriter.setProperties(spark, t, Map("delta.enableDeletionVectors" -> "true"))
+    // the writes above ran at the default gates and cached the snapshots
+    // their commits leave, collected: the tests read the table cold
+    DeltaSnapshotReader.invalidate(t)
     t
   }
 

@@ -7,12 +7,14 @@ import java.nio.file.Files
 
 /** File-system calls on `_delta_log` of the two metadata-plane operations
   * an ingest table repeats: a plain append on a warm snapshot, and a
-  * fresh snapshot + load of a checkpointed table. Each bound is the count
-  * the engine made before its snapshot cache checked entries against the
-  * listing (append 2 listStatus, 3 exists, 1 open; fresh read 4, 5, 6),
-  * so that check can never add a call. The two together are locked at
-  * the count measured once a fresh read advances the writer's snapshot
-  * (3, 2, 3), and must open no checkpoint. A caller that holds a
+  * fresh snapshot + load of a checkpointed table. The fresh read's bound
+  * is the count the engine made before its snapshot cache checked
+  * entries against the listing (4 listStatus, 5 exists, 6 open), so that
+  * check can never add a call. The append is locked at the count
+  * measured once its crc is rendered from the snapshot its commit leaves
+  * (1, 1, 0: no previous crc is read), and the two together at the count
+  * measured once that snapshot is cached for the read after the write
+  * (3, 1, 0), which opens no log file at all. A caller that holds a
   * snapshot and reads it through [[DeltaFileIndex.relation]] lists
   * `_delta_log` once, for the snapshot. */
 class LogFsCallSpec extends SparkSpec {
@@ -34,7 +36,8 @@ class LogFsCallSpec extends SparkSpec {
     val t = checkpointed()
     val (_, calls) = CountingFileSystem.count(spark)(append(t, 3))
     info(s"plain append: $calls")
-    assert(calls.listStatus <= 2 && calls.exists <= 3 && calls.open <= 1, s"a plain append made $calls")
+    // the crc is rendered from the post-commit snapshot: no previous crc is read
+    assert(calls.listStatus <= 1 && calls.exists <= 1 && calls.open == 0, s"a plain append made $calls")
   }
 
   test("snapshot + load at its version of a checkpointed table: listStatus, exists and open calls") {
@@ -58,10 +61,10 @@ class LogFsCallSpec extends SparkSpec {
     }
     assert(n == 4 * 7)
     info(s"append + fresh read: $calls")
-    // the new version is advanced from the writer's snapshot: the read
-    // opens the new commit and its crc, and no checkpoint
+    // the append cached the snapshot its commit leaves: the read is a hit
+    // and opens no log file, checkpoint or commit
     assert(!calls.opened.exists(_.contains(".checkpoint")), s"a checkpoint was opened: $calls")
-    assert(calls.listStatus <= 3 && calls.exists <= 2 && calls.open <= 3, s"an append + fresh read made $calls")
+    assert(calls.listStatus <= 3 && calls.exists <= 1 && calls.open == 0, s"an append + fresh read made $calls")
   }
 
   test("a caller holding a snapshot reads it through DeltaFileIndex.relation: one _delta_log listing") {

@@ -105,6 +105,8 @@ class SnapshotCacheSpec extends SparkSpec {
     // without a crc the file set is not collected for validation: it is
     // persisted at its first touch and stays distributed
     new java.io.File(t, "_delta_log").listFiles().filter(_.getName.endsWith(".crc")).foreach(_.delete())
+    // the writes cached the snapshot their commits leave: read cold
+    DeltaSnapshotReader.invalidate(t)
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     val before = persisted
     val (snap, evens) = withConf(Gates) {
