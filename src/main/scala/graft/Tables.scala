@@ -42,29 +42,9 @@ object Tables {
     val raw = load(s, d, "events")
     val df = normalizeEventTs(raw)
     assertEventTimeSane(df, raw.schema("ts").dataType, s"$d/events.parquet")
-    // Opt-in per-(session, dir) cache: the bench re-reads events for every
-    // streaming-family key, so Bench sets `spark.graft.cacheEvents=true` to
-    // materialize the normalized frame once. OFF by default — correctness
-    // runs and the plan-lock specs must see the real parquet scan (pushed
-    // filters / ReadSchema), not an InMemoryRelation.
-    if (s.conf.getOption("spark.graft.cacheEvents").contains("true")) {
-      // evict entries owned by stopped sessions on every access: the flag is
-      // Bench-internal, but if a long-lived host sets it anyway, dead
-      // sessions must not pin persisted frames for the JVM lifetime
-      eventsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-      eventsCache.computeIfAbsent((s, d), _ => {
-        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cached.count() // materialize eagerly so every key reads warm
-        cached
-      })
-    } else df
+    df
   }
 
-  // keyed by the session INSTANCE (SparkSession uses identity equality), so
-  // a new session can never inherit a stopped session's cached frame; the
-  // strong reference is fine — the flag is only set by the one-session Bench
-  private val eventsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
 
   /** §2.5 input-skew fix for CPU-heavy per-row work over a SMALL scan: a

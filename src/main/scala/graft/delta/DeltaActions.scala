@@ -385,13 +385,16 @@ object ColumnMapping {
     * nested renames ride along), aliased to the physical name with its
     * mapping metadata (in `id` mode that metadata carries
     * `parquet.field.id`, which Spark's parquet writer emits as field IDs).
-    * Exact inverse of the read path's physical→logical projection. */
+    * Exact inverse of the read path's physical→logical projection.
+    * `extra` columns (physical-only, e.g. materialized row ids) follow
+    * unchanged. */
   def renameToPhysical(df: org.apache.spark.sql.DataFrame,
-                       logical: StructType, physical: StructType): org.apache.spark.sql.DataFrame = {
+                       logical: StructType, physical: StructType,
+                       extra: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     df.select(logical.fields.zip(physical.fields).map { case (lf, pf) =>
       col(s"`${lf.name}`").cast(pf.dataType).as(pf.name, pf.metadata)
-    }.toSeq: _*)
+    }.toSeq ++ extra.map(c => col(s"`$c`")): _*)
   }
 
   /** Assign column-mapping metadata to an UNMAPPED schema (the ALTER TABLE

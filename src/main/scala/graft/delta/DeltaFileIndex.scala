@@ -3,10 +3,10 @@ package graft.delta
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, FileSourceConstantMetadataStructField, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark-native integration of the Delta snapshot: a custom [[FileIndex]]
@@ -52,8 +52,10 @@ final class DeltaFileIndex(
   private def useDriverPath: Boolean = snap.fileSet.servedFromDriver
 
   /** Group files by partition-value tuple, values cast to the declared
-    * partition types as Catalyst internal rows. */
-  private def partitionDirs(files: Seq[AddFile]): Seq[(InternalRow, Array[FileStatus])] = {
+    * partition types as Catalyst internal rows. A file's row-tracking
+    * fields ride along as its file-constant `_metadata` values
+    * ([[DeltaFileIndex.rowIdMetadata]]). */
+  private def partitionDirs(files: Seq[AddFile]): Seq[(InternalRow, Seq[FileStatusWithMetadata])] = {
     val ps = partitionSchema
     val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
     // deterministic partition order: element-wise compare with explicit
@@ -71,9 +73,9 @@ final class DeltaFileIndex(
           Cast(Literal(if (v == null) null else UTF8String.fromString(v), StringType),
             f.dataType, tz).eval(null)
         })
-        val statuses = fs.map(f =>
+        val statuses = fs.map(f => FileStatusWithMetadata(
           new FileStatus(f.size, false, 1, 128L * 1024 * 1024, f.modificationTime,
-            new Path(snap.absolutePath(f)))).toArray
+            new Path(snap.absolutePath(f))), DeltaFileIndex.rowIdMetadata(f)))
         (row, statuses)
       }
   }
@@ -211,6 +213,24 @@ object DeltaFileIndex {
     f.deletionVector.exists(dv => dv.cardinality > 0 &&
       f.stats.flatMap(DataSkipping.parse).flatMap(_.numRecords).contains(dv.cardinality))
 
+  /** File-constant `_metadata` fields of the Delta scan: each file's
+    * `baseRowId` and `defaultRowCommitVersion` (null where the add has
+    * none), the per-file inputs of a row id, as delta-spark's scan
+    * exposes them. Spark fills them per file from the index's
+    * [[FileStatusWithMetadata]]; no join with the file set is needed. */
+  val BaseRowId = "base_row_id"
+  val DefaultRowCommitVersion = "default_row_commit_version"
+
+  private def rowIdMetadata(f: AddFile): Map[String, Any] =
+    (f.baseRowId.map(BaseRowId -> _) ++
+      f.defaultRowCommitVersion.map(DefaultRowCommitVersion -> _)).toMap
+
+  /** Parquet with the two row-tracking fields in its `_metadata` struct. */
+  private final class DeltaParquetFormat extends ParquetFileFormat {
+    override def metadataSchemaFields: Seq[StructField] = super.metadataSchemaFields ++
+      Seq(BaseRowId, DefaultRowCommitVersion).map(FileSourceConstantMetadataStructField(_, LongType, true))
+  }
+
   /** Snapshot → DataFrame through Spark's native scan stack. Under column
     * mapping the parquet scan runs with PHYSICAL field names and the final
     * projection renames back to logical (a positional struct cast — the
@@ -227,15 +247,21 @@ object DeltaFileIndex {
     * `baseRowId` + `__ri`; DV'd rows drop out, their ids never reused) and
     * the address of each row the DML core's DV leg masks.
     * `extraPhysicalCols` are physical-only parquet columns to surface
-    * (e.g. materialized row ids) — files lacking them read as null. */
+    * (e.g. materialized row ids) — files lacking them read as null.
+    * `rowIdInputs` also surfaces each row's file's [[BaseRowId]] and
+    * [[DefaultRowCommitVersion]] as `__base_row_id` and
+    * `__default_row_commit_version`. */
   def relationWithRowIndexLive(spark: SparkSession, snap: DeltaSnapshot,
-                               extraPhysicalCols: Seq[StructField] = Nil): DataFrame = {
+                               extraPhysicalCols: Seq[StructField] = Nil,
+                               rowIdInputs: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
     val (df, cols) = baseScan(spark, snap, extraPhysicalCols)
     DeletionVectors.applyToScan(spark, df, snap,
       cols ++ extraPhysicalCols.map(f => col(s"`${f.name}`"))
         :+ col("_metadata.file_path").as("__fp")
-        :+ col("_metadata.row_index").as("__ri"))
+        :+ col("_metadata.row_index").as("__ri")
+        :++ (if (!rowIdInputs) Nil
+             else Seq(BaseRowId, DefaultRowCommitVersion).map(m => col(s"_metadata.$m").as(s"__$m"))))
   }
 
   private def baseScan(spark: SparkSession, snap: DeltaSnapshot,
@@ -251,7 +277,7 @@ object DeltaFileIndex {
       partitionSchema = index.partitionSchema,
       dataSchema = StructType(snap.physicalDataSchema.fields ++ extraPhysicalCols),
       bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
+      fileFormat = new DeltaParquetFormat(),
       options = Map.empty)(spark)
     // column order: HadoopFsRelation appends partition cols after data cols;
     // reorder to the table schema (renaming physical → logical on the way)

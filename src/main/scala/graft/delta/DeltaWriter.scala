@@ -356,11 +356,13 @@ object DeltaWriter {
     * [[SplitPlanner]]; every bin with more than one file is rewritten as a
     * single file and committed as adds+removes with `dataChange=false`
     * semantics (same rows, new layout). DV-carrying inputs participate and
-    * are PURGED (r16 — delta-spark's semantics): the bin read drops masked
-    * rows and the output sheds the vector; a lone DV file qualifies once
-    * its deleted-rows ratio reaches the purge bar — resolved explicit
-    * argument > `delta.optimize.maxDeletedRowsRatio` table property >
-    * 0.05 (delta-spark's default). Returns the new version, or None if
+    * are PURGED (delta-spark's semantics): the bin read drops masked rows
+    * and the output sheds the vector; a lone DV file qualifies once its
+    * deleted-rows ratio reaches the purge bar — resolved explicit argument
+    * > `delta.optimize.maxDeletedRowsRatio` table property > 0.05
+    * (delta-spark's default). All bins are written by one Spark job and
+    * committed through [[commitRewrite]], the rewrite path of every
+    * layout and row-level rewrite. Returns the new version, or None if
     * nothing needed compaction. The table-maintenance answer to the
     * small-file problem that file-per-write streaming ingest creates. */
   def optimize(spark: SparkSession, tablePath: String,
@@ -385,15 +387,9 @@ object DeltaWriter {
           s"delta.optimize.maxDeletedRowsRatio must be in [0,1], got $v")
         d
       }.getOrElse(0.05))
-    // Row-tracked tables: compaction PRESERVES ids by materializing them
-    // into the rewritten files (spec mechanism); names must exist.
-    val tracked = RowTracking.isEnabled(snap.configuration)
-    val matCols = RowTracking.materializedCols(snap.configuration)
-    require(!tracked || matCols.isDefined,
-      s"row-tracked table $tablePath lacks materialized column names")
-    // DV-carrying files PARTICIPATE and are PURGED (r16 — delta-spark's
-    // OPTIMIZE semantics): the bin read drops their masked rows (DV-aware
-    // filter below), so the rewrite carries only live rows and the new
+    // DV-carrying files PARTICIPATE and are PURGED (delta-spark's
+    // OPTIMIZE semantics): the bin read drops their masked rows (the
+    // DV-aware relation), so the rewrite carries only live rows and the new
     // file sheds the vector — layout-only, logical content unchanged. A
     // multi-file bin always qualifies (the rewrite is happening anyway);
     // a LONE file qualifies only when its deleted-rows ratio reaches
@@ -414,11 +410,11 @@ object DeltaWriter {
           .filter(w).select(col("__path").as("path"))
         snap.fileSet.df.join(keep, Seq("path"), "left_semi")
     }
-    val rewrites: Seq[(Map[String, String], Seq[AddFile])] =
+    val bins: Seq[Seq[AddFile]] =
       scopedDf
         .rdd.map(DeltaFileSet.decode)
         .groupBy(_.partitionValues)
-        .flatMap { case (pv, files) =>
+        .flatMap { case (_, files) =>
           SplitPlanner.plan(files.toSeq, maxSplitBytes = tb)
             .filter { split =>
               split.files.size > 1 || split.files.exists { f =>
@@ -428,144 +424,27 @@ object DeltaWriter {
                 }
               }
             }
-            .map(split => (pv, split.files))
+            .map(_.files)
         }
         .collect().toSeq
-        // deterministic bin numbering across retries (executor grouping
-        // order is not stable): sort by each bin's first (largest) file
-        .sortBy { case (_, files) => files.head.path }
-    if (rewrites.isEmpty) return None
+        // deterministic bin order across retries (executor grouping order
+        // is not stable): sort by each bin's first (largest) file
+        .sortBy(_.head.path)
+    if (bins.isEmpty) return None
 
-    val table = new Path(tablePath)
-    // commit-unique output dir: racing processes must never collide on paths
-    val commitDir = s"v${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
-    // raw physical-to-physical rewrite: on a mapped table the files are
-    // read AND rewritten under physical names (no rename anywhere — the
-    // mapping is untouched metadata)
-    val dataSchema = snap.physicalDataSchema
-    if (snap.configuration.get("delta.columnMapping.mode").contains("id")) {
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    }
-
-    // rewrite each bin as one file (coalesce(1) per bin keeps each job
-    // small; bins are bounded by targetBytes). Bins run CONCURRENTLY on a
-    // bounded pool (delta-spark's optimize.maxThreads shape,
-    // `spark.graft.delta.optimize.maxThreads`, default 10): a 1000-bin
-    // maintenance cycle overlaps its job launches instead of paying 1000
-    // sequential submit→run→collect round-trips; Spark's scheduler
-    // interleaves the per-bin jobs across executors.
-    def rewriteBin(pv: Map[String, String], files: Seq[AddFile], i: Int): AddFile = {
-      // DV purge: masked rows of the bin's inputs are dropped at read
-      // time (same per-row bitmap filter as the read path's applyToScan,
-      // scoped to the bin's own descriptors) — the rewrite then carries
-      // only live rows and the output sheds the vector
-      val dvDescs: Map[String, DeletionVectors.Descriptor] = files
-        .flatMap(f => f.deletionVector.map(snap.normAbsolutePath(f) -> _)).toMap
-      def dropMasked(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        if (dvDescs.isEmpty) df
-        else {
-          val conf = new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf())
-          val tp = tablePath
-          val local = dvDescs
-          val live = udf { (fp: String, ri: Long) =>
-            local.get(DeltaActions.normUriPath(fp)) match {
-              case None => true
-              case Some(d) =>
-                !DeletionVectors.cachedBitmap(d, tp, conf.value).contains(ri)
-            }
-          }
-          df.filter(live(col("_metadata.file_path"), col("_metadata.row_index")))
-        }
-      val bin =
-        if (!tracked)
-          dropMasked(spark.read.schema(dataSchema).parquet(files.map(snap.absolutePath): _*))
-        else {
-          // compute each surviving row's id (materialized value from a
-          // previous compaction, else the file's baseRowId + row index)
-          // and WRITE it into the new file under the materialized names.
-          // Codegen'd: the per-bin (path → base) mapping is a map LITERAL
-          // keyed by the normalized scan path — no ScalaUDF boxing in the
-          // compaction read, same discipline as the row-id read path
-          import org.apache.spark.sql.types.{LongType, StructField, StructType}
-          val (matId, matVer) = matCols.get // PathNorm registered pre-pool
-          val baseIds: Map[String, Long] = files.map(f =>
-            snap.normAbsolutePath(f) -> f.baseRowId.getOrElse(
-              throw new IllegalStateException(s"tracked add ${f.path} lacks baseRowId"))).toMap
-          val baseVers: Map[String, Long] = files.map(f =>
-            snap.normAbsolutePath(f) -> f.defaultRowCommitVersion.getOrElse(0L)).toMap
-          val normFp = call_function("norm_uri_path", col("_metadata.file_path"))
-          // a lookup MISS (scheme/encoding divergence between the scan path
-          // and the log path) must fail the compaction loudly — writing a
-          // NULL materialized id would silently renumber stable row ids
-          def strict(m: Map[String, Long], what: String) =
-            coalesce(element_at(typedLit(m), normFp),
-              raise_error(concat(
-                lit(s"OPTIMIZE $what mapping missing for scanned file "),
-                normFp)).cast("long"))
-          val ext = StructType(dataSchema.fields ++
-            Seq(StructField(matId, LongType), StructField(matVer, LongType)))
-          dropMasked(spark.read.schema(ext).parquet(files.map(snap.absolutePath): _*))
-            .withColumn("__rid", coalesce(col(s"`$matId`"),
-              strict(baseIds, "row-id") + col("_metadata.row_index")))
-            .withColumn("__rver", coalesce(col(s"`$matVer`"),
-              strict(baseVers, "commit-version")))
-            .drop(matId, matVer)
-            .withColumnRenamed("__rid", matId)
-            .withColumnRenamed("__rver", matVer)
-        }
-      // stats of the written file itself, read by its write task: exact
-      // after a DV purge too, where the inputs' stats would overstate
-      // numRecords (stats-only COUNT would then overcount)
-      val out = DataFiles.write(bin.coalesce(1), table, s"$commitDir/bin-$i",
-        statCols = Some(DataFiles.statColumns(dataSchema, snap.configuration))).head
-      physical(snap, out.toAdd(Nil).copy(partitionValues = pv))
-    }
-    if (tracked) graft.functions.PathNorm.register(spark) // once, pre-pool
-    val maxThreads = math.max(1, spark.conf
-      .getOption("spark.graft.delta.optimize.maxThreads").map(_.toInt).getOrElse(10))
-    val adds: Seq[AddFile] =
-      if (rewrites.length == 1 || maxThreads == 1)
-        rewrites.zipWithIndex.map { case ((pv, files), i) => rewriteBin(pv, files, i) }
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(maxThreads, rewrites.length))
-        try {
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          val slots = new Array[AddFile](rewrites.length)
-          val futs = rewrites.zipWithIndex.map { case ((pv, files), i) =>
-            Future { slots(i) = rewriteBin(pv, files, i) }
-          }
-          Await.result(Future.sequence(futs), Duration.Inf)
-          slots.toSeq // bin order preserved regardless of completion order
-        } finally pool.shutdown()
-      }
-    val removes = rewrites.flatMap(_._2)
-
-    // conflict-checked optimistic retry: compaction reads no logical rows,
-    // so concurrent appends (and disjoint rewrites) commute with it; only
-    // a concurrent remove of one of its input files aborts
-    Some(transact(spark, tablePath, Some(snap), "OPTIMIZE", Map.empty,
-        Check(layoutReadSet(removes))) { a =>
-      val lines = Seq.newBuilder[String]
-      val now = System.currentTimeMillis()
-      removes.foreach(f => lines += removeLine(physical(a.snap, f), now, dataChange = false))
-      // spec: every new add of a tracked table still gets a FRESH default
-      // range (unused while the materialized ids take precedence)
-      val trackedAdds =
-        if (!tracked) adds
-        else {
-          val (assigned, hwm) =
-            RowTracking.assign(adds, RowTracking.highWaterMark(a.snap), a.version)
-          lines += domainLine(RowTracking.Domain, RowTracking.hwmConfigJson(hwm))
-          assigned
-        }
-      trackedAdds.foreach(f => lines += addLine(f, dataChange = false))
-      lines.result()
-    })
+    // one write job for every bin: the union concatenates its children's
+    // partitions and each bin coalesces to one, so each bin is one write
+    // task and one file, with no shuffle. The read is REORG PURGE's: live
+    // rows only (a DV input sheds its vector), ids riding along on tracked
+    // tables; the new files' stats come from their write tasks, exact
+    // after a purge where the inputs' stats would overstate numRecords.
+    val removed = bins.flatten
+    val newData = bins.map(relationOverWithIds(spark, snap, _).coalesce(1)).reduce(_ union _)
+    Some(commitRewrite(spark, snap, removed, Some(newData), dataChange = false,
+      operation = "OPTIMIZE",
+      extraDataCols = trackedMatCols(snap).toSeq.flatMap(c => Seq(c._1, c._2)),
+      preservesRowIds = trackedMatCols(snap).isDefined,
+      readSet = layoutReadSet(removed)))
   }
 
   /** OPTIMIZE … ZORDER BY: rewrite the table's files with rows clustered
@@ -821,7 +700,7 @@ object DeltaWriter {
     val stats =
       if (collectStats) DataFiles.listedStats(spark, files, DataFiles.statColumns(dataSchema, Map.empty))
       else Map.empty[String, String]
-    val addLines = files.iterator.map { st =>
+    val addLines = files.map { st =>
       val rel = relativize(table, st.getPath)
       // every k=v directory segment must be a DECLARED partition column:
       // silently treating one as a data column would read as all-null
@@ -838,9 +717,8 @@ object DeltaWriter {
         dataChange = true)
     }
     transact(spark, dir, None, "CONVERT",
-        Map("source" -> "parquet", "partitionedBy" -> partitionColumns.mkString(",")),
-        Surface, tail = Some(() => addLines)) { _ =>
-      Seq(protocolJson(DeltaProtocol(1, 2)), metaDataJson(None, df.schema.json, partitionColumns))
+        Map("source" -> "parquet", "partitionedBy" -> partitionColumns.mkString(",")), Surface) { _ =>
+      Seq(protocolJson(DeltaProtocol(1, 2)), metaDataJson(None, df.schema.json, partitionColumns)) ++ addLines
     }
   }
 
@@ -1718,10 +1596,12 @@ object DeltaWriter {
       case None => DeltaFileIndex.relation(spark, snap)
     }
 
-  /** Commit a row-level rewrite — DML, REPLACE WHERE and the layout
-    * rewrites, conflict-checked against `readSet`: write `newData` (if
-    * any) under `v<N>/` (hive-partitioned by the table's partition
-    * columns), remove `removed`, add the new files with fresh stats.
+  /** Commit a rewrite, conflict-checked against `readSet`: write `newData`
+    * (if any) under `v<N>-<uuid>/` (hive-partitioned by the table's
+    * partition columns), remove `removed`, add the new files with fresh
+    * stats. Every rewrite of data files commits here: DML (DELETE, UPDATE,
+    * MERGE), REPLACE WHERE, ZORDER and clustering ([[zorderRewrite]]),
+    * REORG PURGE and OPTIMIZE.
     *
     * `dvReAdds` are deletion-vector retirements: files from `removed`
     * re-added with their new union DV (and their baseRowId, so unmoved rows
@@ -1777,7 +1657,7 @@ object DeltaWriter {
         case Some(ps) =>
           if (snap.configuration.get("delta.columnMapping.mode").contains("id"))
             spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-          ColumnMapping.renameToPhysical(d, snap.schema, ps)
+          ColumnMapping.renameToPhysical(d, snap.schema, ps, extraDataCols)
         case None => d.select(snap.schema.map(f => col(f.name)) ++
           extraDataCols.map(c => col(s"`$c`")): _*)
       }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, TableScan
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import scala.jdk.CollectionConverters._
+
 /** DataSource V2 face of the from-scratch Delta reader:
   * `spark.read.format("graftdelta2").load(path)`, and the table type
   * [[graft.catalog.GraftCatalog]] loads.
@@ -41,16 +43,34 @@ final class GraftDeltaV2Provider extends TableProvider with DataSourceRegister {
     DeltaSnapshotReader.snapshotAt(spark, path, version)
   }
 
+  /** The snapshot [[inferSchema]] resolved, with the options it resolved
+    * them for. Spark makes one provider per load and calls `inferSchema`,
+    * `inferPartitioning` and `getTable` on it in that order, so the three
+    * share one resolution (one `_delta_log` listing); `getTable` takes and
+    * clears it. Other options resolve afresh. */
+  private var held: Option[(Map[String, String], DeltaSnapshot)] = None
+
+  private def heldOrResolve(options: CaseInsensitiveStringMap): DeltaSnapshot = {
+    val key = options.asScala.toMap
+    held.collect { case (k, s) if k == key => s }.getOrElse {
+      val s = snapOf(options)
+      held = Some(key -> s)
+      s
+    }
+  }
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    snapOf(options).schema
+    heldOrResolve(options).schema
 
   override def inferPartitioning(options: CaseInsensitiveStringMap): Array[Transform] =
-    snapOf(options).partitionColumns.map(Expressions.identity).toArray
+    heldOrResolve(options).partitionColumns.map(Expressions.identity).toArray
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new GraftDeltaTable(SparkSession.active, snapOf(opts),
+    val snap = heldOrResolve(opts)
+    held = None
+    new GraftDeltaTable(SparkSession.active, snap,
       writable = !opts.containsKey("versionAsOf") && !opts.containsKey("timestampAsOf"))
   }
 }

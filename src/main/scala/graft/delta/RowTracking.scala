@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: assignment is O(files-in-commit) driver arithmetic off the
   * stats the writer already collected (numRecords per file); the read path
-  * joins the scan's `_metadata` file path/row index against the
-  * DISTRIBUTED file-set DataFrame — no driver file list, no shuffle of the
-  * data side beyond the (AQE-broadcastable) mapping join.
+  * adds the scan's `_metadata.row_index` to the file's `baseRowId`, which
+  * the scan carries as a file-constant `_metadata` field
+  * ([[DeltaFileIndex.BaseRowId]]) — no join, no shuffle, no extra job.
   *
   * Id stability contract: appends mint fresh ranges; DV deletes re-add the
   * same file with its `baseRowId` untouched (deleting marks rows, never
@@ -103,38 +103,30 @@ object RowTracking {
     val mat = materializedCols(snap.configuration)
     val extra = mat.toSeq.flatMap { case (i, v) =>
       Seq(StructField(i, LongType), StructField(v, LongType)) }
-    val raw = DeltaFileIndex.relationWithRowIndexLive(spark, snap, extra)
-    // normalize both sides to the decoded scheme-less absolute path (the
-    // same key partition-value injection uses); the FS qualification runs
-    // ONCE driver-side, executors do pure codegen'd string work
-    // ([[graft.functions.NormUriPath]] — no ScalaUDF in the scan path)
-    val root = snap.qualifiedTableRoot
-    graft.functions.PathNorm.register(spark)
-    // Invariant check BEFORE the inner join below: every active file of an
-    // enabled table must carry a baseRowId (the enablement backfill and all
-    // writer paths guarantee it). A file without one — a foreign append, or
-    // a future writer bug — would be silently DROPPED by the join; data
-    // loss is worse than a loud refusal. Distributed count, driver gets at
-    // most 5 offending paths.
-    val missing = snap.fileSet.df.where(col("baseRowId").isNull)
-      .select("path").limit(5).collect().map(_.getString(0))
+    val raw = DeltaFileIndex.relationWithRowIndexLive(spark, snap, extra, rowIdInputs = true)
+    // Invariant check: every active file of an enabled table must carry a
+    // baseRowId (the enablement backfill and all writer paths guarantee
+    // it). A file without one — a foreign append, or a future writer bug —
+    // would read with NULL ids, which a rewrite would then renumber; a
+    // loud refusal beats that. A file set the driver holds is checked by a
+    // driver fold; a distributed one by one job that brings back at most
+    // 5 offending paths.
+    val missing =
+      if (snap.fileSet.isCollected)
+        snap.fileSet.collected.iterator.filter(_.baseRowId.isEmpty).map(_.path).take(5).toSeq
+      else snap.fileSet.df.where(col("baseRowId").isNull)
+        .select("path").limit(5).collect().map(_.getString(0)).toSeq
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"row tracking on ${snap.tablePath}: active file(s) without baseRowId " +
           s"(foreign append to a tracked table?): ${missing.mkString(", ")}")
-    val mapping = snap.fileSet.df
-      .select(call_function("norm_add_path", lit(root), col("path")).as("__fpn"),
-        col("baseRowId"), col("defaultRowCommitVersion"))
+    val base = col(s"__${DeltaFileIndex.BaseRowId}")
+    val ver = col(s"__${DeltaFileIndex.DefaultRowCommitVersion}")
     val (idCol, verCol) = mat match {
-      case Some((i, v)) =>
-        (coalesce(col(s"`$i`"), col("baseRowId") + col("__ri")),
-          coalesce(col(s"`$v`"), col("defaultRowCommitVersion")))
-      case None =>
-        (col("baseRowId") + col("__ri"), col("defaultRowCommitVersion"))
+      case Some((i, v)) => (coalesce(col(s"`$i`"), base + col("__ri")), coalesce(col(s"`$v`"), ver))
+      case None => (base + col("__ri"), ver)
     }
-    raw.withColumn("__fpn", call_function("norm_uri_path", col("__fp")))
-      .join(mapping, "__fpn") // inner: the invariant check above proved every active file carries a baseRowId
-      .select(snap.schema.map(f => col(f.name)) ++ Seq(
+    raw.select(snap.schema.map(f => col(f.name)) ++ Seq(
         idCol.as("_row_id"), verCol.as("_row_commit_version")) ++
         (if (keepIndex) Seq(col("__fp"), col("__ri")) else Nil): _*)
   }

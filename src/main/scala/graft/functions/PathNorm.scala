@@ -4,19 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen-able path normalization for the Delta scan/DML paths.
   *
-  * The partition-value-injection join, the row-id mapping join and the
-  * DML affected-file probe all normalize `input_file_name()` /
-  * `_metadata.file_path` (a possibly percent-encoded URI string) or a log
-  * `add.path` to the decoded scheme-less absolute path. Doing that with a
-  * Scala `udf(...)` puts a ScalaUDF node in every scan's hot path — each
-  * row pays closure dispatch + String boxing and the node blocks
-  * whole-stage codegen fusion. These expressions emit ONE static call
+  * The partition-value-injection join and the DML affected-file probe
+  * normalize `input_file_name()` / `_metadata.file_path` (a possibly
+  * percent-encoded URI string) to the decoded scheme-less absolute path.
+  * Doing that with a Scala `udf(...)` puts a ScalaUDF node in every scan's
+  * hot path — each row pays closure dispatch + String boxing and the node
+  * blocks whole-stage codegen fusion. This expression emits ONE static call
   * inside generated code instead (same pattern as [[SrpBands]]), keeping
   * the scan inside a single WholeStageCodegen span.
   */
@@ -39,56 +38,22 @@ case class NormUriPath(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** `norm_add_path(root, path)` — [[graft.delta.DeltaActions.normAbsolute]]
-  * as an expression: relative log paths resolve against the (driver-side
-  * pre-qualified) table root, absolute/URI paths are decoded and stripped
-  * of scheme+authority. `root` is a per-query literal in practice. */
-case class NormAddPath(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"norm_add_path expects (string, string), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "norm_add_path"
-
-  override def nullSafeEval(root: Any, p: Any): Any =
-    PathNorm.normAdd(root.asInstanceOf[UTF8String], p.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (r, p) => s"${PathNorm.cls}.normAdd($r, $p)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object PathNorm {
 
   private[functions] val cls: String =
     PathNorm.getClass.getName.stripSuffix("$") + "$.MODULE$"
 
-  /** UTF8String-native wrappers so generated code makes one static call. */
+  /** UTF8String-native wrapper so generated code makes one static call. */
   def normUri(s: UTF8String): UTF8String =
     UTF8String.fromString(graft.delta.DeltaActions.normUriPath(s.toString))
-
-  def normAdd(root: UTF8String, p: UTF8String): UTF8String =
-    UTF8String.fromString(graft.delta.DeltaActions.normAbsolute(root.toString, p.toString))
 
   private val uriInfo = new ExpressionInfo(
     NormUriPath.getClass.getName.stripSuffix("$"), null, "norm_uri_path",
     "_FUNC_(s) - decoded scheme-less absolute path of a scan-side file URI", "")
-  private val addInfo = new ExpressionInfo(
-    NormAddPath.getClass.getName.stripSuffix("$"), null, "norm_add_path",
-    "_FUNC_(root, p) - log add.path normalized against a qualified table root", "")
 
-  /** Idempotently register both expressions in the session registry. */
+  /** Idempotently register the expression in the session registry. */
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("norm_uri_path"), uriInfo, exprs => NormUriPath(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("norm_add_path"), addInfo,
-      exprs => NormAddPath(exprs(0), exprs(1)))
   }
 }

@@ -162,7 +162,7 @@ object PipelineOps {
   /** Learned merge rules memoized per (session, dir): the rule table is 8
     * tiny rows, but deriving it replays the full training loop — encode
     * callers share one training run per session. Evicted when the owning
-    * session stops (same discipline as Tables.eventsCache). */
+    * session stops. */
   private val rulesCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Seq[(String, String)]]()
   private def trainedRules(s: SparkSession, dir: String): Seq[(String, String)] = {

@@ -19,6 +19,19 @@ class TablesSpec extends SparkSpec {
       s"decoded event-time outside fixture range: $years")
   }
 
+  test("a persisted events load serves a stream key's events scan from memory") {
+    // the bench's warm-up: Spark's cache manager substitutes the persisted
+    // frame into every later `Tables.events` plan
+    val cached = Tables.events(spark, sf).persist()
+    try {
+      cached.count()
+      val plan = stream.EventOps.tumbling(spark, sf).queryExecution.executedPlan.toString
+      assert(plan.contains("InMemoryTableScan"), plan)
+    } finally cached.unpersist(blocking = true)
+    assert(!stream.EventOps.tumbling(spark, sf).queryExecution.executedPlan.toString
+      .contains("InMemoryTableScan"))
+  }
+
   test("normalizeEventTs handles all three physical forms identically") {
     import spark.implicits._
     val us = 1704103200000000L // 2024-01-01 10:00:00 UTC in µs

@@ -99,4 +99,20 @@ class ConvertToDeltaSpec extends SparkSpec {
     assert(withStats == without, s"with stats $withStats, without $without")
     assert(withStats.values.forall(_ == 1), withStats)
   }
+
+  test("CONVERT commits its adds as ordinary lines: no log file opened, the next read a hit") {
+    val d = newDir()
+    (1L to 40L).map(i => (i, s"r$i", (i % 4).toInt)).toDF("id", "s", "bucket")
+      .write.partitionBy("bucket").parquet(d)
+    val (_, calls) = CountingFileSystem.count(spark)(
+      DeltaWriter.convertToDelta(spark, d, Seq("bucket")))
+    info(s"CONVERT: $calls")
+    // the crc is rendered from the snapshot the commit leaves: neither the
+    // commit just written nor a crc is read back
+    assert(calls.open == 0, calls)
+    val (snap, resolutions) = ResolutionLog.capture(DeltaSnapshotReader.snapshot(spark, d))
+    assert(resolutions.map(ResolutionLog.kind) == Seq("hit"), resolutions)
+    assert(snap.version == 0L && snap.files.map(_.partitionValues("bucket")).toSet == Set("0", "1", "2", "3"))
+    assert(DeltaSnapshotReader.load(spark, d).count() == 40L)
+  }
 }

@@ -16,7 +16,8 @@ import java.nio.file.Files
   * measured once that snapshot is cached for the read after the write
   * (3, 1, 0), which opens no log file at all. A caller that holds a
   * snapshot and reads it through [[DeltaFileIndex.relation]] lists
-  * `_delta_log` once, for the snapshot. */
+  * `_delta_log` once, for the snapshot, and so does a `graftdelta2` read
+  * (3 listings before its provider held the snapshot it infers). */
 class LogFsCallSpec extends SparkSpec {
   import spark.implicits._
 
@@ -79,5 +80,18 @@ class LogFsCallSpec extends SparkSpec {
     // the snapshot's own listing is the only one: planning and reading it
     // list nothing more
     assert(calls.listStatus == 1, s"snapshot + relation made $calls")
+  }
+
+  test("a graftdelta2 read lists _delta_log once") {
+    val t = checkpointed()
+    append(t, 3)
+    val (n, calls) = CountingFileSystem.count(spark) {
+      spark.read.format("graftdelta2").load(t).filter(col("grp") === 3).count()
+    }
+    assert(n == 4 * 7)
+    info(s"graftdelta2 read: $calls")
+    // schema inference, partitioning inference and the table share the
+    // provider's one resolution
+    assert(calls.listStatus == 1, s"a graftdelta2 read made $calls")
   }
 }

@@ -1,9 +1,12 @@
 package graft.delta
 
 import graft.SparkSpec
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** OPTIMIZE (small-file compaction): many tiny commits → one file per
   * partition; identical rows; stats merged; old versions still readable. */
@@ -59,7 +62,25 @@ class OptimizeSpec extends SparkSpec {
     assert(got == Set((0L, 1995), (1L, 1996), (2L, 1995), (3L, 1996)))
   }
 
-  test("multi-bin OPTIMIZE rewrites bins concurrently in ONE commit") {
+  /** Call sites of the jobs `body` launches: the first stage's name,
+    * `<method> at <file>:<line>`. */
+  private def jobsOf[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    BusDrain.drain(sc)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.headOption.map(_.name).getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      BusDrain.drain(sc)
+      (a, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("multi-bin OPTIMIZE writes every bin in ONE job and ONE commit") {
     val t = Files.createTempDirectory("graft_opt_par").toString + "/tbl"
     // 8 partitions x 4 small files = 32 inputs → 8 bins (one per partition)
     (0 until 4).foreach { c =>
@@ -67,21 +88,42 @@ class OptimizeSpec extends SparkSpec {
         (0 until 8).map(p => (p * 100L + c, p)).toDF("id", "p"), t, Seq("p"))
     }
     assert(DeltaSnapshotReader.snapshot(spark, t).fileSet.count == 32L)
-    spark.conf.set("spark.graft.delta.optimize.maxThreads", "4")
-    try {
-      val v = DeltaWriter.optimize(spark, t)
-      assert(v.contains(4L))
-      val after = DeltaSnapshotReader.snapshot(spark, t)
-      // >= 2 bins landed in the SINGLE commit (one compacted file per
-      // partition), through the bounded thread pool
-      assert(after.fileSet.count == 8L)
-      assert(after.version == 4L)
-      val got = DeltaSnapshotReader.load(spark, t)
-        .select("id").as[Long].collect().toSet
-      assert(got == (for (p <- 0 until 8; c <- 0 until 4) yield p * 100L + c).toSet)
-      // per-bin stats survived the concurrent rewrite (merged, not lost)
-      assert(after.fileSet.collected.forall(f =>
-        DataSkipping.parse(f.stats.get).exists(_.numRecords.contains(4L))))
-    } finally spark.conf.unset("spark.graft.delta.optimize.maxThreads")
+    val (v, jobs) = jobsOf(DeltaWriter.optimize(spark, t))
+    assert(v.contains(4L))
+    // one planning job (the distributed bin-packing) and ONE data-writing
+    // job for all 8 bins, each bin one write task
+    assert(jobs.size == 2 && jobs.count(_.contains("DataFiles")) == 1, jobs)
+    val after = DeltaSnapshotReader.snapshot(spark, t)
+    // every bin landed in the SINGLE commit, one compacted file per partition
+    assert(after.fileSet.count == 8L)
+    assert(after.version == 4L)
+    val got = DeltaSnapshotReader.load(spark, t)
+      .select("id").as[Long].collect().toSet
+    assert(got == (for (p <- 0 until 8; c <- 0 until 4) yield p * 100L + c).toSet)
+    // per-bin stats, from each bin's write task
+    assert(after.fileSet.collected.forall(f =>
+      DataSkipping.parse(f.stats.get).exists(_.numRecords.contains(4L))))
+  }
+
+  test("OPTIMIZE keeps string, date and null partition values exactly") {
+    val t = Files.createTempDirectory("graft_opt_pv").toString + "/tbl"
+    val parts = Seq(("a+b", "2024-02-29"), ("x y", "1999-12-31"), (null, null), ("a+b", null))
+    (0 until 3).foreach { c =>
+      DeltaWriter.write(parts.zipWithIndex.map { case ((s, d), i) => (i * 10L + c, s, d) }
+        .toDF("id", "s", "d").withColumn("d", to_date(col("d"))), t, Seq("s", "d"))
+    }
+    val before = DeltaSnapshotReader.snapshot(spark, t)
+    assert(before.files.size == 12)
+    val rows = DeltaSnapshotReader.load(spark, t).collect().toSet
+    DeltaWriter.optimize(spark, t)
+    val after = DeltaSnapshotReader.snapshot(spark, t)
+    assert(after.files.size == 4, after.files.map(_.path))
+    // each compacted add carries exactly its inputs' partition values
+    assert(after.files.map(_.partitionValues).toSet == before.files.map(_.partitionValues).toSet,
+      s"${after.files.map(_.partitionValues)} vs ${before.files.map(_.partitionValues).distinct}")
+    assert(after.files.map(_.partitionValues).toSet.contains(Map("s" -> null, "d" -> null)))
+    assert(DeltaSnapshotReader.load(spark, t).collect().toSet == rows)
+    assert(DeltaSnapshotReader.load(spark, t)
+      .filter(col("s") === "x y" && col("d") === lit("1999-12-31").cast("date")).count() == 3L)
   }
 }

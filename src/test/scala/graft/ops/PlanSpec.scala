@@ -231,13 +231,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("row-id read path stays codegen'd: no ScalaUDF / BatchEvalPython in the plan") {
-    // path normalization on the scan side is a native Expression
-    // (graft.functions.NormUriPath) — a udf() here would box every row of
-    // every scan and break whole-stage codegen fusion at 100 TB
+    // the row id is the scan's file-constant `base_row_id` plus its row
+    // index: no join with the file set, and no udf() — a udf would box
+    // every row of every scan and break whole-stage codegen fusion at 100 TB
     val p = plan("delta_row_tracking")
     assert(!p.contains("ScalaUDF") && !p.contains("BatchEvalPython"),
       s"non-codegen UDF node in the row-tracking scan:\n$p")
-    assert(p.contains("norm_uri_path") || p.contains("normuripath"),
-      s"expected the native path-norm expression in the plan:\n$p")
+    assert(p.contains("base_row_id") && !p.contains("Join"),
+      s"expected the row id from the scan's file metadata, without a join:\n$p")
   }
 }
